@@ -352,10 +352,12 @@ class MiniODBService:
                 "truncated": self.engine.query_stats["truncated"],
                 "slow_queries": len(self.engine.query_stats["slow"]),
                 # zone-map pruning effect on the SQL path (files the
-                # conjunctive id fast path never opened)
+                # conjunctive id fast path never opened) and pruning
+                # failures that fell back to the unpruned scan
                 "zonemap": dict(
                     self.engine.query_stats.get(
-                        "zonemap", {"queries": 0, "files_skipped": 0})
+                        "zonemap", {"queries": 0, "files_skipped": 0,
+                                    "prune_errors": 0})
                 ),
             },
             # best-effort zone-map build failures (lookups degrade to

@@ -21,8 +21,10 @@ schema merge      union_by_name per query        catalog-maintained
                                                  mergeSchema at scale)
 ================  =============================  =========================
 
-Storage layout: ``<root>/<table>/dt=YYYY-MM-DD/part-*.parquet`` with
-``id`` kept as a *data column* (SURVEY §7: per-id directories explode
+Storage layout:
+``<root>/<table>/gen=<N>/dt=YYYY-MM-DD/part-00000-<uuid>.c000.<codec>.parquet``
+(``gen`` is the schema generation, ``dt`` the UTC day), with ``id`` kept
+as a *data column* (SURVEY §7: per-id directories explode
 at 100 TB; id point-lookups ride on parquet footer min/max pushdown
 instead).
 """
@@ -130,26 +132,6 @@ def _filter_listing_by_day(listing, ts_range):
 
 _TS_LIT_RE = __import__("re").compile(
     r"^\d{4}-\d{2}-\d{2}(?:[ T]\d{2}:\d{2}(?::\d{2}(?:\.\d{1,6})?)?)?$")
-
-
-def _advisory_bytes(spark) -> int:
-    """AQE advisory partition size in bytes (the threshold under which
-    a rebalance would coalesce a flush batch to one task anyway — see
-    the write-shape decision in :meth:`Engine._flush_rows`). Accepts
-    the bare-int and size-suffixed (``64m``/``256MB``) conf spellings;
-    unparseable → the 64 MB Spark default."""
-    raw = str(spark.conf.get(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864"))
-    s = raw.strip().lower().removesuffix("b")
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suffix):
-            s, mult = s[: -1], m
-            break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        return 64 * 1024 * 1024
 
 
 def _parse_ts_literal(lit: str | None):
@@ -296,11 +278,13 @@ class Engine:
         # collapse, vacuum, drop) — see _forget_gen_files.
         self._gen_known_files: dict[tuple[str, int], set[str]] = {}
         self._lock = threading.RLock()
-        # per-table flush serialization: two concurrent parquet append jobs
-        # into the same gen dir share the FileOutputCommitter _temporary/0
-        # staging path, and one job's commit destroys the other's task
-        # files. The reference serializes flushes per table the same way.
-        # Different tables still flush/ingest in parallel.
+        # per-table flush serialization: a flush's drain/requeue and the
+        # known-files cache below assume one commit per table at a time,
+        # and two concurrent ingest_dataframe jobs into the same gen dir
+        # would share the FileOutputCommitter _temporary/0 staging path,
+        # where one job's commit destroys the other's task files. The
+        # reference serializes flushes per table the same way. Different
+        # tables still flush/ingest in parallel.
         self._flush_locks: dict[str, threading.Lock] = {}
         # boot-time WAL replay (reference replays on startup,
         # concurrent_buffer.go:258-359): without this, rows acked before a
@@ -485,21 +469,20 @@ class Engine:
     def flush(self, table: str | None = None) -> int:
         """Flush buffered rows to parquet. Returns rows flushed.
 
-        One ``createDataFrame`` per (table, inferred-schema) batch →
-        append write partitioned by ``dt``; then merge the batch columns
-        into the catalog's cumulative schema.
+        Each (table, inferred-schema) batch is written from the driver
+        as one Parquet file per ``dt`` day (see :meth:`_flush_rows` —
+        no Spark job) and committed as add-file entries; the batch
+        columns merge into the catalog's cumulative schema.
 
         Cross-driver safety: the whole drain→write→commit runs under
         the table's shared-store ``#rewrite`` lease (same lock the
         mutation paths hold — re-entrant when a mutation's own flush
-        triggers this). Two DRIVERS appending into one generation
-        directory would otherwise share the FileOutputCommitter
-        staging path, where one job's commit destroys the other's task
-        files — the cross-process twin of the in-process _flush_lock
-        hazard. The lease also serializes a flush against a concurrent
-        collapse/rewrite from another driver, which could tombstone
-        the very generation the flush is appending into. Lock order:
-        lease before process locks, as everywhere (see update())."""
+        triggers this). The lease serializes a flush against a
+        concurrent collapse/rewrite from another driver, which could
+        tombstone the very generation the flush is appending into, and
+        against another driver's generation registration and
+        add-file commit for the same table. Lock order: lease before
+        process locks, as everywhere (see update())."""
         tables = [table] if table else list(self._buffers)
         total = 0
         for t in tables:
@@ -542,80 +525,76 @@ class Engine:
         return fsmod.join(self._table_dir(table), f"gen={gen}")
 
     def _flush_rows(self, table: str, rows: list[BufferRow]) -> int:
+        """Write one drained batch as Parquet from the driver and commit
+        it. The batch is at most ``buffer_size`` rows already in memory,
+        so it becomes one verified Arrow table and one Parquet file per
+        ``dt`` day, each stored under a fresh unique name with a single
+        ``fs.write_bytes`` (no staging, no rename — on s3a a rename is a
+        copy plus a delete). The commit is the catalog's add-file entry
+        for exactly the names written (Delta Lake's immutable files +
+        log entry), so no Spark job or output committer is involved."""
+        import uuid
+
         row_dicts = [r.to_dict() for r in rows]
         batch_schema, name_map = dyn_schema.infer_batch_schema(row_dicts)
-        # one columnar Arrow hop to the JVM; to_row_tuple inside is the
-        # schema verifier (types, int64 range, non-null system columns)
-        # — see schema.batch_dataframe (guide §4, r17)
-        df = dyn_schema.batch_dataframe(
-            self.spark, row_dicts, batch_schema, name_map)
-        df = df.withColumn("dt", F.date_format("timestamp", "yyyy-MM-dd"))
+        # the verifier runs before any registration: a bad value
+        # (int64 overflow, NULL system column) fails with nothing to undo
+        tbl = dyn_schema.batch_table(row_dicts, batch_schema, name_map)
+        cfg = self.catalog.get_table(table)
+        codec, ext = dyn_schema.parquet_codec(
+            cfg.compression if cfg else "snappy")
+        name = f"part-00000-{uuid.uuid4()}.c000{ext}.parquet"
         n_gens_before = len(self.catalog.gen_schemas(table))
         gen = self.catalog.register_flush_schema(
             table, {f.name: _type_name(f.dataType) for f in batch_schema.fields}
         )
-        cfg = self.catalog.get_table(table)
-        # write shape (r18, guide §2.4/§6): the batch's byte size is
-        # known DRIVER-side from the Arrow conversion, so pick the
-        # layout without a shuffle when possible. A batch under the AQE
-        # advisory partition size would be coalesced into ONE task by
-        # the rebalance anyway — coalesce(1) reaches the same file
-        # layout (one file per day, slivers merged) with no exchange
-        # (measured −0.1..−0.15 s per 20k-row flush, same 1-file-per-day
-        # output, content-identical). Larger batches (and the tuple
-        # fallback, where the size is unknown) keep the REBALANCE hint:
-        # hash-partitioning on dt alone would put an entire day in ONE
-        # task (guide §2.5 — too few distinct key values), while the
-        # AQE rebalance keeps rows clustered by dt but splits oversized
-        # days into advisory-sized chunks and merges slivers.
-        est_bytes = getattr(df, "_miniodb_est_bytes", None)
-        if est_bytes is not None and est_bytes <= _advisory_bytes(self.spark):
-            write_df = df.coalesce(1)
-        else:
-            write_df = df.hint("rebalance", "dt")
+        written: list[str] = []
         try:
-            # resolved INSIDE the try: a seed-listing failure after
+            # resolved INSIDE the try: any failure after
             # register_flush_schema must roll back the new generation
-            # like any other write failure. Cache hit = no LIST at all;
-            # the single post-write LIST below computes the delta.
-            before = self._known_gen_files(table, gen)
-            (
-                write_df
-                .write.mode("append")
-                .option("compression", cfg.compression if cfg else "snappy")
-                .partitionBy("dt")
-                .parquet(self._gen_dir(table, gen))
-            )
+            gen_dir = self._gen_dir(table, gen)
+            for dt, data in dyn_schema.parquet_day_files(tbl, codec):
+                rel = f"dt={dt}/{name}"
+                written.append(rel)  # before the write: a torn file goes too
+                self.fs.write_bytes(fsmod.join(gen_dir, rel), data)
+            # data-commit marker: the version whose snapshot INCLUDES
+            # this batch, with its files as Delta-style add-file entries
+            # (snapshot membership never trusts PUT-time ordering)
+            self.catalog.touch(table, add_files={gen: sorted(written)})
         except Exception:
-            # a failed write must not leave an orphaned catalog generation:
-            # the requeued rows would otherwise flush again under a NEW
-            # generation while the committed-looking old one lingers. Only
-            # a generation this flush opened is rolled back; absorbing into
-            # an existing generation merged column names additively, which
-            # is harmless (all-null column until a later flush). Partial
-            # parquet output is invisible: the v1 output committer only
-            # publishes files at job commit, so a failed job leaves nothing
-            # a reader picks up.
+            # nothing may stay visible: head reads list the generation
+            # directories, so every file this flush wrote is removed;
+            # then a generation this flush opened is rolled back (the
+            # requeued rows would otherwise flush again under a NEW
+            # generation while the old one lingers). Absorbing into an
+            # existing generation merged column names additively, which
+            # is harmless (all-null column until a later flush).
+            for rel in written:
+                try:
+                    self.fs.remove_file(fsmod.join(gen_dir, rel))
+                except FileNotFoundError:
+                    pass  # its write failed before creating it
+                except Exception as exc:
+                    import logging
+
+                    logging.getLogger(__name__).warning(
+                        "flush of %s: could not remove %s: %r",
+                        table, rel, exc)
             if gen == n_gens_before:
                 self.catalog.rollback_generation(table, gen)
                 gen_dir = self._gen_dir(table, gen)
                 if self.fs.is_dir(gen_dir):
                     self.fs.remove_dir(gen_dir)
+            # a file that could not be removed must land in the next
+            # ingest's reseeded known set, never in its add-files
             self._gen_known_files.pop((table, gen), None)
             raise
-        # data-commit marker: the version whose snapshot INCLUDES this
-        # batch (schema registration persisted pre-job; see
-        # Catalog.touch). The known/after listing diff is recorded as
-        # Delta-style add-file entries, so snapshot membership never
-        # trusts object-store PUT-time ordering (ADVICE r11). ONE LIST
-        # per commit: it also feeds the zone-map build below.
-        listing = self._gen_listing(table, gen)
-        after = {rel for rel, _dt in listing}
-        self.catalog.touch(
-            table, add_files={gen: sorted(after - before)}
-        )
-        self._gen_known_files[(table, gen)] = after
-        self._build_zonemap(table, gen, listing=listing)
+        # keep a warm known-files cache coherent for a later ingest
+        # into this generation; a cold one reseeds from the add-file log
+        known = self._gen_known_files.get((table, gen))
+        if known is not None:
+            self._gen_known_files[(table, gen)] = known | set(written)
+        self._build_zonemap(table, gen)
         return len(rows)
 
     def _gen_listing(self, table: str, gen: int) -> list[tuple[str, str]]:
@@ -685,9 +664,9 @@ class Engine:
             # generation-creating path (flush, ingest, rewrite commit)
             # serializes here — in-process via the lock, across drivers
             # via the lease (two drivers' append jobs into one gen dir
-            # share the committer staging path; see flush()) — so a
-            # rewrite's reserved generation index can't be claimed by a
-            # racing ingest
+            # would share the committer staging path) — so a rewrite's
+            # reserved generation index can't be claimed by a racing
+            # ingest
             if self.catalog.refresh_if_changed(table):
                 self._forget_gen_files(table)
             gen = self.catalog.register_flush_schema(
@@ -697,9 +676,10 @@ class Engine:
             )
             before = self._known_gen_files(table, gen)
             (
-                # REBALANCE for the same reason as the flush path: one
-                # task per distinct day otherwise (guide §2.5), and
-                # advisory-sized output files per day at scale (§6)
+                # REBALANCE on dt: hash-partitioning on dt alone would
+                # put a whole day in one task (guide §2.5); the AQE
+                # rebalance keeps rows clustered by day but splits
+                # oversized days into advisory-sized files (§6)
                 out.hint("rebalance", "dt")
                 .write.mode("append")
                 .option("compression", cfg.compression if cfg else "snappy")
@@ -1614,6 +1594,9 @@ class Engine:
                             if nrng is not None:
                                 ranges[zc] = nrng
                     if key is not None or ranges:
+                        zs = self.query_stats.setdefault(
+                            "zonemap", {"queries": 0, "files_skipped": 0,
+                                        "prune_errors": 0})
                         try:
                             if key is not None:
                                 pruned, rep = self.point_lookup_df(
@@ -1621,9 +1604,6 @@ class Engine:
                             else:
                                 pruned, rep = self.multi_range_lookup_df(
                                     t, ranges)
-                            zs = self.query_stats.setdefault(
-                                "zonemap", {"queries": 0,
-                                            "files_skipped": 0})
                             zs["queries"] += 1
                             zs["files_skipped"] += rep["files_skipped"]
                             df = (
@@ -1632,8 +1612,15 @@ class Engine:
                                 else self.spark.createDataFrame(
                                     [], df.schema)
                             )
-                        except Exception:  # pragma: no cover - defensive
-                            pass
+                        except Exception as exc:
+                            # pruning is only an optimization: keep the
+                            # unpruned view, but count and log the failure
+                            zs["prune_errors"] += 1
+                            import logging
+
+                            logging.getLogger(__name__).warning(
+                                "zone-map pruning failed for %s (scanning "
+                                "unpruned): %r", t, exc)
             if df is None:
                 if self.catalog.get_table(t) is None:
                     raise gate.SQLGateError(f"table not found: {t}")

@@ -99,14 +99,26 @@ class LocalFS:
         """Atomic for readers: write-temp + os.replace, so a concurrent
         read_bytes never observes a torn write. The temp name must be
         unique per *call* (not just per process) — concurrent writers to
-        the same key would otherwise replace each other's temp file."""
+        the same key would otherwise replace each other's temp file —
+        and starts with ``.``: Spark's directory scans skip ``.``/``_``
+        names, so a scan of a ``dt=`` directory never opens an
+        in-flight data file. A failed write removes its temp file."""
         import secrets
 
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}.{secrets.token_hex(4)}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
+        parent, name = os.path.split(path)
+        os.makedirs(parent, exist_ok=True)
+        tmp = os.path.join(
+            parent, f".{name}.tmp.{os.getpid()}.{secrets.token_hex(4)}")
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+            os.replace(tmp, path)
+        except BaseException:
+            try:
+                os.remove(tmp)
+            except OSError:
+                pass
+            raise
 
     def create_bytes_if_absent(self, path: str, data: bytes) -> bool:
         """Atomic create-if-absent (the lock primitive): O_CREAT|O_EXCL

@@ -264,8 +264,11 @@ def q8_market_share(spark, sf_dir):
     # pre-joining hinted `s`/`c` dim subtrees. The hinted joined
     # subtrees were the round-13 shape's documented scale risk (the
     # hint FORCES a broadcast of the SF-growing supplier/customer key
-    # sets at any SF); plain scans broadcast by the planner's own size
-    # check and degrade to shuffle joins when they outgrow it, and the
+    # sets at any SF); the plain supplier/customer scans broadcast by
+    # the planner's own size check and degrade to shuffle joins when
+    # they outgrow it. The ECONOMY part key set (1/6 of part, also
+    # SF-growing) keeps its F.broadcast hint — the one forced
+    # broadcast of an SF-growing set left in this query. And the
     # nested build-job chains (n2 → r → c; n1 → s) that serialized the
     # broadcast critical path are gone — every build side is now a
     # leaf scan, so all seven broadcasts build in parallel. Column
@@ -273,9 +276,9 @@ def q8_market_share(spark, sf_dir):
     # 9-rep A/B, one session, sf0.1: med 0.892 → 0.891, min 0.766 →
     # 0.774 — the broadcast chains were off the critical path at this
     # size); the change is the scale posture + the removed forced
-    # broadcasts. Rows identical (inner-join conjunction reorder — the
-    # ASIA restriction lands at the region probe, pipelined in the
-    # same stage).
+    # supplier/customer broadcasts. Rows identical (inner-join
+    # conjunction reorder — the ASIA restriction lands at the region
+    # probe, pipelined in the same stage).
     r = load(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA").select("r_regionkey")
     n2 = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
@@ -745,8 +748,9 @@ def q22_idle_high_balance(spark, sf_dir):
         "nation/region probes applying the EUROPE restriction; the "
         "double equality against the window min is "
         "exact because the min is an element of the compared set. The "
-        "final part join is unhinted — AQE broadcasts the type-filtered "
-        "slice while it fits",
+        "LARGE-type part key set is hint-broadcast into the stream "
+        "before the aggregate — the one forced broadcast of a set that "
+        "grows with SF (1/6 of part)",
 )
 def q2_min_cost_supplier(spark, sf_dir):
     # r18 rework (guide §3.2/§2.4): the EUROPE supplier dim used to be

@@ -22,7 +22,7 @@ from __future__ import annotations
 import json
 import re
 from datetime import datetime, timezone
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import types as T
 
@@ -87,13 +87,11 @@ def coerce_value(value: Any, dtype: T.DataType) -> Any:
             v = int(value)
         except (TypeError, ValueError):
             return None
-        # int64 range guard: the flush path hands these tuples to
-        # createDataFrame with verifySchema=False (the coercions here
-        # already guarantee the schema's types — r17), so the range
-        # check PySpark's row verifier used to do must happen here to
-        # keep the same contract: an unrepresentable long fails the
+        # int64 range guard: batch_table builds Arrow arrays from
+        # these tuples with no PySpark row verifier in between, so the
+        # range check happens here: an unrepresentable long fails the
         # flush loudly (rows requeued, WAL intact) instead of
-        # overflowing silently in the JVM.
+        # overflowing silently.
         if not (-(1 << 63) <= v < (1 << 63)):
             raise ValueError(
                 f"object of LongType out of range: {value!r}")
@@ -154,11 +152,11 @@ def to_row_tuple(row: dict, schema: T.StructType, name_map: dict[str, str]) -> t
     if isinstance(ts, int):
         ts = micros_to_datetime(ts)
     elif ts is None:
-        # non-nullable system column; with verifySchema=False (see
-        # coerce_value) this guard replaces the row verifier's
-        # nullability error — same failure, same flush-requeue path
-        # (a caller CAN pass an explicit timestamp_us=None through
-        # the merge API's .get(..., default) lookups).
+        # non-nullable system column; with no row verifier (see
+        # coerce_value) this guard is the nullability check — the
+        # flush fails and requeues its rows (a caller CAN pass an
+        # explicit timestamp_us=None through the merge API's
+        # .get(..., default) lookups).
         raise ValueError("timestamp must not be None")
     fields = row.get("fields") or {}
     if row.get("table_name") is None:
@@ -195,74 +193,126 @@ def _pa_type(dtype: T.DataType):
         return pa.bool_()
     if isinstance(dtype, T.StringType):
         return pa.string()
-    raise TypeError(f"no arrow mapping for {dtype}")  # -> tuple fallback
+    raise TypeError(f"no arrow mapping for {dtype}")
 
 
-# Arrow-path fallback telemetry (r17 verdict watch-item 3 / r18): the
-# tuple fallback is ~2× slower per flush — correct but silently so. A
-# systematic Arrow failure (pyarrow upgrade, new column type) would
-# halve write throughput with no signal; these counters make it visible
-# to ops/BENCH_NOTES forensics, and the engine-e2e test pins that they
-# increment. Plain ints under the engine's per-table flush lock are
-# adequate (a racing concurrent flush can at worst undercount by one —
-# telemetry, not accounting).
+# Surrogate-scrub telemetry: how many batches held a string Arrow could
+# not encode as UTF-8 (a lone surrogate) and were re-encoded with
+# U+FFFD, plus the last such error. Plain ints under the engine's
+# per-table flush lock are adequate (a racing concurrent flush can at
+# worst undercount by one — telemetry, not accounting).
 ARROW_FALLBACK_COUNT = 0
 ARROW_FALLBACK_LAST: str | None = None
 
+_SURROGATE_RE = re.compile("[\ud800-\udfff]")
 
-def batch_dataframe(spark, row_dicts: list[dict], schema: T.StructType,
-                    name_map: dict[str, str]):
-    """Flush batch → DataFrame: coerce rows with :func:`to_row_tuple`
-    (which enforces the schema contract — types, int64 range, non-null
-    system columns), then hand the batch to the JVM as ONE columnar
-    Arrow table instead of N pickled tuples (~2× faster per 20k-row
-    flush, measured; optimization guide §4 — shrink the Python
-    boundary). Result rows, schema and nullability are identical to
-    ``createDataFrame(tuples, schema)`` — verified by the engine
-    oracle suites. Any value Arrow cannot represent (e.g. a
-    lone-surrogate string, which the pickled path ferries through to
-    the JVM's U+FFFD replacement) falls back to the tuple path, so the
-    Arrow conversion can only ever change speed, never results. The
-    fallback is scoped to CONVERSION errors (Arrow encode failures,
-    type mismatches, the unsupported-createDataFrame signature case) —
-    a genuine Spark/Py4J failure propagates instead of being masked by
-    a second, equally doomed conversion attempt (r17 ADVICE).
 
-    The returned DataFrame carries ``_miniodb_est_bytes`` (the Arrow
-    table's in-memory byte size) when the Arrow path was taken — the
-    flush path uses it to pick its write shape driver-side (guide §8:
-    decide with small metadata, move the rows once)."""
+def batch_table(row_dicts: list[dict], schema: T.StructType,
+                name_map: dict[str, str]):
+    """Buffer rows → ONE Arrow table with ``schema``'s columns, types
+    and nullability. Every row goes through :func:`to_row_tuple`, the
+    batch's verifier: types, int64 range and non-null system columns
+    fail here, before anything is written.
+
+    A string holding a lone surrogate has no UTF-8 encoding; each
+    surrogate code point is stored as U+FFFD — what the JVM's UTF-8
+    decoder makes of it — so such a row lands like any other instead
+    of failing every flush. Only a batch that needs it pays the
+    re-encode; it is counted in ``ARROW_FALLBACK_COUNT``."""
     global ARROW_FALLBACK_COUNT, ARROW_FALLBACK_LAST
-    tuples = [to_row_tuple(d, schema, name_map) for d in row_dicts]
-    try:
-        import pyarrow as pa
+    import pyarrow as pa
 
-        conversion_errors = (
-            pa.lib.ArrowInvalid, pa.lib.ArrowTypeError,
-            pa.lib.ArrowNotImplementedError, TypeError, ValueError,
-            OverflowError,
-        )
-    except ImportError as exc:  # no pyarrow at all → tuple path
-        ARROW_FALLBACK_COUNT += 1
-        ARROW_FALLBACK_LAST = repr(exc)
-        return spark.createDataFrame(tuples, schema, verifySchema=False)
+    pa_schema = pa.schema([
+        pa.field(f.name, _pa_type(f.dataType), nullable=f.nullable)
+        for f in schema.fields
+    ])
+    tuples = [to_row_tuple(d, schema, name_map) for d in row_dicts]
+    cols = list(zip(*tuples)) if tuples else [()] * len(schema.fields)
     try:
-        cols = list(zip(*tuples))
-        arrays = [
-            pa.array(col, type=_pa_type(f.dataType))
-            for col, f in zip(cols, schema.fields)
-        ]
-        tbl = pa.Table.from_arrays(arrays,
-                                   names=[f.name for f in schema.fields])
-        df = spark.createDataFrame(tbl, schema=schema)
-        df._miniodb_est_bytes = tbl.nbytes
-        return df
-    except conversion_errors as exc:
+        arrays = [pa.array(c, type=t) for c, t in zip(cols, pa_schema.types)]
+    except UnicodeEncodeError as exc:
         ARROW_FALLBACK_COUNT += 1
         ARROW_FALLBACK_LAST = repr(exc)
         import logging
 
         logging.getLogger(__name__).warning(
-            "batch_dataframe: Arrow path fell back to pickled tuples "
-            "(%d so far this process): %r", ARROW_FALLBACK_COUNT, exc)
-        return spark.createDataFrame(tuples, schema, verifySchema=False)
+            "batch_table: lone surrogates stored as U+FFFD "
+            "(%d batches so far this process): %r",
+            ARROW_FALLBACK_COUNT, exc)
+        arrays = [
+            pa.array(
+                [v if v is None else _SURROGATE_RE.sub("\ufffd", v)
+                 for v in c] if pa.types.is_string(t) else c,
+                type=t)
+            for c, t in zip(cols, pa_schema.types)
+        ]
+    return pa.Table.from_arrays(arrays, schema=pa_schema)
+
+
+def batch_dataframe(spark, row_dicts: list[dict], schema: T.StructType,
+                    name_map: dict[str, str]):
+    """Buffer rows → DataFrame: :func:`batch_table` handed to the JVM
+    in one columnar hop (the hybrid read of buffered rows and the
+    merge API need a DataFrame; the flush does not)."""
+    return spark.createDataFrame(
+        batch_table(row_dicts, schema, name_map), schema=schema)
+
+
+# Spark's ``compression`` option name → (pyarrow codec, the codec part
+# Spark puts in a data file's name)
+PARQUET_CODECS = {
+    "none": ("none", ""),
+    "uncompressed": ("none", ""),
+    "snappy": ("snappy", ".snappy"),
+    "gzip": ("gzip", ".gz"),
+    "zstd": ("zstd", ".zstd"),
+    "lz4": ("lz4", ".lz4hadoop"),
+    "brotli": ("brotli", ".br"),
+}
+
+
+def parquet_codec(compression: str) -> tuple[str, str]:
+    """``(pyarrow codec, file-name part)`` for a table's Spark-style
+    ``compression`` setting; ValueError when pyarrow cannot write it."""
+    try:
+        return PARQUET_CODECS[compression.lower()]
+    except KeyError:
+        raise ValueError(
+            f"unsupported parquet compression: {compression!r}") from None
+
+
+def parquet_day_files(tbl, codec: str) -> Iterator[tuple[str, bytes]]:
+    """``(dt, parquet bytes)`` per UTC day of ``tbl``'s timestamps, in
+    day order; rows keep their batch order within a day. The file
+    matches what Spark's ``partitionBy("dt")`` write produced: ``dt``
+    lives in the directory name only, timestamps are INT64 micros
+    adjusted to UTC, and ``codec`` (see :func:`parquet_codec`)
+    compresses every column.
+
+    A FLOAT/DOUBLE column holding NaN gets no min/max statistics in
+    that file: parquet statistics exclude NaN, while Spark orders NaN
+    above every number, so row-group pushdown on such a bracket would
+    drop the NaN row of ``w > 50``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    day = pc.cast(tbl.column("timestamp"), pa.date32())
+    order = pc.sort_indices(day)  # stable: batch order within a day
+    tbl, day = tbl.take(order), day.take(order)
+    start = 0
+    counts = pc.value_counts(day)  # first-seen order == day order here
+    for d, n in zip(counts.field("values").to_pylist(),
+                    counts.field("counts").to_pylist()):
+        part = tbl.slice(start, n)
+        start += n
+        stats = [
+            f.name for f, col in zip(part.schema, part.columns)
+            if not (pa.types.is_floating(f.type)
+                    and pc.any(pc.is_nan(col)).as_py())
+        ]
+        buf = pa.BufferOutputStream()
+        pq.write_table(
+            part, buf, compression=codec,
+            write_statistics=stats if len(stats) < part.num_columns else True)
+        yield d.isoformat(), buf.getvalue().to_pybytes()

@@ -131,10 +131,8 @@ def test_batch_dataframe_arrow_and_fallback_agree(spark):
 
 
 def test_batch_dataframe_fallback_counter_and_size_tag(spark):
-    # r18 observability (r17 verdict watch-item 3): the tuple fallback
-    # must increment the module counter + record the error, and the
-    # Arrow path must tag the frame with its byte estimate (the flush
-    # write-shape decision reads it)
+    # r18 observability (r17 verdict watch-item 3): the surrogate
+    # fallback must increment the module counter + record the error
     from miniodb_spark import schema as dyn
 
     rows = [{"id": "a", "timestamp": 1_700_000_000_000_000,
@@ -143,8 +141,6 @@ def test_batch_dataframe_fallback_counter_and_size_tag(spark):
     before = dyn.ARROW_FALLBACK_COUNT
     df = dyn.batch_dataframe(spark, rows, schema, nm)
     assert dyn.ARROW_FALLBACK_COUNT == before  # arrow path: no fallback
-    assert getattr(df, "_miniodb_est_bytes", None) is not None
-    assert df._miniodb_est_bytes > 0
 
     bad = [{"id": "c", "timestamp": 1, "table_name": "t",
             "fields": {"s": "bad\udcff"}}]
@@ -152,4 +148,3 @@ def test_batch_dataframe_fallback_counter_and_size_tag(spark):
     df_bad = dyn.batch_dataframe(spark, bad, schema2, nm2)
     assert dyn.ARROW_FALLBACK_COUNT == before + 1
     assert dyn.ARROW_FALLBACK_LAST is not None
-    assert getattr(df_bad, "_miniodb_est_bytes", None) is None

@@ -1690,3 +1690,21 @@ def test_engine_written_files_index_via_footer_fast_path(engine):
     assert doc is not None and set(doc["files"]) == set(stats)
     for rel, st in stats.items():
         assert doc["files"][rel]["timestamp"] == st["timestamp"]
+
+
+def test_sql_path_prune_error_is_counted_not_swallowed(engine, monkeypatch):
+    """A pruning failure falls back to the unpruned view — same answer
+    — and is counted in query_stats["zonemap"]["prune_errors"]."""
+    _seed(engine, "zerr", n=8, days=4)
+    sql = "SELECT id, v FROM zerr WHERE id = 'r005'"
+    want = json.loads(engine.query(sql))
+    assert want == [{"id": "r005", "v": 5}]
+    assert engine.query_stats["zonemap"]["prune_errors"] == 0
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("sidecar unreadable")
+
+    monkeypatch.setattr(engine, "point_lookup_df", boom)
+    engine.cache.invalidate_table("zerr")
+    assert json.loads(engine.query(sql)) == want
+    assert engine.query_stats["zonemap"]["prune_errors"] == 1
