@@ -364,6 +364,10 @@ class MiniODBService:
             # full-generation scans) — the ops signal behind the
             # narrowed except in Engine._build_zonemap (r11 verdict #1)
             "zonemap_build_errors": self.engine.zonemap_build_errors,
+            # files indexed by a Spark aggregation instead of their
+            # footers (no usable footer stats, e.g. a DOUBLE column)
+            "zonemap_spark_fallback_files":
+                self.engine.zonemaps.spark_fallback_files,
             # un-folded shard sidecars per table: folding stalls show
             # up here before load() latency degrades (r12 verdict #5)
             "zonemap_shards": self.engine.zonemaps.shard_counts(),

@@ -32,6 +32,7 @@ instead).
 from __future__ import annotations
 
 import json
+import math
 import os
 import threading
 from typing import Any, NamedTuple
@@ -59,6 +60,31 @@ _TYPE_MAP: dict[str, T.DataType] = {
     "boolean": T.BooleanType(),
     "timestamp": T.TimestampType(),
 }
+
+
+# Explicit-file scans of more paths than Spark's default threshold (32)
+# raise it while they resolve (see Engine._read_files). The lock keeps
+# concurrent raises from restoring each other's value.
+_PARALLEL_LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_SPARK_LISTING_THRESHOLD = 32
+_LISTING_CONF_LOCK = threading.Lock()
+
+# the nodes ``Dataset.toJSON().limit(n)`` puts over the query's own plan
+_TO_JSON_LIMIT = ("GlobalLimit", "LocalLimit")
+_TO_JSON_SERDE = ("SerializeFromObject", "MapPartitions", "DeserializeToObject")
+
+
+def _sorts_whole_result(plan) -> bool:
+    """Whether the optimized ``toJSON().limit(n)`` plan ``plan`` wraps a
+    global Sort, optionally under a Project: the two shapes a limit
+    placed directly over the query would plan as TakeOrderedAndProject."""
+    node = plan
+    for names in (_TO_JSON_LIMIT, _TO_JSON_SERDE):
+        while node.nodeName() in names:
+            node = node.child()
+    if node.nodeName() == "Project":
+        node = node.child()
+    return node.nodeName() == "Sort" and getattr(node, "global")()
 
 
 _CANONICAL = {"bigint": "long", "int": "long", "smallint": "long", "tinyint": "long",
@@ -95,6 +121,15 @@ class QueryResult(NamedTuple):
 
     json: str
     truncated: bool
+
+
+def _file_struct(gcols: dict[str, str]) -> T.StructType:
+    """A generation's data-file schema: its columns plus the ``dt``
+    partition column."""
+    return T.StructType(
+        [T.StructField(c, _parse_type(t), True) for c, t in gcols.items()]
+        + [T.StructField("dt", T.StringType(), True)]
+    )
 
 
 def _type_name(dt: T.DataType) -> str:
@@ -277,6 +312,8 @@ class Engine:
         # path that rewrites or removes files (mutations, compaction,
         # collapse, vacuum, drop) — see _forget_gen_files.
         self._gen_known_files: dict[tuple[str, int], set[str]] = {}
+        # read_persisted's head scan per table: (listing key, DataFrame)
+        self._head_scans: dict[str, tuple] = {}
         self._lock = threading.RLock()
         # per-table flush serialization: a flush's drain/requeue and the
         # known-files cache below assume one commit per table at a time,
@@ -352,6 +389,7 @@ class Engine:
                 self.fs.remove_dir(path)
             self.zonemaps.drop(name)
             self._forget_gen_files(name)
+            self._head_scans.pop(name, None)
             return ok
 
     def _remove_wal_files(self, table: str) -> None:
@@ -758,52 +796,117 @@ class Engine:
 
     def read_persisted(self, table: str) -> DataFrame | None:
         """Persisted parquet: one explicit-schema scan per generation
-        (never ``mergeSchema`` over a file listing), each cast/aligned to
-        the cumulative schema, then unioned. Single-generation tables —
-        the overwhelmingly common case — stay a single plain scan with
-        full partition pruning on ``dt``; ``gen`` is synthesized as a
-        literal so mutations can address physical partitions."""
+        (never ``mergeSchema`` over a file listing), each aligned to the
+        cumulative schema, then unioned; ``gen`` is synthesized as a
+        literal so mutations can address physical partitions, and
+        ``dt`` comes from the partition paths, so a ``dt`` predicate
+        still prunes at planning time.
+
+        Each call LISTs the live generations (excluded partitions
+        dropped) exactly like a pruned lookup does, and the scan reads
+        exactly that listing (``basePath`` + explicit files). The built
+        DataFrame is cached per table, keyed by the catalog state
+        (generation schemas, cumulative schema, excluded parts) plus
+        that listing: while nothing changed, a call costs the LISTs and
+        returns the already-analyzed scan — Spark neither re-lists nor
+        re-analyzes. Any writer that adds, moves or removes a file
+        changes the listing, so a hit never opens a file the store no
+        longer has. The key deliberately is not the catalog version:
+        compaction and rewrites move files before they commit."""
         gens = self.catalog.gen_schemas(table)
         cum = self.catalog.schema_of(table)
         if not gens or not cum:
             return None
         excluded = self.catalog.excluded_parts(table)
-        parts: list[DataFrame] = []
-        for i, gcols in enumerate(gens):
-            if not gcols:
-                continue  # tombstoned by collapse_generations: no stat
-            gdir = self._gen_dir(table, i)
-            if not self.fs.is_dir(gdir):
-                continue
-            struct = T.StructType(
-                [
-                    T.StructField(c, _parse_type(t), True)
-                    for c, t in gcols.items()
-                ]
-                + [T.StructField("dt", T.StringType(), True)]
-            )
-            df = self.spark.read.schema(struct).parquet(gdir)
-            # partitions superseded by a committed-but-not-yet-GC'd
-            # rewrite: dt is a partition column, so this prunes at
-            # planning time rather than filtering rows
-            dts = sorted(d for g, d in excluded if g == i)
-            if dts:
-                df = df.filter(~F.col("dt").isin(dts))
-            cols = [
-                (
-                    F.col(c).cast(_parse_type(ct))
-                    if c in gcols
-                    else F.lit(None).cast(_parse_type(ct))
-                ).alias(c)
-                for c, ct in cum.items()
-            ]
-            parts.append(df.select(*cols, F.col("dt"), F.lit(i).alias("gen")))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        # tombstoned generations (collapse_generations) are never listed
+        listings = [
+            self._live_listing(table, i, excluded) if gcols else None
+            for i, gcols in enumerate(gens)
+        ]
+        key = (
+            tuple(tuple(g.items()) for g in gens), tuple(cum.items()),
+            tuple(sorted(excluded)),
+            tuple(None if ls is None else tuple(ls) for ls in listings),
+        )
+        hit = self._head_scans.get(table)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        parts = [
+            self._gen_scan(table, i, gcols, cum, [rel for rel, _dt in ls])
+            for i, (gcols, ls) in enumerate(zip(gens, listings))
+            if ls
+        ]
+        empty = [i for i, ls in enumerate(listings) if ls == []]
+        if not parts and empty:
+            # every generation directory is empty: still a typed scan
+            parts = [self._gen_scan(table, empty[0], gens[empty[0]], cum, [])]
+        out = None
+        if parts:
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionByName(p)
+        self._head_scans[table] = (key, out)
         return out
+
+    def _live_listing(self, table: str, gen: int,
+                      excluded) -> list[tuple[str, str]] | None:
+        """Sorted ``(relpath, dt)`` of the generation's data files minus
+        its excluded ``dt`` partitions (superseded by a committed but
+        not yet GC'd rewrite); None when the directory does not exist."""
+        gdir = self._gen_dir(table, gen)
+        if not self.fs.is_dir(gdir):
+            return None
+        from .zonemap import list_generation_files
+
+        excl_dts = {d for g, d in excluded if g == gen}
+        return sorted(
+            (rel, dt) for rel, dt in list_generation_files(self.fs, gdir)
+            if dt not in excl_dts
+        )
+
+    def _gen_scan(self, table: str, gen: int, gcols: dict[str, str],
+                  cum: dict[str, str], rels: list[str]) -> DataFrame:
+        """Exactly the files ``rels`` of one generation, read with the
+        generation's own schema (``dt`` from the paths under
+        ``basePath``) and projected onto the cumulative schema: a column
+        whose type already matches passes through, a narrower one is
+        cast, a missing one is NULL; ``gen`` is a literal."""
+        struct = _file_struct(gcols)
+        if rels:
+            gdir = self._gen_dir(table, gen)
+            df = self._read_files(
+                gdir, struct, [fsmod.join(gdir, rel) for rel in rels])
+        else:  # a Python-side empty frame: only for an all-empty table
+            df = self.spark.createDataFrame([], struct)
+        cols = []
+        for c, ct in cum.items():
+            if gcols.get(c) == ct:
+                cols.append(F.col(c))  # an identity cast is one more analysis
+            else:
+                src = F.col(c) if c in gcols else F.lit(None)
+                cols.append(src.cast(_parse_type(ct)).alias(c))
+        return df.select(*cols, F.col("dt"), F.lit(gen).alias("gen"))
+
+    def _read_files(self, gdir: str, struct: T.StructType,
+                    paths: list[str]) -> DataFrame:
+        """A Parquet scan of exactly ``paths`` under ``basePath`` gdir.
+
+        The driver has already listed these files, so Spark only stats
+        them. Past ``parallelPartitionDiscovery.threshold`` paths (32 by
+        default) Spark would stat them in a parallel-listing job; the
+        threshold is raised to the path count while this scan resolves
+        (the listing is eager) so the stats stay on the driver."""
+        reader = self.spark.read.option("basePath", gdir).schema(struct)
+        if len(paths) <= _SPARK_LISTING_THRESHOLD:
+            return reader.parquet(*paths)
+        conf = self.spark.conf
+        with _LISTING_CONF_LOCK:
+            old = conf.get(_PARALLEL_LISTING_CONF)
+            conf.set(_PARALLEL_LISTING_CONF, str(max(int(old), len(paths))))
+            try:
+                return reader.parquet(*paths)
+            finally:
+                conf.set(_PARALLEL_LISTING_CONF, old)
 
     # -- time travel ------------------------------------------------------
 
@@ -918,9 +1021,9 @@ class Engine:
                         continue
                     if added_v is not None:
                         if added_v <= version:
-                            files.append(fp)
+                            files.append(rel)
                     elif mt <= commit_ts_us:
-                        files.append(fp)
+                        files.append(rel)
             # file-level loss detection: a file that is ALIVE at this
             # version per the add/remove log (added <= v, not removed
             # <= v) but absent from the listing was swapped or deleted
@@ -962,19 +1065,8 @@ class Engine:
                 continue
             if not files:
                 continue
-            struct = T.StructType(
-                [
-                    T.StructField(c, _parse_type(t), True)
-                    for c, t in gcols.items()
-                ]
-                + [T.StructField("dt", T.StringType(), True)]
-            )
             try:
-                df = (
-                    self.spark.read.schema(struct)
-                    .option("basePath", gdir)
-                    .parquet(*files)
-                )
+                parts.append(self._gen_scan(table, i, gcols, cum, files))
             except AnalysisException as e:
                 # TOCTOU (r16, storm-found): a file that passed the
                 # membership check above can be retention-dropped /
@@ -1007,15 +1099,6 @@ class Engine:
                     f"snapshot v{version} of {table!r}: a listed file "
                     f"vanished mid-read (concurrent retention/vacuum): "
                     f"{e}") from e
-            cols = [
-                (
-                    F.col(c).cast(_parse_type(ct))
-                    if c in gcols
-                    else F.lit(None).cast(_parse_type(ct))
-                ).alias(c)
-                for c, ct in cum.items()
-            ]
-            parts.append(df.select(*cols, F.col("dt"), F.lit(i).alias("gen")))
         if missing:
             raise SnapshotUnavailableError(
                 f"snapshot v{version} of {table!r} needs partitions/"
@@ -1120,13 +1203,7 @@ class Engine:
         gens = self.catalog.gen_schemas(table)
         if gen >= len(gens) or not gens[gen]:
             return None
-        return T.StructType(
-            [
-                T.StructField(c, _parse_type(t), True)
-                for c, t in gens[gen].items()
-            ]
-            + [T.StructField("dt", T.StringType(), True)]
-        )
+        return _file_struct(gens[gen])
 
     def _zonemap_cols_for(self, table: str) -> tuple[str, ...]:
         """Engine defaults (id, timestamp) plus the table's configured
@@ -1322,8 +1399,6 @@ class Engine:
         buffer lacking ANY of them holds only NULLs there, which no
         equality/range predicate matches — skipped wholesale."""
         req = (id_col,) if isinstance(id_col, str) else tuple(id_col)
-        from .zonemap import list_generation_files
-
         gens = self.catalog.gen_schemas(table)
         cum = self.catalog.schema_of(table)
         report = {"files_total": 0, "files_scanned": 0,
@@ -1333,18 +1408,10 @@ class Engine:
         for i, gcols in enumerate(gens):
             if not gcols:
                 continue
-            gdir = self._gen_dir(table, i)
-            if not self.fs.is_dir(gdir):
-                continue
-            excl_dts = {d for g, d in excluded if g == i}
-            listing = [
-                (rel, dt)
-                for rel, dt in list_generation_files(self.fs, gdir)
-                if dt not in excl_dts
-            ]
-            report["files_total"] += len(listing)
+            listing = self._live_listing(table, i, excluded)
             if not listing:
                 continue
+            report["files_total"] += len(listing)
             if all(c in gcols for c in req):
                 sel = select_fn(i, listing)
                 skipped = len(listing) - len(sel)
@@ -1352,23 +1419,8 @@ class Engine:
                 sel, skipped = [], len(listing)  # column absent: no match
             report["files_scanned"] += len(sel)
             report["files_skipped"] += skipped
-            if not sel:
-                continue
-            struct = self._gen_struct(table, i)
-            df = (
-                self.spark.read.option("basePath", gdir)
-                .schema(struct)
-                .parquet(*[fsmod.join(gdir, rel) for rel in sel])
-            )
-            cols = [
-                (
-                    F.col(c).cast(_parse_type(ct))
-                    if c in gcols
-                    else F.lit(None).cast(_parse_type(ct))
-                ).alias(c)
-                for c, ct in cum.items()
-            ]
-            parts.append(df.select(*cols, F.col("dt"), F.lit(i).alias("gen")))
+            if sel:
+                parts.append(self._gen_scan(table, i, gcols, cum, sel))
         persisted = None
         if parts:
             persisted = parts[0]
@@ -1404,12 +1456,35 @@ class Engine:
         df, report = self.point_lookup_df(table, value, id_col=id_col)
         if df is None:
             return QueryResult("[]", False), report
-        rows = df.limit(self.max_result_rows + 1).toJSON().collect()
-        truncated = len(rows) > self.max_result_rows
-        if truncated:
-            rows = rows[: self.max_result_rows]
-            self.query_stats["truncated"] += 1
+        rows, truncated = self._collect_json(df)
         return QueryResult("[" + ",".join(rows) + "]", truncated), report
+
+    def _collect_json(self, df: DataFrame) -> tuple[list[str], bool]:
+        """``df``'s rows as JSON texts, at most ``max_result_rows`` of
+        them, plus whether more existed (one row past the cap is fetched
+        so truncation is detectable). The limit sits ON TOP of
+        ``toJSON``, so Spark plans it as a CollectLimit that takes
+        partitions incrementally; ``df.limit(n).toJSON()`` instead hides
+        the limit under toJSON's MapPartitions and plans a GlobalLimit
+        over an ``Exchange SinglePartition`` shuffle. Same JSON
+        generator, same rows.
+
+        The exception is an ORDER BY with no limit of its own: a limit
+        directly over its global Sort plans as a top-K
+        (TakeOrderedAndProject), while one above toJSON cannot reach the
+        Sort, which would then range-shuffle and sort the whole result.
+        That shape keeps the limit under toJSON. Telling the two apart
+        reads the optimized plan the collect executes anyway."""
+        cap = self.max_result_rows
+        jds = df._jdf.toJSON().limit(cap + 1)
+        if _sorts_whole_result(jds.queryExecution().optimizedPlan()):
+            jds = df.limit(cap + 1)._jdf.toJSON()
+        rows = [r[0] for r in DataFrame(jds, self.spark).collect()]
+        truncated = len(rows) > cap
+        if truncated:
+            rows = rows[:cap]
+            self.query_stats["truncated"] += 1
+        return rows, truncated
 
     def point_lookup(self, table: str, value, id_col: str = "id") -> str:
         """JSON rows for a key lookup (the GetRecord-style fast path);
@@ -1438,6 +1513,13 @@ class Engine:
     ) -> DataFrame:
         """QueryData minus the JSON serialization: gate → rewrites →
         temp-view registration per referenced table → ``spark.sql``.
+
+        A table's view is the zone-map-pruned scan when the SQL pins a
+        key or range (:meth:`_pruned_view`); the full hybrid scan
+        (:meth:`read_table`) is built only when it is the view: no
+        pruning applies, pruning failed, or no file can match and the
+        empty view needs its schema. The persisted half of the full scan
+        is cached per file listing (:meth:`read_persisted`).
 
         Time travel: ``at_version`` pins the snapshot by catalog version
         (an int for single-table queries, a ``{table: version}`` dict
@@ -1483,144 +1565,10 @@ class Engine:
                             f"before ts_us={as_of_ts_us}")
                 df = self.read_snapshot(t, v)
             else:
-                df = self.read_table(t)
-                # zone-map file pruning on the SQL path: when the WHERE
-                # clause provably pins id = 'v' conjunctively (see
-                # gate.extract_conjunctive_eq for the soundness rules),
-                # swap the full hybrid scan for the pruned one — the
-                # SQL still re-applies every predicate, the pruned set
-                # is a superset of matching rows by construction, and
-                # any failure falls back to the full scan. This is the
-                # reference's Redis-min/max query-path pruning
-                # (BASELINE.md: file pruning −90% reads) on Spark.
-                # a self-join (FROM t a JOIN t b ...) references the
-                # view twice but the id conjunct constrains only ONE
-                # alias — pruning the shared view would drop the other
-                # alias's rows. Conservative: the table name must occur
-                # exactly once in the literal-stripped SQL (column
-                # prefixes over-count, which only declines the
-                # optimization, never breaks correctness).
-                import re as _re
-
-                single_ref = (
-                    len(tables) == 1
-                    and len(_re.findall(
-                        rf"\b{_re.escape(t)}\b",
-                        gate._strip_string_literals(sql))) == 1
-                )
-                # MULTI-table (r14 verdict #8): a plain single-SELECT
-                # join where only one side has the conjunct is
-                # provably prunable — but only with QUALIFIED
-                # attribution (alias.col / table.col; an unqualified
-                # `id` is ambiguous across the join) and only when
-                # the single WHERE is provably the outer filter. See
-                # gate.extract_join_pruning_bindings for the full
-                # soundness argument (covers LEFT/FULL null-extension).
-                qual: tuple[str, ...] | None = None
-                eligible = single_ref
-                if not eligible and len(tables) > 1:
-                    binds = gate.extract_join_pruning_bindings(sql)
-                    if binds is not None and t in binds:
-                        qual, eligible = binds[t], True
-                if df is not None and eligible:
-                    key = gate.extract_conjunctive_keys(
-                        sql, qualifier=qual)
-                    # timestamp range with TYPED comparison: the
-                    # quoted literal must parse as a (tz-naive) ISO
-                    # timestamp, else decline — a string bracket must
-                    # never be compared against a non-timestamp
-                    # literal (r13 verdict #5). The window composes
-                    # with BOTH key lookups ("these ids, last week")
-                    # and id ranges (keyset cursor inside a window).
-                    ts_parsed: tuple | None = None
-                    ts_rng = gate.extract_conjunctive_range(
-                        sql, column="timestamp",
-                        typed_literal_prefixes=("TIMESTAMP",),
-                        qualifier=qual)
-                    if ts_rng is not None:
-                        lo, lo_i, hi, hi_i = ts_rng
-                        plo = _parse_ts_literal(lo)
-                        phi = _parse_ts_literal(hi)
-                        if (lo is None) == (plo is None) and \
-                                (hi is None) == (phi is None):
-                            ts_parsed = (plo, lo_i, phi, hi_i)
-                    ranges: dict[str, tuple] = {}
-                    if key is None:
-                        # typed prefixes here too: without them a
-                        # coexisting `timestamp BETWEEN TIMESTAMP '..'
-                        # AND TIMESTAMP '..'` stays unrewritten and its
-                        # embedded AND makes the splitter decline the
-                        # WHOLE clause, losing the provable id range
-                        # (r14 ADVICE, low). _rewrite_between is
-                        # extraction-only and column-agnostic, so this
-                        # cannot affect id soundness.
-                        id_rng = gate.extract_conjunctive_range(
-                            sql, typed_literal_prefixes=("TIMESTAMP",),
-                            qualifier=qual)
-                        if id_rng is not None:
-                            ranges["id"] = id_rng
-                        if ts_parsed is not None:
-                            ranges["timestamp"] = ts_parsed
-                        # numeric-literal conjuncts on the table's
-                        # EXTRA indexed columns (TableConfig.
-                        # zonemap_columns) — the reference's numeric
-                        # min/max pruning (file_pruning.go:107-255).
-                        # Typed int/float bounds; the pruner admits
-                        # any non-comparable bracket (TypeError ⇒
-                        # scan), so a mis-typed column only loses the
-                        # optimization.
-                        for zc in self._zonemap_cols_for(t):
-                            if zc in ("id", "timestamp"):
-                                continue
-                            nrng = gate.extract_conjunctive_numeric_range(
-                                sql, column=zc, qualifier=qual)
-                            if nrng is None and (
-                                self.catalog.schema_of(t) or {}
-                            ).get(zc) == "string":
-                                # quoted-literal ranges on an extra
-                                # column prune exactly like the id
-                                # path — but ONLY when the cumulative
-                                # type is string, so the SQL compares
-                                # strings binarily (any non-string
-                                # type would CAST the literal, and a
-                                # lexicographic bracket check against
-                                # e.g. '2024-1-2' on a timestamp
-                                # column is an unsound skip).
-                                # Generations whose physical type
-                                # differs hold non-string brackets:
-                                # those TypeError into a scan.
-                                nrng = gate.extract_conjunctive_range(
-                                    sql, column=zc, qualifier=qual)
-                            if nrng is not None:
-                                ranges[zc] = nrng
-                    if key is not None or ranges:
-                        zs = self.query_stats.setdefault(
-                            "zonemap", {"queries": 0, "files_skipped": 0,
-                                        "prune_errors": 0})
-                        try:
-                            if key is not None:
-                                pruned, rep = self.point_lookup_df(
-                                    t, key, ts_range=ts_parsed)
-                            else:
-                                pruned, rep = self.multi_range_lookup_df(
-                                    t, ranges)
-                            zs["queries"] += 1
-                            zs["files_skipped"] += rep["files_skipped"]
-                            df = (
-                                pruned
-                                if pruned is not None
-                                else self.spark.createDataFrame(
-                                    [], df.schema)
-                            )
-                        except Exception as exc:
-                            # pruning is only an optimization: keep the
-                            # unpruned view, but count and log the failure
-                            zs["prune_errors"] += 1
-                            import logging
-
-                            logging.getLogger(__name__).warning(
-                                "zone-map pruning failed for %s (scanning "
-                                "unpruned): %r", t, exc)
+                # the full hybrid scan only when no pruned one replaces it
+                df = self._pruned_view(t, sql, tables)
+                if df is None:
+                    df = self.read_table(t)
             if df is None:
                 if self.catalog.get_table(t) is None:
                     raise gate.SQLGateError(f"table not found: {t}")
@@ -1629,6 +1577,137 @@ class Engine:
                 df = df.drop("gen")
             df.createOrReplaceTempView(t)
         return self.spark.sql(sql)
+
+    def _pruned_view(self, t: str, sql: str, tables) -> DataFrame | None:
+        """Zone-map file pruning on the SQL path: when the WHERE clause
+        provably pins ``id = 'v'`` (or an id / timestamp / indexed-column
+        range) conjunctively — see gate.extract_conjunctive_eq for the
+        soundness rules — the view is the pruned hybrid scan instead of
+        the full one. The SQL still re-applies every predicate and the
+        pruned set is a superset of matching rows by construction. This
+        is the reference's Redis-min/max query-path pruning (BASELINE.md:
+        file pruning −90% reads) on Spark.
+
+        Returns None when nothing is provable or pruning failed (counted
+        in ``query_stats["zonemap"]["prune_errors"]``): query_df then
+        builds the full scan, which it never builds for a pruned view."""
+        import re as _re
+
+        # a self-join (FROM t a JOIN t b ...) references the view twice
+        # but the id conjunct constrains only ONE alias — pruning the
+        # shared view would drop the other alias's rows. Conservative:
+        # the table name must occur exactly once in the literal-stripped
+        # SQL (column prefixes over-count, which only declines the
+        # optimization, never breaks correctness).
+        eligible = (
+            len(tables) == 1
+            and len(_re.findall(
+                rf"\b{_re.escape(t)}\b",
+                gate._strip_string_literals(sql))) == 1
+        )
+        # MULTI-table (r14 verdict #8): a plain single-SELECT join where
+        # only one side has the conjunct is provably prunable — but only
+        # with QUALIFIED attribution (alias.col / table.col; an
+        # unqualified `id` is ambiguous across the join) and only when
+        # the single WHERE is provably the outer filter. See
+        # gate.extract_join_pruning_bindings for the full soundness
+        # argument (covers LEFT/FULL null-extension).
+        qual: tuple[str, ...] | None = None
+        if not eligible and len(tables) > 1:
+            binds = gate.extract_join_pruning_bindings(sql)
+            if binds is not None and t in binds:
+                qual, eligible = binds[t], True
+        if not eligible:
+            return None
+        key = gate.extract_conjunctive_keys(sql, qualifier=qual)
+        # timestamp range with TYPED comparison: the quoted literal must
+        # parse as a (tz-naive) ISO timestamp, else decline — a string
+        # bracket must never be compared against a non-timestamp literal
+        # (r13 verdict #5). The window composes with BOTH key lookups
+        # ("these ids, last week") and id ranges (keyset cursor inside a
+        # window).
+        ts_parsed: tuple | None = None
+        ts_rng = gate.extract_conjunctive_range(
+            sql, column="timestamp", typed_literal_prefixes=("TIMESTAMP",),
+            qualifier=qual)
+        if ts_rng is not None:
+            lo, lo_i, hi, hi_i = ts_rng
+            plo = _parse_ts_literal(lo)
+            phi = _parse_ts_literal(hi)
+            if (lo is None) == (plo is None) and \
+                    (hi is None) == (phi is None):
+                ts_parsed = (plo, lo_i, phi, hi_i)
+        ranges: dict[str, tuple] = {}
+        if key is None:
+            # typed prefixes here too: without them a coexisting
+            # `timestamp BETWEEN TIMESTAMP '..' AND TIMESTAMP '..'` stays
+            # unrewritten and its embedded AND makes the splitter decline
+            # the WHOLE clause, losing the provable id range (r14 ADVICE,
+            # low). _rewrite_between is extraction-only and
+            # column-agnostic, so this cannot affect id soundness.
+            id_rng = gate.extract_conjunctive_range(
+                sql, typed_literal_prefixes=("TIMESTAMP",), qualifier=qual)
+            if id_rng is not None:
+                ranges["id"] = id_rng
+            if ts_parsed is not None:
+                ranges["timestamp"] = ts_parsed
+            # numeric-literal conjuncts on the table's EXTRA indexed
+            # columns (TableConfig.zonemap_columns) — the reference's
+            # numeric min/max pruning (file_pruning.go:107-255). Typed
+            # int/float bounds; the pruner admits any non-comparable
+            # bracket (TypeError ⇒ scan), so a mis-typed column only
+            # loses the optimization.
+            for zc in self._zonemap_cols_for(t):
+                if zc in ("id", "timestamp"):
+                    continue
+                nrng = gate.extract_conjunctive_numeric_range(
+                    sql, column=zc, qualifier=qual)
+                if nrng is None and (
+                    self.catalog.schema_of(t) or {}
+                ).get(zc) == "string":
+                    # quoted-literal ranges on an extra column prune
+                    # exactly like the id path — but ONLY when the
+                    # cumulative type is string, so the SQL compares
+                    # strings binarily (any non-string type would CAST
+                    # the literal, and a lexicographic bracket check
+                    # against e.g. '2024-1-2' on a timestamp column is an
+                    # unsound skip). Generations whose physical type
+                    # differs hold non-string brackets: those TypeError
+                    # into a scan.
+                    nrng = gate.extract_conjunctive_range(
+                        sql, column=zc, qualifier=qual)
+                if nrng is not None:
+                    ranges[zc] = nrng
+        if key is None and not ranges:
+            return None
+        zs = self.query_stats.setdefault(
+            "zonemap", {"queries": 0, "files_skipped": 0, "prune_errors": 0})
+        try:
+            if key is not None:
+                pruned, rep = self.point_lookup_df(t, key, ts_range=ts_parsed)
+            else:
+                pruned, rep = self.multi_range_lookup_df(t, ranges)
+            if pruned is None:
+                # no file or buffered row can match; the empty view still
+                # needs the full scan's schema (a table without any data
+                # is left to query_df, uncounted as before)
+                full = self.read_table(t)
+                if full is None:
+                    return None
+                pruned = self.spark.createDataFrame([], full.schema)
+            zs["queries"] += 1
+            zs["files_skipped"] += rep["files_skipped"]
+            return pruned
+        except Exception as exc:
+            # pruning is only an optimization: fall back to the unpruned
+            # view, but count and log the failure
+            zs["prune_errors"] += 1
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "zone-map pruning failed for %s (scanning unpruned): %r",
+                t, exc)
+            return None
 
     def _empty_struct(self, table: str) -> T.StructType:
         struct = self._catalog_struct(table)
@@ -1690,16 +1769,11 @@ class Engine:
             checked, limit=limit, default_table=default_table,
             at_version=at_version, as_of_ts_us=as_of_ts_us,
         )
-        # cap the collect: fetch one row beyond the cap so truncation is
-        # detectable; queries carrying their own LIMIT are unaffected
-        # (inject_limit is a no-op then, and the cap only trims if the
-        # user's limit exceeds it)
-        truncated = False
-        rows = df.limit(self.max_result_rows + 1).toJSON().collect()
-        if len(rows) > self.max_result_rows:
-            rows = rows[: self.max_result_rows]
-            truncated = True
-            self.query_stats["truncated"] += 1
+        t_built = _time.perf_counter()
+        # cap the collect; queries carrying their own LIMIT are
+        # unaffected (inject_limit is a no-op then, and the cap only
+        # trims if the user's limit exceeds it)
+        rows, truncated = self._collect_json(df)
         if self.encryptor:
             decrypted = [
                 json.dumps(self.encryptor.decrypt_row(json.loads(r)),
@@ -1709,14 +1783,20 @@ class Engine:
             result = "[" + ",".join(decrypted) + "]"
         else:
             result = "[" + ",".join(rows) + "]"
-        elapsed_ms = (_time.perf_counter() - t0) * 1000
-        # query stats + slow-query log (reference query.go:351-373)
+        t_done = _time.perf_counter()
+        elapsed_ms = (t_done - t0) * 1000
+        # query stats + slow-query log (reference query.go:351-373);
+        # build_ms is query_df (gate, views, pruning, planning),
+        # collect_ms the execution and JSON collect — both rounded down,
+        # so their sum never exceeds ms
         self.query_stats["count"] += 1
         self.query_stats["total_ms"] += elapsed_ms
         if elapsed_ms >= self.slow_query_ms:
-            self.query_stats["slow"].append(
-                {"sql": checked[:200], "ms": round(elapsed_ms, 1)}
-            )
+            self.query_stats["slow"].append({
+                "sql": checked[:200], "ms": round(elapsed_ms, 1),
+                "build_ms": math.floor((t_built - t0) * 10_000) / 10,
+                "collect_ms": math.floor((t_done - t_built) * 10_000) / 10,
+            })
             self.query_stats["slow"] = self.query_stats["slow"][-100:]
         out = QueryResult(result, truncated)
         if use_cache:

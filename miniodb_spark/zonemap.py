@@ -138,6 +138,10 @@ class ZoneMapStore:
     def __init__(self, fs, root: str):
         self.fs = fs
         self.root = root
+        # files build() had to index with a Spark aggregation because
+        # their footers lacked usable stats (object-store roots, NaN or
+        # stats-less FLOAT/DOUBLE columns): the counted fallback
+        self.spark_fallback_files = 0
 
     #: fold shards into the base sidecar once this many accumulate —
     #: keeps load() at O(1) small reads in the steady state while the
@@ -290,6 +294,7 @@ class ZoneMapStore:
             stats["dt"] = dt_of.get(rel)
             fresh[rel] = stats
         if spark_needed:
+            self.spark_fallback_files += len(spark_needed)
             paths = [fsmod.join(gen_dir, rel) for rel in spark_needed]
             df = (
                 spark.read.option("basePath", gen_dir)

@@ -52,6 +52,8 @@ def test_dashboard_overview_and_slow_queries(svc):
     assert slow["total"] >= 1
     assert "SELECT" in slow["slow_queries"][-1]["sql"]
     assert slow["slow_queries"][-1]["ms"] >= 0
+    last = slow["slow_queries"][-1]
+    assert last["build_ms"] + last["collect_ms"] <= last["ms"] + 1e-9
 
 
 def test_dashboard_rest_routes(engine):

@@ -66,3 +66,8 @@ def test_query_stats_and_slow_log(spark, tmp_path):
     assert st["queries"]["count"] == 1
     assert st["queries"]["slow"] == 1  # threshold 0 ⇒ everything is slow
     assert eng.query_stats["slow"][0]["sql"].startswith("SELECT v")
+    # the entry splits its time into build (gate, views, pruning,
+    # planning) and collect (execution + JSON); the dashboard shows it
+    entry = eng.query_stats["slow"][0]
+    assert entry["build_ms"] >= 0 and entry["collect_ms"] > 0
+    assert entry["build_ms"] + entry["collect_ms"] <= entry["ms"] + 1e-9

@@ -1,0 +1,385 @@
+"""The serve query path builds only the scan a query uses.
+
+- The full hybrid scan is built only when no pruned scan replaces it.
+- ``read_persisted`` caches its head scan per table, keyed by catalog
+  state plus the per-generation file listing: every writer that changes
+  the files or the catalog must make the next answer equal a fresh
+  Engine's.
+- Results are collected with the limit above ``toJSON`` (a CollectLimit,
+  no single-partition shuffle) and the same JSON text as before.
+"""
+
+import json
+
+import pytest
+from pyspark.sql import functions as F
+
+from miniodb_spark.backup import BackupManager
+from miniodb_spark.catalog import TableConfig
+from miniodb_spark.engine import Engine
+
+US = 1_000_000
+DAY = 86_400 * US
+T0 = 1_700_000_000 * US  # 2023-11-14 UTC
+
+HEAD_SQL = "SELECT * FROM t"
+
+
+def _rows(eng, sql=HEAD_SQL):
+    return sorted(
+        json.dumps(r.asDict(), sort_keys=True, default=str)
+        for r in eng.query_df(sql).collect()
+    )
+
+
+def _seed(eng, table="t", n=6, days=3, v0=0):
+    for i in range(n):
+        eng.write(table, {"v": v0 + i}, record_id=f"r{i}",
+                  timestamp_us=T0 + (i % days) * DAY)
+    eng.flush(table)
+
+
+def _assert_fresh(eng, before=None):
+    """The long-lived engine answers exactly like a freshly booted one
+    (and, when ``before`` is given, the writer did change the answer)."""
+    got = _rows(eng)
+    assert got == _rows(Engine(eng.spark, eng.root))
+    if before is not None:
+        assert got != before
+    return got
+
+
+def _head_cached(eng):
+    before = _rows(eng)
+    assert "t" in eng._head_scans
+    return before
+
+
+# -- cache freshness, one test per writer -------------------------------------
+
+
+def test_unchanged_table_reuses_the_head_scan(engine):
+    _seed(engine)
+    first = engine.read_persisted("t")
+    assert engine.read_persisted("t") is first
+    engine.write("t", {"v": 99}, record_id="x", timestamp_us=T0)
+    engine.flush("t")
+    assert engine.read_persisted("t") is not first
+
+
+def test_flush_into_existing_day(engine):
+    _seed(engine)
+    before = _head_cached(engine)
+    engine.write("t", {"v": 42}, record_id="new", timestamp_us=T0 + 5)
+    engine.flush("t")
+    assert any('"new"' in r for r in _assert_fresh(engine, before))
+
+
+def test_ingest_dataframe(engine, spark):
+    _seed(engine)
+    before = _head_cached(engine)
+    df = spark.createDataFrame(
+        [("bulk1", 7, "t")], "id string, v long, table_name string"
+    ).withColumn("timestamp", F.timestamp_micros(F.lit(T0 + DAY)))
+    engine.ingest_dataframe("t", df)
+    _assert_fresh(engine, before)
+
+
+def test_update_and_delete(engine):
+    _seed(engine)
+    before = _head_cached(engine)
+    engine.update("t", "r1", {"v": 1000}, timestamp_us=T0 + DAY)
+    before = _assert_fresh(engine, before)
+    engine.delete("t", "r2")
+    _assert_fresh(engine, before)
+
+
+def test_compact(engine):
+    for i in range(6):  # six one-file flushes into one day: L0 merges
+        engine.write("t", {"v": i}, record_id=f"r{i}", timestamp_us=T0 + i)
+        engine.flush("t")
+    before = _head_cached(engine)
+    files = engine._head_scans["t"][0]
+    assert engine.compact("t")
+    assert engine.read_persisted("t") is not None
+    assert engine._head_scans["t"][0] != files
+    assert _assert_fresh(engine) == before  # same rows, new files
+
+
+def test_enforce_retention(spark, tmp_path):
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.create_table("t", TableConfig(name="t", retention_days=3))
+    for i in range(6):
+        eng.write("t", {"v": i}, record_id=f"r{i}", timestamp_us=T0 - i * DAY)
+    eng.flush("t")
+    before = _head_cached(eng)
+    assert eng.enforce_retention(now_us=T0) == 2
+    assert len(_assert_fresh(eng, before)) == 4
+
+
+def test_vacuum_and_collapse_generations(spark, tmp_path):
+    eng = Engine(spark, str(tmp_path / "store"), retain_history=True)
+    _seed(eng)
+    # a conflicting type opens a second generation
+    eng.write("t", {"v": "text"}, record_id="s0", timestamp_us=T0)
+    eng.flush("t")
+    assert len(eng.catalog.gen_schemas("t")) == 2
+    eng.delete("t", "r0")
+    before = _head_cached(eng)
+    assert eng.vacuum("t") > 0
+    assert _assert_fresh(eng) == before  # excluded parts were invisible
+    assert eng.collapse_generations("t") > 0
+    assert _assert_fresh(eng) == before
+    assert eng.vacuum("t") >= 0
+    assert _assert_fresh(eng) == before
+
+
+def test_backup_then_restore(engine):
+    _seed(engine)
+    mgr = BackupManager(engine.catalog, engine=engine)
+    name = mgr.create_data_backup(["t"])["object_name"]
+    backed_up = _rows(engine)
+    engine.delete("t", "r0")
+    engine.write("t", {"v": 5}, record_id="late", timestamp_us=T0)
+    engine.flush("t")
+    _head_cached(engine)
+    mgr.restore_data_backup(name)
+    assert _assert_fresh(engine) == backed_up
+
+
+def test_drop_then_recreate(engine):
+    _seed(engine)
+    before = _head_cached(engine)
+    assert engine.delete_table("t")
+    assert "t" not in engine._head_scans
+    _seed(engine, n=3, days=1, v0=100)
+    got = _assert_fresh(engine, before)
+    assert len(got) == 3
+
+
+def test_second_engine_writes_same_root(engine):
+    _seed(engine)
+    before = _head_cached(engine)
+    other = Engine(engine.spark, engine.root)
+    other.write("t", {"v": 77}, record_id="foreign", timestamp_us=T0 + DAY)
+    other.flush("t")
+    other.delete("t", "r3")
+    got = _assert_fresh(engine, before)
+    assert any('"foreign"' in r for r in got)
+    assert not any('"r3"' in r for r in got)
+
+
+def test_emptied_generation_adds_no_scan(engine):
+    """A generation whose files were all rewritten away leaves an empty
+    directory: it contributes nothing to the union (no Python-side empty
+    frame to execute), and a table that is empty everywhere still has
+    its schema."""
+    engine.write("t", {"v": 1}, record_id="a", timestamp_us=T0)
+    engine.flush("t")
+    engine.write("t", {"v": "text"}, record_id="b", timestamp_us=T0 + DAY)
+    engine.flush("t")
+    engine.delete("t", "a")
+    assert engine.fs.is_dir(engine._gen_dir("t", 0))
+    plan = engine.read_persisted("t")._jdf.queryExecution().executedPlan()
+    assert "ExistingRDD" not in plan.toString(), plan.toString()
+    assert [r["id"] for r in engine.query_df("SELECT id FROM t").collect()] == ["b"]
+    engine.delete("t", "b")
+    assert json.loads(engine.query("SELECT id, dt FROM t")) == []
+
+
+# -- which scans a query builds -----------------------------------------------
+
+
+def _count_read_persisted(engine, monkeypatch):
+    calls = []
+    real = engine.read_persisted
+
+    def counting(table):
+        calls.append(table)
+        return real(table)
+
+    monkeypatch.setattr(engine, "read_persisted", counting)
+    return calls
+
+
+def test_prunable_query_builds_no_full_scan(engine, monkeypatch):
+    _seed(engine, n=8, days=4)
+    calls = _count_read_persisted(engine, monkeypatch)
+    out = json.loads(engine.query("SELECT id, v FROM t WHERE id = 'r5'"))
+    assert out == [{"id": "r5", "v": 5}]
+    assert calls == []
+    assert engine.query_stats["zonemap"]["queries"] == 1
+    out = json.loads(engine.query("SELECT count(*) AS n FROM t"))
+    assert out == [{"n": 8}]
+    assert calls == ["t"]
+
+
+def test_no_matching_file_still_has_full_schema(engine, monkeypatch):
+    _seed(engine, n=4, days=2)
+    calls = _count_read_persisted(engine, monkeypatch)
+    df = engine.query_df("SELECT * FROM t WHERE id = 'zzz'")
+    assert df.collect() == []
+    assert set(df.columns) >= {"id", "timestamp", "v", "dt"}
+    assert calls == ["t"]  # only for the schema
+
+
+def test_prune_error_falls_back_to_full_scan(engine, monkeypatch):
+    _seed(engine, n=8, days=4)
+    sql = "SELECT id, v FROM t WHERE id = 'r6'"
+    want = json.loads(engine.query(sql))
+    calls = _count_read_persisted(engine, monkeypatch)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("sidecar unreadable")
+
+    monkeypatch.setattr(engine, "point_lookup_df", boom)
+    engine.cache.invalidate_table("t")
+    assert json.loads(engine.query(sql)) == want == [{"id": "r6", "v": 6}]
+    assert engine.query_stats["zonemap"]["prune_errors"] == 1
+    assert calls == ["t"]
+
+
+def test_identity_columns_are_not_cast(engine):
+    _seed(engine)
+    plan = engine.read_persisted("t")._jdf.queryExecution().analyzed().toString()
+    assert "cast(" not in plan.lower(), plan
+
+
+# -- the collect ---------------------------------------------------------------
+
+
+def _executed_plans(spark, run):
+    """Physical plans of the SQL executions ``run`` started (the status
+    store keeps a bounded, id-ordered list, so new ones are at its end)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest_first():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        for i in range(execs.size() - 1, -1, -1):
+            yield execs.apply(i)
+
+    last = next((e.executionId() for e in newest_first()), -1)
+    run()
+    plans = []
+    for e in newest_first():
+        if e.executionId() <= last:
+            break
+        plans.append(e.physicalPlanDescription())
+    return plans
+
+
+def test_lookup_collect_has_no_single_partition_exchange(engine, spark):
+    _seed(engine, n=8, days=4)
+    plans = _executed_plans(
+        spark, lambda: engine.query("SELECT * FROM t WHERE id = 'r2'"))
+    assert plans and any("CollectLimit" in p for p in plans), plans
+    assert not any("Exchange SinglePartition" in p for p in plans), plans
+    plans = _executed_plans(spark, lambda: engine.point_lookup("t", "r2"))
+    assert plans and not any("Exchange SinglePartition" in p for p in plans)
+
+
+def test_order_by_without_limit_collects_as_top_k(engine, spark):
+    _seed(engine, n=8, days=4)
+    engine.max_result_rows = 3
+    for sql in ("SELECT * FROM t ORDER BY v", "SELECT id FROM t ORDER BY v"):
+        plans = _executed_plans(spark, lambda: engine.query(sql))
+        assert any("TakeOrderedAndProject" in p for p in plans), plans
+        assert not any("Exchange rangepartitioning" in p for p in plans)
+    # with its own LIMIT the top-K sits below toJSON: the cap collects
+    plans = _executed_plans(
+        spark, lambda: engine.query("SELECT * FROM t ORDER BY v LIMIT 5"))
+    assert any("TakeOrderedAndProject" in p for p in plans), plans
+    assert any("CollectLimit" in p for p in plans), plans
+
+
+def test_scan_of_many_files_runs_no_listing_job(engine, spark):
+    for i in range(40):  # one file per day: 40 explicit paths, > 32
+        engine.write("t", {"v": i}, record_id=f"r{i}",
+                     timestamp_us=T0 + i * DAY)
+    engine.flush("t")
+    sc = spark.sparkContext
+    threshold = spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold")
+    sc.setJobGroup("many-files-scan", "head scan over 40 files")
+    try:
+        assert engine.read_persisted("t") is not None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("many-files-scan")) == []
+    assert spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold") == threshold
+    assert json.loads(engine.query("SELECT count(*) AS n FROM t")) == [{"n": 40}]
+
+
+def _old_form(engine, df):
+    return df.limit(engine.max_result_rows + 1).toJSON().collect()
+
+
+def test_collect_json_matches_old_form_on_awkward_values(engine, spark):
+    df = spark.createDataFrame(
+        [("a", None, float("nan"), "naïve ☃ 日本", 0),
+         ("b", 2, float("inf"), None, 1_700_000_000_123_456),
+         ("c", 3, -0.0, "quote \" and \\ slash", -1)],
+        "k string, n long, x double, s string, us long",
+    ).withColumn("ts", F.timestamp_micros("us"))
+    rows, truncated = engine._collect_json(df.orderBy("k"))
+    assert rows == _old_form(engine, df.orderBy("k")) and not truncated
+    # the same values through a stored table and the SQL path
+    for i, (x, s) in enumerate([(float("nan"), "ü"), (None, "日本"),
+                                (1.5, None)]):
+        engine.write("t", {"x": x, "s": s}, record_id=f"r{i}",
+                     timestamp_us=T0 + i * 123_457)
+    engine.flush("t")
+    df = engine.query_df("SELECT * FROM t ORDER BY id")
+    rows, _ = engine._collect_json(df)
+    assert rows == _old_form(engine, df) and len(rows) == 3
+
+
+def test_collect_json_matches_old_form_on_join_and_order(engine):
+    _seed(engine, n=8, days=4)
+    df = engine.query_df(
+        "SELECT a.id, b.id, a.v FROM t a JOIN t b ON a.v = b.v + 1 "
+        "ORDER BY a.v DESC")
+    rows, _ = engine._collect_json(df)
+    assert rows == _old_form(engine, df)
+    assert rows[0].count('"id"') == 2  # both duplicate names are emitted
+    df = engine.query_df("SELECT id, v FROM t ORDER BY v DESC LIMIT 3")
+    rows, _ = engine._collect_json(df)
+    assert rows == _old_form(engine, df)
+    assert [json.loads(r)["v"] for r in rows] == [7, 6, 5]
+
+
+def test_collect_cap_plus_one_sets_truncated(engine):
+    _seed(engine, n=6, days=3)
+    engine.max_result_rows = 5
+    df = engine.query_df("SELECT id, v FROM t ORDER BY id")
+    old = _old_form(engine, df)
+    rows, truncated = engine._collect_json(df)
+    assert len(old) == 6 and truncated and rows == old[:5]
+    res = engine.query_full("SELECT id, v FROM t ORDER BY id")
+    assert res.truncated and json.loads(res.json) == [json.loads(r) for r in old[:5]]
+    assert engine.query_stats["truncated"] == 2
+    res, _ = engine.point_lookup_full("t", ["r0", "r1", "r2", "r3", "r4", "r5"])
+    assert res.truncated and len(json.loads(res.json)) == 5
+    engine.max_result_rows = 6
+    rows, truncated = engine._collect_json(df)
+    assert rows == old and not truncated
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT id, v FROM t WHERE id = 'r1'",
+    "SELECT id FROM t WHERE id > 'r3' ORDER BY id",
+    "SELECT count(*) AS n FROM t WHERE timestamp >= TIMESTAMP "
+    "'2023-11-15 00:00:00'",
+    "SELECT sum(v) AS s FROM t",
+])
+def test_answers_match_a_fresh_engine_after_buffered_writes(engine, sql):
+    _seed(engine, n=8, days=4)
+    first = json.loads(engine.query(sql))
+    engine.write("t", {"v": 50}, record_id="r9", timestamp_us=T0 + 2 * DAY)
+    got = json.loads(engine.query(sql))
+    assert got == json.loads(Engine(engine.spark, engine.root).query(sql))
+    if "sum(v)" in sql:
+        assert got != first

@@ -1708,3 +1708,42 @@ def test_sql_path_prune_error_is_counted_not_swallowed(engine, monkeypatch):
     engine.cache.invalidate_table("zerr")
     assert json.loads(engine.query(sql)) == want
     assert engine.query_stats["zonemap"]["prune_errors"] == 1
+
+
+def test_spark_aggregate_fallback_is_counted(engine):
+    """Files whose footers cannot bracket a zone-map column — every file
+    of a table indexing a DOUBLE column — are indexed by a Spark
+    aggregation instead; the store counts them and get_metrics reports
+    the count next to zonemap_build_errors."""
+    import os
+
+    from miniodb_spark.api import MiniODBService
+    from miniodb_spark.catalog import TableConfig
+    from miniodb_spark.monitoring import MetricsRegistry
+
+    engine.create_table("zdbl", TableConfig(
+        name="zdbl", zonemap_columns=["value"]))
+    before = engine.zonemaps.spark_fallback_files
+    for i in range(6):  # three days: one file per day
+        engine.write("zdbl", {"value": i * 1.5}, record_id=f"r{i}",
+                     timestamp_us=T0 + (i % 3) * DAY)
+    engine.flush("zdbl")
+    written = sum(
+        f.endswith(".parquet")
+        for _d, _s, fs in os.walk(os.path.join(engine.root, "zdbl"))
+        for f in fs)
+    assert written == 3
+    assert engine.zonemaps.spark_fallback_files == before + written
+    assert engine.zonemap_build_errors == 0
+
+    svc = MiniODBService.__new__(MiniODBService)
+    svc.engine = engine
+    svc._counters = {}
+    svc.rate_limiter = None
+    svc.metrics = MetricsRegistry()
+    m = svc.get_metrics()
+    assert m["zonemap_spark_fallback_files"] == before + written
+    # an integer column keeps the footer path: no fallback
+    engine.write("zint", {"v": 1}, record_id="a", timestamp_us=T0)
+    engine.flush("zint")
+    assert engine.zonemaps.spark_fallback_files == before + written

@@ -1,20 +1,24 @@
 #!/usr/bin/env python
-"""Round-17 optimization measurement harness (guide §1: measure first).
+"""Query-plan measurement harness: measure before optimizing.
 
 For each named query (default: the bench headline set + the TPC-H
 suite), this captures:
 
-- ``plans/r17/<name>_<tag>.txt`` — ``.explain("formatted")`` output;
+- ``<out>/<name>_<tag>.txt`` — ``.explain("formatted")`` output;
 - wall time over N warm repetitions (median + min) using the same
   timed action as bench.py (collect of the aggregated result) so the
   numbers are directly comparable with BENCH_r*.json;
 - job/stage/task counts via the status tracker, so "fewer jobs /
-  fewer tasks" claims in OPTIMIZATION_r17.md are measured, not eyeballed;
+  fewer tasks" claims in an optimization write-up are measured, not
+  eyeballed;
 - a plan-shape summary line: #Exchange, join strategies, Python eval
   nodes, WholeStageCodegen spans, PushedFilters presence.
 
 Usage:
-    python tools/profile_r17.py [--tag before|after] [--reps 3] [name ...]
+    python tools/profile.py --out plans/<round> [--tag before|after]
+        [--reps 3] [--tpch] [name ...]
+
+``--out`` is relative to the repository root unless absolute.
 """
 
 from __future__ import annotations
@@ -74,6 +78,8 @@ def plan_summary(plan: str) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--out", required=True,
+                    help="plan directory, e.g. plans/r19")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--no-plans", action="store_true")
@@ -86,13 +92,13 @@ def main() -> None:
     from miniodb_spark.queries import get_registry
     from miniodb_spark.session import get_spark
 
-    spark = get_spark("profile_r17")
+    spark = get_spark("profile")
     registry = get_registry()
     spark.range(1000).selectExpr("sum(id)").collect()  # warm the session
 
     names = args.names or (HEADLINE + (TPCH if args.tpch else []))
     plans_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r17")
+        os.path.abspath(__file__))), args.out)
     os.makedirs(plans_dir, exist_ok=True)
 
     tracker = spark.sparkContext.statusTracker()
