@@ -22,7 +22,7 @@ Package map:
   extractor.py  table-name extraction + query classification (internal/query/table_extractor.go)
   schema.py     dynamic schema inference + column sanitization (internal/buffer/concurrent_buffer.go)
   buffer.py     WAL-backed in-memory write buffer (internal/buffer, internal/wal)
-  catalog.py    table configs + schema-generation registry (internal/metadata)
+  catalog.py    table configs + schema-generation registry + the add/remove commit log (internal/metadata)
   cache.py      query result cache with table-keyed invalidation (internal/query/query_cache.go)
   engine.py     the Engine facade: write/query/update/delete lifecycle (internal/service)
   api.py        1:1 facade over the reference's RPC surface (api/proto/miniodb/v1)

@@ -133,17 +133,16 @@ class BackupManager:
         return self.engine
 
     def _table_objects(self, table: str) -> list[tuple[str, str, int]]:
-        """(abs_path, relpath-under-table-dir, size) for every data object
-        of ``table`` — the same gen=/dt= walk the compactor uses."""
+        """(abs_path, relpath-under-table-dir, size) for every live data
+        file of ``table`` — the commit log's live set, so an uncommitted
+        orphan or a removed leftover is not backed up."""
         eng = self._require_engine()
-        tdir = fsmod.join(eng.root, table)
-        out: list[tuple[str, str, int]] = []
-        for gen_dir in eng.fs.list_dirs(tdir, prefix="gen="):
-            for part_dir in eng.fs.list_dirs(gen_dir, prefix="dt="):
-                for path, size in eng.fs.list_files(part_dir, suffix=".parquet"):
-                    rel = "/".join(path.replace("\\", "/").rsplit("/", 3)[-3:])
-                    out.append((path, rel, size))
-        return out
+        return [
+            (path, f"gen={gen}/dt={dt}/" + path.rstrip("/").rsplit("/", 1)[-1],
+             size)
+            for (gen, dt), objs in sorted(eng.live_objects(table).items())
+            for path, size in objs
+        ]
 
     def create_data_backup(self, tables: list[str] | None = None) -> dict[str, Any]:
         """Copy every data object of the given tables (default: all) into
@@ -229,8 +228,21 @@ class BackupManager:
                   fsmod.join(eng.root, t, e["rel"])) for e in entries],
             )
             restored[t] = len(entries)
-        # metadata last: once the catalog commits, readers resolve the
-        # freshly-copied objects
+        # metadata last, in the same commit that sets each table's
+        # files: the manifest's files are added and every other live
+        # file removed, so the restored table is exactly the backup
+        adds: dict[str, dict[int, list[str]]] = {}
+        rms: dict[str, dict[int, list[str]]] = {}
+        for t in tables:
+            for e in manifest["tables"][t]:
+                gen_part, rel = e["rel"].split("/", 1)
+                adds.setdefault(t, {}).setdefault(
+                    int(gen_part[len("gen="):]), []).append(rel)
+            for g, files in self.catalog.live_files(t).items():
+                keep = set(adds.get(t, {}).get(g, ()))
+                gone = [rel for rel, _dt in files if rel not in keep]
+                if gone:
+                    rms.setdefault(t, {})[g] = gone
         meta = manifest["metadata"]
         subset = {
             "tables": {t: meta["tables"][t] for t in tables
@@ -240,7 +252,8 @@ class BackupManager:
             "excluded": {t: meta.get("excluded", {}).get(t, [])
                          for t in tables},
         }
-        self.catalog.import_metadata(subset)
+        self.catalog.import_metadata(subset, add_files=adds,
+                                     remove_files=rms)
         for t in tables:
             eng.cache.invalidate_table(t)
         return {"success": True, "tables_restored": restored}

@@ -25,6 +25,12 @@ to DuckDB's ``union_by_name`` coercion) must be modeled explicitly:
   matching the reference's everything-else-is-UTF8 fallback), then
   union. Partition pruning on ``dt`` still applies inside every
   generation prefix.
+
+Which files belong to the table is kept only in the per-table commit
+log (``_history/<table>.jsonl``): each commit's add and remove entries,
+Delta Lake style. A file is live from the commit that adds it until the
+commit that removes it; :meth:`Catalog.live_files` answers for the head
+and for any past version, and no reader lists data directories.
 """
 
 from __future__ import annotations
@@ -71,6 +77,32 @@ def merge_type(a: str, b: str) -> str:
     return "string"
 
 
+def _apply_files(live: dict[tuple[int, str], None], rec: dict) -> None:
+    """Fold one commit record's remove and add entries into ``live``
+    (an insertion-ordered set of ``(gen, relpath)``)."""
+    for g, rels in (rec.get("rm") or {}).items():
+        for rel in rels:
+            live.pop((int(g), rel), None)
+    for g, rels in (rec.get("add") or {}).items():
+        for rel in rels:
+            live[(int(g), rel)] = None
+
+
+class _TableLog:
+    """One table's commit log as read so far: every record in file
+    order and the live file set after the last of them."""
+
+    def __init__(self) -> None:
+        self.offset = 0  # bytes consumed (complete lines only)
+        self.first = b""  # the first line: identifies this file
+        self.records: list[dict[str, Any]] = []
+        self.live: dict[tuple[int, str], None] = {}
+
+    def apply(self, rec: dict[str, Any]) -> None:
+        self.records.append(rec)
+        _apply_files(self.live, rec)
+
+
 class Catalog:
     def __init__(self, root: str):
         self.root = root
@@ -90,6 +122,8 @@ class Catalog:
         # table -> last committed catalog version (the commit-log line
         # count); versions start at 1 with the table's first persist
         self._versions: dict[str, int] = {}
+        # table -> its commit log, parsed and read incrementally (_log)
+        self._logs: dict[str, _TableLog] = {}
         self._hist_dir = os.path.join(self._dir, "_history")
         os.makedirs(self._hist_dir, exist_ok=True)
         self._load_all()
@@ -137,116 +171,120 @@ class Catalog:
         os.replace(tmp, self._path(name))
         self._sigs[name] = self._sig_of(self._path(name))
         # commit log: every catalog flip appends the full (small) doc as
-        # one JSONL line, giving an ordered history of table states —
-        # the substrate for Engine.read_snapshot time travel and a
-        # metadata audit trail. Appends are O_APPEND-atomic for these
-        # line sizes. The version number is max(in-memory counter,
-        # last line ON DISK) + 1 — the tail re-read (one seek-from-end,
-        # not a full-file scan) keeps versions monotone when ANOTHER
-        # driver advanced the shared history since our last persist:
-        # with the add-file index, a duplicated version number is no
-        # longer benign last-line-wins metadata — it would pin a later
-        # batch's files onto an earlier snapshot (caught by
-        # tests/test_multiprocess.py). Truly simultaneous persists to
-        # one table still require the flush-lock/lease serialization
-        # the mutation paths already use.
-        v = max(
-            self._versions.get(name, 0), self._last_history_version(name)
-        ) + 1
+        # one JSONL line, giving an ordered history of table states and
+        # the table's file membership (add/rm entries). Appends are
+        # O_APPEND-atomic for these line sizes. The version number is
+        # max(in-memory counter, last version in the log) + 1, with the
+        # log re-read first, so versions stay monotone when ANOTHER
+        # driver advanced the shared history since our last persist: a
+        # duplicated version number would pin a later batch's files
+        # onto an earlier snapshot (tests/test_multiprocess.py). Truly
+        # simultaneous persists to one table still require the
+        # flush-lock/lease serialization the writers already use.
+        log = self._log(name)
+        v = max(self._versions.get(name, 0),
+                log.records[-1]["v"] if log.records else 0) + 1
         self._versions[name] = v
         rec: dict = {"v": v, "ts_us": int(time.time() * 1e6), "doc": doc}
         if add_files:
-            # Delta-style add-file entries: {gen: [relpaths]} the commit
-            # ADDED — pins snapshot file membership without trusting
-            # file mtimes (object-store PUT time vs driver wall clock
-            # can skew; see Engine.read_snapshot). Recorded only on the
-            # history line, never in the current-state json: it is a
-            # per-commit delta, not table state.
+            # Delta-style add entries: {gen: [relpaths]} this commit
+            # added. Recorded only on the log line, never in the
+            # current-state json: it is a per-commit delta.
             rec["add"] = {str(g): sorted(rels)
                           for g, rels in add_files.items() if rels}
         if remove_files:
-            # Delta-style remove-file entries: files this commit
-            # physically REPLACED (compaction swaps). A file is alive
-            # for snapshots in [added_version, removed_version);
-            # read_snapshot refuses versions that still need a removed
-            # file and uses the replacement adds for later versions.
+            # remove entries: files this commit took out of the table
+            # (compaction inputs, rewritten partitions, retention,
+            # restore); they stay live for earlier versions
             rec["rm"] = {str(g): sorted(rels)
                          for g, rels in remove_files.items() if rels}
         line = json.dumps(rec, separators=(",", ":"))
         with open(self._hist_path(name), "a", encoding="utf-8") as fh:
             fh.write(line + "\n")
 
-    # -- commit log (time travel / audit) --------------------------------
+    # -- commit log (time travel / audit / file membership) --------------
 
     def _hist_path(self, name: str) -> str:
         return os.path.join(self._hist_dir, f"{name}.jsonl")
 
-    def _last_history_version(self, name: str) -> int:
-        """Version on the history file's last line — read via one
-        seek-from-end block, not a full-file scan: _persist calls this
-        per commit, and the log grows one line per commit, so a linear
-        read here would make N commits cost O(N^2) total."""
-        try:
-            with open(self._hist_path(name), "rb") as fh:
-                fh.seek(0, os.SEEK_END)
-                size = fh.tell()
-                if size == 0:
-                    return 0
-                # history lines are small (one doc + add list); 64 KiB
-                # covers any single line — double until a newline-split
-                # yields a complete last line or the whole file is read
-                block = 65536
-                while True:
-                    start = max(0, size - block)
-                    fh.seek(start)
-                    data = fh.read(size - start)
-                    lines = [
-                        ln for ln in data.split(b"\n") if ln.strip()
-                    ]
-                    if start == 0:
-                        break
-                    # the first split piece may be a partial line; a
-                    # complete last line needs >= 2 pieces (or BOF)
-                    if len(lines) >= 2:
-                        break
-                    block *= 2
-                if not lines:
-                    return 0
-                return json.loads(lines[-1].decode("utf-8"))["v"]
-        except FileNotFoundError:
-            return 0
-        except (ValueError, KeyError):
-            # torn/corrupt tail line: fall back to a full scan for the
-            # last parseable record
+    def _log(self, name: str) -> _TableLog:
+        """The table's commit log, brought up to date. Reads only the
+        complete, newline-terminated lines appended since the last call
+        (another driver may be mid-append); starts over when the file
+        shrank or no longer begins with the first line read (drop →
+        recreate, here or in another driver)."""
+        with self._lock:
+            log = self._logs.get(name)
             try:
-                with open(self._hist_path(name), encoding="utf-8") as fh:
-                    v = 0
-                    for line in fh:
-                        if not line.strip():
-                            continue
-                        try:
-                            v = max(v, int(json.loads(line)["v"]))
-                        except (ValueError, KeyError):
-                            continue
-                    return v
+                fh = open(self._hist_path(name), "rb")
             except FileNotFoundError:
-                return 0
+                if log is None or log.offset:
+                    log = self._logs[name] = _TableLog()
+                return log
+            with fh:
+                size = os.fstat(fh.fileno()).st_size
+                if log is None or size < log.offset or (
+                        log.first and fh.read(len(log.first)) != log.first):
+                    log = self._logs[name] = _TableLog()
+                if size > log.offset:
+                    fh.seek(log.offset)
+                    data = fh.read()
+                    end = data.rfind(b"\n") + 1
+                    lines = [ln for ln in data[:end].split(b"\n")
+                             if ln.strip()]
+                    # parse every line before applying any: a corrupt
+                    # line raises here on each call, never half-applied
+                    for rec in [json.loads(ln) for ln in lines]:
+                        log.apply(rec)
+                    log.first = log.first or (lines[0] if lines else b"")
+                    log.offset += end
+            return log
+
+    def log_version(self, name: str) -> tuple[_TableLog, int]:
+        """An opaque token that changes whenever the table's commit log
+        does — (the log read, records read so far); a log read anew
+        after drop → recreate never equals an older one. Keys caches of
+        anything derived from the live file set."""
+        log = self._log(name)
+        return (log, len(log.records))
+
+    def live_files(
+        self, name: str, version: int | None = None,
+    ) -> dict[int, list[tuple[str, str]]]:
+        """``{gen: [(relpath, dt), ...]}`` (sorted) of the files live at
+        ``version`` (default: the latest commit). The add/remove log is
+        the only membership record: a file is live from the commit that
+        adds it until the commit that removes it (added <= v < removed;
+        a restore may add it again). A file on disk that no commit added
+        — a crashed writer's output, a leftover a commit already removed
+        — is not part of the table."""
+        with self._lock:
+            log = self._log(name)
+            if version is None:
+                live = log.live
+            else:
+                live = {}
+                for rec in log.records:
+                    if rec["v"] <= version:
+                        _apply_files(live, rec)
+            out: dict[int, list[tuple[str, str]]] = {}
+            for g, rel in sorted(live):
+                out.setdefault(g, []).append(
+                    (rel, rel.split("/", 1)[0][len("dt="):]))
+            return out
 
     def touch(
         self, name: str,
         add_files: dict[int, list[str]] | None = None,
         remove_files: dict[int, list[str]] | None = None,
     ) -> int:
-        """Append a data-commit marker: re-persist the current doc AFTER
-        a write job's files are on disk, so the marker version's ts_us
-        upper-bounds those files' mtimes. Schema registration persists
-        BEFORE the job runs (the rollback protocol needs that order), so
-        the registration version deliberately does NOT include the
-        in-flight files — the post-write marker is the version whose
-        snapshot does. ``add_files`` ({gen: [relpaths]}) records the
-        batch's files on the commit line (Delta-style add entries) so
-        read_snapshot pins membership without trusting file mtimes.
-        Returns the marker version."""
+        """Append a data commit: re-persist the current doc with the
+        files a writer added (``add_files``, {gen: [relpaths]}) and
+        removed (``remove_files``) as one commit-log record. Schema
+        registration persists BEFORE the writer runs (the rollback
+        protocol needs that order), so the registration version never
+        includes the in-flight files — this commit is the version whose
+        snapshot does. Returns its version."""
         with self._lock:
             if name in self._configs:
                 self._persist(name, add_files=add_files,
@@ -255,10 +293,11 @@ class Catalog:
 
     def current_version(self, name: str) -> int:
         """Last committed catalog version for ``name`` (0 = never
-        persisted). Re-reads the commit log so a version committed by
-        another driver since our last persist is visible."""
+        persisted), including versions committed by another driver
+        since our last persist."""
         with self._lock:
-            v = self._last_history_version(name)
+            log = self._log(name)
+            v = log.records[-1]["v"] if log.records else 0
             if v:
                 self._versions[name] = v
             return v
@@ -266,19 +305,9 @@ class Catalog:
     def history(self, name: str) -> list[dict[str, Any]]:
         """The table's commit log, oldest first: one
         ``{"v": int, "ts_us": int}`` per catalog flip (docs omitted —
-        use :meth:`doc_at`). Length is the number of metadata commits,
-        not data volume, so driver-side materialization is safe."""
-        out: list[dict[str, Any]] = []
-        try:
-            with open(self._hist_path(name), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    out.append({"v": rec["v"], "ts_us": rec["ts_us"]})
-        except FileNotFoundError:
-            pass
-        return out
+        use :meth:`doc_at`)."""
+        return [{"v": r["v"], "ts_us": r["ts_us"]}
+                for r in self._log(name).records]
 
     def record_at(self, name: str, version: int) -> dict[str, Any] | None:
         """The full commit-log record ``{"v", "ts_us", "doc"}`` for
@@ -286,16 +315,9 @@ class Catalog:
         mirroring the json's last-writer semantics). None when the
         version was never committed."""
         found = None
-        try:
-            with open(self._hist_path(name), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    if rec["v"] == version:
-                        found = rec
-        except FileNotFoundError:
-            return None
+        for rec in self._log(name).records:
+            if rec["v"] == version:
+                found = rec
         return found
 
     def doc_at(self, name: str, version: int) -> dict[str, Any] | None:
@@ -306,83 +328,27 @@ class Catalog:
         """Largest version committed at or before ``ts_us`` (Delta's
         TIMESTAMP AS OF resolution). None when the table had no commit
         by then."""
-        best = None
-        try:
-            with open(self._hist_path(name), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    if rec["ts_us"] <= ts_us and (
-                        best is None or rec["v"] >= best
-                    ):
-                        best = rec["v"]
-        except FileNotFoundError:
-            return None
-        return best
-
-    def docs_between(
-        self, name: str, after: int, upto: int | None = None
-    ) -> list[dict[str, Any]]:
-        """Docs for versions in (after, upto] — the window
-        read_snapshot inspects to find partitions vacuumed since a
-        snapshot's commit point."""
-        out: list[dict[str, Any]] = []
-        try:
-            with open(self._hist_path(name), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    if rec["v"] > after and (upto is None or rec["v"] <= upto):
-                        out.append(rec["doc"])
-        except FileNotFoundError:
-            pass
-        return out
+        return max((r["v"] for r in self._log(name).records
+                    if r["ts_us"] <= ts_us), default=None)
 
     def added_files_index(self, name: str) -> dict[tuple[int, str], int]:
         """``{(gen, relpath): first_version_that_added_it}`` over the
-        whole commit log — the Delta-style add-file index. A file
-        absent from this index predates the add-file log (or was
-        written by a path that doesn't record adds); read_snapshot
-        falls back to the mtime watermark for those. Size is one small
-        tuple per data file ever added — the same order as a generation
-        LIST, driver-side safe."""
-        idx: dict[tuple[int, str], int] = {}
-        try:
-            with open(self._hist_path(name), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    for g, rels in (rec.get("add") or {}).items():
-                        for rel in rels:
-                            key = (int(g), rel)
-                            if key not in idx or rec["v"] < idx[key]:
-                                idx[key] = rec["v"]
-        except FileNotFoundError:
-            pass
-        return idx
+        whole commit log."""
+        return self._first_versions(name, "add")
 
     def removed_files_index(self, name: str) -> dict[tuple[int, str], int]:
         """``{(gen, relpath): first_version_that_removed_it}`` — the
-        remove-file twin of :meth:`added_files_index` (compaction
-        swaps record removals). A file is alive for snapshot versions
-        in [added, removed)."""
+        remove-entry twin of :meth:`added_files_index`."""
+        return self._first_versions(name, "rm")
+
+    def _first_versions(self, name: str, kind: str) -> dict[tuple[int, str], int]:
         idx: dict[tuple[int, str], int] = {}
-        try:
-            with open(self._hist_path(name), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    for g, rels in (rec.get("rm") or {}).items():
-                        for rel in rels:
-                            key = (int(g), rel)
-                            if key not in idx or rec["v"] < idx[key]:
-                                idx[key] = rec["v"]
-        except FileNotFoundError:
-            pass
+        for rec in self._log(name).records:
+            for g, rels in (rec.get(kind) or {}).items():
+                for rel in rels:
+                    key = (int(g), rel)
+                    if key not in idx or rec["v"] < idx[key]:
+                        idx[key] = rec["v"]
         return idx
 
     def refresh_if_changed(self, name: str) -> bool:
@@ -436,6 +402,7 @@ class Catalog:
             self._generations.pop(name, None)
             self._excluded.pop(name, None)
             self._versions.pop(name, None)
+            self._logs.pop(name, None)
             for path in (self._path(name), self._hist_path(name)):
                 try:
                     os.remove(path)
@@ -525,13 +492,13 @@ class Catalog:
 
     # -- rename-free rewrite commit ---------------------------------------
     # A copy-on-write rewrite lands its survivors in a brand-new generation
-    # directory that no reader references (readers enumerate only the
-    # catalog's generation list), then commits with ONE atomic catalog
-    # write: the survivor generation appears and the partitions it
-    # supersedes become excluded, in the same os.replace. On an object
-    # store there is no rename anywhere on the data path — matching the
-    # reference's upload-then-delete (internal/query/query.go:1252-1413),
-    # but with an atomic metadata flip instead of a visible delete window.
+    # directory whose files no commit has added yet (readers read only
+    # files the log holds live), then commits with ONE commit-log record:
+    # the survivors' adds and the superseded partitions' removes. On an
+    # object store there is no rename anywhere on the data path —
+    # matching the reference's upload-then-delete
+    # (internal/query/query.go:1252-1413), but with an atomic log append
+    # instead of a visible delete window.
 
     def next_generation_index(self, name: str) -> int:
         with self._lock:
@@ -545,9 +512,10 @@ class Catalog:
         remove_files: dict[int, list[str]] | None = None,
     ) -> int:
         """Atomic commit of a rewrite: append the survivors' generation
-        (always a NEW generation — its directory was invisible until this
-        write) and exclude the superseded ``(gen, dt)`` partitions from
-        reads. Returns the new generation index.
+        (always a NEW generation — its files were invisible until this
+        commit adds them), remove the superseded partitions' files
+        (``remove_files``) and list the ``(gen, dt)`` partitions for
+        gc_superseded. Returns the new generation index.
 
         The commit mutates the *on-disk* state, not a possibly-stale
         in-memory snapshot: it re-reads the catalog file first
@@ -572,23 +540,18 @@ class Catalog:
             for g, d in superseded:
                 if [int(g), d] not in ex:
                     ex.append([int(g), d])
-            # record the survivor generation's files (Delta-style add
-            # entries) so snapshot membership — and the loss check a
-            # later compaction swap relies on — covers rewrite output
-            # exactly, not via the mtime fallback. remove_files records
-            # the SUPERSEDED partitions' files as rm entries AT THIS
-            # VERSION: the doc-level exclusion alone cannot carry that
-            # fact forward, because gc_superseded's clear_excluded
-            # persists a LATER version whose doc no longer excludes the
-            # partition — without rm entries the add-file index then
-            # counts the GC'd files as alive and read_snapshot refuses
-            # every version at or past the clear (round-15 find: a
-            # single delete() broke read_snapshot(current_version)).
+            # the survivors' files are this commit's adds and every live
+            # file of the superseded partitions its removes: from this
+            # version on, the log alone says the old partitions are
+            # gone. The exclusion list only tells gc_superseded which
+            # directories to delete.
             self._persist(name, add_files=add_files,
                           remove_files=remove_files)
             return len(gens) - 1
 
     def excluded_parts(self, name: str) -> set[tuple[int, str]]:
+        """Partitions superseded by a committed rewrite whose
+        directories gc_superseded has not removed yet."""
         with self._lock:
             return {(int(g), d) for g, d in self._excluded.get(name, [])}
 
@@ -640,13 +603,21 @@ class Catalog:
                 "excluded": {n: e for n, e in self._excluded.items() if e},
             }
 
-    def import_metadata(self, doc: dict[str, Any]) -> int:
+    def import_metadata(
+        self, doc: dict[str, Any],
+        add_files: dict[str, dict[int, list[str]]] | None = None,
+        remove_files: dict[str, dict[int, list[str]]] | None = None,
+    ) -> int:
+        """Restore table configs and generations; ``add_files`` /
+        ``remove_files`` ({table: {gen: [relpaths]}}) make the same
+        commit set each table's files (a data restore)."""
         with self._lock:
             n = 0
             for name, cfg in doc.get("tables", {}).items():
                 self._configs[name] = TableConfig(**cfg)
                 self._generations[name] = doc.get("generations", {}).get(name, [])
                 self._excluded[name] = doc.get("excluded", {}).get(name, [])
-                self._persist(name)
+                self._persist(name, (add_files or {}).get(name),
+                              (remove_files or {}).get(name))
                 n += 1
             return n

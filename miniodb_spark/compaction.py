@@ -9,11 +9,15 @@ schema that collapses dynamic columns into a JSON payload string
 (same columns in, same columns out).
 
 Spark-shaped: candidates are selected per ``dt`` partition (so
-partition pruning is preserved), read as one distributed job, written
-to a temp dir with ``maxRecordsPerFile``, then swapped in atomically.
-At 100 TB this runs as a periodic job per table over only the
-partitions whose small-file count crossed the threshold — never a full
-table rewrite.
+partition pruning is preserved) from the table's LIVE files — the
+commit log's add/remove entries, never a directory listing — read as
+one distributed job, written to a temp dir with ``maxRecordsPerFile``
+and moved into the partition under fresh names. The outputs are
+invisible until :meth:`Engine.compact` commits them in one add+remove
+log record; only then are the inputs deleted, so a crash at any point
+leaves either the inputs or the outputs live, never both. At 100 TB
+this runs as a periodic job per table over only the partitions whose
+small-file count crossed the threshold — never a full table rewrite.
 
 All file listing/moving/removal goes through :mod:`miniodb_spark.fs`,
 so compaction runs unchanged against a local root or an object store
@@ -57,13 +61,33 @@ class CompactionPlan:
     files: list[str]
     tier: int
     total_bytes: int
+    gen: int
+    dt: str
+
+    @property
+    def rels(self) -> list[str]:
+        """The inputs relative to the generation directory — the form
+        the commit log records."""
+        return [f"dt={self.dt}/" + p.rstrip("/").rsplit("/", 1)[-1]
+                for p in self.files]
+
+    def stats(self, outputs: int) -> dict:
+        return {
+            "inputs": len(self.files),
+            "outputs": outputs,
+            "tier": self.tier,
+            "bytes": self.total_bytes,
+            # write amplification stat, as the reference records
+            # (manager.go:698-706)
+            "write_amplification": 1.0,
+        }
 
 
-def plan_partition(partition_dir: str, fs=None) -> list[CompactionPlan]:
-    """Classify a partition's parquet files by tier and select candidate
-    groups (≥ tier threshold files in the same tier, capped per run)."""
-    fs = fs or LocalFS()
-    files = fs.list_files(partition_dir, suffix=".parquet")
+def plan_partition(partition_dir: str, files: list[tuple[str, int]],
+                   gen: int, dt: str) -> list[CompactionPlan]:
+    """Classify a partition's ``(path, size)`` files by tier and select
+    candidate groups (≥ tier threshold files in the same tier, capped
+    per run)."""
     by_tier: dict[int, list[tuple[str, int]]] = {}
     for path, size in files:
         by_tier.setdefault(file_tier(size), []).append((path, size))
@@ -79,27 +103,46 @@ def plan_partition(partition_dir: str, fs=None) -> list[CompactionPlan]:
                     files=[p for p, _ in chosen],
                     tier=tier,
                     total_bytes=sum(s for _, s in chosen),
+                    gen=gen,
+                    dt=dt,
                 )
             )
     return plans
 
 
-def plan_table(table_dir: str, fs=None) -> list[CompactionPlan]:
-    """Walk ``gen=N/dt=day`` leaf partitions (compaction stays inside one
-    generation, so merged files keep a single physical schema)."""
-    fs = fs or LocalFS()
+def plan_table(table_dir: str,
+               objects: dict[tuple[int, str], list[tuple[str, int]]]
+               ) -> list[CompactionPlan]:
+    """Plans over the table's live files, ``{(gen, dt): [(path, size)]}``
+    (:meth:`Engine.live_objects`): a file no commit holds live — a
+    crashed writer's output, a leftover a commit already removed — is
+    never merged. Compaction stays inside one ``gen=N/dt=day``
+    partition, so merged files keep a single physical schema."""
     plans: list[CompactionPlan] = []
-    for gen_dir in fs.list_dirs(table_dir, prefix="gen="):
-        for part_dir in fs.list_dirs(gen_dir, prefix="dt="):
-            plans.extend(plan_partition(part_dir, fs=fs))
+    for (gen, dt), files in sorted(objects.items()):
+        part_dir = fsmod.join(table_dir, f"gen={gen}", f"dt={dt}")
+        plans.extend(plan_partition(part_dir, files, gen, dt))
     return plans
 
 
+def _remove_outputs(fs, plan: CompactionPlan, rels: list[str]) -> None:
+    for rel in rels:
+        try:
+            fs.remove_file(fsmod.join(plan.partition_dir,
+                                      rel.rsplit("/", 1)[-1]))
+        except FileNotFoundError:
+            pass  # its move failed before creating it
+
+
 def execute_plan(spark: SparkSession, plan: CompactionPlan, fs=None,
-                 zorder_by: list[str] | None = None) -> dict:
+                 zorder_by: list[str] | None = None) -> list[str]:
     """Merge the plan's files: distributed read → coalesced write to a
-    temp dir → atomic swap (write-then-rename; inputs deleted only after
-    the rewrite landed). Lossless: no schema collapse.
+    temp dir → outputs moved into the partition under fresh names.
+    Lossless: no schema collapse. Returns the outputs' paths relative
+    to the generation directory. The inputs are left alone: the
+    outputs stay invisible until the caller's commit adds them and
+    removes the inputs, and the inputs are deleted only after that
+    commit. On failure every output already moved in is removed.
 
     ``zorder_by`` additionally Morton-clusters the rewritten partition
     (layout.zorder_value) — the OPTIMIZE-ZORDER analog: compaction is
@@ -130,47 +173,54 @@ def execute_plan(spark: SparkSession, plan: CompactionPlan, fs=None,
         .mode("overwrite")
         .parquet(tmp)
     )
-    new_files = [p for p, _ in fs.list_files(tmp, suffix=".parquet")]
-    moved = []
-    for i, src in enumerate(new_files):
-        dst = fsmod.join(plan.partition_dir, f"compacted_{uuid.uuid4().hex}_{i}.parquet")
-        fs.move(src, dst)
-        moved.append(dst)
-    for old in plan.files:
-        fs.remove_file(old)
-    fs.remove_dir(tmp)
-    return {
-        "inputs": len(plan.files),
-        "outputs": len(moved),
-        "tier": plan.tier,
-        "bytes": plan.total_bytes,
-        # write amplification stat, as the reference records (manager.go:698-706)
-        "write_amplification": 1.0,
-    }
+    moved: list[str] = []
+    try:
+        for i, (src, _size) in enumerate(
+                fs.list_files(tmp, suffix=".parquet")):
+            name = f"compacted_{uuid.uuid4().hex}_{i}.parquet"
+            moved.append(f"dt={plan.dt}/{name}")
+            fs.move(src, fsmod.join(plan.partition_dir, name))
+    except BaseException:
+        _remove_outputs(fs, plan, moved)
+        raise
+    finally:
+        fs.remove_dir(tmp)
+    return moved
 
 
-def compact_table(spark: SparkSession, table_dir: str, fs=None,
-                  zorder_by: list[str] | None = None) -> list[dict]:
-    """Execute every planned merge for the table.
+def compact_table(spark: SparkSession, plans: list[CompactionPlan],
+                  fs=None, zorder_by: list[str] | None = None
+                  ) -> list[list[str]]:
+    """Execute every plan; returns each plan's outputs (plan order).
+    Nothing is committed or deleted here — see :func:`execute_plan`.
+    If any plan fails, the outputs of the others are removed too and
+    the first failure is raised.
 
     Plans target DISJOINT partition/file sets (one plan per (partition,
     tier), candidate files chosen within that partition), so they are
     independent jobs — a couple run concurrently from a small driver
     thread pool (r18, guide §2.6): each merge is a tiny read→write job
     whose tail would otherwise leave the cluster idle between plans.
-    Spark's scheduler interleaves them FIFO; results keep plan order.
-    Output sizing audit (r18, guide §6): execute_plan targets
-    ``total_bytes // 128 MB`` files under ``maxRecordsPerFile`` — files
-    land in the advisory 128 MB–1 GB band, so the tier merge cannot
-    recreate the one-giant-file-per-day layout the flush path avoids."""
+    Spark's scheduler interleaves them FIFO. Output sizing audit (r18,
+    guide §6): execute_plan targets ``total_bytes // 128 MB`` files
+    under ``maxRecordsPerFile`` — files land in the advisory 128 MB–1 GB
+    band, so the tier merge cannot recreate the one-giant-file-per-day
+    layout the flush path avoids."""
     fs = fs or LocalFS()
-    plans = plan_table(table_dir, fs=fs)
     if len(plans) <= 1:
         return [execute_plan(spark, p, fs=fs, zorder_by=zorder_by)
                 for p in plans]
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(3, len(plans))) as ex:
-        return list(ex.map(
-            lambda p: execute_plan(spark, p, fs=fs, zorder_by=zorder_by),
-            plans))
+        futures = [
+            ex.submit(execute_plan, spark, p, fs=fs, zorder_by=zorder_by)
+            for p in plans
+        ]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if errors:
+        for plan, f in zip(plans, futures):
+            if f.exception() is None:
+                _remove_outputs(fs, plan, f.result())
+        raise errors[0]
+    return [f.result() for f in futures]

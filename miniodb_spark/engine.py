@@ -301,23 +301,12 @@ class Engine:
             "count": 0, "total_ms": 0.0, "slow": [], "truncated": 0
         }
         self._buffers: dict[str, WriteBuffer] = {}
-        # known-files cache per (table, gen): the set of data files
-        # already present before the next append commit. Lets the
-        # commit's add-file delta be computed with ONE post-write LIST
-        # instead of a before+after pair (the r12 write-path regression:
-        # repeated ingests into one generation re-listed an ever-growing
-        # directory twice per commit). Seeded lazily from the catalog's
-        # add-file index plus one LIST (so unrecorded pre-existing files
-        # are never attributed to a later commit); invalidated by every
-        # path that rewrites or removes files (mutations, compaction,
-        # collapse, vacuum, drop) — see _forget_gen_files.
-        self._gen_known_files: dict[tuple[str, int], set[str]] = {}
-        # read_persisted's head scan per table: (listing key, DataFrame)
+        # read_persisted's head scan per table: (catalog key, DataFrame)
         self._head_scans: dict[str, tuple] = {}
         self._lock = threading.RLock()
-        # per-table flush serialization: a flush's drain/requeue and the
-        # known-files cache below assume one commit per table at a time,
-        # and two concurrent ingest_dataframe jobs into the same gen dir
+        # per-table flush serialization: a flush's drain/requeue and an
+        # ingest's before/after LIST assume one commit per table at a
+        # time, and two concurrent ingest_dataframe jobs into the same gen dir
         # would share the FileOutputCommitter _temporary/0 staging path,
         # where one job's commit destroys the other's task files. The
         # reference serializes flushes per table the same way. Different
@@ -388,7 +377,6 @@ class Engine:
             if self.fs.is_dir(path):
                 self.fs.remove_dir(path)
             self.zonemaps.drop(name)
-            self._forget_gen_files(name)
             self._head_scans.pop(name, None)
             return ok
 
@@ -534,12 +522,8 @@ class Engine:
                     continue
                 # pick up generations another driver registered since
                 # our last look — absorb into ITS generation instead of
-                # forking a duplicate index (safe: we hold the lease).
-                # When something DID change, the other driver also
-                # changed the file set: reseed the known-files cache so
-                # its files are never attributed to our commit.
-                if self.catalog.refresh_if_changed(t):
-                    self._forget_gen_files(t)
+                # forking a duplicate index (safe: we hold the lease)
+                self.catalog.refresh_if_changed(t)
                 batches, drained_seq = buf.drain()
                 flushed: list[str] = []
                 try:
@@ -595,18 +579,19 @@ class Engine:
                 rel = f"dt={dt}/{name}"
                 written.append(rel)  # before the write: a torn file goes too
                 self.fs.write_bytes(fsmod.join(gen_dir, rel), data)
-            # data-commit marker: the version whose snapshot INCLUDES
-            # this batch, with its files as Delta-style add-file entries
-            # (snapshot membership never trusts PUT-time ordering)
+            # the commit: the version whose snapshot INCLUDES this
+            # batch, with its files as Delta-style add entries (until
+            # then no reader sees them)
             self.catalog.touch(table, add_files={gen: sorted(written)})
         except Exception:
-            # nothing may stay visible: head reads list the generation
-            # directories, so every file this flush wrote is removed;
-            # then a generation this flush opened is rolled back (the
-            # requeued rows would otherwise flush again under a NEW
-            # generation while the old one lingers). Absorbing into an
-            # existing generation merged column names additively, which
-            # is harmless (all-null column until a later flush).
+            # uncommitted files are invisible (no add entry), so this
+            # cleanup only keeps them from piling up: every file this
+            # flush wrote is removed. Then a generation this flush opened
+            # is rolled back (the requeued rows would otherwise flush
+            # again under a NEW generation while the old one lingers).
+            # Absorbing into an existing generation merged column names
+            # additively, which is harmless (all-null column until a
+            # later flush).
             for rel in written:
                 try:
                     self.fs.remove_file(fsmod.join(gen_dir, rel))
@@ -623,21 +608,15 @@ class Engine:
                 gen_dir = self._gen_dir(table, gen)
                 if self.fs.is_dir(gen_dir):
                     self.fs.remove_dir(gen_dir)
-            # a file that could not be removed must land in the next
-            # ingest's reseeded known set, never in its add-files
-            self._gen_known_files.pop((table, gen), None)
             raise
-        # keep a warm known-files cache coherent for a later ingest
-        # into this generation; a cold one reseeds from the add-file log
-        known = self._gen_known_files.get((table, gen))
-        if known is not None:
-            self._gen_known_files[(table, gen)] = known | set(written)
         self._build_zonemap(table, gen)
         return len(rows)
 
     def _gen_listing(self, table: str, gen: int) -> list[tuple[str, str]]:
-        """``(relpath, dt)`` of the generation's data files (one LIST);
-        empty when the directory doesn't exist yet."""
+        """``(relpath, dt)`` of every data file in the generation
+        directory (one LIST), committed or not — only for finding what
+        a Spark job just wrote; readers take the live set from the
+        commit log. Empty when the directory doesn't exist yet."""
         from .zonemap import list_generation_files
 
         gdir = self._gen_dir(table, gen)
@@ -649,37 +628,6 @@ class Engine:
         """Relative paths of the generation's data files (one LIST);
         empty when the directory doesn't exist yet."""
         return {rel for rel, _dt in self._gen_listing(table, gen)}
-
-    def _known_gen_files(self, table: str, gen: int) -> set[str]:
-        """Files already present in the generation before the commit
-        about to happen — the ``before`` side of the add-file delta,
-        WITHOUT a per-commit LIST. Cache hit: the set recorded after
-        this process's previous commit to the gen. Cache miss (first
-        commit this process, or invalidated by a rewrite path): seed
-        from the catalog's add-file index PLUS one LIST, so files that
-        predate the add-file log or came from foreign writers land in
-        ``before`` and are never attributed to this commit."""
-        key = (table, gen)
-        cached = self._gen_known_files.get(key)
-        if cached is not None:
-            return cached
-        known = {
-            rel
-            for (g, rel) in self.catalog.added_files_index(table)
-            if g == gen
-        }
-        known |= self._gen_file_set(table, gen)
-        return known
-
-    def _forget_gen_files(self, table: str) -> None:
-        """Invalidate the known-files cache for every generation of
-        ``table`` — required after any path that rewrites or removes
-        data files without a touch(add_files) commit (mutations,
-        compaction, collapse, vacuum, drop): a stale cache would let
-        the NEXT flush attribute those files to its own commit version,
-        making earlier snapshots under-return them."""
-        for key in [k for k in self._gen_known_files if k[0] == table]:
-            self._gen_known_files.pop(key, None)
 
     def ingest_dataframe(self, table: str, df: DataFrame, ts_col: str = "timestamp",
                          force_new_generation: bool = False) -> int:
@@ -705,14 +653,16 @@ class Engine:
             # would share the committer staging path) — so a rewrite's
             # reserved generation index can't be claimed by a racing
             # ingest
-            if self.catalog.refresh_if_changed(table):
-                self._forget_gen_files(table)
+            self.catalog.refresh_if_changed(table)
             gen = self.catalog.register_flush_schema(
                 table,
                 {f.name: _type_name(f.dataType) for f in out.schema.fields if f.name != "dt"},
                 force_new=force_new_generation,
             )
-            before = self._known_gen_files(table, gen)
+            # the commit's adds are what the Spark job wrote: one LIST
+            # before it and one after (a leftover already in the
+            # directory is never attributed to this commit)
+            before = self._gen_file_set(table, gen)
             (
                 # REBALANCE on dt: hash-partitioning on dt alone would
                 # put a whole day in one task (guide §2.5); the AQE
@@ -724,14 +674,12 @@ class Engine:
                 .partitionBy("dt")
                 .parquet(self._gen_dir(table, gen))
             )
-            # data-commit marker with Delta-style add-file entries
-            # (snapshot membership without mtime trust — ADVICE r11).
-            # ONE LIST per commit; it also feeds the zone-map build.
+            # data commit: the job's files as add entries; the LIST
+            # also feeds the zone-map build
             listing = self._gen_listing(table, gen)
             after = {rel for rel, _dt in listing}
             self.catalog.touch(table, add_files={
                 gen: sorted(after - before)})
-            self._gen_known_files[(table, gen)] = after
             self._build_zonemap(table, gen, listing=listing)
         self.cache.invalidate_table(table)
         return gen
@@ -802,67 +750,66 @@ class Engine:
         ``dt`` comes from the partition paths, so a ``dt`` predicate
         still prunes at planning time.
 
-        Each call LISTs the live generations (excluded partitions
-        dropped) exactly like a pruned lookup does, and the scan reads
-        exactly that listing (``basePath`` + explicit files). The built
-        DataFrame is cached per table, keyed by the catalog state
-        (generation schemas, cumulative schema, excluded parts) plus
-        that listing: while nothing changed, a call costs the LISTs and
-        returns the already-analyzed scan — Spark neither re-lists nor
-        re-analyzes. Any writer that adds, moves or removes a file
-        changes the listing, so a hit never opens a file the store no
-        longer has. The key deliberately is not the catalog version:
-        compaction and rewrites move files before they commit."""
+        Each generation reads exactly its live files from the commit
+        log (:meth:`Catalog.live_files`, ``basePath`` + explicit files);
+        no directory is listed. The built DataFrame is cached per table,
+        keyed by the generation schemas, the cumulative schema and the
+        log version: while no commit happened, a call returns the
+        already-analyzed scan — Spark neither lists nor re-analyzes.
+        Every writer commits before it deletes, so a hit never opens a
+        file the store no longer has."""
         gens = self.catalog.gen_schemas(table)
         cum = self.catalog.schema_of(table)
         if not gens or not cum:
             return None
-        excluded = self.catalog.excluded_parts(table)
-        # tombstoned generations (collapse_generations) are never listed
-        listings = [
-            self._live_listing(table, i, excluded) if gcols else None
-            for i, gcols in enumerate(gens)
-        ]
-        key = (
-            tuple(tuple(g.items()) for g in gens), tuple(cum.items()),
-            tuple(sorted(excluded)),
-            tuple(None if ls is None else tuple(ls) for ls in listings),
-        )
+        # the version is read before the files: a commit in between
+        # only makes the next call rebuild
+        key = (tuple(tuple(g.items()) for g in gens), tuple(cum.items()),
+               self.catalog.log_version(table))
         hit = self._head_scans.get(table)
         if hit is not None and hit[0] == key:
             return hit[1]
+        live = self.catalog.live_files(table)
+        # tombstoned generations (collapse_generations) have no schema
         parts = [
-            self._gen_scan(table, i, gcols, cum, [rel for rel, _dt in ls])
-            for i, (gcols, ls) in enumerate(zip(gens, listings))
-            if ls
+            self._gen_scan(table, i, gcols, cum,
+                           [rel for rel, _dt in live[i]])
+            for i, gcols in enumerate(gens)
+            if gcols and live.get(i)
         ]
-        empty = [i for i, ls in enumerate(listings) if ls == []]
-        if not parts and empty:
-            # every generation directory is empty: still a typed scan
-            parts = [self._gen_scan(table, empty[0], gens[empty[0]], cum, [])]
-        out = None
-        if parts:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
+        if not parts:
+            # no live file anywhere: still a typed scan
+            i = next(i for i, g in enumerate(gens) if g)
+            parts = [self._gen_scan(table, i, gens[i], cum, [])]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
         self._head_scans[table] = (key, out)
         return out
 
-    def _live_listing(self, table: str, gen: int,
-                      excluded) -> list[tuple[str, str]] | None:
-        """Sorted ``(relpath, dt)`` of the generation's data files minus
-        its excluded ``dt`` partitions (superseded by a committed but
-        not yet GC'd rewrite); None when the directory does not exist."""
-        gdir = self._gen_dir(table, gen)
-        if not self.fs.is_dir(gdir):
-            return None
-        from .zonemap import list_generation_files
-
-        excl_dts = {d for g, d in excluded if g == gen}
-        return sorted(
-            (rel, dt) for rel, dt in list_generation_files(self.fs, gdir)
-            if dt not in excl_dts
-        )
+    def live_objects(self, table: str) -> dict[tuple[int, str], list[tuple[str, int]]]:
+        """``{(gen, dt): [(path, size)]}`` of the table's live files
+        (:meth:`Catalog.live_files`), for the writers that need sizes
+        (compaction, backup): one LIST per live partition reads them. A
+        live file missing from disk raises FileNotFoundError."""
+        out: dict[tuple[int, str], list[tuple[str, int]]] = {}
+        for gen, files in self.catalog.live_files(table).items():
+            names_by_dt: dict[str, set[str]] = {}
+            for rel, dt in files:
+                names_by_dt.setdefault(dt, set()).add(rel.rsplit("/", 1)[-1])
+            for dt, names in names_by_dt.items():
+                part_dir = fsmod.join(self._gen_dir(table, gen), f"dt={dt}")
+                objs = [
+                    (path, size)
+                    for path, size in self.fs.list_files(part_dir, suffix=".parquet")
+                    if path.rstrip("/").rsplit("/", 1)[-1] in names
+                ]
+                if len(objs) != len(names):
+                    raise FileNotFoundError(
+                        f"{table}: a live file of gen={gen}/dt={dt} is "
+                        "missing from the store")
+                out[(gen, dt)] = sorted(objs)
+        return out
 
     def _gen_scan(self, table: str, gen: int, gcols: dict[str, str],
                   cum: dict[str, str], rels: list[str]) -> DataFrame:
@@ -891,7 +838,7 @@ class Engine:
                     paths: list[str]) -> DataFrame:
         """A Parquet scan of exactly ``paths`` under ``basePath`` gdir.
 
-        The driver has already listed these files, so Spark only stats
+        The commit log already names these files, so Spark only stats
         them. Past ``parallelPartitionDiscovery.threshold`` paths (32 by
         default) Spark would stat them in a parallel-listing job; the
         threshold is raised to the path count while this scan resolves
@@ -918,173 +865,52 @@ class Engine:
         return self.catalog.history(table)
 
     def read_snapshot(self, table: str, version: int) -> DataFrame | None:
-        """The persisted table exactly as catalog ``version`` saw it —
-        the generation list and exclusion set are taken from the commit
-        log, not the current catalog, so rows later deleted/updated
+        """The persisted table exactly as catalog ``version`` saw it:
+        the generation schemas come from that version's commit record
+        and each generation reads the files live at that version
+        (:meth:`Catalog.live_files`), so rows later deleted/updated
         reappear and generations later tombstoned scan again.
 
-        Requires the snapshot's directories to still exist: with
-        ``retain_history=True`` mutations defer their GC, so every
-        version back to the last vacuum()/collapse is readable; a
-        vacuumed snapshot raises :class:`SnapshotUnavailableError`
-        instead of silently returning partial data (detected by
-        replaying the exclusion/tombstone deltas committed after
-        ``version`` and stat-ing what they removed). The write buffer is
-        never part of a snapshot — versions are commit points.
+        Requires those files to still exist: with
+        ``retain_history=True`` mutations defer their GC and compaction
+        waits, so every version back to the last vacuum()/collapse is
+        readable. A version that needs a file no longer on disk raises
+        :class:`SnapshotUnavailableError` instead of returning partial
+        data — Spark checks explicit paths when the scan is built. The
+        write buffer is never part of a snapshot — versions are commit
+        points.
 
         Beyond the reference (its backup/restore is full-copy,
         internal/backup/; a committed rewrite there deletes the old
         object immediately, query.go upload-then-delete). Scan shape is
-        identical to read_persisted: explicit per-generation schemas,
-        dt partition pruning, no mergeSchema listing."""
+        identical to read_persisted."""
         rec = self.catalog.record_at(table, version)
         if rec is None:
             raise ValueError(
                 f"unknown snapshot version {version!r} for table "
                 f"{table!r}; table_history() lists committed versions")
-        doc, commit_ts_us = rec["doc"], int(rec["ts_us"])
-        gens = [dict(g) for g in doc.get("generations", [])]
-        excluded = {(int(g), d) for g, d in doc.get("excluded", [])}
-        if not gens:
-            return None
-        # cumulative schema as of the snapshot
+        gens = [dict(g) for g in rec["doc"].get("generations", [])]
         cum: dict[str, str] = {}
         for gen in gens:
             for col, typ in gen.items():
                 cum[col] = merge_type(cum[col], typ) if col in cum else typ
         if not cum:
             return None
-        # vacuum detection: anything excluded/tombstoned AFTER this
-        # version was visible to it (unless the snapshot itself excluded
-        # it) — if such a partition's directory is gone, the snapshot is
-        # incomplete and must refuse, not under-return.
-        later = self.catalog.docs_between(table, after=version)
-        needed: set[tuple[int, str]] = set()
-        for d2 in later:
-            for g, d in d2.get("excluded", []):
-                if int(g) < len(gens) and (int(g), d) not in excluded:
-                    needed.add((int(g), d))
-        missing = [
-            (g, d)
-            for g, d in sorted(needed)
-            if not self.fs.is_dir(
-                fsmod.join(self._gen_dir(table, g), f"dt={d}"))
-        ]
-        # Delta-style add-file index: (gen, rel) -> first version whose
-        # commit recorded the file. Primary membership source — exact
-        # regardless of store/driver clock skew; files never recorded
-        # (pre-upgrade history, foreign writers) fall back to the mtime
-        # watermark below.
-        add_idx = self.catalog.added_files_index(table)
-        rm_idx = self.catalog.removed_files_index(table)
+        live = self.catalog.live_files(table, version)
         parts: list[DataFrame] = []
         for i, gcols in enumerate(gens):
-            if not gcols:
-                continue
-            gdir = self._gen_dir(table, i)
-            if not self.fs.is_dir(gdir):
-                # visible at the snapshot, physically removed since
-                # (collapse_generations removes whole dead gen dirs)
-                missing.append((i, "*"))
-                continue
-            # file-level membership: a later flush may APPEND into this
-            # same generation directory (compatible schemas share a
-            # generation), so the doc alone doesn't pin membership.
-            # Primary source: the add-file index — a file recorded at
-            # version v belongs to snapshots >= v, exactly, with no
-            # clock involved. Fallback for unrecorded files (history
-            # predating the add log, foreign writers): the mtime
-            # watermark — flush order is schema-registration persist →
-            # write job → data-commit marker persist (Catalog.touch),
-            # so the marker's ts_us upper-bounds its batch's mtimes on
-            # a skew-free store; object-store PUT-time skew is exactly
-            # why recorded adds take precedence.
-            excluded_dts = {d for g, d in excluded if g == i}
-            files: list[str] = []
-            present: set[str] = set()
-            for dd in self.fs.list_dirs(gdir, prefix="dt="):
-                dt_val = dd.rsplit("dt=", 1)[-1]
-                if dt_val in excluded_dts:
-                    continue
-                for fp, mt in self.fs.list_files_mtime(
-                    dd, suffix=".parquet"
-                ):
-                    rel = f"dt={dt_val}/" + fp.rstrip("/").split("/")[-1]
-                    present.add(rel)
-                    added_v = add_idx.get((i, rel))
-                    rm_v = rm_idx.get((i, rel))
-                    if rm_v is not None and rm_v <= version:
-                        # removed (compacted away) at or before this
-                        # version yet still listed: mid-swap crash
-                        # leftovers — its rows live in the recorded
-                        # replacement files
-                        continue
-                    if added_v is not None:
-                        if added_v <= version:
-                            files.append(rel)
-                    elif mt <= commit_ts_us:
-                        files.append(rel)
-            # file-level loss detection: a file that is ALIVE at this
-            # version per the add/remove log (added <= v, not removed
-            # <= v) but absent from the listing was swapped or deleted
-            # OUTSIDE the exclusion protocol — a forced compaction
-            # (its outputs merge post-snapshot appends, so v's exact
-            # file set is unrecoverable), retention's dt-dir drop, or
-            # a foreign writer. REFUSE (the same never-under-return
-            # posture as the vacuum check) instead of silently
-            # returning partial rows. Caught live in round 13:
-            # read_snapshot returned None after a compaction. A
-            # RECORDED compaction swap is not a loss: its removed
-            # files have rm_v <= the later versions that no longer
-            # need them, and its output files carry add entries.
-            lost = {
-                rel
-                for (g, rel), ver in add_idx.items()
-                if g == i and ver <= version
-                and rm_idx.get((i, rel), version + 1) > version
-                and rel.split("/", 1)[0][len("dt="):] not in excluded_dts
-                and rel not in present
-            }
-            # conservative twin for files the add log never saw (history
-            # predating it, foreign writers): a recorded REMOVAL proves
-            # the file existed until rm_v, but its creation version is
-            # unknown — treat it as needed by every earlier version.
-            # Over-refusal is possible for versions that predate the
-            # file, but refusal is never a wrong answer; the silent
-            # alternative is returning partial rows.
-            lost |= {
-                rel
-                for (g, rel), rm_v in rm_idx.items()
-                if g == i and rm_v > version
-                and (i, rel) not in add_idx
-                and rel.split("/", 1)[0][len("dt="):] not in excluded_dts
-                and rel not in present
-            }
-            if lost:
-                missing.append((i, sorted(lost)[0]))
-                continue
-            if not files:
+            if not gcols or not live.get(i):
                 continue
             try:
-                parts.append(self._gen_scan(table, i, gcols, cum, files))
+                parts.append(self._gen_scan(
+                    table, i, gcols, cum, [rel for rel, _dt in live[i]]))
             except AnalysisException as e:
-                # TOCTOU (r16, storm-found): a file that passed the
-                # membership check above can be retention-dropped /
-                # vacuumed by ANOTHER driver before this eager path
-                # resolution — surface it as the one retryable
-                # refusal type the snapshot contract documents, not a
-                # raw PATH_NOT_FOUND. (A deletion after this point
-                # still fails loudly at action time via Spark's own
-                # missing-file error; laziness puts that beyond this
-                # method's reach. Retry at a re-refreshed version is
-                # the protocol either way.)
-                # r17 (r16 ADVICE): only MISSING-PATH conditions map to
-                # the retryable type — a corrupt footer / permission /
-                # schema AnalysisException is not transient, and
-                # labeling it "vanished mid-read" sends the storm
-                # reader's retry loop into futile spins over a real
-                # fault. Spark 4 raises PATH_NOT_FOUND for this case
-                # (error class) with FileNotFoundException underneath.
+                # only a MISSING path means the version is gone (GC'd,
+                # compacted away, retention-dropped — possibly by
+                # another driver a moment ago); a corrupt footer or a
+                # permission error is a real fault and surfaces as-is.
+                # Spark 4 raises PATH_NOT_FOUND (FileNotFoundException
+                # underneath).
                 klass = ""
                 try:
                     klass = e.getCondition() or ""
@@ -1096,18 +922,11 @@ class Engine:
                         or "FileNotFoundException" in msg):
                     raise
                 raise SnapshotUnavailableError(
-                    f"snapshot v{version} of {table!r}: a listed file "
-                    f"vanished mid-read (concurrent retention/vacuum): "
-                    f"{e}") from e
-        if missing:
-            raise SnapshotUnavailableError(
-                f"snapshot v{version} of {table!r} needs partitions/"
-                f"files no longer on disk "
-                f"{missing[:8]}{'…' if len(missing) > 8 else ''} "
-                "(vacuumed, compacted away, or retention-dropped); run "
-                "with retain_history=True — which also defers "
-                "compaction — and vacuum explicitly to keep snapshots "
-                "readable")
+                    f"snapshot v{version} of {table!r} needs files no "
+                    "longer on disk (vacuumed, compacted away, or "
+                    "retention-dropped); run with retain_history=True — "
+                    "which also defers compaction — and vacuum "
+                    f"explicitly to keep snapshots readable: {e}") from e
         if not parts:
             return None
         out = parts[0]
@@ -1283,19 +1102,21 @@ class Engine:
             ts_range = None
         keys = list(value) if isinstance(value, (list, tuple, set)) else [value]
 
-        def select_fn(i, listing):
+        def select_fn(i, listing, token):
             if ts_range is not None:
                 listing = _filter_listing_by_day(listing, ts_range)
                 t_lo, t_li, t_hi, t_hi_i = ts_range
                 sel, _ = self.zonemaps.prune_range(
                     table, i, listing, "timestamp",
-                    lo=t_lo, hi=t_hi, lo_incl=t_li, hi_incl=t_hi_i)
+                    lo=t_lo, hi=t_hi, lo_incl=t_li, hi_incl=t_hi_i,
+                    token=token)
                 keep = set(sel)
                 listing = [(rel, dt) for rel, dt in listing
                            if rel in keep]
             hit: set[str] = set()
             for k in keys:
-                s, _ = self.zonemaps.prune(table, i, listing, id_col, k)
+                s, _ = self.zonemaps.prune(table, i, listing, id_col, k,
+                                           token=token)
                 hit.update(s)
             # keep listing order for a stable scan plan
             return [rel for rel, _dt in listing if rel in hit]
@@ -1363,7 +1184,7 @@ class Engine:
         range_lookup_df)."""
         ts_rng = ranges.get("timestamp")
 
-        def select_fn(i, listing):
+        def select_fn(i, listing, token):
             if ts_rng is not None:
                 listing = _filter_listing_by_day(listing, ts_rng)
             for col, (lo, lo_i, hi, hi_i) in ranges.items():
@@ -1371,7 +1192,7 @@ class Engine:
                     break
                 sel, _ = self.zonemaps.prune_range(
                     table, i, listing, col,
-                    lo=lo, hi=hi, lo_incl=lo_i, hi_incl=hi_i)
+                    lo=lo, hi=hi, lo_incl=lo_i, hi_incl=hi_i, token=token)
                 keep = set(sel)
                 listing = [(rel, dt) for rel, dt in listing
                            if rel in keep]
@@ -1391,8 +1212,9 @@ class Engine:
         self, table: str, id_col, select_fn, key_pred,
     ) -> tuple[DataFrame | None, dict]:
         """Shared scan builder behind point/range lookups: per
-        generation, ``select_fn(gen, listing)`` picks the files to
-        open (a superset of matches by the zone-map contract), the
+        generation, ``select_fn(gen, live_files, log_version)`` picks
+        the files to open (a superset of matches by the zone-map
+        contract; the version lets the zone-map view be reused), the
         residual ``key_pred`` re-filters rows, and the in-memory
         buffer unions in exactly like read_table. ``id_col`` may be a
         tuple of columns (multi-column range lookups): a generation or
@@ -1404,16 +1226,15 @@ class Engine:
         report = {"files_total": 0, "files_scanned": 0,
                   "files_skipped": 0, "gens": len(gens)}
         parts: list[DataFrame] = []
-        excluded = self.catalog.excluded_parts(table)
+        token = self.catalog.log_version(table)
+        live = self.catalog.live_files(table)
         for i, gcols in enumerate(gens):
-            if not gcols:
-                continue
-            listing = self._live_listing(table, i, excluded)
-            if not listing:
+            listing = live.get(i)
+            if not gcols or not listing:
                 continue
             report["files_total"] += len(listing)
             if all(c in gcols for c in req):
-                sel = select_fn(i, listing)
+                sel = select_fn(i, listing, token)
                 skipped = len(listing) - len(sel)
             else:
                 sel, skipped = [], len(listing)  # column absent: no match
@@ -1518,8 +1339,10 @@ class Engine:
         key or range (:meth:`_pruned_view`); the full hybrid scan
         (:meth:`read_table`) is built only when it is the view: no
         pruning applies, pruning failed, or no file can match and the
-        empty view needs its schema. The persisted half of the full scan
-        is cached per file listing (:meth:`read_persisted`).
+        empty view needs its schema. Both take the table's files from
+        the commit log, never from a directory listing; the persisted
+        half of the full scan is cached per log version
+        (:meth:`read_persisted`).
 
         Time travel: ``at_version`` pins the snapshot by catalog version
         (an int for single-table queries, a ``{table: version}`` dict
@@ -2174,58 +1997,36 @@ class Engine:
                 - timedelta(days=cfg.retention_days)
             ).strftime("%Y-%m-%d")
             tdir = self._table_dir(t)
-            # The whole list -> rm-commit -> drop runs under the
-            # table's shared-store #rewrite lease (r16): without it, a
-            # concurrent flush (late-arriving data into a pre-cutoff
-            # dt partition) could append file F between our listing
-            # and remove_dir — F would then be add-indexed, have no rm
-            # record, and be physically gone, so read_snapshot refuses
-            # every later version with no self-heal. The lease
-            # serializes retention against flush/update/compaction
-            # exactly like every other rewrite.
+            # The whole rm-commit -> drop runs under the table's
+            # shared-store #rewrite lease (r16): without it, a concurrent
+            # flush (late-arriving data into a pre-cutoff dt partition)
+            # could commit file F after our live-set read and before
+            # remove_dir — F would stay live in the log but be gone
+            # from disk. The lease serializes retention against
+            # flush/update/compaction exactly like every other rewrite.
             with self.lease.holding(f"{t}/#rewrite", timeout_s=120.0), \
                     self.lease.keepalive(f"{t}/#rewrite"):
-                # Delta-style rm entries for the dropped files,
-                # recorded as ONE commit BEFORE the physical drops
-                # (r15 ADVICE): a crash between remove_dir and a
-                # trailing touch would leave add-indexed files with no
-                # rm record and no way to re-list them, so
-                # read_snapshot at every version from their add onward
-                # would refuse via the loss check with no self-heal.
-                # The reversed order is crash-safe: a pre-recorded rm
-                # for a still-present file is already handled as a
-                # mid-swap leftover by read_snapshot's rm_v <= version
-                # skip.
+                # ONE commit removes every live file of the dropped
+                # days BEFORE the directories go: a crash in between
+                # leaves only files no commit holds live
                 dead: dict[int, list[str]] = {}
-                doomed: list[str] = []
-                for gen_dir in self.fs.list_dirs(tdir, prefix="gen="):
-                    gname = gen_dir.rstrip("/").rsplit("/", 1)[-1]
-                    try:
-                        gidx = int(gname[len("gen="):])
-                    except ValueError:  # pragma: no cover - foreign dir
-                        gidx = None
-                    for part_dir in self.fs.list_dirs(gen_dir,
-                                                      prefix="dt="):
-                        part = part_dir.rstrip("/").rsplit("/", 1)[-1]
-                        if part[len("dt=") :] < cutoff:
-                            if gidx is not None:
-                                rels = [
-                                    f"{part}/"
-                                    + fp.rstrip("/").rsplit("/", 1)[-1]
-                                    for fp, _sz in self.fs.list_files(
-                                        part_dir, suffix=".parquet")
-                                ]
-                                if rels:
-                                    dead.setdefault(gidx, []).extend(
-                                        sorted(rels))
-                            doomed.append(part_dir)
-                if doomed:
-                    self.catalog.touch(t, remove_files=dead or None)
+                for g, files in self.catalog.live_files(t).items():
+                    rels = [rel for rel, dt in files if dt < cutoff]
+                    if rels:
+                        dead[g] = rels
+                doomed = [
+                    part_dir
+                    for gen_dir in self.fs.list_dirs(tdir, prefix="gen=")
+                    for part_dir in self.fs.list_dirs(gen_dir, prefix="dt=")
+                    if part_dir.rstrip("/").rsplit("/", 1)[-1][len("dt="):]
+                    < cutoff
+                ]
+                if dead or doomed:
+                    self.catalog.touch(t, remove_files=dead)
                     for part_dir in doomed:
                         self.fs.remove_dir(part_dir)
                     removed += len(doomed)
                     self.cache.invalidate_table(t)
-                    self._forget_gen_files(t)
         return removed
 
     def compact(self, table: str,
@@ -2242,12 +2043,12 @@ class Engine:
         With ``retain_history=True`` compaction is DEFERRED (returns
         []) unless ``force``: a compacted output file merges rows from
         every input — including appends committed AFTER an old
-        snapshot — so the snapshot's exact file set becomes
-        unrecoverable and read_snapshot would refuse it (the file-level
-        loss check). Same contract as gc_superseded: retention costs
+        snapshot — and the inputs are deleted, so read_snapshot would
+        refuse every version before the compaction. Same contract as
+        gc_superseded: retention costs
         storage, never correctness; vacuum() first to give up history,
         then compact."""
-        from .compaction import compact_table as _compact
+        from .compaction import compact_table, plan_table
 
         if self.catalog.get_table(table) is None:
             raise ValueError(f"no such table: {table}")
@@ -2259,44 +2060,38 @@ class Engine:
                 "compacting would make old snapshots unreadable "
                 "(pass force=True after vacuum() to override)", table)
             return []
-        # compaction swaps a generation's files in place — exclude
-        # concurrent cross-driver flushes/rewrites for the duration
+        # exclude concurrent cross-driver flushes/rewrites for the
+        # duration: the plan is taken from the live set
         with self.lease.holding(f"{table}/#rewrite", timeout_s=120.0), \
                 self.lease.keepalive(f"{table}/#rewrite"):
-            n_gens = len(self.catalog.gen_schemas(table))
-            before = {g: self._gen_file_set(table, g)
-                      for g in range(n_gens)}
-            stats = _compact(self.spark, self._table_dir(table),
-                             fs=self.fs, zorder_by=zorder_by)
-            if stats:
-                # record the swap as a COMMIT (Delta-style add+remove
-                # entries): snapshots after this version use the
-                # compacted outputs with no mtime trust, snapshots
-                # before it refuse exactly (their file set merged into
-                # the outputs and is unrecoverable) instead of
-                # silently under-returning
-                after = {g: self._gen_file_set(table, g)
-                         for g in range(n_gens)}
-                self.catalog.touch(
-                    table,
-                    add_files={g: sorted(after[g] - before[g])
-                               for g in range(n_gens)},
-                    remove_files={g: sorted(before[g] - after[g])
-                                  for g in range(n_gens)},
-                )
-                self.cache.invalidate_table(table)
-                # a stale known-files cache would let the next flush
-                # claim the swapped files as its own adds — invalidate
-                # before the lease drops (a flush is excluded until
-                # then, in-process and cross-driver alike)
-                self._forget_gen_files(table)
-                # then re-index (incremental — only the fresh files are
-                # scanned, dead sidecar entries are dropped) so
-                # point-lookup pruning doesn't degrade to
-                # scan-everything
-                for g in range(len(self.catalog.gen_schemas(table))):
-                    self._build_zonemap(table, g)
-        return stats
+            plans = plan_table(self._table_dir(table),
+                               self.live_objects(table))
+            outputs = compact_table(self.spark, plans, fs=self.fs,
+                                    zorder_by=zorder_by)
+            if not plans:
+                return []
+            # ONE commit swaps each plan's inputs for its outputs
+            # (Delta-style add+remove entries); snapshots before it
+            # still read the inputs until they are deleted below, after
+            # the commit — a crash anywhere leaves either the inputs or
+            # the outputs live, never both
+            added: dict[int, list[str]] = {}
+            removed: dict[int, list[str]] = {}
+            for plan, outs in zip(plans, outputs):
+                added.setdefault(plan.gen, []).extend(outs)
+                removed.setdefault(plan.gen, []).extend(plan.rels)
+            self.catalog.touch(table, add_files=added,
+                               remove_files=removed)
+            self.cache.invalidate_table(table)
+            for plan in plans:
+                for path in plan.files:
+                    self.fs.remove_file(path)
+            # re-index (incremental — only the fresh files are scanned,
+            # dead sidecar entries are dropped) so point-lookup pruning
+            # doesn't degrade to scan-everything
+            for g in sorted(added):
+                self._build_zonemap(table, g)
+        return [plan.stats(len(outs)) for plan, outs in zip(plans, outputs)]
 
     def start_auto_flush(self, poll_interval_s: float = 1.0) -> None:
         """Background timer flush — the reference's flush_interval trigger

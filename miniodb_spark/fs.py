@@ -68,8 +68,9 @@ class LocalFS:
     def list_files_mtime(
         self, path: str, suffix: str = ""
     ) -> list[tuple[str, int]]:
-        """(path, mtime_us) for plain files under ``path`` — the
-        commit-watermark input for snapshot reads."""
+        """(path, mtime_us) for plain files under ``path``. The engine
+        no longer reads mtimes (file membership is the commit log's);
+        kept because the benchmark tracer's target list names it."""
         if not os.path.isdir(path):
             return []
         return [
@@ -182,24 +183,6 @@ class HadoopFS:
             for st in fs.listStatus(p)
             if st.isDirectory() and st.getPath().getName().startswith(prefix)
         )
-
-    def list_files_mtime(
-        self, path: str, suffix: str = ""
-    ) -> list[tuple[str, int]]:
-        """(path, mtime_us); Hadoop reports modification time in ms
-        (object stores: the PUT time), so the watermark granularity is
-        1 ms there."""
-        fs, p = self._fs(path), self._p(path)
-        if not fs.exists(p):
-            return []
-        out = []
-        for st in fs.listStatus(p):
-            if st.isFile() and st.getPath().getName().endswith(suffix):
-                out.append(
-                    (st.getPath().toString(),
-                     int(st.getModificationTime()) * 1000)
-                )
-        return out
 
     def remove_file(self, path: str) -> None:
         self._fs(path).delete(self._p(path), False)

@@ -15,16 +15,16 @@ files.
 a non-atomic copy+delete, so the data path must never rename):
 
 1. survivors are written *directly* into a brand-new generation
-   directory ``gen=M`` that the catalog does not reference yet —
-   readers enumerate only catalog-listed generations, so a crash
-   mid-write leaves an invisible orphan directory, never partial data;
-2. the commit point is ONE atomic catalog write
-   (:meth:`~miniodb_spark.catalog.Catalog.commit_rewrite`): the
-   survivor generation appears and the superseded ``(gen, dt)``
-   partitions become excluded from reads in the same ``os.replace``;
+   directory ``gen=M`` whose files no commit has added — readers read
+   only the files the commit log holds live, so a crash mid-write
+   leaves an invisible orphan directory, never partial data;
+2. the commit point is ONE commit-log record
+   (:meth:`~miniodb_spark.catalog.Catalog.commit_rewrite`): it adds
+   the survivors' files and removes every live file of the superseded
+   ``(gen, dt)`` partitions, which it also lists for GC;
 3. the old partition directories are garbage-collected afterwards — a
-   crash between commit and GC leaves them on disk but invisible
-   (excluded), and the next mutation on the table retries the GC.
+   crash between commit and GC leaves them on disk but invisible (no
+   live file), and the next mutation on the table retries the GC.
 
 The whole reserve→write→commit window runs under the engine's
 per-table flush lock so no concurrent flush can claim generation M.
@@ -42,7 +42,10 @@ def gc_superseded(engine, table: str, force: bool = False) -> int:
     """Remove the directories of partitions a committed rewrite
     superseded, then forget the exclusions. Idempotent and crash-safe:
     every step re-checks disk state, and exclusions are only cleared
-    after the removals succeed.
+    after the removals succeed. A partition that still holds a live
+    file keeps its directory: its exclusion reached the catalog but
+    the commit's remove entries never did (a crash between the two
+    writes of one persist), so its data is still the table's.
 
     With ``engine.retain_history`` set, the inline GC after each
     mutation is DEFERRED (returns 0) so earlier catalog versions stay
@@ -55,42 +58,29 @@ def gc_superseded(engine, table: str, force: bool = False) -> int:
     parts = sorted(engine.catalog.excluded_parts(table))
     if not parts:
         return 0
+    live = {(g, dt) for g, files in engine.catalog.live_files(table).items()
+            for _rel, dt in files}
     for g, d in parts:
         pdir = fsmod.join(engine._gen_dir(table, g), f"dt={d}")
-        if engine.fs.is_dir(pdir):
+        if (g, d) not in live and engine.fs.is_dir(pdir):
             engine.fs.remove_dir(pdir)
     engine.catalog.clear_excluded(table, parts)
-    # physical file set changed outside a touch(add_files) commit:
-    # drop the engine's known-files cache so the next flush re-seeds
-    engine._forget_gen_files(table)
     return len(parts)
 
 
 def _superseded_files(
     engine, table: str, affected: list[tuple[int, str]],
 ) -> dict[int, list[str]]:
-    """Relative paths of every data file in the superseded ``(gen,
-    dt)`` partitions — the Delta-style ``rm`` entries a rewrite commit
-    must record. The doc-level exclusion only protects snapshots until
-    gc_superseded's clear_excluded persists a later version without
-    it; the rm entry is the durable "dead as of version v" fact that
-    keeps read_snapshot exact at every later version (a file is alive
-    for versions in [added, removed)). One LIST per affected
-    generation, taken under the held #rewrite lease BEFORE GC removes
-    the directories. Double-recording a file an earlier compaction
-    already rm'd is harmless: removed_files_index keeps the FIRST
-    removal version."""
-    dts_by_gen: dict[int, set[str]] = {}
-    for g, d in affected:
-        dts_by_gen.setdefault(int(g), set()).add(d)
+    """Every live file of the superseded ``(gen, dt)`` partitions — the
+    ``rm`` entries a rewrite commit records, so from its version on the
+    log alone says the partitions are gone (earlier versions still
+    read them until GC removes the directories)."""
+    parts = {(int(g), d) for g, d in affected}
     out: dict[int, list[str]] = {}
-    for g, dts in dts_by_gen.items():
-        rels = [
-            rel for rel in engine._gen_file_set(table, g)
-            if rel.split("/", 1)[0][len("dt="):] in dts
-        ]
+    for g, files in engine.catalog.live_files(table).items():
+        rels = [rel for rel, dt in files if (g, dt) in parts]
         if rels:
-            out[g] = sorted(rels)
+            out[g] = rels
     return out
 
 
@@ -315,15 +305,11 @@ def collapse_generations(engine, table: str) -> int:
                 f"mutation lease on {table!r} lost during collapse; "
                 "aborting commit (no data was published)")
         survivor_files = sorted(engine._gen_file_set(table, new_gen))
-        # collapse physically removes the WHOLE dead-gen directories
-        # below, not just the affected dt partitions — record rm
-        # entries for every file still sitting in gens 0..new_gen-1 so
-        # snapshots at/after this commit never count them as alive
-        dead_files: dict[int, list[str]] = {}
-        for g in range(new_gen):
-            rels = sorted(engine._gen_file_set(table, g))
-            if rels:
-                dead_files[g] = rels
+        # every live file of the folded generations is removed (the
+        # whole dead-gen directories go below)
+        dead_files = {g: [rel for rel, _dt in files] for g, files
+                      in engine.catalog.live_files(table).items()
+                      if g < new_gen}
         engine.catalog.commit_rewrite(
             table, dict(cum), affected, expected_gen=new_gen,
             add_files={new_gen: survivor_files},

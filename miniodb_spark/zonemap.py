@@ -17,11 +17,11 @@ the files whose bracket admits the key: the Delta/Iceberg
 Design constraints, in order:
 
 1. **Never wrong.** The sidecar is an *optimization hint*, not truth.
-   At lookup time the generation directory is listed (one cheap LIST —
-   versus N footer GETs) and a file is scanned unless the sidecar
+   At lookup time the generation's live files come from the commit log
+   (no LIST, no footer GET) and a file is scanned unless the sidecar
    provably excludes it: unindexed files (crashed build, foreign
    writer, older version) are always scanned. Files the sidecar knows
-   but the listing no longer has (GC of superseded partitions) are
+   but the live set no longer has (compacted or rewritten away) are
    never touched. A missing or corrupt sidecar degrades to the full
    generation scan ``read_persisted`` would do anyway.
 2. **Amortized build.** ``build`` is incremental: it indexes ONLY files
@@ -142,6 +142,8 @@ class ZoneMapStore:
         # their footers lacked usable stats (object-store roots, NaN or
         # stats-less FLOAT/DOUBLE columns): the counted fallback
         self.spark_fallback_files = 0
+        # (table, gen) -> (token, the merged view load() read under it)
+        self._memo: dict[tuple[str, int], tuple[Any, dict]] = {}
 
     #: fold shards into the base sidecar once this many accumulate —
     #: keeps load() at O(1) small reads in the steady state while the
@@ -177,11 +179,24 @@ class ZoneMapStore:
             return None
         return doc
 
-    def load(self, table: str, gen: int) -> dict | None:
+    def load(self, table: str, gen: int,
+             listing: list[tuple[str, str]] | None = None,
+             token: Any = None) -> dict | None:
         """Merged view: base sidecar plus every per-build shard. A shard
         whose column set differs from the merged doc's is skipped
         (reconfiguration mid-flight — its files stay unindexed, hint
-        loss only)."""
+        loss only).
+
+        With a ``token`` (the table's commit-log version) the view read
+        under the same token is reused, with no store access, while it
+        indexes every file of ``listing`` (the files a prune is about to
+        filter): a commit changes the token, and a file the view lacks
+        (its shard landed after the view was read) makes it re-read."""
+        if token is not None:
+            hit = self._memo.get((table, gen))
+            if hit is not None and hit[0] == token and all(
+                    rel in hit[1]["files"] for rel, _dt in listing or ()):
+                return hit[1]
         merged = self._read_doc(self._path(table, gen))
         for sp in self._shard_paths(table, gen):
             doc = self._read_doc(sp)
@@ -194,6 +209,8 @@ class ZoneMapStore:
             if set(doc.get("columns", [])) != set(merged.get("columns", [])):
                 continue
             merged["files"].update(doc["files"])
+        if token is not None and merged is not None:
+            self._memo[(table, gen)] = (token, merged)
         return merged
 
     def shard_counts(self) -> dict[str, int]:
@@ -228,6 +245,9 @@ class ZoneMapStore:
         return out
 
     def drop(self, table: str, gen: int | None = None) -> None:
+        for key in [k for k in self._memo if k[0] == table
+                    and gen in (None, k[1])]:
+            self._memo.pop(key, None)
         if gen is not None:
             for path in [self._path(table, gen)] + self._shard_paths(
                 table, gen
@@ -464,13 +484,15 @@ class ZoneMapStore:
         listing: list[tuple[str, str]],
         column: str,
         value: Any,
+        token: Any = None,
     ) -> tuple[list[str], int]:
         """Select the files of ``listing`` a ``column = value`` lookup
         must scan. Returns ``(selected_rel_paths, n_skipped)``.
         Unindexed files are always selected (hint-only contract); an
         indexed file is skipped iff its [min, max] bracket excludes the
-        key or either bound is unknown-NULL-free-provable."""
-        doc = self.load(table, gen)
+        key or either bound is unknown-NULL-free-provable. ``token``:
+        see :meth:`load`."""
+        doc = self.load(table, gen, listing, token)
         if doc is None or column not in doc.get("columns", []):
             return [rel for rel, _dt in listing], 0
         if value is None:
@@ -513,6 +535,7 @@ class ZoneMapStore:
         hi: Any = None,
         lo_incl: bool = True,
         hi_incl: bool = True,
+        token: Any = None,
     ) -> tuple[list[str], int]:
         """Files a range predicate on ``column`` must scan — the
         key-range twin of :meth:`prune` (``id > 'cursor'`` keyset
@@ -523,8 +546,8 @@ class ZoneMapStore:
         keys, so an all-null file (None bracket) is skipped — unlike
         :meth:`prune`'s NULL-key early return, there is no NULL value
         to look for. Unindexed files are always scanned (hint-only
-        contract)."""
-        doc = self.load(table, gen)
+        contract). ``token``: see :meth:`load`."""
+        doc = self.load(table, gen, listing, token)
         if doc is None or column not in doc.get("columns", []):
             return [rel for rel, _dt in listing], 0
         if lo is None and hi is None:

@@ -1,5 +1,7 @@
 """Tiered compaction tests (reference internal/compaction/manager_test.go:
-classify-by-tier, candidate selection, merge correctness)."""
+classify-by-tier, candidate selection, merge correctness). Plans come
+from the live-set planner and merges run through Engine.compact, which
+commits them: a merge nobody commits is invisible to every reader."""
 
 import json
 import os
@@ -7,7 +9,6 @@ import os
 from miniodb_spark.compaction import (
     MAX_FILES_PER_RUN,
     MB,
-    compact_table,
     file_tier,
     plan_table,
 )
@@ -26,6 +27,10 @@ def test_file_tier_classification():
     assert file_tier(2048 * MB) == 4  # beyond L3: untouched
 
 
+def _plans(engine, table):
+    return plan_table(engine._table_dir(table), engine.live_objects(table))
+
+
 def _count_parquet(table_dir):
     n = 0
     for root, _, files in os.walk(table_dir):
@@ -42,10 +47,10 @@ def test_compaction_merges_small_files(engine):
     before = _count_parquet(table_dir)
     assert before == 8
 
-    plans = plan_table(table_dir)
+    plans = _plans(engine, "t")
     assert len(plans) == 1 and plans[0].tier == 0 and len(plans[0].files) == 8
 
-    stats = compact_table(engine.spark, table_dir)
+    stats = engine.compact("t")
     assert stats[0]["inputs"] == 8 and stats[0]["outputs"] == 1
     assert _count_parquet(table_dir) == 1
 
@@ -58,8 +63,8 @@ def test_compaction_respects_min_files(engine):
     for i in range(3):  # below the L0 threshold of 5
         engine.write("t2", {"v": i}, record_id=f"r{i}", timestamp_us=T0)
         engine.flush("t2")
-    table_dir = os.path.join(engine.root, "t2")
-    assert plan_table(table_dir) == []
+    assert _plans(engine, "t2") == []
+    assert engine.compact("t2") == []
 
 
 def test_compaction_partition_isolation(engine):
@@ -69,11 +74,10 @@ def test_compaction_partition_isolation(engine):
         engine.flush("t3")
     engine.write("t3", {"v": 99}, record_id="b0", timestamp_us=T0 + DAY)
     engine.flush("t3")
-    table_dir = os.path.join(engine.root, "t3")
-    plans = plan_table(table_dir)
+    plans = _plans(engine, "t3")
     assert len(plans) == 1
     assert "dt=" in plans[0].partition_dir
-    compact_table(engine.spark, table_dir)
+    assert len(engine.compact("t3")) == 1
     rows = json.loads(engine.query("SELECT count(*) AS n FROM t3"))
     assert rows[0]["n"] == 6
 
@@ -82,12 +86,12 @@ def test_compaction_caps_files_per_run(engine, tmp_path):
     for i in range(25):
         engine.write("t4", {"v": i}, record_id=f"r{i}", timestamp_us=T0)
         engine.flush("t4")
-    plans = plan_table(os.path.join(engine.root, "t4"))
+    plans = _plans(engine, "t4")
     assert len(plans[0].files) == MAX_FILES_PER_RUN
 
 
 def test_compaction_with_zorder_clusters_rewrite(engine):
-    """compact_table(zorder_by=...) is the OPTIMIZE-ZORDER analog: the
+    """compact(zorder_by=...) is the OPTIMIZE-ZORDER analog: the
     rewritten partition is Morton-clustered, losslessly."""
     import random
 
@@ -101,7 +105,7 @@ def test_compaction_with_zorder_clusters_rewrite(engine):
     table_dir = os.path.join(engine.root, "zt")
     assert _count_parquet(table_dir) == 6
 
-    stats = compact_table(engine.spark, table_dir, zorder_by=["u", "m"])
+    stats = engine.compact("zt", zorder_by=["u", "m"])
     assert stats and stats[0]["inputs"] == 6
     # lossless
     rows = json.loads(engine.query("SELECT id, u, m FROM zt LIMIT 500"))
@@ -110,8 +114,7 @@ def test_compaction_with_zorder_clusters_rewrite(engine):
     for i in range(5):
         engine.write("zt2", {"v": i}, record_id=f"s{i}", timestamp_us=T0)
         engine.flush("zt2")
-    stats2 = compact_table(engine.spark, os.path.join(engine.root, "zt2"),
-                           zorder_by=["nonexistent_col"])
+    stats2 = engine.compact("zt2", zorder_by=["nonexistent_col"])
     assert stats2[0]["outputs"] >= 1
     rows2 = json.loads(engine.query("SELECT v FROM zt2"))
     assert len(rows2) == 5
@@ -153,3 +156,50 @@ def test_engine_compact_invalidates_cache_and_rest_route(engine):
         assert out["success"] is True  # nothing left to merge is still ok
     finally:
         srv.shutdown()
+
+
+def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
+    """A fault at every mutating filesystem call of one 6-file
+    compaction: afterwards a freshly booted Engine reads the 6 seeded
+    rows exactly once, and its pruned lookups agree. The outputs are
+    invisible until the commit, and the inputs are deleted only after
+    it."""
+    from faultfs import FaultFS, InjectedFault
+    from miniodb_spark import engine as engine_mod
+    from miniodb_spark.fs import LocalFS
+
+    monkeypatch.setattr(engine_mod, "get_fs",
+                        lambda spark, root: FaultFS(LocalFS()))
+    want = [f"r{i}" for i in range(6)]
+
+    def prepare(root):
+        eng = engine_mod.Engine(spark, root)
+        for i in range(6):  # six one-file flushes into one day: L0 merges
+            eng.write("t", {"v": i}, record_id=f"r{i}", timestamp_us=T0 + i)
+            eng.flush("t")
+        return eng
+
+    def ids(df):
+        return sorted(r["id"] for r in df.select("id").collect())
+
+    eng = prepare(str(tmp_path / "count"))
+    eng.fs.arm()
+    assert eng.compact("t")[0]["inputs"] == 6
+    eng.fs.disarm()
+    calls = list(eng.fs.calls)
+    assert [m for m, p in calls if p.endswith(".parquet")] == (
+        ["move"] + ["remove_file"] * 6)
+    for k in range(1, len(calls) + 1):
+        root = str(tmp_path / f"k{k}")
+        eng = prepare(root)
+        eng.fs.arm(fail_at=k)
+        try:
+            eng.compact("t")
+        except InjectedFault:
+            pass
+        eng.fs.disarm()
+        fresh = engine_mod.Engine(spark, root)
+        assert ids(fresh.read_table("t")) == want, (k, calls[k - 1])
+        for rid in ("r0", "r5"):
+            assert ids(fresh.point_lookup_df("t", rid)[0]) == [rid], (
+                k, calls[k - 1])

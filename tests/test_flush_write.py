@@ -162,6 +162,51 @@ def test_dot_temp_file_is_invisible_to_scans(engine):
     assert json.loads(engine.query("SELECT count(*) AS n FROM h")) == [{"n": 3}]
 
 
+def test_uncommitted_part_file_is_invisible(engine):
+    """A complete, valid Parquet file that no commit added — a crashed
+    writer's output — is not part of the table: the head read, the
+    pruned lookup, a snapshot read and a fresh Engine all ignore it, and
+    compaction never plans it. Neither does a leftover of a file a
+    commit removed."""
+    import shutil
+
+    from miniodb_spark.compaction import plan_table
+    from miniodb_spark.engine import Engine
+
+    for i in range(5):  # five one-row files: one L0 merge short of six
+        engine.write("h", {"v": i}, record_id=f"r{i}", timestamp_us=T0)
+        engine.flush()
+    files = _files(engine.root, "h")
+    v = engine.catalog.current_version("h")
+    rid = pq.read_table(files[0]).column("id")[0].as_py()
+    orphan = os.path.join(os.path.dirname(files[0]),
+                          "part-00000-orphan.c000.snappy.parquet")
+    shutil.copy(files[0], orphan)  # the rows of files[0], again
+    want = [f"r{i}" for i in range(5)]
+
+    def check(eng):
+        assert _ids(eng.read_persisted("h")) == want
+        assert json.loads(eng.query(
+            f"SELECT id FROM h WHERE id = '{rid}'")) == [{"id": rid}]
+        assert _ids(eng.point_lookup_df("h", rid)[0]) == [rid]
+        assert _ids(eng.read_snapshot("h", v)) == want
+        assert json.loads(eng.query("SELECT count(*) AS n FROM h")) == [{"n": 5}]
+
+    check(engine)
+    check(Engine(engine.spark, engine.root))
+    (plan,) = plan_table(engine._table_dir("h"), engine.live_objects("h"))
+    assert sorted(plan.files) == files
+    saved = {f: open(f, "rb").read() for f in files}
+    assert engine.compact("h")[0]["inputs"] == 5
+    assert os.path.exists(orphan)  # not the table's: compaction leaves it
+    for f, data in saved.items():  # leftovers of the removed inputs
+        with open(f, "wb") as fh:
+            fh.write(data)
+    assert _ids(engine.read_persisted("h")) == want
+    assert _ids(Engine(engine.spark, engine.root).read_persisted("h")) == want
+    assert plan_table(engine._table_dir("h"), engine.live_objects("h")) == []
+
+
 def test_localfs_write_bytes_temp_is_hidden_and_cleaned(tmp_path, monkeypatch):
     from miniodb_spark.fs import LocalFS
 

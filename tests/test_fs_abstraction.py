@@ -66,7 +66,7 @@ def test_mutations_through_hadoop_fs(uri_engine):
 
 
 def test_compaction_through_hadoop_fs(uri_engine, spark):
-    from miniodb_spark.compaction import compact_table, plan_table
+    from miniodb_spark.compaction import plan_table
 
     eng = uri_engine
     # several flushes → several small files in one partition
@@ -76,10 +76,10 @@ def test_compaction_through_hadoop_fs(uri_engine, spark):
                       timestamp_us=T0)
         eng.flush()
     tdir = eng._table_dir("c")
-    plans = plan_table(tdir, fs=eng.fs)
+    plans = plan_table(tdir, eng.live_objects("c"))
     assert plans and plans[0].tier == 0 and len(plans[0].files) == 5
     before = json.loads(eng.query("SELECT count(*) AS n FROM c"))[0]["n"]
-    stats = compact_table(spark, tdir, fs=eng.fs)
+    stats = eng.compact("c")
     assert stats and stats[0]["inputs"] == 5 and stats[0]["outputs"] == 1
     eng.cache.invalidate_table("c")
     after = json.loads(eng.query("SELECT count(*) AS n FROM c"))[0]["n"]

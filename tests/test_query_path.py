@@ -2,9 +2,9 @@
 
 - The full hybrid scan is built only when no pruned scan replaces it.
 - ``read_persisted`` caches its head scan per table, keyed by catalog
-  state plus the per-generation file listing: every writer that changes
-  the files or the catalog must make the next answer equal a fresh
-  Engine's.
+  state and the commit-log version: every writer that changes the files
+  or the catalog must make the next answer equal a fresh Engine's, and
+  a warm query lists no directory.
 - Results are collected with the limit above ``toJSON`` (a CollectLimit,
   no single-partition shuffle) and the same JSON text as before.
 """
@@ -147,6 +147,46 @@ def test_backup_then_restore(engine):
     assert _assert_fresh(engine) == backed_up
 
 
+def test_restore_equals_its_manifest(engine):
+    """A row flushed after the backup into the SAME generation is gone
+    after the restore: the restore commits the manifest's files and
+    removes every other live file."""
+    _seed(engine)
+    mgr = BackupManager(engine.catalog, engine=engine)
+    name = mgr.create_data_backup(["t"])["object_name"]
+    backed_up = _rows(engine)
+    engine.write("t", {"v": 5}, record_id="late", timestamp_us=T0)
+    engine.flush("t")
+    assert len(engine.catalog.gen_schemas("t")) == 1
+    assert len(_rows(engine)) == 7
+    mgr.restore_data_backup(name)
+    assert _rows(Engine(engine.spark, engine.root)) == backed_up
+    assert _rows(engine) == backed_up
+
+
+def test_backup_copies_the_live_set_only(engine):
+    """A file in the table directory that no commit added is not part of
+    the table, so it is not backed up."""
+    import os
+    import shutil
+
+    _seed(engine)
+    live = engine.catalog.live_files("t")
+    rel, dt = live[0][0]
+    gdir = engine._gen_dir("t", 0)
+    shutil.copy(os.path.join(gdir, rel),
+                os.path.join(gdir, f"dt={dt}", "part-00000-orphan.parquet"))
+    mgr = BackupManager(engine.catalog, engine=engine)
+    info = mgr.create_data_backup(["t"])
+    manifest = json.loads(engine.fs.read_bytes(os.path.join(
+        mgr.backup_root, info["object_name"], "MANIFEST.json")))
+    assert sorted(e["rel"] for e in manifest["tables"]["t"]) == sorted(
+        f"gen={g}/{r}" for g, files in live.items() for r, _dt in files)
+    engine.delete_table("t")
+    mgr.restore_data_backup(info["object_name"])
+    assert len(_rows(engine)) == 6
+
+
 def test_drop_then_recreate(engine):
     _seed(engine)
     before = _head_cached(engine)
@@ -185,6 +225,43 @@ def test_emptied_generation_adds_no_scan(engine):
     assert [r["id"] for r in engine.query_df("SELECT id FROM t").collect()] == ["b"]
     engine.delete("t", "b")
     assert json.loads(engine.query("SELECT id, dt FROM t")) == []
+
+
+class _ListCountingFS:
+    def __init__(self, inner):
+        self.inner = inner
+        self.lists = []
+
+    def __getattr__(self, name):
+        attr = getattr(self.inner, name)
+        if not name.startswith("list_"):
+            return attr
+
+        def call(path, *args, **kwargs):
+            self.lists.append((name, path))
+            return attr(path, *args, **kwargs)
+
+        return call
+
+
+def test_warm_head_query_and_lookup_list_nothing(spark, tmp_path, monkeypatch):
+    """The live file set comes from the commit log: with the head scan
+    and the zone-map view warm, neither a full-table query nor a pruned
+    id lookup lists a directory."""
+    from miniodb_spark import engine as engine_mod
+    from miniodb_spark.fs import LocalFS
+
+    fs = _ListCountingFS(LocalFS())
+    monkeypatch.setattr(engine_mod, "get_fs", lambda spark, root: fs)
+    eng = engine_mod.Engine(spark, str(tmp_path / "store"))
+    _seed(eng, n=8, days=4)
+    lookup = "SELECT id, v FROM t WHERE id = '{}'"
+    eng.query_df("SELECT count(*) AS n FROM t").collect()
+    eng.query_df(lookup.format("r1")).collect()
+    fs.lists.clear()
+    assert eng.query_df("SELECT count(*) AS n FROM t").collect()[0]["n"] == 8
+    assert [r["v"] for r in eng.query_df(lookup.format("r6")).collect()] == [6]
+    assert fs.lists == []
 
 
 # -- which scans a query builds -----------------------------------------------

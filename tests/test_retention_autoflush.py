@@ -70,11 +70,10 @@ def test_retention_crash_between_rm_record_and_drop(spark, tmp_path):
     v = eng.catalog.current_version("logs")
     snap = eng.read_snapshot("logs", v)
     assert snap.count() == 4
-    # live queries keep answering; they read the PHYSICAL listing, so
-    # the doomed partitions remain visible until the retry drops them
-    # (retention is a cleanup, not a correctness filter)
+    # live queries agree with the latest snapshot: the rm commit is the
+    # drop, the directories still on disk are leftovers no commit holds
     assert json.loads(
-        eng.query("SELECT count(*) AS n FROM logs"))[0]["n"] == 6
+        eng.query("SELECT count(*) AS n FROM logs"))[0]["n"] == 4
 
     # retry completes the physical drop
     eng.enforce_retention(now_us=T0)
