@@ -149,13 +149,15 @@ class MiniODBService:
             return {"table": name, "history": self.engine.table_history(name)}
 
     def vacuum_table(self, name: str, client_id: str = "default") -> dict:
-        """Reclaim partitions superseded by committed rewrites; stale
-        snapshots refuse afterwards (SnapshotUnavailableError)."""
+        """Run the table's garbage collector (Engine.vacuum): delete
+        every data file the head version does not hold live and report
+        their number as ``reclaimed_files``; snapshots that needed them
+        refuse afterwards (SnapshotUnavailableError)."""
         with self._rpc("vacuum_table", client_id):
             with self._audited("vacuum", name, "", client_id) as a:
                 n = self.engine.vacuum(name)
-                a["details"] = {"reclaimed_partitions": n}
-                return {"success": True, "reclaimed_partitions": n}
+                a["details"] = {"reclaimed_files": n}
+                return {"success": True, "reclaimed_files": n}
 
     def update_data(self, table: str, record_id: str, payload: dict,
                     timestamp_us: int | None = None,

@@ -205,57 +205,55 @@ class BackupManager:
 
     def restore_data_backup(self, object_name: str,
                             tables: list[str] | None = None) -> dict[str, Any]:
-        """Copy a backup's objects back into the data root and re-import
-        the catalog metadata for the restored tables — recovers *data*,
-        not just table configs, for dropped or corrupted tables."""
+        """Copy a backup's objects back into the data root and commit
+        them as the restored tables' files — recovers *data*, not just
+        table configs, for dropped or corrupted tables. One table at a
+        time, in sorted order, copies and commits under its ``#rewrite``
+        lease — a copied file a commit once removed is not live until
+        this commit adds it, so the garbage collector must not run in
+        between — then collects what the commit removed."""
         eng = self._require_engine()
         src_root = fsmod.join(self.backup_root, os.path.basename(object_name))
         mpath = fsmod.join(src_root, "MANIFEST.json")
         if not eng.fs.exists(mpath):
             raise ValueError(f"no complete data backup named {object_name!r}")
         manifest = json.loads(eng.fs.read_bytes(mpath))
-        tables = tables or list(manifest["tables"])
+        tables = sorted(tables or manifest["tables"])
+        for t in tables:
+            if t not in manifest["tables"]:
+                raise ValueError(f"table {t!r} is not in backup {object_name!r}")
+        meta = manifest["metadata"]
         restored: dict[str, int] = {}
         for t in tables:
-            entries = manifest["tables"].get(t)
-            if entries is None:
-                raise ValueError(f"table {t!r} is not in backup {object_name!r}")
-            # same thread-pooled copy as create_data_backup; metadata
-            # still commits only after every object landed
-            _copy_all(
-                eng.fs,
-                [(fsmod.join(src_root, t, e["rel"]),
-                  fsmod.join(eng.root, t, e["rel"])) for e in entries],
-            )
+            entries = manifest["tables"][t]
+            with eng.lease.holding(f"{t}/#rewrite", timeout_s=120.0), \
+                    eng.lease.keepalive(f"{t}/#rewrite"):
+                # same thread-pooled copy as create_data_backup; the
+                # metadata commits only after every object landed
+                _copy_all(
+                    eng.fs,
+                    [(fsmod.join(src_root, t, e["rel"]),
+                      fsmod.join(eng.root, t, e["rel"])) for e in entries],
+                )
+                adds: dict[int, list[str]] = {}
+                for e in entries:
+                    gen_part, rel = e["rel"].split("/", 1)
+                    adds.setdefault(int(gen_part[len("gen="):]), []).append(rel)
+                # the manifest's files are added and every other live
+                # file removed: the restored table is exactly the backup
+                keep = {(g, rel) for g, rels in adds.items() for rel in rels}
+                rms = {g: [rel for rel, _dt in files if (g, rel) not in keep]
+                       for g, files in self.catalog.live_files(t).items()}
+                cfgs = meta.get("tables", {})
+                subset = {
+                    "tables": {t: cfgs[t]} if t in cfgs else {},
+                    "generations": {t: meta.get("generations", {}).get(t, [])},
+                }
+                self.catalog.import_metadata(subset, add_files={t: adds},
+                                             remove_files={t: rms})
+                eng.cache.invalidate_table(t)
+                eng._collect(t)
             restored[t] = len(entries)
-        # metadata last, in the same commit that sets each table's
-        # files: the manifest's files are added and every other live
-        # file removed, so the restored table is exactly the backup
-        adds: dict[str, dict[int, list[str]]] = {}
-        rms: dict[str, dict[int, list[str]]] = {}
-        for t in tables:
-            for e in manifest["tables"][t]:
-                gen_part, rel = e["rel"].split("/", 1)
-                adds.setdefault(t, {}).setdefault(
-                    int(gen_part[len("gen="):]), []).append(rel)
-            for g, files in self.catalog.live_files(t).items():
-                keep = set(adds.get(t, {}).get(g, ()))
-                gone = [rel for rel, _dt in files if rel not in keep]
-                if gone:
-                    rms.setdefault(t, {})[g] = gone
-        meta = manifest["metadata"]
-        subset = {
-            "tables": {t: meta["tables"][t] for t in tables
-                       if t in meta.get("tables", {})},
-            "generations": {t: meta.get("generations", {}).get(t, [])
-                            for t in tables},
-            "excluded": {t: meta.get("excluded", {}).get(t, [])
-                         for t in tables},
-        }
-        self.catalog.import_metadata(subset, add_files=adds,
-                                     remove_files=rms)
-        for t in tables:
-            eng.cache.invalidate_table(t)
         return {"success": True, "tables_restored": restored}
 
     # -- status ----------------------------------------------------------

@@ -111,9 +111,6 @@ class Catalog:
         self._configs: dict[str, TableConfig] = {}
         # table -> list of generation schemas [{col: type}, ...]
         self._generations: dict[str, list[dict[str, str]]] = {}
-        # table -> [[gen, dt], ...]: partitions superseded by a committed
-        # rewrite, excluded from reads until their directories are GC'd
-        self._excluded: dict[str, list[list]] = {}
         self._lock = threading.RLock()
         self._stream_commits: dict[str, int] | None = None  # lazy-loaded
         # table -> (mtime_ns, size) of its json at last load/persist;
@@ -146,7 +143,6 @@ class Catalog:
         cfg = TableConfig(**doc.get("config", {}))
         self._configs[cfg.name] = cfg
         self._generations[cfg.name] = doc.get("generations", [])
-        self._excluded[cfg.name] = doc.get("excluded", [])
         self._sigs[cfg.name] = self._sig_of(path)
 
     def _load_all(self) -> None:
@@ -163,7 +159,6 @@ class Catalog:
         doc = {
             "config": asdict(self._configs[name]),
             "generations": self._generations.get(name, []),
-            "excluded": self._excluded.get(name, []),
         }
         tmp = self._path(name) + ".tmp"
         with open(tmp, "w", encoding="utf-8") as fh:
@@ -186,18 +181,17 @@ class Catalog:
                 log.records[-1]["v"] if log.records else 0) + 1
         self._versions[name] = v
         rec: dict = {"v": v, "ts_us": int(time.time() * 1e6), "doc": doc}
-        if add_files:
-            # Delta-style add entries: {gen: [relpaths]} this commit
-            # added. Recorded only on the log line, never in the
-            # current-state json: it is a per-commit delta.
-            rec["add"] = {str(g): sorted(rels)
-                          for g, rels in add_files.items() if rels}
-        if remove_files:
-            # remove entries: files this commit took out of the table
-            # (compaction inputs, rewritten partitions, retention,
-            # restore); they stay live for earlier versions
-            rec["rm"] = {str(g): sorted(rels)
-                         for g, rels in remove_files.items() if rels}
+        # Delta-style add and remove entries, {gen: [relpaths]}: the
+        # files this commit added, and the ones it took out of the
+        # table (compaction inputs, rewritten partitions, retention,
+        # restore; they stay live for earlier versions). Recorded only
+        # on the log line, never in the current-state json: a
+        # per-commit delta.
+        for kind, files in (("add", add_files), ("rm", remove_files)):
+            entries = {str(g): sorted(rels)
+                       for g, rels in (files or {}).items() if rels}
+            if entries:
+                rec[kind] = entries
         line = json.dumps(rec, separators=(",", ":"))
         with open(self._hist_path(name), "a", encoding="utf-8") as fh:
             fh.write(line + "\n")
@@ -365,7 +359,6 @@ class Catalog:
             if sig is None:  # deleted by another process
                 self._configs.pop(name, None)
                 self._generations.pop(name, None)
-                self._excluded.pop(name, None)
                 self._sigs.pop(name, None)
                 return True
             self._load_one(path)
@@ -400,7 +393,6 @@ class Catalog:
                 return False
             del self._configs[name]
             self._generations.pop(name, None)
-            self._excluded.pop(name, None)
             self._versions.pop(name, None)
             self._logs.pop(name, None)
             for path in (self._path(name), self._hist_path(name)):
@@ -498,7 +490,8 @@ class Catalog:
     # object store there is no rename anywhere on the data path —
     # matching the reference's upload-then-delete
     # (internal/query/query.go:1252-1413), but with an atomic log append
-    # instead of a visible delete window.
+    # instead of a visible delete window; the removed files are deleted
+    # later by the table's collector (mutations.gc_superseded).
 
     def next_generation_index(self, name: str) -> int:
         with self._lock:
@@ -506,20 +499,18 @@ class Catalog:
 
     def commit_rewrite(
         self, name: str, columns: dict[str, str],
-        superseded: list[tuple[int, str]],
         expected_gen: int | None = None,
         add_files: dict[int, list[str]] | None = None,
         remove_files: dict[int, list[str]] | None = None,
     ) -> int:
         """Atomic commit of a rewrite: append the survivors' generation
         (always a NEW generation — its files were invisible until this
-        commit adds them), remove the superseded partitions' files
-        (``remove_files``) and list the ``(gen, dt)`` partitions for
-        gc_superseded. Returns the new generation index.
+        commit adds them) and remove the superseded partitions' files
+        (``remove_files``). Returns the new generation index.
 
         The commit mutates the *on-disk* state, not a possibly-stale
         in-memory snapshot: it re-reads the catalog file first
-        (refresh_if_changed), then applies the append+exclusions on top.
+        (refresh_if_changed), then appends on top.
         ``expected_gen`` is the generation index the rewrite wrote its
         survivor directory under (next_generation_index at reserve
         time); if the refreshed generation list no longer lines up —
@@ -536,35 +527,18 @@ class Catalog:
                     f"{expected_gen} but catalog now has {len(gens)} "
                     "generations (concurrent commit — lease lost?)")
             gens.append(dict(columns))
-            ex = self._excluded.setdefault(name, [])
-            for g, d in superseded:
-                if [int(g), d] not in ex:
-                    ex.append([int(g), d])
             # the survivors' files are this commit's adds and every live
             # file of the superseded partitions its removes: from this
-            # version on, the log alone says the old partitions are
-            # gone. The exclusion list only tells gc_superseded which
-            # directories to delete.
+            # version on, the log alone says the old partitions are gone
             self._persist(name, add_files=add_files,
                           remove_files=remove_files)
             return len(gens) - 1
 
     def excluded_parts(self, name: str) -> set[tuple[int, str]]:
-        """Partitions superseded by a committed rewrite whose
-        directories gc_superseded has not removed yet."""
-        with self._lock:
-            return {(int(g), d) for g, d in self._excluded.get(name, [])}
-
-    def clear_excluded(self, name: str, parts: list[tuple[int, str]]) -> None:
-        """Forget exclusions whose directories have been physically
-        removed (the GC step after a committed rewrite)."""
-        with self._lock:
-            gone = {(int(g), d) for g, d in parts}
-            ex = self._excluded.get(name, [])
-            kept = [p for p in ex if (int(p[0]), p[1]) not in gone]
-            if len(kept) != len(ex):
-                self._excluded[name] = kept
-                self._persist(name)
+        """Always empty: no partition is excluded outside the commit
+        log. Kept only because the benchmark tracer's target list names
+        it."""
+        return set()
 
     def gen_schemas(self, name: str) -> list[dict[str, str]]:
         with self._lock:
@@ -600,7 +574,6 @@ class Catalog:
             return {
                 "tables": {n: asdict(c) for n, c in self._configs.items()},
                 "generations": {n: g for n, g in self._generations.items()},
-                "excluded": {n: e for n, e in self._excluded.items() if e},
             }
 
     def import_metadata(
@@ -616,7 +589,6 @@ class Catalog:
             for name, cfg in doc.get("tables", {}).items():
                 self._configs[name] = TableConfig(**cfg)
                 self._generations[name] = doc.get("generations", {}).get(name, [])
-                self._excluded[name] = doc.get("excluded", {}).get(name, [])
                 self._persist(name, (add_files or {}).get(name),
                               (remove_files or {}).get(name))
                 n += 1

@@ -14,8 +14,10 @@ commit log's add/remove entries, never a directory listing — read as
 one distributed job, written to a temp dir with ``maxRecordsPerFile``
 and moved into the partition under fresh names. The outputs are
 invisible until :meth:`Engine.compact` commits them in one add+remove
-log record; only then are the inputs deleted, so a crash at any point
-leaves either the inputs or the outputs live, never both. At 100 TB
+log record, so a crash at any point leaves either the inputs or the
+outputs live, never both; nothing here deletes an input — the table's
+garbage collector (``mutations.gc_superseded``) does, after the
+commit. At 100 TB
 this runs as a periodic job per table over only the partitions whose
 small-file count crossed the threshold — never a full table rewrite.
 
@@ -141,8 +143,9 @@ def execute_plan(spark: SparkSession, plan: CompactionPlan, fs=None,
     Lossless: no schema collapse. Returns the outputs' paths relative
     to the generation directory. The inputs are left alone: the
     outputs stay invisible until the caller's commit adds them and
-    removes the inputs, and the inputs are deleted only after that
-    commit. On failure every output already moved in is removed.
+    removes the inputs, and the garbage collector deletes the inputs
+    after that commit. On failure every output already moved in is
+    removed.
 
     ``zorder_by`` additionally Morton-clusters the rewritten partition
     (layout.zorder_value) — the OPTIMIZE-ZORDER analog: compaction is

@@ -107,10 +107,11 @@ def _parse_type(t: str) -> T.DataType:
 
 
 class SnapshotUnavailableError(RuntimeError):
-    """A time-travel read needs a partition/generation directory that a
-    later vacuum (or collapse_generations) physically removed. The
-    snapshot's metadata still exists in the commit log; its data does
-    not — the Delta-Lake VACUUM contract."""
+    """A time-travel read needs a data file that the garbage collector
+    (vacuum, or the collection at the end of a rewrite, compaction or
+    retention pass without retain_history) has deleted. The snapshot's
+    metadata still exists in the commit log; its data does not — the
+    Delta-Lake VACUUM contract."""
 
 
 class QueryResult(NamedTuple):
@@ -284,13 +285,14 @@ class Engine:
         self.events = event_publisher  # streaming.cdc.EventPublisher or None
         self.encryptor = encryptor  # encryption.FieldEncryptor or None
         self.slow_query_ms = slow_query_ms
-        # time travel: with retain_history=True, mutations commit their
-        # rewrites but DEFER the physical GC of superseded partitions —
-        # every catalog version in the commit log stays readable via
-        # read_snapshot until an explicit vacuum() (Delta's
+        # time travel: writers only commit, and the collector
+        # (mutations.gc_superseded) deletes the files the head no longer
+        # holds. By default every call that removes files runs it at its
+        # end; with retain_history=True only vacuum() does, so every
+        # catalog version in the commit log stays readable via
+        # read_snapshot until then (Delta's
         # delta.deletedFileRetentionDuration contract, collapsed to a
-        # manual knob). Default False preserves the reclaim-immediately
-        # behavior.
+        # manual knob).
         self.retain_history = retain_history
         # driver-materialization guard: a query with neither a SQL LIMIT nor
         # a request limit is still capped here (the reference always injects
@@ -756,8 +758,9 @@ class Engine:
         keyed by the generation schemas, the cumulative schema and the
         log version: while no commit happened, a call returns the
         already-analyzed scan — Spark neither lists nor re-analyzes.
-        Every writer commits before it deletes, so a hit never opens a
-        file the store no longer has."""
+        Only the garbage collector deletes, and only files a commit
+        already removed, so a hit never opens a file the store no
+        longer has."""
         gens = self.catalog.gen_schemas(table)
         cum = self.catalog.schema_of(table)
         if not gens or not cum:
@@ -859,8 +862,8 @@ class Engine:
 
     def table_history(self, table: str) -> list[dict]:
         """The table's metadata commit log, oldest first (one entry per
-        catalog flip: flush schema registrations, rewrite commits,
-        tombstones, GC clears). ``v`` values are what read_snapshot
+        catalog flip: flush schema registrations, data commits,
+        rewrite commits, tombstones). ``v`` values are what read_snapshot
         accepts."""
         return self.catalog.history(table)
 
@@ -872,9 +875,9 @@ class Engine:
         reappear and generations later tombstoned scan again.
 
         Requires those files to still exist: with
-        ``retain_history=True`` mutations defer their GC and compaction
-        waits, so every version back to the last vacuum()/collapse is
-        readable. A version that needs a file no longer on disk raises
+        ``retain_history=True`` only vacuum() deletes files, so every
+        version back to the last vacuum() is readable. A version that
+        needs a file no longer on disk raises
         :class:`SnapshotUnavailableError` instead of returning partial
         data — Spark checks explicit paths when the scan is built. The
         write buffer is never part of a snapshot — versions are commit
@@ -923,10 +926,10 @@ class Engine:
                     raise
                 raise SnapshotUnavailableError(
                     f"snapshot v{version} of {table!r} needs files no "
-                    "longer on disk (vacuumed, compacted away, or "
-                    "retention-dropped); run with retain_history=True — "
-                    "which also defers compaction — and vacuum "
-                    f"explicitly to keep snapshots readable: {e}") from e
+                    "longer on disk (garbage-collected after a rewrite, "
+                    "compaction or retention pass, or vacuumed); run "
+                    "with retain_history=True and vacuum explicitly to "
+                    f"keep snapshots readable: {e}") from e
         if not parts:
             return None
         out = parts[0]
@@ -935,22 +938,25 @@ class Engine:
         return out
 
     def vacuum(self, table: str) -> int:
-        """Physically remove partitions superseded by committed rewrites
-        and forget their exclusions. This is the explicit GC companion
-        of ``retain_history=True``: snapshots older than the newest
-        commit stop being readable past this point (read_snapshot then
-        raises SnapshotUnavailableError rather than under-returning).
-        Returns the number of partitions reclaimed.
+        """Run the table's garbage collector (mutations.gc_superseded,
+        under the table's #rewrite lease): delete every file the head
+        version does not hold live. This is the explicit companion of
+        ``retain_history=True``, where nothing else deletes: snapshots
+        that need a deleted file stop being readable past this point
+        (read_snapshot then raises SnapshotUnavailableError rather than
+        under-returning). Returns the number of data files deleted."""
+        from . import mutations
 
-        Runs under the table's #rewrite lease (r16, same reasoning as
-        enforce_retention): the inline post-mutation GC already holds
-        it, but this standalone entry raced concurrent flushes in the
-        list -> remove window otherwise."""
-        from .mutations import gc_superseded
+        return mutations.gc_superseded(self, table)
 
-        with self.lease.holding(f"{table}/#rewrite", timeout_s=120.0), \
-                self.lease.keepalive(f"{table}/#rewrite"):
-            return gc_superseded(self, table, force=True)
+    def _collect(self, table: str) -> None:
+        """The last step of every call that removes files from the
+        table: without retain_history, the collector deletes them now;
+        with it, vacuum() does."""
+        from . import mutations
+
+        if not self.retain_history:
+            mutations.gc_superseded(self, table)
 
     def read_buffer(self, table: str) -> DataFrame | None:
         """Unflushed rows as a DataFrame — the hybrid-query half that gives
@@ -1677,6 +1683,7 @@ class Engine:
         self.cache.invalidate_table(table)
         if self.events:
             self.events.publish("delete", table, [record_id])
+        self._collect(table)
         return removed
 
     _ARRAY_ELEM_TYPES = {
@@ -1834,6 +1841,7 @@ class Engine:
         self.cache.invalidate_table(table)
         if self.events:
             self.events.publish("update", table, [record_id])
+        self._collect(table)
         return removed
 
     def merge_upsert(self, table: str, batch: DataFrame, key_col: str = "id",
@@ -1901,6 +1909,7 @@ class Engine:
                 F.col("id").isNull() | (F.col("id") == "") | (F.col("id") == "_"),
             )
         self.cache.invalidate_table(table)
+        self._collect(table)
         return n
 
     # ------------------------------------------------------------------
@@ -1980,9 +1989,10 @@ class Engine:
 
     def enforce_retention(self, table: str | None = None, now_us: int | None = None) -> int:
         """Drop ``dt`` partitions older than each table's retention_days
-        (reference: retention config in table_config.go; enforcement is a
-        partition-directory drop here — O(partitions), never a rewrite).
-        Returns the number of partitions removed."""
+        (reference: retention config in table_config.go; enforcement is
+        one rm commit per table — O(files), never a rewrite — and the
+        collector deletes the files). Returns the number of ``(gen, dt)``
+        partitions the rm commits emptied."""
         import time as _time
         from datetime import datetime, timedelta, timezone
 
@@ -1996,42 +2006,26 @@ class Engine:
                 datetime.fromtimestamp(now_us / 1_000_000, tz=timezone.utc)
                 - timedelta(days=cfg.retention_days)
             ).strftime("%Y-%m-%d")
-            tdir = self._table_dir(t)
-            # The whole rm-commit -> drop runs under the table's
-            # shared-store #rewrite lease (r16): without it, a concurrent
-            # flush (late-arriving data into a pre-cutoff dt partition)
-            # could commit file F after our live-set read and before
-            # remove_dir — F would stay live in the log but be gone
-            # from disk. The lease serializes retention against
-            # flush/update/compaction exactly like every other rewrite.
+            # the live-set read -> rm commit runs under the table's
+            # #rewrite lease, so no flush commits late-arriving data
+            # into a pre-cutoff partition in between
             with self.lease.holding(f"{t}/#rewrite", timeout_s=120.0), \
                     self.lease.keepalive(f"{t}/#rewrite"):
-                # ONE commit removes every live file of the dropped
-                # days BEFORE the directories go: a crash in between
-                # leaves only files no commit holds live
-                dead: dict[int, list[str]] = {}
-                for g, files in self.catalog.live_files(t).items():
-                    rels = [rel for rel, dt in files if dt < cutoff]
-                    if rels:
-                        dead[g] = rels
-                doomed = [
-                    part_dir
-                    for gen_dir in self.fs.list_dirs(tdir, prefix="gen=")
-                    for part_dir in self.fs.list_dirs(gen_dir, prefix="dt=")
-                    if part_dir.rstrip("/").rsplit("/", 1)[-1][len("dt="):]
-                    < cutoff
-                ]
-                if dead or doomed:
-                    self.catalog.touch(t, remove_files=dead)
-                    for part_dir in doomed:
-                        self.fs.remove_dir(part_dir)
-                    removed += len(doomed)
+                # ONE commit removes every live file of the dropped days
+                live = self.catalog.live_files(t)
+                parts = {(g, dt) for g, files in live.items()
+                         for _rel, dt in files if dt < cutoff}
+                if parts:
+                    self.catalog.touch(t, remove_files={
+                        g: [rel for rel, dt in files if dt < cutoff]
+                        for g, files in live.items()})
+                    removed += len(parts)
                     self.cache.invalidate_table(t)
+                self._collect(t)
         return removed
 
     def compact(self, table: str,
-                zorder_by: list[str] | None = None,
-                force: bool = False) -> list[dict]:
+                zorder_by: list[str] | None = None) -> list[dict]:
         """Run tiered compaction over one table's partitions (reference
         compaction manager; exposed here as the maintenance entry point
         the service schedules). ``zorder_by`` Morton-clusters rewritten
@@ -2040,26 +2034,14 @@ class Engine:
         entries (and the cross-process version nonce) are invalidated
         whenever any plan executed.
 
-        With ``retain_history=True`` compaction is DEFERRED (returns
-        []) unless ``force``: a compacted output file merges rows from
-        every input — including appends committed AFTER an old
-        snapshot — and the inputs are deleted, so read_snapshot would
-        refuse every version before the compaction. Same contract as
-        gc_superseded: retention costs
-        storage, never correctness; vacuum() first to give up history,
-        then compact."""
+        Each compaction is one add+remove commit; the collector deletes
+        the inputs at the end of the call, or — with
+        ``retain_history=True`` — at the next vacuum(), so snapshots
+        from before the compaction keep reading its inputs until then."""
         from .compaction import compact_table, plan_table
 
         if self.catalog.get_table(table) is None:
             raise ValueError(f"no such table: {table}")
-        if self.retain_history and not force:
-            import logging
-
-            logging.getLogger(__name__).info(
-                "compaction of %r deferred: retain_history is set and "
-                "compacting would make old snapshots unreadable "
-                "(pass force=True after vacuum() to override)", table)
-            return []
         # exclude concurrent cross-driver flushes/rewrites for the
         # duration: the plan is taken from the live set
         with self.lease.holding(f"{table}/#rewrite", timeout_s=120.0), \
@@ -2068,27 +2050,23 @@ class Engine:
                                self.live_objects(table))
             outputs = compact_table(self.spark, plans, fs=self.fs,
                                     zorder_by=zorder_by)
-            if not plans:
-                return []
             # ONE commit swaps each plan's inputs for its outputs
-            # (Delta-style add+remove entries); snapshots before it
-            # still read the inputs until they are deleted below, after
-            # the commit — a crash anywhere leaves either the inputs or
-            # the outputs live, never both
+            # (Delta-style add+remove entries): a crash anywhere leaves
+            # either the inputs or the outputs live, never both
             added: dict[int, list[str]] = {}
             removed: dict[int, list[str]] = {}
             for plan, outs in zip(plans, outputs):
                 added.setdefault(plan.gen, []).extend(outs)
                 removed.setdefault(plan.gen, []).extend(plan.rels)
-            self.catalog.touch(table, add_files=added,
-                               remove_files=removed)
-            self.cache.invalidate_table(table)
-            for plan in plans:
-                for path in plan.files:
-                    self.fs.remove_file(path)
+            if plans:
+                self.catalog.touch(table, add_files=added,
+                                   remove_files=removed)
+                self.cache.invalidate_table(table)
+            self._collect(table)
             # re-index (incremental — only the fresh files are scanned,
-            # dead sidecar entries are dropped) so point-lookup pruning
-            # doesn't degrade to scan-everything
+            # the entries of inputs the collector deleted are dropped)
+            # so point-lookup pruning doesn't degrade to scan-everything;
+            # it runs after the collector because it never raises
             for g in sorted(added):
                 self._build_zonemap(table, g)
         return [plan.stats(len(outs)) for plan, outs in zip(plans, outputs)]

@@ -68,9 +68,11 @@ class LocalFS:
     def list_files_mtime(
         self, path: str, suffix: str = ""
     ) -> list[tuple[str, int]]:
-        """(path, mtime_us) for plain files under ``path``. The engine
-        no longer reads mtimes (file membership is the commit log's);
-        kept because the benchmark tracer's target list names it."""
+        """(path, mtime_us) for plain files under ``path``
+        (non-recursive). Only the garbage collector reads mtimes: a file
+        no commit added is deleted once it is old enough
+        (mutations.gc_superseded); file membership is the commit
+        log's."""
         if not os.path.isdir(path):
             return []
         return [
@@ -183,6 +185,21 @@ class HadoopFS:
             for st in fs.listStatus(p)
             if st.isDirectory() and st.getPath().getName().startswith(prefix)
         )
+
+    def list_files_mtime(
+        self, path: str, suffix: str = ""
+    ) -> list[tuple[str, int]]:
+        """(path, mtime_us) for plain files under ``path``
+        (non-recursive), from one LIST: ``FileStatus`` carries the
+        modification time in ms."""
+        fs, p = self._fs(path), self._p(path)
+        if not fs.exists(p):
+            return []
+        return [
+            (st.getPath().toString(), int(st.getModificationTime()) * 1000)
+            for st in fs.listStatus(p)
+            if st.isFile() and st.getPath().getName().endswith(suffix)
+        ]
 
     def remove_file(self, path: str) -> None:
         self._fs(path).delete(self._p(path), False)

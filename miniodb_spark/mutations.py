@@ -21,10 +21,9 @@ a non-atomic copy+delete, so the data path must never rename):
 2. the commit point is ONE commit-log record
    (:meth:`~miniodb_spark.catalog.Catalog.commit_rewrite`): it adds
    the survivors' files and removes every live file of the superseded
-   ``(gen, dt)`` partitions, which it also lists for GC;
-3. the old partition directories are garbage-collected afterwards — a
-   crash between commit and GC leaves them on disk but invisible (no
-   live file), and the next mutation on the table retries the GC.
+   ``(gen, dt)`` partitions;
+3. the files the commit removed stay on disk, invisible, until the
+   table's garbage collector (:func:`gc_superseded`) deletes them.
 
 The whole reserve→write→commit window runs under the engine's
 per-table flush lock so no concurrent flush can claim generation M.
@@ -32,56 +31,64 @@ per-table flush lock so no concurrent flush can claim generation M.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import fs as fsmod
+# A file no commit ever added (a crashed writer's output, a temp file)
+# is deleted only once older than this: a writer whose lease aged out
+# may still commit it.
+GC_GRACE_S = 24 * 3600
 
 
-def gc_superseded(engine, table: str, force: bool = False) -> int:
-    """Remove the directories of partitions a committed rewrite
-    superseded, then forget the exclusions. Idempotent and crash-safe:
-    every step re-checks disk state, and exclusions are only cleared
-    after the removals succeed. A partition that still holds a live
-    file keeps its directory: its exclusion reached the catalog but
-    the commit's remove entries never did (a crash between the two
-    writes of one persist), so its data is still the table's.
-
-    With ``engine.retain_history`` set, the inline GC after each
-    mutation is DEFERRED (returns 0) so earlier catalog versions stay
-    readable via Engine.read_snapshot; ``Engine.vacuum`` passes
-    ``force=True`` to reclaim. Excluded partitions are invisible to
-    head reads either way — retention costs storage, never
-    correctness."""
-    if getattr(engine, "retain_history", False) and not force:
-        return 0
-    parts = sorted(engine.catalog.excluded_parts(table))
-    if not parts:
-        return 0
-    live = {(g, dt) for g, files in engine.catalog.live_files(table).items()
-            for _rel, dt in files}
-    for g, d in parts:
-        pdir = fsmod.join(engine._gen_dir(table, g), f"dt={d}")
-        if (g, d) not in live and engine.fs.is_dir(pdir):
-            engine.fs.remove_dir(pdir)
-    engine.catalog.clear_excluded(table, parts)
-    return len(parts)
+def _name(path: str) -> str:
+    return path.rstrip("/").rsplit("/", 1)[-1]
 
 
-def _superseded_files(
-    engine, table: str, affected: list[tuple[int, str]],
-) -> dict[int, list[str]]:
-    """Every live file of the superseded ``(gen, dt)`` partitions — the
-    ``rm`` entries a rewrite commit records, so from its version on the
-    log alone says the partitions are gone (earlier versions still
-    read them until GC removes the directories)."""
-    parts = {(int(g), d) for g, d in affected}
-    out: dict[int, list[str]] = {}
-    for g, files in engine.catalog.live_files(table).items():
-        rels = [rel for rel, dt in files if (g, dt) in parts]
-        if rels:
-            out[g] = rels
-    return out
+def gc_superseded(engine, table: str) -> int:
+    """The table's one garbage collector — writers only commit. Under
+    the table's ``#rewrite`` lease (every writer holds it, so none is
+    in flight) it LISTs the ``gen=*/*`` directories once and deletes
+    every file the head version does not hold live: at once if some
+    commit added it, past :data:`GC_GRACE_S` if none did. A
+    ``.<name>.crc`` companion follows its file, a ``_SUCCESS`` marker
+    its directory, and a directory goes once it holds nothing to keep.
+    Returns the number of data files deleted. A failure raises; the
+    next collection finishes the work. Callers decide when to collect:
+    ``Engine._collect`` and ``Engine.vacuum``."""
+    key = f"{table}/#rewrite"
+    with engine.lease.holding(key, timeout_s=120.0), \
+            engine.lease.keepalive(key):
+        keep = {(g, rel) for g, files in engine.catalog.live_files(table).items()
+                for rel, _dt in files}
+        added = engine.catalog.added_files_index(table)
+        horizon_us = (time.time() - GC_GRACE_S) * 1e6
+        deleted = 0
+        for gdir in engine.fs.list_dirs(engine._table_dir(table), prefix="gen="):
+            g, gen_keeps = int(_name(gdir)[len("gen="):]), False
+            for sub in engine.fs.list_dirs(gdir):
+                files = {_name(p): (p, t) for p, t in engine.fs.list_files_mtime(sub)}
+                # data files: neither a marker nor a checksum companion
+                data = {n: t for n, (_p, t) in files.items()
+                        if not n.startswith("_") and not (
+                            n.startswith(".") and n.endswith(".crc")
+                            and n[1:-4] in files)}
+                d = _name(sub)
+                doomed = [n for n, t in data.items() if (g, f"{d}/{n}") not in keep
+                          and ((g, f"{d}/{n}") in added or t < horizon_us)]
+                deleted += len(doomed)
+                if len(doomed) == len(data):
+                    engine.fs.remove_dir(sub)
+                    continue
+                gen_keeps = True
+                for name in doomed:
+                    for victim in (name, f".{name}.crc"):
+                        if victim in files:
+                            engine.fs.remove_file(files[victim][0])
+            if not gen_keeps:
+                engine.fs.remove_dir(gdir)
+    return deleted
 
 
 def delete_rows(
@@ -155,9 +162,6 @@ def delete_rows(
 
         cum = engine.catalog.schema_of(table)
         cfg = engine.catalog.get_table(table)
-        # retry any GC a previous crash left behind, so stale excluded
-        # directories can't accumulate
-        gc_superseded(engine, table)
         new_gen = engine.catalog.next_generation_index(table)
         # 1. land survivors directly in the unreferenced generation dir
         #    (the keepalive daemon above re-extends every ttl/3 for the
@@ -182,14 +186,16 @@ def delete_rows(
                 f"mutation lease on {table!r} lost during rewrite; "
                 "aborting commit (no data was published)")
         survivor_files = sorted(engine._gen_file_set(table, new_gen))
+        # the rm entries: every live file of the superseded partitions
+        parts = set(affected)
         engine.catalog.commit_rewrite(
-            table, dict(cum), affected, expected_gen=new_gen,
+            table, dict(cum), expected_gen=new_gen,
             add_files={new_gen: survivor_files},
-            remove_files=_superseded_files(engine, table, affected))
+            remove_files={g: [rel for rel, dt in files if (g, dt) in parts]
+                          for g, files in engine.catalog.live_files(table).items()})
         # index the rewrite's fresh files (best-effort, hint-only)
         engine._build_zonemap(table, new_gen)
-    # 3. GC the superseded directories (safe to crash here)
-    gc_superseded(engine, table)
+    # 3. the caller invalidates the cache, then collects
     return int(deleted)
 
 
@@ -252,6 +258,7 @@ def upsert_dataframe(
     engine.cache.invalidate_table(table)
     if engine.events:
         engine.events.publish("update", table, [f"bulk:{n_batch}"])
+    engine._collect(table)
     return n_batch, int(replaced)
 
 
@@ -262,7 +269,8 @@ def collapse_generations(engine, table: str) -> int:
     a fresh generation by design; file-level compaction deliberately
     stays inside a generation). Same rename-free protocol as
     delete_rows: survivors land in an unreferenced generation dir, ONE
-    atomic catalog write commits, GC afterwards. Returns the number of
+    atomic catalog write commits, the collector deletes the folded
+    generations' files and directories afterwards. Returns the number of
     (gen, dt) partitions folded; no-op (0) when the table already has a
     single generation.
 
@@ -289,7 +297,6 @@ def collapse_generations(engine, table: str) -> int:
         affected = [(int(r["gen"]), r["dt"]) for r in parts]
         cum = engine.catalog.schema_of(table)
         cfg = engine.catalog.get_table(table)
-        gc_superseded(engine, table)
         new_gen = engine.catalog.next_generation_index(table)
         (
             # REBALANCE vs repartition("dt"): see engine.ingest_dataframe
@@ -305,28 +312,18 @@ def collapse_generations(engine, table: str) -> int:
                 f"mutation lease on {table!r} lost during collapse; "
                 "aborting commit (no data was published)")
         survivor_files = sorted(engine._gen_file_set(table, new_gen))
-        # every live file of the folded generations is removed (the
-        # whole dead-gen directories go below)
-        dead_files = {g: [rel for rel, _dt in files] for g, files
-                      in engine.catalog.live_files(table).items()
-                      if g < new_gen}
+        # every live file of the folded generations is removed
         engine.catalog.commit_rewrite(
-            table, dict(cum), affected, expected_gen=new_gen,
+            table, dict(cum), expected_gen=new_gen,
             add_files={new_gen: survivor_files},
-            remove_files=dead_files)
+            remove_files={g: [rel for rel, _dt in files] for g, files
+                          in engine.catalog.live_files(table).items()})
         # every pre-collapse generation is now empty: tombstone them so
         # future scans don't even stat their directories
         engine.catalog.tombstone_generations(table, list(range(new_gen)))
         engine._build_zonemap(table, new_gen)
         for g in range(new_gen):
             engine.zonemaps.drop(table, g)  # sidecars of dead gens
-    gc_superseded(engine, table)
-    # dt-level GC leaves the gen roots behind (a parquet job drops
-    # _SUCCESS there); the dead generations hold no data anymore, so
-    # remove the whole directories
-    for g in range(new_gen):
-        gdir = engine._gen_dir(table, g)
-        if engine.fs.is_dir(gdir):
-            engine.fs.remove_dir(gdir)
     engine.cache.invalidate_table(table)
+    engine._collect(table)
     return len(affected)

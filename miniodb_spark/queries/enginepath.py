@@ -286,7 +286,7 @@ def engine_backup_restore_parity(spark, sf_dir):
     """,
     doc="Tiered compaction externally graded (SURVEY #14 was "
         "tests-only evidence through r16): 60 fixture rows written "
-        "as six 10-row flushes (six L0 files), compact(force=True) "
+        "as six 10-row flushes (six L0 files), compact() "
         "merges them, and the post-compaction aggregate through the "
         "SQL path must reproduce the fixture slice exactly — a "
         "lossy merge breaks n/sv, a duplicating one breaks d. "

@@ -238,7 +238,7 @@ def backup_restore_store(spark: SparkSession, sf_dir: str) -> Engine:
 def compaction_store(spark: SparkSession, sf_dir: str) -> Engine:
     """Engine with table ``ecmp``: the first 60 events written as SIX
     10-row flushes (six L0 generations), then tiered compaction
-    (``compact(force=True)``) — graded externally by
+    (``compact()``) — graded externally by
     ``engine_compaction_parity``: the merged output must reproduce
     the fixture slice exactly (lossless rewrite), and
     ``eng.seed_flags['ecmp_compacted']`` records that the physical
@@ -270,7 +270,7 @@ def compaction_store(spark: SparkSession, sf_dir: str) -> Engine:
         eng.flush("ecmp")
     pat = os.path.join(eng.root, "ecmp", "**", "*.parquet")
     before = len(glob.glob(pat, recursive=True))
-    eng.compact("ecmp", force=True)
+    eng.compact("ecmp")
     after = len(glob.glob(pat, recursive=True))
     eng.seed_flags = {"ecmp_compacted": after < before}
     _cache_put(spark, sf_dir, "ecmp", eng)

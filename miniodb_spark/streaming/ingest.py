@@ -156,6 +156,8 @@ def stream_upsert(
             if persisted is not None:
                 delete_rows(engine, table, persisted,
                             match_keys=(dels, key_col))
+                engine.cache.invalidate_table(table)
+                engine._collect(table)
         engine.catalog.commit_stream_batch(sid, batch_id)
 
     writer = stream_df.writeStream.foreachBatch(_sink).outputMode("append")

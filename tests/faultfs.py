@@ -2,7 +2,8 @@
 
 ``FaultFS(inner)`` forwards every call to ``inner`` (a ``LocalFS`` or
 ``HadoopFS``). While armed it records each mutating call
-(``write_bytes``, ``move``, ``remove_file``, ``makedirs``) and raises
+(``write_bytes``, ``move``, ``remove_file``, ``remove_dir``,
+``makedirs``) and raises
 :class:`InjectedFault` instead of performing the ``fail_at``-th one —
 the crash point of a sweep. The fault is one-shot: later calls go
 through, so the code under test can run its own cleanup.
@@ -14,7 +15,7 @@ its mutating calls, then repeat the operation on fresh state once per
 
 from __future__ import annotations
 
-MUTATING = ("write_bytes", "move", "remove_file", "makedirs")
+MUTATING = ("write_bytes", "move", "remove_file", "remove_dir", "makedirs")
 
 
 class InjectedFault(OSError):

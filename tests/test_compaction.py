@@ -3,9 +3,12 @@ classify-by-tier, candidate selection, merge correctness). Plans come
 from the live-set planner and merges run through Engine.compact, which
 commits them: a merge nobody commits is invisible to every reader."""
 
+import glob
 import json
 import os
+import time
 
+from diskstate import data_files, live_files
 from miniodb_spark.compaction import (
     MAX_FILES_PER_RUN,
     MB,
@@ -158,12 +161,40 @@ def test_engine_compact_invalidates_cache_and_rest_route(engine):
         srv.shutdown()
 
 
+def _never_added(eng, table):
+    added = {f"gen={g}/{rel}"
+             for g, rel in eng.catalog.added_files_index(table)}
+    return [f for f in data_files(eng, table) if f not in added]
+
+
+def _age_past_grace(root):
+    """Back-date every file under ``root`` past the collector's grace
+    age, as if the writer that left it had been gone for a day."""
+    from miniodb_spark.mutations import GC_GRACE_S
+
+    old = time.time() - GC_GRACE_S - 3600
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            os.utime(os.path.join(d, f), (old, old))
+
+
+def _expire_leases(root):
+    """Drop the lease markers a faulted call left behind: a crashed
+    holder's lease frees once its TTL runs out, which a sweep does not
+    wait for."""
+    for p in glob.glob(os.path.join(root, "_meta", "locks", "lease.*")):
+        os.remove(p)
+
+
 def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
     """A fault at every mutating filesystem call of one 6-file
     compaction: afterwards a freshly booted Engine reads the 6 seeded
     rows exactly once, and its pruned lookups agree. The outputs are
-    invisible until the commit, and the inputs are deleted only after
-    it."""
+    invisible until the commit; the collector deletes the inputs only
+    after it. A fresh Engine's vacuum() then deletes every file a
+    commit removed, and once the grace age has passed, also every
+    output the fault left uncommitted: the disk holds exactly the live
+    files."""
     from faultfs import FaultFS, InjectedFault
     from miniodb_spark import engine as engine_mod
     from miniodb_spark.fs import LocalFS
@@ -189,6 +220,7 @@ def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
     calls = list(eng.fs.calls)
     assert [m for m, p in calls if p.endswith(".parquet")] == (
         ["move"] + ["remove_file"] * 6)
+    assert data_files(eng, "t") == live_files(eng, "t")
     for k in range(1, len(calls) + 1):
         root = str(tmp_path / f"k{k}")
         eng = prepare(root)
@@ -198,8 +230,78 @@ def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
         except InjectedFault:
             pass
         eng.fs.disarm()
+        _expire_leases(root)
         fresh = engine_mod.Engine(spark, root)
         assert ids(fresh.read_table("t")) == want, (k, calls[k - 1])
         for rid in ("r0", "r5"):
             assert ids(fresh.point_lookup_df("t", rid)[0]) == [rid], (
                 k, calls[k - 1])
+        fresh.vacuum("t")
+        assert sorted(live_files(fresh, "t") + _never_added(fresh, "t")) == (
+            data_files(fresh, "t")), (k, calls[k - 1])
+        _age_past_grace(os.path.join(root, "t"))
+        fresh.vacuum("t")
+        assert data_files(fresh, "t") == live_files(fresh, "t"), (k, calls[k - 1])
+        assert ids(fresh.read_table("t")) == want, (k, calls[k - 1])
+
+
+def test_vacuum_fault_sweep(spark, tmp_path, monkeypatch):
+    """A fault at every mutating filesystem call of one vacuum() on a
+    retain_history store holding compaction inputs, a partition a
+    delete() superseded and an orphan past the grace age: afterwards a
+    freshly booted Engine reads the head exactly, and a rerun of
+    vacuum() leaves exactly the live files on disk."""
+    import shutil
+
+    from faultfs import FaultFS, InjectedFault
+    from miniodb_spark import engine as engine_mod
+    from miniodb_spark.fs import LocalFS
+
+    monkeypatch.setattr(engine_mod, "get_fs",
+                        lambda spark, root: FaultFS(LocalFS()))
+    seed = str(tmp_path / "seed")
+    eng = engine_mod.Engine(spark, seed, retain_history=True)
+    for i in range(6):  # six one-file flushes into day A: L0 merges
+        eng.write("t", {"v": i}, record_id=f"a{i}", timestamp_us=T0 + i)
+        eng.flush("t")
+    for i in range(3):  # day B: one file, superseded by the delete
+        eng.write("t", {"v": i}, record_id=f"b{i}", timestamp_us=T0 + DAY)
+    eng.flush("t")
+    assert eng.compact("t")[0]["inputs"] == 6
+    assert eng.delete("t", "b1") == 1
+    want = sorted(r["id"] for r in eng.read_table("t").collect())
+    assert len(want) == 8
+    gdir = eng._gen_dir("t", 0)
+    rel, dt = eng.catalog.live_files("t")[0][0]
+    orphan = os.path.join(gdir, f"dt={dt}", "part-00000-orphan.parquet")
+    shutil.copy(os.path.join(gdir, rel), orphan)
+    _age_past_grace(os.path.join(seed, "t"))
+    # the inputs, the superseded file and the orphan are on disk
+    assert len(data_files(eng, "t")) == len(live_files(eng, "t")) + 8
+
+    def prepare(root):
+        shutil.copytree(seed, root)
+        return engine_mod.Engine(spark, root, retain_history=True)
+
+    eng = prepare(str(tmp_path / "count"))
+    eng.fs.arm()
+    assert eng.vacuum("t") == 8
+    eng.fs.disarm()
+    calls = list(eng.fs.calls)
+    assert data_files(eng, "t") == live_files(eng, "t")
+    assert [m for m, _p in calls].count("remove_dir") == 1
+    for k in range(1, len(calls) + 1):
+        root = str(tmp_path / f"k{k}")
+        eng = prepare(root)
+        eng.fs.arm(fail_at=k)
+        try:
+            eng.vacuum("t")
+        except InjectedFault:
+            pass
+        eng.fs.disarm()
+        _expire_leases(root)
+        fresh = engine_mod.Engine(spark, root, retain_history=True)
+        got = sorted(r["id"] for r in fresh.read_table("t").collect())
+        assert got == want, (k, calls[k - 1])
+        fresh.vacuum("t")
+        assert data_files(fresh, "t") == live_files(fresh, "t"), (k, calls[k - 1])

@@ -8,6 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from diskstate import data_files, live_files
 from miniodb_spark.engine import Engine
 from miniodb_spark.fs import HadoopFS, LocalFS, get_fs, join
 
@@ -140,33 +141,74 @@ def test_rewrite_crash_before_commit_is_invisible(uri_engine):
 
 
 def test_rewrite_crash_between_commit_and_gc(uri_engine, monkeypatch):
-    """Crash window 2: the catalog flip committed but the superseded
-    directories were not yet removed. They must be invisible to reads,
-    and the next mutation must finish the GC."""
+    """Crash window 2: the catalog flip committed but the collector did
+    not run. The superseded files must be invisible to reads, and the
+    next mutation's collection must delete them."""
     from miniodb_spark import mutations
 
     eng = uri_engine
     for i in range(4):
         eng.write("t", {"v": i}, record_id=f"r{i}", timestamp_us=T0 + i)
     eng.flush()
-    # crash the GC step (both the retry inside the lock and the final one)
+    superseded = live_files(eng, "t")
+    # crash the collection step
     monkeypatch.setattr(mutations, "gc_superseded", lambda *_: 0)
     assert eng.delete("t", "r2") == 1
-    assert eng.catalog.excluded_parts("t")  # commit recorded
+    # commit recorded: the old file is no longer live...
+    assert not set(superseded) & set(live_files(eng, "t"))
     old_part = join(eng._gen_dir("t", 0), "dt=2023-11-14")
     assert eng.fs.is_dir(old_part)  # old files still on disk...
+    assert set(superseded) <= set(data_files(eng, "t"))
     rows = json.loads(eng.query("SELECT id FROM t ORDER BY id"))
     assert [r["id"] for r in rows] == ["r0", "r1", "r3"]  # ...but invisible
     # restart-equivalent: a fresh engine on the same root reads the same
     eng2 = Engine(eng.spark, eng.root)
     rows = json.loads(eng2.query("SELECT id FROM t ORDER BY id"))
     assert [r["id"] for r in rows] == ["r0", "r1", "r3"]
-    # the next mutation retries the GC
+    # the next mutation's collection deletes them
     monkeypatch.undo()
     assert eng2.delete("t", "r0") == 1
-    assert eng2.catalog.excluded_parts("t") == set()
+    assert data_files(eng2, "t") == live_files(eng2, "t")
+    assert not eng2.fs.is_dir(old_part)
     rows = json.loads(eng2.query("SELECT id FROM t ORDER BY id"))
     assert [r["id"] for r in rows] == ["r1", "r3"]
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_vacuum_keeps_uncommitted_file_until_grace_age(spark, tmp_path,
+                                                        scheme):
+    """A data file no commit added — a crashed writer's output — is
+    kept by vacuum() while it is younger than the grace age (its writer
+    may still commit it) and deleted once it is older. The age comes
+    from ``list_files_mtime`` on both filesystems."""
+    import os
+    import shutil
+    import time
+
+    from miniodb_spark.mutations import GC_GRACE_S
+
+    eng = Engine(spark, f"{scheme}{tmp_path}/store")
+    assert isinstance(eng.fs, HadoopFS if scheme else LocalFS)
+    for i in range(3):
+        eng.write("t", {"v": i}, record_id=f"r{i}", timestamp_us=T0)
+    eng.flush()
+    (rel, dt), = eng.catalog.live_files("t")[0]
+    gdir = os.path.join(str(tmp_path), "store", "t", "gen=0")
+    planted = os.path.join(gdir, f"dt={dt}", "part-00000-planted.parquet")
+    shutil.copy(os.path.join(gdir, rel), planted)
+    listed = dict(eng.fs.list_files_mtime(join(eng._gen_dir("t", 0), f"dt={dt}")))
+    assert len(listed) == 2
+    assert all(abs(m / 1e6 - time.time()) < 600 for m in listed.values())
+
+    assert eng.vacuum("t") == 0
+    assert os.path.exists(planted)
+    old = time.time() - GC_GRACE_S - 60
+    os.utime(planted, (old, old))
+    assert eng.vacuum("t") == 1
+    assert not os.path.exists(planted)
+    assert data_files(eng, "t") == live_files(eng, "t") == [f"gen=0/{rel}"]
+    rows = json.loads(eng.query("SELECT id FROM t ORDER BY id"))
+    assert [r["id"] for r in rows] == ["r0", "r1", "r2"]
 
 
 def test_hadoopfs_bytes_and_copy(spark, tmp_path):

@@ -17,6 +17,7 @@ import os
 import threading
 import time
 
+from diskstate import data_files, live_files
 from miniodb_spark.fs import LocalFS
 from miniodb_spark.kv import FileKV, MutationLease
 
@@ -227,7 +228,7 @@ def test_two_engines_different_ids_rewrite_lease(spark, tmp_path):
 
 def _assert_no_orphan_generations(engine, root: str, table: str) -> None:
     """Every gen=N directory on disk is referenced by the (refreshed)
-    catalog and no superseded partition is left pending GC."""
+    catalog and the collector left no file the head does not hold."""
     engine.catalog.refresh_if_changed(table)
     n_gens = len(engine.catalog.gen_schemas(table))
     tdir = os.path.join(root, table)
@@ -236,7 +237,8 @@ def _assert_no_orphan_generations(engine, root: str, table: str) -> None:
     )
     assert all(g < n_gens for g in on_disk), \
         f"orphaned generation dirs {on_disk} vs catalog {n_gens}"
-    assert engine.catalog.excluded_parts(table) == set(), "GC left pending"
+    assert data_files(engine, table) == live_files(engine, table), \
+        "GC left files behind"
 
 
 def test_lease_keepalive_holds_past_ttl(tmp_path):
@@ -376,10 +378,10 @@ def test_commit_rewrite_expected_gen_mismatch_raises(tmp_path):
     c2.refresh_if_changed("t")
     reserved = c2.next_generation_index("t")  # driver 2 reserves gen=1
     # driver 1 commits its own rewrite first (as if it stole the lease)
-    c1.commit_rewrite("t", {"id": "string"}, [(0, "2024-01-01")],
+    c1.commit_rewrite("t", {"id": "string"},
                       expected_gen=c1.next_generation_index("t"))
     with pytest.raises(RuntimeError, match="stale rewrite commit"):
-        c2.commit_rewrite("t", {"id": "string"}, [], expected_gen=reserved)
+        c2.commit_rewrite("t", {"id": "string"}, expected_gen=reserved)
 
 
 def test_rewrite_aborts_when_lease_stolen_midjob(spark, tmp_path):
@@ -401,6 +403,7 @@ def test_rewrite_aborts_when_lease_stolen_midjob(spark, tmp_path):
         eng.write("t", {"v": i}, record_id=f"r{i}", timestamp_us=T0)
     eng.flush("t")
     gens_before = eng.catalog.gen_schemas("t")
+    files_before = eng.catalog.live_files("t")
 
     real_verify = eng.lease.verify
     eng.lease.verify = lambda key: False  # every ownership re-check fails
@@ -410,9 +413,9 @@ def test_rewrite_aborts_when_lease_stolen_midjob(spark, tmp_path):
     finally:
         eng.lease.verify = real_verify
 
-    # catalog unchanged: no new generation, no exclusions
+    # catalog unchanged: no new generation, no file added or removed
     assert eng.catalog.gen_schemas("t") == gens_before
-    assert not eng.catalog.excluded_parts("t")
+    assert eng.catalog.live_files("t") == files_before
     # all six rows still readable (the delete did NOT half-apply)
     rows = json.loads(eng.query("SELECT id FROM t ORDER BY id"))
     assert [r["id"] for r in rows] == [f"r{i}" for i in range(6)]

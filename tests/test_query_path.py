@@ -127,7 +127,7 @@ def test_vacuum_and_collapse_generations(spark, tmp_path):
     eng.delete("t", "r0")
     before = _head_cached(eng)
     assert eng.vacuum("t") > 0
-    assert _assert_fresh(eng) == before  # excluded parts were invisible
+    assert _assert_fresh(eng) == before  # superseded files were invisible
     assert eng.collapse_generations("t") > 0
     assert _assert_fresh(eng) == before
     assert eng.vacuum("t") >= 0
@@ -162,6 +162,27 @@ def test_restore_equals_its_manifest(engine):
     mgr.restore_data_backup(name)
     assert _rows(Engine(engine.spark, engine.root)) == backed_up
     assert _rows(engine) == backed_up
+
+
+def test_restore_leaves_only_the_manifest_on_disk(engine):
+    """The restore commits the manifest's files and removes every other
+    live file; its collection then deletes what it removed, so the
+    table's data files on disk are exactly the manifest's."""
+    import os
+
+    from diskstate import data_files
+
+    _seed(engine, days=1)
+    mgr = BackupManager(engine.catalog, engine=engine)
+    info = mgr.create_data_backup(["t"])
+    manifest = json.loads(engine.fs.read_bytes(os.path.join(
+        mgr.backup_root, info["object_name"], "MANIFEST.json")))
+    engine.write("t", {"v": 5}, record_id="late", timestamp_us=T0)
+    engine.flush("t")
+    mgr.restore_data_backup(info["object_name"])
+    on_disk = data_files(engine, "t")
+    assert on_disk == sorted(e["rel"] for e in manifest["tables"]["t"])
+    assert len(on_disk) == 1
 
 
 def test_backup_copies_the_live_set_only(engine):
@@ -210,16 +231,17 @@ def test_second_engine_writes_same_root(engine):
 
 
 def test_emptied_generation_adds_no_scan(engine):
-    """A generation whose files were all rewritten away leaves an empty
-    directory: it contributes nothing to the union (no Python-side empty
-    frame to execute), and a table that is empty everywhere still has
-    its schema."""
+    """A generation whose files were all rewritten away stays in the
+    catalog while the collector removes its directory: it contributes
+    nothing to the union (no Python-side empty frame to execute), and a
+    table that is empty everywhere still has its schema."""
     engine.write("t", {"v": 1}, record_id="a", timestamp_us=T0)
     engine.flush("t")
     engine.write("t", {"v": "text"}, record_id="b", timestamp_us=T0 + DAY)
     engine.flush("t")
     engine.delete("t", "a")
-    assert engine.fs.is_dir(engine._gen_dir("t", 0))
+    assert engine.catalog.gen_schemas("t")[0]
+    assert not engine.fs.is_dir(engine._gen_dir("t", 0))
     plan = engine.read_persisted("t")._jdf.queryExecution().executedPlan()
     assert "ExistingRDD" not in plan.toString(), plan.toString()
     assert [r["id"] for r in engine.query_df("SELECT id FROM t").collect()] == ["b"]

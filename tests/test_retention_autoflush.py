@@ -30,23 +30,22 @@ def test_retention_drops_old_partitions(spark, tmp_path):
 
 
 def test_retention_crash_between_rm_record_and_drop(spark, tmp_path):
-    """r15 ADVICE (medium): retention records its Delta-style rm
-    entries BEFORE physically removing partition dirs. A crash in
-    between leaves pre-recorded rm entries for still-present files —
-    which read_snapshot already handles as mid-swap leftovers (rm_v <=
-    version skip), so the latest snapshot stays readable and a retry
-    completes the drop. The reversed order (drop first, record after)
-    left add-indexed files with no rm record: every later snapshot
-    refused via the loss check with no self-heal."""
-    eng = Engine(spark, str(tmp_path / "store"), retain_history=True)
+    """Retention records its Delta-style rm entries, then the collector
+    deletes the files. A crash on the collector's first removal leaves
+    the dropped days on disk but no longer live: the latest snapshot
+    reads exactly the surviving days, live queries agree, and a retry's
+    collection finishes the drop."""
+    from diskstate import data_files, live_files
+
+    eng = Engine(spark, str(tmp_path / "store"))
     eng.create_table("logs", TableConfig(name="logs", retention_days=3))
     for i in range(6):
         eng.write("logs", {"v": i}, record_id=f"r{i}",
                   timestamp_us=T0 - i * DAY)
     eng.flush()
 
-    # crash injection: the first physical dir drop dies AFTER the rm
-    # commit (the new ordering guarantees the commit happened first)
+    # crash injection: the collector's first removal dies AFTER the rm
+    # commit (the commit always comes first)
     real_remove = eng.fs.remove_dir
     calls = {"n": 0}
 
@@ -64,19 +63,21 @@ def test_retention_crash_between_rm_record_and_drop(spark, tmp_path):
     finally:
         eng.fs.remove_dir = real_remove
 
-    # the rm entries are committed, dirs still present: the LATEST
-    # snapshot must not refuse (pre-recorded rm == mid-swap leftover),
-    # and it already excludes the retention-dropped days
+    # the rm entries are committed, the files still present: the LATEST
+    # snapshot reads the 4 surviving days
+    assert len(live_files(eng, "logs")) == 4
+    assert len(data_files(eng, "logs")) == 6
     v = eng.catalog.current_version("logs")
     snap = eng.read_snapshot("logs", v)
     assert snap.count() == 4
     # live queries agree with the latest snapshot: the rm commit is the
-    # drop, the directories still on disk are leftovers no commit holds
+    # drop, the files still on disk are leftovers no commit holds
     assert json.loads(
         eng.query("SELECT count(*) AS n FROM logs"))[0]["n"] == 4
 
-    # retry completes the physical drop
-    eng.enforce_retention(now_us=T0)
+    # retry: nothing left to commit, and its collection completes the drop
+    assert eng.enforce_retention(now_us=T0) == 0
+    assert data_files(eng, "logs") == live_files(eng, "logs")
     assert json.loads(
         eng.query("SELECT count(*) AS n FROM logs"))[0]["n"] == 4
     assert eng.read_snapshot(

@@ -1,19 +1,21 @@
 """Time travel (snapshot reads over the catalog commit log).
 
 Every catalog flip appends its full doc to a per-table JSONL commit
-log (catalog.py::_persist). With retain_history=True the engine defers
-the post-mutation GC, so Engine.read_snapshot(table, v) can rebuild
-the exact persisted state any version saw — deleted rows reappear,
-pre-update values return — until an explicit vacuum() reclaims the
-superseded partitions, after which stale snapshots REFUSE
-(SnapshotUnavailableError) instead of under-returning. Delta-Lake's
-time-travel/VACUUM contract, absent from the reference (its
-backup/restore is full-copy, internal/backup/)."""
+log (catalog.py::_persist). Writers only commit; with
+retain_history=True only vacuum() runs the garbage collector, so
+Engine.read_snapshot(table, v) can rebuild the exact persisted state
+any version saw — deleted rows reappear, pre-update values return —
+until vacuum() deletes the files the head no longer holds, after which
+stale snapshots REFUSE (SnapshotUnavailableError) instead of
+under-returning. Delta-Lake's time-travel/VACUUM contract, absent from
+the reference (its backup/restore is full-copy, internal/backup/)."""
 
 import json
+import os
 
 import pytest
 
+from diskstate import data_files, live_files
 from miniodb_spark.engine import Engine, SnapshotUnavailableError
 
 US = 1_000_000
@@ -97,13 +99,15 @@ def test_vacuum_invalidates_old_snapshots_but_not_head(retaining_engine):
     assert eng.delete("vx", "a") >= 1
     eng.flush("vx")
 
-    # retention defers the GC: the superseded partition is still on disk
+    # nothing is collected before vacuum: the superseded file is still
+    # on disk next to the live ones
     assert rows_of(eng.read_snapshot("vx", v1)).keys() == {"a", "b"}
-    assert eng.catalog.excluded_parts("vx"), "exclusions retained pre-vacuum"
+    superseded = set(live_files(eng, "vx", v1)) - set(live_files(eng, "vx"))
+    assert superseded and superseded <= set(data_files(eng, "vx"))
 
     reclaimed = eng.vacuum("vx")
-    assert reclaimed >= 1
-    assert not eng.catalog.excluded_parts("vx")
+    assert reclaimed == len(superseded)
+    assert data_files(eng, "vx") == live_files(eng, "vx")
 
     # stale snapshot refuses rather than silently dropping rows
     with pytest.raises(SnapshotUnavailableError):
@@ -120,8 +124,8 @@ def test_default_engine_gcs_inline_and_snapshots_refuse(engine):
     v1 = eng.catalog.current_version("d")
     assert eng.delete("d", "a") >= 1
     eng.flush("d")
-    # without retain_history the mutation GC'd inline...
-    assert not eng.catalog.excluded_parts("d")
+    # without retain_history the delete collected at its end...
+    assert data_files(eng, "d") == live_files(eng, "d")
     # ...so the pre-delete snapshot is honestly unavailable
     with pytest.raises(SnapshotUnavailableError):
         eng.read_snapshot("d", v1)
@@ -253,38 +257,45 @@ def test_snapshot_membership_immune_to_mtime_skew(retaining_engine):
     assert sorted(set(idx.values())) == [v1, v2]
 
 
-def test_compaction_is_deferred_under_retain_history(retaining_engine):
+def test_compaction_runs_under_retain_history(retaining_engine):
     """retain_history's contract ('every version stays readable until
-    an explicit vacuum') extends to compaction: a compacted output
-    merges rows from every input, so an old snapshot's exact file set
-    would become unrecoverable — compact() defers instead (round-13
-    fix: it used to proceed, and read_snapshot then silently returned
-    None for pre-compaction versions)."""
+    an explicit vacuum') holds through compaction: compact() commits
+    its swap, but its inputs stay on disk until vacuum(), so the
+    pre-compaction snapshot reads its exact rows until then — and
+    refuses after it."""
     eng = retaining_engine
     for i in range(6):
         eng.write("cmd", {"v": i}, record_id=f"r{i}", timestamp_us=T0)
         eng.flush("cmd")
     v = eng.catalog.current_version("cmd")
-    assert eng.compact("cmd") == []
-    assert eng.read_snapshot("cmd", v).count() == 6
+    want = rows_of(eng.read_snapshot("cmd", v))
+    assert eng.compact("cmd")[0]["inputs"] == 6
+    assert len(data_files(eng, "cmd")) == 7
+    assert rows_of(eng.read_snapshot("cmd", v)) == want
+    assert eng.vacuum("cmd") == 6
+    with pytest.raises(SnapshotUnavailableError):
+        eng.read_snapshot("cmd", v)
+    assert data_files(eng, "cmd") == live_files(eng, "cmd")
 
 
-def test_forced_compaction_is_a_recorded_swap(retaining_engine):
-    """compact(force=True) commits Delta-style add+remove entries:
-    pre-compaction snapshots REFUSE with SnapshotUnavailableError
-    (never a silent partial/None result), while the compaction commit
-    version and everything after reads exactly — including a
-    post-compaction flush whose snapshot must combine the compacted
-    outputs with its own adds."""
+def test_compaction_is_a_recorded_swap(retaining_engine):
+    """compact() commits Delta-style add+remove entries: a
+    pre-compaction snapshot reads its inputs until vacuum() and then
+    REFUSES with SnapshotUnavailableError (never a silent partial/None
+    result), while the compaction commit version and everything after
+    reads exactly — including a post-compaction flush whose snapshot
+    must combine the compacted outputs with its own adds."""
     eng = retaining_engine
     for i in range(6):
         eng.write("cmf", {"v": i}, record_id=f"r{i}", timestamp_us=T0)
         eng.flush("cmf")
     v_pre = eng.catalog.current_version("cmf")
-    stats = eng.compact("cmf", force=True)
+    stats = eng.compact("cmf")
     assert stats, "fixture must trigger a compaction"
     v_compact = eng.catalog.current_version("cmf")
     assert v_compact > v_pre, "compaction must commit a version"
+    assert eng.read_snapshot("cmf", v_pre).count() == 6
+    eng.vacuum("cmf")
     with pytest.raises(SnapshotUnavailableError):
         eng.read_snapshot("cmf", v_pre)
     assert eng.read_snapshot("cmf", v_compact).count() == 6
@@ -296,18 +307,54 @@ def test_forced_compaction_is_a_recorded_swap(retaining_engine):
     assert eng.read_table("cmf").count() == 7
 
 
+def test_collapse_and_retention_keep_snapshots_until_vacuum(spark, tmp_path):
+    """Under retain_history, collapse_generations() and
+    enforce_retention() commit but delete nothing: the snapshot before
+    each reads its exact rows until vacuum(), refuses after it, and
+    the disk then holds exactly the live files."""
+    from miniodb_spark.catalog import TableConfig
+
+    eng = Engine(spark, str(tmp_path / "cr_store"), retain_history=True)
+    eng.create_table("cr", TableConfig(name="cr", retention_days=3))
+    for i in range(4):  # two old days, two fresh ones
+        eng.write("cr", {"v": i}, record_id=f"r{i}",
+                  timestamp_us=T0 - (i % 2) * 10 * DAY)
+    eng.flush("cr")
+    eng.write("cr", {"v": "text"}, record_id="s", timestamp_us=T0)
+    eng.flush("cr")  # a conflicting type opens generation 1
+    v_pre_collapse = eng.catalog.current_version("cr")
+    want_collapse = rows_of(eng.read_snapshot("cr", v_pre_collapse))
+    assert eng.collapse_generations("cr") > 0
+    v_pre_retention = eng.catalog.current_version("cr")
+    want_retention = rows_of(eng.read_snapshot("cr", v_pre_retention))
+    assert len(want_retention) == 5
+    assert eng.enforce_retention("cr", now_us=T0) == 1
+    assert rows_of(eng.read_table("cr")).keys() == {"r0", "r2", "s"}
+    assert rows_of(eng.read_snapshot("cr", v_pre_collapse)) == want_collapse
+    assert rows_of(eng.read_snapshot("cr", v_pre_retention)) == want_retention
+
+    assert eng.vacuum("cr") > 0
+    for v in (v_pre_collapse, v_pre_retention):
+        with pytest.raises(SnapshotUnavailableError):
+            eng.read_snapshot("cr", v)
+    assert data_files(eng, "cr") == live_files(eng, "cr")
+    assert len(os.listdir(os.path.join(eng.root, "cr"))) == 1  # one gen=
+    assert rows_of(eng.read_table("cr")).keys() == {"r0", "r2", "s"}
+
+
 def test_snapshot_model_random_ops_every_version_exact(retaining_engine):
     """Generative check of the whole add/remove-file snapshot protocol
     (round-13 rework): a random interleaving of writes, flushes,
-    updates, deletes and one forced compaction, with the expected
-    PERSISTED state captured at every commit point. Every captured
-    version must either reproduce its exact row set or — for versions
-    older than the forced compaction — refuse with
-    SnapshotUnavailableError. Covers: add-file membership across
-    appends into one generation, mutation rewrites with deferred GC,
-    update's single-commit delete+persist (durable at return — the
-    cross-driver update-update fix), and the recorded compaction
-    swap."""
+    updates, deletes and one compaction, with the expected PERSISTED
+    state captured at every commit point. Before vacuum() every
+    captured version reproduces its exact row set; after it, a version
+    reads exactly iff all its files are still live at the head, and
+    refuses with SnapshotUnavailableError otherwise — which includes
+    the versions just before the compaction. Covers: add-file
+    membership across appends into one generation, mutation rewrites
+    whose files stay until vacuum, update's single-commit
+    delete+persist (durable at return — the cross-driver update-update
+    fix), and the recorded compaction swap."""
     import random
 
     eng = retaining_engine
@@ -369,7 +416,7 @@ def test_snapshot_model_random_ops_every_version_exact(retaining_engine):
         persisted.update(buffered)
         buffered.clear()
         capture()
-    stats = eng.compact("sm", force=True)
+    stats = eng.compact("sm")
     assert stats, "compaction must trigger after 8 single-row flushes"
     v_compact = eng.catalog.current_version("sm")
     capture()
@@ -384,27 +431,34 @@ def test_snapshot_model_random_ops_every_version_exact(retaining_engine):
         buffered.clear()
         capture()
 
+    def snapshot(v):
+        df = eng.read_snapshot("sm", v)
+        return {} if df is None else {
+            r["id"]: r["v"] for r in df.select("id", "v").collect()}
+
+    # before vacuum nothing was deleted: every version is exact
+    for v, want in sorted(captures.items()):
+        assert snapshot(v) == want, v
+    eng.vacuum("sm")
+    assert data_files(eng, "sm") == live_files(eng, "sm")
     # THE invariant: every version is either exactly reproducible or
-    # explicitly refused — never a silently wrong row set. Versions at
-    # or after the compaction commit must never refuse; versions
-    # before it refuse iff they still need a compacted-away file (a
-    # version whose files all live in un-compacted generations or
-    # still-on-disk superseded partitions stays readable).
+    # explicitly refused — never a silently wrong row set. A version
+    # refuses iff it needs a file the vacuum deleted.
+    head = set(live_files(eng, "sm"))
     checked_exact = checked_refused = 0
     for v, want in sorted(captures.items()):
-        try:
-            df = eng.read_snapshot("sm", v)
-        except SnapshotUnavailableError:
-            assert v < v_compact, (
-                f"v{v} >= compaction commit v{v_compact} must not refuse")
+        if set(live_files(eng, "sm", v)) <= head:
+            assert snapshot(v) == want, v
+            checked_exact += 1
+        else:
+            with pytest.raises(SnapshotUnavailableError):
+                snapshot(v)
             checked_refused += 1
-            continue
-        got = {} if df is None else {
-            r["id"]: r["v"] for r in df.select("id", "v").collect()}
-        assert got == want, (v, got, want)
-        checked_exact += 1
     assert checked_exact >= 2 and checked_refused >= 1, (
         checked_exact, checked_refused)
+    pre = [v for v in captures if v < v_compact]
+    with pytest.raises(SnapshotUnavailableError):
+        snapshot(max(pre))
     # head unaffected throughout
     got_head = {r["id"]: r["v"] for r in
                 eng.read_table("sm").select("id", "v").collect()}
