@@ -361,6 +361,11 @@ class MiniODBService:
                         "zonemap", {"queries": 0, "files_skipped": 0,
                                     "prune_errors": 0})
                 ),
+                # key lookups (GetRecord and `id = '…'` queries) served
+                # without Spark, on Spark, and each decline's reason
+                "lookups": dict(
+                    self.engine.query_stats["lookups"],
+                    declined=dict(self.engine.query_stats["lookups"]["declined"])),
             },
             # best-effort zone-map build failures (lookups degrade to
             # full-generation scans) — the ops signal behind the
@@ -377,6 +382,9 @@ class MiniODBService:
             # holding() retried instead of surfacing TimeoutError — the
             # leading indicator of a loaded host (r13 verdict #1)
             "lease_busy_retries": self.engine.lease.busy_retries,
+            # lease markers left behind by a failed release: the next
+            # writer of that key waits out the TTL
+            "lease": {"release_errors": self.engine.lease.release_errors},
             "registry": self.metrics.snapshot(),
         }
         if self.rate_limiter is not None:

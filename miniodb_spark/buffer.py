@@ -101,6 +101,11 @@ class WAL:
         self._fh = open(self.path, "a", encoding="utf-8")
 
     def append(self, rec_type: str, payload: dict) -> int:
+        """Append one record and flush it to the operating system
+        before returning (the write's acknowledgement). There is no
+        fsync: an acknowledged record survives a crash of this process,
+        but not an OS crash or a power loss before the OS writes the
+        page back."""
         with self._lock:
             self._write_record(rec_type, payload)
             self._fh.flush()

@@ -29,6 +29,7 @@ download/merge/reupload way (manager.go:298-553).
 
 from __future__ import annotations
 
+import contextlib
 import uuid
 from dataclasses import dataclass
 
@@ -183,11 +184,15 @@ def execute_plan(spark: SparkSession, plan: CompactionPlan, fs=None,
             name = f"compacted_{uuid.uuid4().hex}_{i}.parquet"
             moved.append(f"dt={plan.dt}/{name}")
             fs.move(src, fsmod.join(plan.partition_dir, name))
-    except BaseException:
-        _remove_outputs(fs, plan, moved)
-        raise
-    finally:
         fs.remove_dir(tmp)
+    except BaseException:
+        # whatever failed, the temp dir's removal included, no output
+        # stays behind uncommitted (the collector would keep it for
+        # its grace age)
+        _remove_outputs(fs, plan, moved)
+        with contextlib.suppress(Exception):
+            fs.remove_dir(tmp)
+        raise
     return moved
 
 

@@ -300,7 +300,9 @@ class Engine:
         # SELECT * over a 100 TB table must never collect onto the driver
         self.max_result_rows = max_result_rows
         self.query_stats: dict[str, Any] = {
-            "count": 0, "total_ms": 0.0, "slow": [], "truncated": 0
+            "count": 0, "total_ms": 0.0, "slow": [], "truncated": 0,
+            # key lookups served without Spark, on Spark, and why not
+            "lookups": {"arrow": 0, "spark": 0, "declined": {}},
         }
         self._buffers: dict[str, WriteBuffer] = {}
         # read_persisted's head scan per table: (catalog key, DataFrame)
@@ -992,16 +994,10 @@ class Engine:
         """Cast persisted/buffer sides to their widened merge types so a
         hybrid union never clashes and never truncates (shared by
         read_table and point_lookup_df)."""
-        from .catalog import merge_type
-
         if buffered is not None and persisted is not None:
             cum = self.catalog.schema_of(table)
-            buf_types = {f.name: _type_name(f.dataType) for f in buffered.schema.fields}
-            target = {
-                c: merge_type(cum[c], t) if c in cum else t
-                for c, t in buf_types.items()
-                if c not in ("dt",)
-            }
+            target = self._hybrid_targets(cum, {
+                f.name: _type_name(f.dataType) for f in buffered.schema.fields})
             buffered = buffered.select(
                 *[
                     F.col(f.name).cast(_TYPE_MAP.get(target.get(f.name, ""), f.dataType)).alias(f.name)
@@ -1019,6 +1015,15 @@ class Engine:
                 ]
             )
         return persisted, buffered
+
+    @staticmethod
+    def _hybrid_targets(cum: dict[str, str], buf_types: dict[str, str]) -> dict[str, str]:
+        """The type each buffered column (``dt`` aside) and its persisted
+        twin are cast to in a hybrid read: the widened merge of the
+        cumulative and the buffer type (long+double → double, else
+        string)."""
+        return {c: merge_type(cum[c], t) if c in cum else t
+                for c, t in buf_types.items() if c != "dt"}
 
     # ------------------------------------------------------------------
     # point lookups (zone-map file skipping)
@@ -1107,6 +1112,29 @@ class Engine:
             # id-matching rows (r14 ADVICE, low) — normalize it away
             ts_range = None
         keys = list(value) if isinstance(value, (list, tuple, set)) else [value]
+        select_fn = self._key_select(table, keys, id_col, ts_range)
+        if len(keys) == 1:
+            key_pred = F.col(id_col).eqNullSafe(F.lit(keys[0]))
+        else:
+            key_pred = F.col(id_col).isin(keys)
+        required = (id_col,)
+        if ts_range is not None:
+            t_lo, t_li, t_hi, t_hi_i = ts_range
+            c = F.col("timestamp")
+            if t_lo is not None:
+                key_pred = key_pred & (
+                    c >= F.lit(t_lo) if t_li else c > F.lit(t_lo))
+            if t_hi is not None:
+                key_pred = key_pred & (
+                    c <= F.lit(t_hi) if t_hi_i else c < F.lit(t_hi))
+            required = (id_col, "timestamp")
+        return self._pruned_hybrid_scan(table, required, select_fn, key_pred)
+
+    def _key_select(self, table: str, keys: list, id_col: str = "id",
+                    ts_range: tuple | None = None):
+        """The per-generation file selection of a key lookup (see
+        :meth:`_prune_live`): the files whose zone-map bracket admits
+        any of ``keys``, within ``ts_range``'s days and brackets."""
 
         def select_fn(i, listing, token):
             if ts_range is not None:
@@ -1127,22 +1155,7 @@ class Engine:
             # keep listing order for a stable scan plan
             return [rel for rel, _dt in listing if rel in hit]
 
-        if len(keys) == 1:
-            key_pred = F.col(id_col).eqNullSafe(F.lit(keys[0]))
-        else:
-            key_pred = F.col(id_col).isin(keys)
-        required = (id_col,)
-        if ts_range is not None:
-            t_lo, t_li, t_hi, t_hi_i = ts_range
-            c = F.col("timestamp")
-            if t_lo is not None:
-                key_pred = key_pred & (
-                    c >= F.lit(t_lo) if t_li else c > F.lit(t_lo))
-            if t_hi is not None:
-                key_pred = key_pred & (
-                    c <= F.lit(t_hi) if t_hi_i else c < F.lit(t_hi))
-            required = (id_col, "timestamp")
-        return self._pruned_hybrid_scan(table, required, select_fn, key_pred)
+        return select_fn
 
     def range_lookup_df(
         self, table: str, lo=None, hi=None, lo_incl: bool = True,
@@ -1217,37 +1230,19 @@ class Engine:
     def _pruned_hybrid_scan(
         self, table: str, id_col, select_fn, key_pred,
     ) -> tuple[DataFrame | None, dict]:
-        """Shared scan builder behind point/range lookups: per
-        generation, ``select_fn(gen, live_files, log_version)`` picks
-        the files to open (a superset of matches by the zone-map
-        contract; the version lets the zone-map view be reused), the
-        residual ``key_pred`` re-filters rows, and the in-memory
-        buffer unions in exactly like read_table. ``id_col`` may be a
-        tuple of columns (multi-column range lookups): a generation or
-        buffer lacking ANY of them holds only NULLs there, which no
-        equality/range predicate matches — skipped wholesale."""
+        """Shared scan builder behind point/range lookups: the files
+        :meth:`_prune_live` selects with ``select_fn``, the residual
+        ``key_pred`` re-filtering rows, and the in-memory buffer unioned
+        in exactly like read_table. ``id_col`` may be a tuple of columns
+        (multi-column range lookups): a generation or buffer lacking ANY
+        of them holds only NULLs there, which no equality/range
+        predicate matches — skipped wholesale."""
         req = (id_col,) if isinstance(id_col, str) else tuple(id_col)
         gens = self.catalog.gen_schemas(table)
         cum = self.catalog.schema_of(table)
-        report = {"files_total": 0, "files_scanned": 0,
-                  "files_skipped": 0, "gens": len(gens)}
-        parts: list[DataFrame] = []
-        token = self.catalog.log_version(table)
-        live = self.catalog.live_files(table)
-        for i, gcols in enumerate(gens):
-            listing = live.get(i)
-            if not gcols or not listing:
-                continue
-            report["files_total"] += len(listing)
-            if all(c in gcols for c in req):
-                sel = select_fn(i, listing, token)
-                skipped = len(listing) - len(sel)
-            else:
-                sel, skipped = [], len(listing)  # column absent: no match
-            report["files_scanned"] += len(sel)
-            report["files_skipped"] += skipped
-            if sel:
-                parts.append(self._gen_scan(table, i, gcols, cum, sel))
+        selected, report = self._prune_live(table, req, select_fn)
+        parts = [self._gen_scan(table, i, gens[i], cum, [rel for rel, _dt in sel])
+                 for i, sel in selected]
         persisted = None
         if parts:
             persisted = parts[0]
@@ -1271,20 +1266,108 @@ class Engine:
             report,
         )
 
+    def _prune_live(self, table: str, req: tuple[str, ...], select_fn,
+                    ) -> tuple[list[tuple[int, list[tuple[str, str]]]], dict]:
+        """The live files a pruned lookup opens: per generation holding
+        every column of ``req``, ``select_fn(gen, live_files,
+        log_version)`` picks the files (a superset of matches by the
+        zone-map contract; the version lets the zone-map view be
+        reused). Returns ``[(gen, [(rel, dt)])]`` for the generations
+        with a selected file, and the pruning report (files listed /
+        scanned / skipped). A generation lacking a column of ``req``
+        holds only NULLs there, which no predicate matches: skipped."""
+        gens = self.catalog.gen_schemas(table)
+        report = {"files_total": 0, "files_scanned": 0,
+                  "files_skipped": 0, "gens": len(gens)}
+        selected = []
+        token = self.catalog.log_version(table)
+        live = self.catalog.live_files(table)
+        for i, gcols in enumerate(gens):
+            listing = live.get(i)
+            if not gcols or not listing:
+                continue
+            report["files_total"] += len(listing)
+            if all(c in gcols for c in req):
+                keep = set(select_fn(i, listing, token))
+                sel = [(rel, dt) for rel, dt in listing if rel in keep]
+            else:
+                sel = []  # column absent: no match
+            report["files_scanned"] += len(sel)
+            report["files_skipped"] += len(listing) - len(sel)
+            if sel:
+                selected.append((i, sel))
+        return selected, report
+
     def point_lookup_full(
         self, table: str, value, id_col: str = "id"
     ) -> tuple[QueryResult, dict]:
-        """Key lookup with the SAME ``max_result_rows`` collect cap as
-        :meth:`query_full` (one row past the cap is fetched so
-        truncation is detectable) — a hot id with millions of rows must
-        not drive an unbounded driver collect through the GetRecord
-        path (round-11 verdict task 4). Returns the capped
-        ``QueryResult`` plus the pruning report."""
-        df, report = self.point_lookup_df(table, value, id_col=id_col)
-        if df is None:
-            return QueryResult("[]", False), report
-        rows, truncated = self._collect_json(df)
+        """Key lookup (GetRecord) with the SAME ``max_result_rows``
+        collect cap as :meth:`query_full` (one row past the cap is
+        fetched so truncation is detectable) — a hot id with millions of
+        rows must not drive an unbounded driver collect through the
+        GetRecord path (round-11 verdict task 4). Returns the capped
+        ``QueryResult`` plus the pruning report.
+
+        String keys on ``id`` are answered first without Spark
+        (:func:`miniodb_spark.lookup.lookup`: the pruned files read with
+        pyarrow, the buffer filtered in place, Spark's JSON text); what
+        that path declines runs as a Spark job over
+        :meth:`point_lookup_df`. ``query_stats["lookups"]`` counts both."""
+        from . import lookup
+
+        keys = list(value) if isinstance(value, (list, tuple, set)) else [value]
+        served = None
+        if id_col == "id" and keys and all(isinstance(k, str) for k in keys):
+            served = self._arrow_lookup(
+                lambda: lookup.lookup(self, table, keys, with_gen=True))
+        else:
+            self._note_lookup("shape")
+        if served is not None:
+            rows, report = served
+            rows, truncated = self._capped(rows)
+        else:
+            df, report = self.point_lookup_df(table, value, id_col=id_col)
+            if df is None:
+                return QueryResult("[]", False), report
+            rows, truncated = self._collect_json(df)
         return QueryResult("[" + ",".join(rows) + "]", truncated), report
+
+    def _arrow_lookup(self, run):
+        """``run()``'s result, counted as a lookup served without Spark;
+        or None when it declined (counted by reason)."""
+        from .lookup import Declined
+
+        try:
+            out = run()
+        except Declined as d:
+            self._note_lookup(d.reason)
+            return None
+        except Exception as exc:
+            # the Spark path answers it; the fault is counted and logged
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "arrow key lookup failed (answering on Spark): %r", exc)
+            self._note_lookup("error")
+            return None
+        self.query_stats["lookups"]["arrow"] += 1
+        return out
+
+    def _note_lookup(self, reason: str) -> None:
+        """A key lookup that runs on Spark, and why."""
+        stats = self.query_stats["lookups"]
+        stats["spark"] += 1
+        stats["declined"][reason] = stats["declined"].get(reason, 0) + 1
+
+    def _capped(self, rows: list[str]) -> tuple[list[str], bool]:
+        """At most ``max_result_rows`` of ``rows``, and whether any were
+        cut (counted in ``query_stats["truncated"]``)."""
+        cap = self.max_result_rows
+        truncated = len(rows) > cap
+        if truncated:
+            rows = rows[:cap]
+            self.query_stats["truncated"] += 1
+        return rows, truncated
 
     def _collect_json(self, df: DataFrame) -> tuple[list[str], bool]:
         """``df``'s rows as JSON texts, at most ``max_result_rows`` of
@@ -1306,12 +1389,7 @@ class Engine:
         jds = df._jdf.toJSON().limit(cap + 1)
         if _sorts_whole_result(jds.queryExecution().optimizedPlan()):
             jds = df.limit(cap + 1)._jdf.toJSON()
-        rows = [r[0] for r in DataFrame(jds, self.spark).collect()]
-        truncated = len(rows) > cap
-        if truncated:
-            rows = rows[:cap]
-            self.query_stats["truncated"] += 1
-        return rows, truncated
+        return self._capped([r[0] for r in DataFrame(jds, self.spark).collect()])
 
     def point_lookup(self, table: str, value, id_col: str = "id") -> str:
         """JSON rows for a key lookup (the GetRecord-style fast path);
@@ -1358,13 +1436,7 @@ class Engine:
         before the instant — the natural multi-table form). Snapshot
         queries never see the write buffer (versions are commit
         points)."""
-        sql = gate.validate_query(sql)
-        if default_table:
-            sql = gate.rewrite_legacy_from_table(sql, default_table)
-        sql = gate.inject_limit(sql, limit)
-        tables = extract_tables(sql)
-        if not tables:
-            raise gate.SQLGateError("no table referenced in query")
+        sql, tables = self._final_sql(sql, limit, default_table)
         if at_version is not None and as_of_ts_us is not None:
             raise ValueError("pass at_version or as_of_ts_us, not both")
         time_travel = at_version is not None or as_of_ts_us is not None
@@ -1406,6 +1478,57 @@ class Engine:
                 df = df.drop("gen")
             df.createOrReplaceTempView(t)
         return self.spark.sql(sql)
+
+    @staticmethod
+    def _final_sql(sql: str, limit: int | None,
+                   default_table: str | None) -> tuple[str, list[str]]:
+        """The SQL text Spark runs (gated, legacy ``FROM table``
+        rewritten, request limit injected) and the tables it names."""
+        sql = gate.validate_query(sql)
+        if default_table:
+            sql = gate.rewrite_legacy_from_table(sql, default_table)
+        sql = gate.inject_limit(sql, limit)
+        tables = extract_tables(sql)
+        if not tables:
+            raise gate.SQLGateError("no table referenced in query")
+        return sql, tables
+
+    def _arrow_query(self, sql: str, limit: int | None,
+                     default_table: str | None, time_travel: bool):
+        """A key-lookup query answered without Spark: ``(rows, report)``,
+        or None for query_df to run. Only a one-table query whose key
+        gate.extract_conjunctive_keys already found is a candidate (so
+        range and aggregate queries pay nothing); it is served when
+        Spark's parsed plan is exactly a lookup
+        (:func:`miniodb_spark.lookup.parse_lookup`) and
+        :func:`miniodb_spark.lookup.lookup` does not decline."""
+        from . import lookup
+
+        sql, tables = self._final_sql(sql, limit, default_table)
+        keys = gate.extract_conjunctive_keys(sql) if len(tables) == 1 else None
+        if keys is None:
+            return None
+        if time_travel:
+            self._note_lookup("time_travel")
+            return None
+        t = tables[0]
+        gate.validate_table_name(t)
+        self.catalog.refresh_if_changed(t)
+        if self.catalog.get_table(t) is None:
+            return None  # query_df raises the error
+
+        def run():
+            columns, n, key = lookup.parse_lookup(self.spark, sql, t)
+            if keys != [key]:
+                raise lookup.Declined("shape")
+            rows, report = lookup.lookup(self, t, [key], columns, n)
+            zs = self.query_stats.setdefault(
+                "zonemap", {"queries": 0, "files_skipped": 0, "prune_errors": 0})
+            zs["queries"] += 1
+            zs["files_skipped"] += report["files_skipped"]
+            return rows
+
+        return self._arrow_lookup(run)
 
     def _pruned_view(self, t: str, sql: str, tables) -> DataFrame | None:
         """Zone-map file pruning on the SQL path: when the WHERE clause
@@ -1574,7 +1697,16 @@ class Engine:
     ) -> QueryResult:
         """Gate → execute → bounded JSON collect, via the result cache
         when the query is cache-worthy. The cached value is the whole
-        ``QueryResult``, so the truncated flag survives cache hits."""
+        ``QueryResult``, so the truncated flag survives cache hits.
+
+        A cache miss that is a plain key lookup — ``SELECT <*|columns>
+        FROM t WHERE id = '<key>' [LIMIT n]`` by Spark's parsed plan, not
+        time travel — is answered without a Spark job
+        (:meth:`_arrow_query`, :mod:`miniodb_spark.lookup`) with the same
+        JSON text, cap and pruning counts; everything else, and every
+        lookup that path declines, runs through :meth:`query_df`.
+        ``query_stats["lookups"]`` counts lookups served each way, and
+        slow-query entries carry the ``path`` taken."""
         import time as _time
 
         checked = gate.validate_query(sql)
@@ -1594,15 +1726,20 @@ class Engine:
             # store, not be absorbed into its recorded versions
             versions = self.cache.snapshot_versions(tables)
         t0 = _time.perf_counter()
-        df = self.query_df(
-            checked, limit=limit, default_table=default_table,
-            at_version=at_version, as_of_ts_us=as_of_ts_us,
-        )
-        t_built = _time.perf_counter()
-        # cap the collect; queries carrying their own LIMIT are
-        # unaffected (inject_limit is a no-op then, and the cap only
-        # trims if the user's limit exceeds it)
-        rows, truncated = self._collect_json(df)
+        rows = self._arrow_query(checked, limit, default_table, time_travel)
+        if rows is not None:
+            path, t_built = "arrow", t0
+            rows, truncated = self._capped(rows)
+        else:
+            df = self.query_df(
+                checked, limit=limit, default_table=default_table,
+                at_version=at_version, as_of_ts_us=as_of_ts_us,
+            )
+            path, t_built = "spark", _time.perf_counter()
+            # cap the collect; queries carrying their own LIMIT are
+            # unaffected (inject_limit is a no-op then, and the cap only
+            # trims if the user's limit exceeds it)
+            rows, truncated = self._collect_json(df)
         if self.encryptor:
             decrypted = [
                 json.dumps(self.encryptor.decrypt_row(json.loads(r)),
@@ -1625,6 +1762,7 @@ class Engine:
                 "sql": checked[:200], "ms": round(elapsed_ms, 1),
                 "build_ms": math.floor((t_built - t0) * 10_000) / 10,
                 "collect_ms": math.floor((t_done - t_built) * 10_000) / 10,
+                "path": path,
             })
             self.query_stats["slow"] = self.query_stats["slow"][-100:]
         out = QueryResult(result, truncated)

@@ -148,6 +148,12 @@ class DriverRegistry:
                 continue  # racing delete / torn heartbeat
 
 
+def _missing(exc: Exception) -> bool:
+    """Whether ``exc`` says the file is gone (locally, or through the
+    Hadoop FileSystem's FileNotFoundException)."""
+    return isinstance(exc, FileNotFoundError) or "FileNotFoundException" in str(exc)
+
+
 class MutationLease:
     """Cross-driver lease lock for the mutation path.
 
@@ -196,6 +202,9 @@ class MutationLease:
         # Exposed through Engine.get_metrics so a deployment can see
         # lease contention building before it turns into busy errors.
         self.busy_retries = 0
+        # releases whose marker removal failed twice: the next writer
+        # of that key waits out the TTL (see release)
+        self.release_errors = 0
 
     def _marker(self, key: str) -> str:
         return _fs.join(self.kv.root, "lease." + _safe(key))
@@ -348,17 +357,38 @@ class MutationLease:
             self._depth.pop(ident, None)
         marker = self._marker(key)
         try:
-            raw = self.kv.fs.read_bytes(marker)
-            tok, expiry = raw.decode("ascii").rsplit("|", 1)
-            # same steal-guard as extend(): deleting a marker that is
-            # within the guard of expiry could remove a thief's fresh
-            # marker created between our read and our delete. Inside the
-            # guard we simply leave it — it ages out within guard seconds
-            # and the next acquirer steals it, identical to Redis expiry.
-            if tok == self._token(key) and time.time() < float(expiry) - self._guard_s():
+            tok, expiry = self.kv.fs.read_bytes(marker).decode("ascii").rsplit("|", 1)
+            expiry = float(expiry)
+        except Exception as exc:
+            if not _missing(exc):  # else: stolen and released by its thief
+                self._release_failed(key, exc)
+            return
+        # same steal-guard as extend(): deleting a marker that is within
+        # the guard of expiry could remove a thief's fresh marker created
+        # between our read and our delete. Inside the guard we simply
+        # leave it — it ages out within guard seconds and the next
+        # acquirer steals it, identical to Redis expiry.
+        if tok != self._token(key) or time.time() >= expiry - self._guard_s():
+            return  # stolen or expiring — never delete another's lock
+        # a marker left behind makes the next writer wait out the TTL:
+        # one retry, then the failure is counted and logged
+        for attempt in (1, 2):
+            try:
                 self.kv.fs.remove_file(marker)
-        except Exception:
-            pass  # already stolen/expired — never delete another's lock
+                return
+            except Exception as exc:
+                if _missing(exc):
+                    return
+                if attempt == 2:
+                    self._release_failed(key, exc)
+
+    def _release_failed(self, key: str, exc: Exception) -> None:
+        import logging
+
+        self.release_errors += 1
+        logging.getLogger(__name__).warning(
+            "lease release of %s failed; its marker ages out within "
+            "%.0f s: %r", key, self.ttl_s, exc)
 
     def holding(self, key: str, timeout_s: float | None = None,
                 retries: int = 0, backoff_s: float = 0.5):

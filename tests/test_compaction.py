@@ -220,6 +220,7 @@ def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
     calls = list(eng.fs.calls)
     assert [m for m, p in calls if p.endswith(".parquet")] == (
         ["move"] + ["remove_file"] * 6)
+    assert sum(m == "remove_dir" and ".compact_" in p for m, p in calls) == 1
     assert data_files(eng, "t") == live_files(eng, "t")
     for k in range(1, len(calls) + 1):
         root = str(tmp_path / f"k{k}")
@@ -237,6 +238,10 @@ def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
             assert ids(fresh.point_lookup_df("t", rid)[0]) == [rid], (
                 k, calls[k - 1])
         fresh.vacuum("t")
+        if calls[k - 1][0] == "remove_dir" and ".compact_" in calls[k - 1][1]:
+            # a failed temp-dir removal removes the moved-in outputs
+            # too: nothing is left for the grace age
+            assert data_files(fresh, "t") == live_files(fresh, "t"), k
         assert sorted(live_files(fresh, "t") + _never_added(fresh, "t")) == (
             data_files(fresh, "t")), (k, calls[k - 1])
         _age_past_grace(os.path.join(root, "t"))

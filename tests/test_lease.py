@@ -363,6 +363,44 @@ def test_lease_release_skips_delete_near_expiry(tmp_path):
     b.release("k")
 
 
+def test_lease_release_retries_a_failed_marker_removal(tmp_path):
+    """A release whose first marker removal faults retries it: no
+    marker is left, and a second owner acquires at once instead of
+    waiting out the TTL. Two faults in a row are counted
+    (``release_errors``) and the marker ages out as a crashed holder's
+    would."""
+    from faultfs import FaultFS
+
+    fs = FaultFS(LocalFS())
+    kv = FileKV(fs, str(tmp_path / "locks"))
+    a = MutationLease(kv, owner="aaaa", ttl_s=30.0)
+    b = MutationLease(kv, owner="bbbb", ttl_s=30.0)
+    assert a.acquire("k")
+    fs.arm(fail_at=1)
+    a.release("k")
+    fs.disarm()
+    assert [m for m, _p in fs.calls] == ["remove_file", "remove_file"]
+    assert not os.path.exists(a._marker("k"))
+    assert a.release_errors == 0
+    t0 = time.monotonic()
+    assert b.acquire("k", timeout_s=2.0)
+    assert time.monotonic() - t0 < 1.0
+    b.release("k")
+
+    def always_fail(path):
+        raise OSError("store unavailable")
+
+    assert a.acquire("k")
+    fs.inner.remove_file = always_fail
+    a.release("k")
+    assert a.release_errors == 1 and os.path.exists(a._marker("k"))
+    # a marker already stolen and removed is the silent case
+    del fs.inner.remove_file
+    os.remove(a._marker("k"))
+    a.release("k")
+    assert a.release_errors == 1
+
+
 def test_commit_rewrite_expected_gen_mismatch_raises(tmp_path):
     """commit_rewrite refreshes on-disk state and refuses to publish a
     survivor generation under an index another driver already claimed

@@ -331,10 +331,13 @@ def test_prune_error_falls_back_to_full_scan(engine, monkeypatch):
     def boom(*args, **kwargs):
         raise RuntimeError("sidecar unreadable")
 
-    monkeypatch.setattr(engine, "point_lookup_df", boom)
+    # the zone-map pruning both lookup paths share: the pyarrow path
+    # declines, and the Spark path counts the error and scans unpruned
+    monkeypatch.setattr(engine.zonemaps, "prune", boom)
     engine.cache.invalidate_table("t")
     assert json.loads(engine.query(sql)) == want == [{"id": "r6", "v": 6}]
     assert engine.query_stats["zonemap"]["prune_errors"] == 1
+    assert engine.query_stats["lookups"]["declined"] == {"prune_error": 1}
     assert calls == ["t"]
 
 
@@ -371,11 +374,17 @@ def _executed_plans(spark, run):
 
 def test_lookup_collect_has_no_single_partition_exchange(engine, spark):
     _seed(engine, n=8, days=4)
+    # a lookup pyarrow answers executes no SQL at all
+    assert _executed_plans(
+        spark, lambda: engine.query("SELECT * FROM t WHERE id = 'r2'")) == []
+    # the Spark path's collect, over the same pruned view: a second
+    # conjunct keeps it on Spark
     plans = _executed_plans(
-        spark, lambda: engine.query("SELECT * FROM t WHERE id = 'r2'"))
+        spark, lambda: engine.query("SELECT * FROM t WHERE id = 'r2' AND v >= 0"))
     assert plans and any("CollectLimit" in p for p in plans), plans
     assert not any("Exchange SinglePartition" in p for p in plans), plans
-    plans = _executed_plans(spark, lambda: engine.point_lookup("t", "r2"))
+    plans = _executed_plans(spark, lambda: engine._collect_json(
+        engine.point_lookup_df("t", "r2")[0]))
     assert plans and not any("Exchange SinglePartition" in p for p in plans)
 
 
@@ -482,3 +491,124 @@ def test_answers_match_a_fresh_engine_after_buffered_writes(engine, sql):
     assert got == json.loads(Engine(engine.spark, engine.root).query(sql))
     if "sum(v)" in sql:
         assert got != first
+
+
+# -- key lookups without a Spark job ------------------------------------------
+
+
+def _spark_answer(engine, sql, **kw):
+    """The rows the Spark path gives for ``sql``, as sorted JSON texts."""
+    rows, _ = engine._collect_json(engine.query_df(sql, **kw))
+    return sorted(rows)
+
+
+def _answer(res):
+    return sorted(json.dumps(r, separators=(",", ":"), ensure_ascii=False)
+                  for r in json.loads(res.json))
+
+
+def _declined(engine, reason, sql, **kw):
+    """``sql`` runs on Spark, answers as before and counts ``reason``."""
+    stats = engine.query_stats["lookups"]
+    before = (stats["arrow"], stats["spark"], stats["declined"].get(reason, 0))
+    got = _answer(engine.query_full(sql, **kw))
+    assert got == sorted(json.dumps(json.loads(r), separators=(",", ":"),
+                                    ensure_ascii=False)
+                         for r in _spark_answer(engine, sql, **kw))
+    assert (stats["arrow"], stats["spark"], stats["declined"].get(reason, 0)) == (
+        before[0], before[1] + 1, before[2] + 1), stats
+    return got
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT v + 1 AS w FROM t WHERE id = 'r1'",
+    "SELECT * FROM t WHERE id IN ('r1', 'r2')",
+    "SELECT * FROM t WHERE id = 'r1' AND v > 0",
+    "SELECT a.v FROM t a JOIN t b ON a.v = b.v WHERE a.id = 'r1'",
+    "SELECT ID FROM t WHERE id = 'r1'",
+    "SELECT * FROM t WHERE id = 'r1' ORDER BY v",
+])
+def test_lookup_shape_declines(engine, sql):
+    _seed(engine, n=8, days=4)
+    assert _declined(engine, "shape", sql)
+
+
+def test_time_travel_lookup_declines(spark, tmp_path):
+    engine = Engine(spark, str(tmp_path / "store"), retain_history=True)
+    _seed(engine, n=8, days=4)
+    v = engine.table_history("t")[-1]["v"]
+    engine.update("t", "r1", {"v": 100}, timestamp_us=T0 + DAY)
+    got = _declined(engine, "time_travel",
+                    "SELECT id, v FROM t WHERE id = 'r1'", at_version=v)
+    assert [json.loads(r)["v"] for r in got] == [1]
+
+
+def test_array_column_lookup_declines(engine, spark):
+    df = spark.createDataFrame(
+        [("a1", [1.0, 2.5], "t")], "id string, emb array<double>, table_name string"
+    ).withColumn("timestamp", F.timestamp_micros(F.lit(T0)))
+    engine.ingest_dataframe("t", df)
+    got = _declined(engine, "type", "SELECT * FROM t WHERE id = 'a1'")
+    assert json.loads(got[0])["emb"] == [1.0, 2.5]
+
+
+def test_hadoop_fs_lookup_declines(spark, tmp_path):
+    eng = Engine(spark, "file://" + str(tmp_path / "store"))
+    _seed(eng, n=4, days=2)
+    assert _declined(eng, "hadoop_fs", "SELECT * FROM t WHERE id = 'r2'")
+
+
+def test_lookup_past_max_files_declines(engine, monkeypatch):
+    from miniodb_spark import lookup
+
+    for i in range(3):  # every file holds the key: the zone map keeps all
+        engine.write("t", {"v": i}, record_id="k", timestamp_us=T0 + i)
+        engine.flush("t")
+    monkeypatch.setattr(lookup, "MAX_FILES", 2)
+    got = _declined(engine, "too_many_files", "SELECT v FROM t WHERE id = 'k'")
+    assert sorted(json.loads(r)["v"] for r in got) == [0, 1, 2]
+    monkeypatch.setattr(lookup, "MAX_FILES", 3)
+    engine.query_full("SELECT v FROM t WHERE id = 'k' LIMIT 2")
+    assert engine.query_stats["lookups"]["arrow"] == 1
+
+
+def test_lookup_counters_and_slow_log(spark, tmp_path):
+    from miniodb_spark.api import MiniODBService
+
+    eng = Engine(spark, str(tmp_path / "store"), slow_query_ms=0.0)
+    api = MiniODBService(eng)
+    _seed(eng, n=8, days=4)
+    eng.query("SELECT * FROM t WHERE id = 'r1'")
+    eng.query("SELECT * FROM t WHERE id IN ('r1', 'r2')")
+    eng.query("SELECT count(*) AS n FROM t")  # no key: not a lookup
+    assert api.get_record("t", "r3")["rows"] == eng.point_lookup("t", "r3")
+    want = {"arrow": 3, "spark": 1, "declined": {"shape": 1}}
+    assert eng.query_stats["lookups"] == want
+    assert api.get_metrics()["query_stats"]["lookups"] == want
+    assert [e["path"] for e in eng.query_stats["slow"]] == [
+        "arrow", "spark", "spark"]
+
+
+def test_arrow_lookup_runs_no_spark_job_and_lists_nothing(spark, tmp_path, monkeypatch):
+    from miniodb_spark import engine as engine_mod
+    from miniodb_spark.fs import LocalFS
+
+    fs = _ListCountingFS(LocalFS())
+    monkeypatch.setattr(engine_mod, "get_fs", lambda spark, root: fs)
+    eng = engine_mod.Engine(spark, str(tmp_path / "store"))
+    _seed(eng, n=8, days=4)
+    eng.write("t", {"v": 60}, record_id="r6", timestamp_us=T0 + DAY)
+    eng.query("SELECT * FROM t WHERE id = 'r1'")  # warm the zone-map view
+    fs.lists.clear()
+    sc = spark.sparkContext
+    sc.setJobGroup("arrow-lookup", "key lookups answered with pyarrow")
+    try:
+        got = json.loads(eng.query("SELECT id, v FROM t WHERE id = 'r6'"))
+        rec = json.loads(eng.point_lookup("t", "r5"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(r["v"] for r in got) == [6, 60]
+    assert [r["v"] for r in rec] == [5]
+    assert list(sc.statusTracker().getJobIdsForGroup("arrow-lookup")) == []
+    assert fs.lists == []
+    assert eng.query_stats["lookups"]["arrow"] == 3

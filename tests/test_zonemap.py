@@ -1705,7 +1705,9 @@ def test_sql_path_prune_error_is_counted_not_swallowed(engine, monkeypatch):
     def boom(*args, **kwargs):
         raise RuntimeError("sidecar unreadable")
 
-    monkeypatch.setattr(engine, "point_lookup_df", boom)
+    # the zone-map pruning both lookup paths share: the pyarrow path
+    # declines, and the Spark path counts the error and scans unpruned
+    monkeypatch.setattr(engine.zonemaps, "prune", boom)
     engine.cache.invalidate_table("zerr")
     assert json.loads(engine.query(sql)) == want
     assert engine.query_stats["zonemap"]["prune_errors"] == 1
