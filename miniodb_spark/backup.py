@@ -132,17 +132,23 @@ class BackupManager:
                              "to an engine (BackupManager(..., engine=eng))")
         return self.engine
 
-    def _table_objects(self, table: str) -> list[tuple[str, str, int]]:
-        """(abs_path, relpath-under-table-dir, size) for every live data
-        file of ``table`` — the commit log's live set, so an uncommitted
-        orphan or a removed leftover is not backed up."""
+    def _table_objects(self, table: str) -> list[tuple[str, dict]]:
+        """(abs_path, manifest entry) for every live data file of
+        ``table`` — the commit log's live set, so an uncommitted orphan
+        or a removed leftover is not backed up. A manifest entry is the
+        file's add entry (size, rows, zone-map brackets) with its path
+        relative to the table directory as ``rel``."""
         eng = self._require_engine()
-        return [
-            (path, f"gen={gen}/dt={dt}/" + path.rstrip("/").rsplit("/", 1)[-1],
-             size)
-            for (gen, dt), objs in sorted(eng.live_objects(table).items())
-            for path, size in objs
-        ]
+        entries = self.catalog.live_entries(table)
+        out = []
+        for (gen, dt), objs in sorted(eng.live_objects(table).items()):
+            for path, size in objs:
+                rel = f"dt={dt}/" + path.rstrip("/").rsplit("/", 1)[-1]
+                e = entries.get(gen, {}).get(rel, {})
+                out.append((path, {
+                    "rel": f"gen={gen}/{rel}", "size": size,
+                    **{k: v for k, v in e.items() if k not in ("path", "size")}}))
+        return out
 
     def create_data_backup(self, tables: list[str] | None = None) -> dict[str, Any]:
         """Copy every data object of the given tables (default: all) into
@@ -173,12 +179,10 @@ class BackupManager:
             # as before.
             _copy_all(
                 eng.fs,
-                [(path, fsmod.join(dest_root, t, rel))
-                 for path, rel, _size in objs],
+                [(path, fsmod.join(dest_root, t, e["rel"])) for path, e in objs],
             )
-            entries = [{"rel": rel, "size": size} for _p, rel, size in objs]
-            total += sum(size for _p, _r, size in objs)
-            manifest["tables"][t] = entries
+            total += sum(e["size"] for _p, e in objs)
+            manifest["tables"][t] = [e for _p, e in objs]
         # the manifest is written LAST: its presence marks a complete
         # backup (a crashed copy leaves no manifest and is invisible to
         # list/restore — same sentinel ordering as the mutation commit)
@@ -235,10 +239,12 @@ class BackupManager:
                     [(fsmod.join(src_root, t, e["rel"]),
                       fsmod.join(eng.root, t, e["rel"])) for e in entries],
                 )
-                adds: dict[int, list[str]] = {}
+                # each file is committed with its backed-up add entry
+                adds: dict[int, dict[str, dict]] = {}
                 for e in entries:
                     gen_part, rel = e["rel"].split("/", 1)
-                    adds.setdefault(int(gen_part[len("gen="):]), []).append(rel)
+                    adds.setdefault(int(gen_part[len("gen="):]), {})[rel] = {
+                        k: v for k, v in e.items() if k != "rel"}
                 # the manifest's files are added and every other live
                 # file removed: the restored table is exactly the backup
                 keep = {(g, rel) for g, rels in adds.items() for rel in rels}

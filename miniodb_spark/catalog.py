@@ -31,6 +31,13 @@ log (``_history/<table>.jsonl``): each commit's add and remove entries,
 Delta Lake style. A file is live from the commit that adds it until the
 commit that removes it; :meth:`Catalog.live_files` answers for the head
 and for any past version, and no reader lists data directories.
+
+An add entry also records what the writer knew of the file: its size in
+bytes, its row count and a ``[min, max]`` bracket per zone-map column
+(``{"path", "size", "rows", "stats": {column: [min, max]}}``; see
+:mod:`miniodb_spark.zonemap`). :meth:`Catalog.live_entries` returns
+them. An entry that is a bare path (the format written before entries
+carried stats) is a file with no known size and no brackets.
 """
 
 from __future__ import annotations
@@ -39,6 +46,7 @@ import json
 import os
 import threading
 import time
+from collections.abc import Iterable
 from dataclasses import asdict, dataclass, field
 from typing import Any
 
@@ -61,8 +69,9 @@ class TableConfig:
     # lets a numeric payload column carry min/max file-skipping brackets
     # — the reference's configurable multi-column index
     # (query/file_pruning.go:107-255 prunes on any indexed column's
-    # stored min/max). Sidecars self-heal when this changes (the
-    # column-set reconfiguration rebuild in zonemap.build).
+    # stored min/max). Brackets are computed when a file is committed,
+    # so a file committed before a column joined this list has none
+    # for it and is scanned by that column's lookups.
     zonemap_columns: list[str] = field(default_factory=list)
     properties: dict[str, str] = field(default_factory=dict)
 
@@ -77,15 +86,31 @@ def merge_type(a: str, b: str) -> str:
     return "string"
 
 
-def _apply_files(live: dict[tuple[int, str], None], rec: dict) -> None:
-    """Fold one commit record's remove and add entries into ``live``
-    (an insertion-ordered set of ``(gen, relpath)``)."""
-    for g, rels in (rec.get("rm") or {}).items():
-        for rel in rels:
-            live.pop((int(g), rel), None)
-    for g, rels in (rec.get("add") or {}).items():
-        for rel in rels:
-            live[(int(g), rel)] = None
+def _entry(e: str | dict) -> dict:
+    """A log entry as a dict: a bare relpath is ``{"path": relpath}``."""
+    return {"path": e} if isinstance(e, str) else e
+
+
+def _apply_files(live: dict[int, dict[str, dict]], rec: dict) -> None:
+    """Fold one commit record's remove and add entries into ``live``,
+    ``{gen: {relpath: add entry}}``."""
+    for g, entries in (rec.get("rm") or {}).items():
+        files = live.get(int(g), {})
+        for e in entries:
+            files.pop(_entry(e)["path"], None)
+    for g, entries in (rec.get("add") or {}).items():
+        files = live.setdefault(int(g), {})
+        for e in map(_entry, entries):
+            files[e["path"]] = e
+
+
+def _log_entries(files: Iterable[str]) -> list[str | dict]:
+    """The sorted log entries of ``files``: relpaths, or a mapping
+    {relpath: what is known of the file}. A file with nothing known is
+    written as its bare path."""
+    known = files if isinstance(files, dict) else {}
+    return [{"path": rel, **known[rel]} if known.get(rel) else rel
+            for rel in sorted(files)]
 
 
 class _TableLog:
@@ -96,7 +121,7 @@ class _TableLog:
         self.offset = 0  # bytes consumed (complete lines only)
         self.first = b""  # the first line: identifies this file
         self.records: list[dict[str, Any]] = []
-        self.live: dict[tuple[int, str], None] = {}
+        self.live: dict[int, dict[str, dict]] = {}
 
     def apply(self, rec: dict[str, Any]) -> None:
         self.records.append(rec)
@@ -153,7 +178,7 @@ class Catalog:
 
     def _persist(
         self, name: str,
-        add_files: dict[int, list[str]] | None = None,
+        add_files: dict[int, Iterable[str]] | None = None,
         remove_files: dict[int, list[str]] | None = None,
     ) -> None:
         doc = {
@@ -181,14 +206,15 @@ class Catalog:
                 log.records[-1]["v"] if log.records else 0) + 1
         self._versions[name] = v
         rec: dict = {"v": v, "ts_us": int(time.time() * 1e6), "doc": doc}
-        # Delta-style add and remove entries, {gen: [relpaths]}: the
+        # Delta-style add and remove entries, {gen: [entries]}: the
         # files this commit added, and the ones it took out of the
         # table (compaction inputs, rewritten partitions, retention,
         # restore; they stay live for earlier versions). Recorded only
         # on the log line, never in the current-state json: a
-        # per-commit delta.
+        # per-commit delta. A remove is a bare relpath; an add carries
+        # what the writer knew of its file, if anything.
         for kind, files in (("add", add_files), ("rm", remove_files)):
-            entries = {str(g): sorted(rels)
+            entries = {str(g): _log_entries(rels)
                        for g, rels in (files or {}).items() if rels}
             if entries:
                 rec[kind] = entries
@@ -242,10 +268,10 @@ class Catalog:
         log = self._log(name)
         return (log, len(log.records))
 
-    def live_files(
+    def live_entries(
         self, name: str, version: int | None = None,
-    ) -> dict[int, list[tuple[str, str]]]:
-        """``{gen: [(relpath, dt), ...]}`` (sorted) of the files live at
+    ) -> dict[int, dict[str, dict]]:
+        """``{gen: {relpath: add entry}}`` of the files live at
         ``version`` (default: the latest commit). The add/remove log is
         the only membership record: a file is live from the commit that
         adds it until the commit that removes it (added <= v < removed;
@@ -261,20 +287,29 @@ class Catalog:
                 for rec in log.records:
                     if rec["v"] <= version:
                         _apply_files(live, rec)
-            out: dict[int, list[tuple[str, str]]] = {}
-            for g, rel in sorted(live):
-                out.setdefault(g, []).append(
-                    (rel, rel.split("/", 1)[0][len("dt="):]))
-            return out
+            return {g: dict(files) for g, files in sorted(live.items())
+                    if files}
+
+    def live_files(
+        self, name: str, version: int | None = None,
+    ) -> dict[int, list[tuple[str, str]]]:
+        """``{gen: [(relpath, dt), ...]}`` (sorted) of the files live at
+        ``version`` (default: the latest commit); see
+        :meth:`live_entries`."""
+        return {g: [(rel, rel.split("/", 1)[0][len("dt="):])
+                    for rel in sorted(files)]
+                for g, files in self.live_entries(name, version).items()}
 
     def touch(
         self, name: str,
-        add_files: dict[int, list[str]] | None = None,
+        add_files: dict[int, Iterable[str]] | None = None,
         remove_files: dict[int, list[str]] | None = None,
     ) -> int:
         """Append a data commit: re-persist the current doc with the
-        files a writer added (``add_files``, {gen: [relpaths]}) and
-        removed (``remove_files``) as one commit-log record. Schema
+        files a writer added (``add_files``: {gen: relpaths}, or {gen:
+        {relpath: {"size", "rows", "stats"}}} to record what the writer
+        knows of each file) and removed (``remove_files``, {gen:
+        [relpaths]}) as one commit-log record. Schema
         registration persists BEFORE the writer runs (the rollback
         protocol needs that order), so the registration version never
         includes the in-flight files — this commit is the version whose
@@ -338,9 +373,9 @@ class Catalog:
     def _first_versions(self, name: str, kind: str) -> dict[tuple[int, str], int]:
         idx: dict[tuple[int, str], int] = {}
         for rec in self._log(name).records:
-            for g, rels in (rec.get(kind) or {}).items():
-                for rel in rels:
-                    key = (int(g), rel)
+            for g, entries in (rec.get(kind) or {}).items():
+                for e in entries:
+                    key = (int(g), _entry(e)["path"])
                     if key not in idx or rec["v"] < idx[key]:
                         idx[key] = rec["v"]
         return idx
@@ -500,7 +535,7 @@ class Catalog:
     def commit_rewrite(
         self, name: str, columns: dict[str, str],
         expected_gen: int | None = None,
-        add_files: dict[int, list[str]] | None = None,
+        add_files: dict[int, Iterable[str]] | None = None,
         remove_files: dict[int, list[str]] | None = None,
     ) -> int:
         """Atomic commit of a rewrite: append the survivors' generation
@@ -578,12 +613,13 @@ class Catalog:
 
     def import_metadata(
         self, doc: dict[str, Any],
-        add_files: dict[str, dict[int, list[str]]] | None = None,
+        add_files: dict[str, dict[int, Iterable[str]]] | None = None,
         remove_files: dict[str, dict[int, list[str]]] | None = None,
     ) -> int:
         """Restore table configs and generations; ``add_files`` /
-        ``remove_files`` ({table: {gen: [relpaths]}}) make the same
-        commit set each table's files (a data restore)."""
+        ``remove_files`` ({table: {gen: ...}}, as :meth:`touch` takes
+        them) make the same commit set each table's files (a data
+        restore)."""
         with self._lock:
             n = 0
             for name, cfg in doc.get("tables", {}).items():

@@ -128,8 +128,8 @@ def plan_table(table_dir: str,
     return plans
 
 
-def _remove_outputs(fs, plan: CompactionPlan, rels: list[str]) -> None:
-    for rel in rels:
+def _remove_outputs(fs, plan: CompactionPlan, outputs: dict[str, int]) -> None:
+    for rel in outputs:
         try:
             fs.remove_file(fsmod.join(plan.partition_dir,
                                       rel.rsplit("/", 1)[-1]))
@@ -138,11 +138,12 @@ def _remove_outputs(fs, plan: CompactionPlan, rels: list[str]) -> None:
 
 
 def execute_plan(spark: SparkSession, plan: CompactionPlan, fs=None,
-                 zorder_by: list[str] | None = None) -> list[str]:
+                 zorder_by: list[str] | None = None) -> dict[str, int]:
     """Merge the plan's files: distributed read → coalesced write to a
     temp dir → outputs moved into the partition under fresh names.
-    Lossless: no schema collapse. Returns the outputs' paths relative
-    to the generation directory. The inputs are left alone: the
+    Lossless: no schema collapse. Returns the outputs' ``{path relative
+    to the generation directory: size}``, the sizes from the temp dir's
+    LIST. The inputs are left alone: the
     outputs stay invisible until the caller's commit adds them and
     removes the inputs, and the garbage collector deletes the inputs
     after that commit. On failure every output already moved in is
@@ -177,12 +178,12 @@ def execute_plan(spark: SparkSession, plan: CompactionPlan, fs=None,
         .mode("overwrite")
         .parquet(tmp)
     )
-    moved: list[str] = []
+    moved: dict[str, int] = {}
     try:
-        for i, (src, _size) in enumerate(
+        for i, (src, size) in enumerate(
                 fs.list_files(tmp, suffix=".parquet")):
             name = f"compacted_{uuid.uuid4().hex}_{i}.parquet"
-            moved.append(f"dt={plan.dt}/{name}")
+            moved[f"dt={plan.dt}/{name}"] = size
             fs.move(src, fsmod.join(plan.partition_dir, name))
         fs.remove_dir(tmp)
     except BaseException:
@@ -198,7 +199,7 @@ def execute_plan(spark: SparkSession, plan: CompactionPlan, fs=None,
 
 def compact_table(spark: SparkSession, plans: list[CompactionPlan],
                   fs=None, zorder_by: list[str] | None = None
-                  ) -> list[list[str]]:
+                  ) -> list[dict[str, int]]:
     """Execute every plan; returns each plan's outputs (plan order).
     Nothing is committed or deleted here — see :func:`execute_plan`.
     If any plan fails, the outputs of the others are removed too and

@@ -255,29 +255,25 @@ class Engine:
             FileKV(self.fs, fsmod.join(root, "_meta", "locks")),
             owner=os.urandom(8).hex(),
         )
-        # file-level zone maps (min/max data-skipping sidecars per
-        # generation, shared-store like the version nonces): point
-        # lookups prune the file list driver-side instead of paying one
-        # footer GET per file — the reference's experimental id index
-        # (internal/index, //go:build experimental) re-expressed as
-        # Delta-style add-file stats. Hint-only: lookups always scan
-        # unindexed files, so a missing/stale sidecar can never be wrong.
+        # file-level zone maps: each add entry of the commit log carries
+        # its file's [min, max] per zone-map column (Delta-style
+        # add-file stats), so point lookups prune the file list
+        # driver-side instead of paying one footer GET per file — the
+        # reference's experimental id index (internal/index,
+        # //go:build experimental). Hint-only: a file without a bracket
+        # is always scanned.
         from .zonemap import ZoneMapStore
 
         # id brackets serve point lookups / keyset cursors; timestamp
         # brackets add INTRA-DAY file skipping for time-slice queries
         # (dt= partition dirs already prune at day grain) — the
         # reference's time-partition pruning analog
-        # (file_pruning.go:349-594). Existing sidecars built with the
-        # old column set self-heal: build() detects the
-        # reconfiguration and rebuilds the generation's index.
+        # (file_pruning.go:349-594)
         self.zonemap_columns: tuple[str, ...] = ("id", "timestamp")
-        self.zonemaps = ZoneMapStore(
-            self.fs, fsmod.join(root, "_meta", "zonemaps")
-        )
-        # best-effort build failures are counted, never raised
-        # (see _build_zonemap); a nonzero count is the ops signal that
-        # lookups are degrading to full-generation scans
+        self.zonemaps = ZoneMapStore(self.catalog)
+        # bracket failures are counted, never raised (see _add_entries):
+        # a nonzero count is the ops signal that files were committed
+        # without brackets, which lookups always scan
         self.zonemap_build_errors = 0
         self.zonemap_last_error: str | None = None
         self.cache = QueryResultCache(ttl_s=cache_ttl_s, version_store=versions)
@@ -380,7 +376,6 @@ class Engine:
             path = self._table_dir(name)
             if self.fs.is_dir(path):
                 self.fs.remove_dir(path)
-            self.zonemaps.drop(name)
             self._head_scans.pop(name, None)
             return ok
 
@@ -558,7 +553,9 @@ class Engine:
         ``fs.write_bytes`` (no staging, no rename — on s3a a rename is a
         copy plus a delete). The commit is the catalog's add-file entry
         for exactly the names written (Delta Lake's immutable files +
-        log entry), so no Spark job or output committer is involved."""
+        log entry), with each file's size and the zone-map brackets of
+        the rows in hand, so no Spark job or output committer is
+        involved."""
         import uuid
 
         row_dicts = [r.to_dict() for r in rows]
@@ -575,18 +572,22 @@ class Engine:
             table, {f.name: _type_name(f.dataType) for f in batch_schema.fields}
         )
         written: list[str] = []
+        sizes: dict[str, int] = {}
+        days: dict[str, Any] = {}
         try:
             # resolved INSIDE the try: any failure after
             # register_flush_schema must roll back the new generation
             gen_dir = self._gen_dir(table, gen)
-            for dt, data in dyn_schema.parquet_day_files(tbl, codec):
+            for dt, part, data in dyn_schema.parquet_day_files(tbl, codec):
                 rel = f"dt={dt}/{name}"
                 written.append(rel)  # before the write: a torn file goes too
                 self.fs.write_bytes(fsmod.join(gen_dir, rel), data)
+                sizes[rel], days[rel] = len(data), part
             # the commit: the version whose snapshot INCLUDES this
             # batch, with its files as Delta-style add entries (until
-            # then no reader sees them)
-            self.catalog.touch(table, add_files={gen: sorted(written)})
+            # then no reader sees them), bracketed from the rows in hand
+            self.catalog.touch(table, add_files={
+                gen: self._add_entries(table, gen, sizes, tables=days)})
         except Exception:
             # uncommitted files are invisible (no add entry), so this
             # cleanup only keeps them from piling up: every file this
@@ -613,25 +614,24 @@ class Engine:
                 if self.fs.is_dir(gen_dir):
                     self.fs.remove_dir(gen_dir)
             raise
-        self._build_zonemap(table, gen)
         return len(rows)
 
-    def _gen_listing(self, table: str, gen: int) -> list[tuple[str, str]]:
-        """``(relpath, dt)`` of every data file in the generation
-        directory (one LIST), committed or not — only for finding what
-        a Spark job just wrote; readers take the live set from the
-        commit log. Empty when the directory doesn't exist yet."""
-        from .zonemap import list_generation_files
-
+    def _gen_listing(self, table: str, gen: int) -> dict[str, int]:
+        """``{relpath: size}`` of every data file in the generation
+        directory (one LIST per dt partition), committed or not — only
+        for finding what a Spark job just wrote; readers take the live
+        set from the commit log. Empty when the directory doesn't exist
+        yet."""
         gdir = self._gen_dir(table, gen)
+        out: dict[str, int] = {}
         if not self.fs.is_dir(gdir):
-            return []
-        return list_generation_files(self.fs, gdir)
-
-    def _gen_file_set(self, table: str, gen: int) -> set[str]:
-        """Relative paths of the generation's data files (one LIST);
-        empty when the directory doesn't exist yet."""
-        return {rel for rel, _dt in self._gen_listing(table, gen)}
+            return out
+        for dt_dir in self.fs.list_dirs(gdir, prefix="dt="):
+            dt_name = dt_dir.rstrip("/").split("/")[-1]
+            for path, size in self.fs.list_files(
+                    fsmod.join(gdir, dt_name), suffix=".parquet"):
+                out[f"{dt_name}/{path.rstrip('/').split('/')[-1]}"] = size
+        return out
 
     def ingest_dataframe(self, table: str, df: DataFrame, ts_col: str = "timestamp",
                          force_new_generation: bool = False) -> int:
@@ -666,7 +666,7 @@ class Engine:
             # the commit's adds are what the Spark job wrote: one LIST
             # before it and one after (a leftover already in the
             # directory is never attributed to this commit)
-            before = self._gen_file_set(table, gen)
+            before = self._gen_listing(table, gen)
             (
                 # REBALANCE on dt: hash-partitioning on dt alone would
                 # put a whole day in one task (guide §2.5); the AQE
@@ -678,13 +678,12 @@ class Engine:
                 .partitionBy("dt")
                 .parquet(self._gen_dir(table, gen))
             )
-            # data commit: the job's files as add entries; the LIST
-            # also feeds the zone-map build
-            listing = self._gen_listing(table, gen)
-            after = {rel for rel, _dt in listing}
+            # data commit: the job's files as add entries, their sizes
+            # from the LIST
+            new = {rel: size for rel, size in
+                   self._gen_listing(table, gen).items() if rel not in before}
             self.catalog.touch(table, add_files={
-                gen: sorted(after - before)})
-            self._build_zonemap(table, gen, listing=listing)
+                gen: self._add_entries(table, gen, new)})
         self.cache.invalidate_table(table)
         return gen
 
@@ -793,28 +792,35 @@ class Engine:
         return out
 
     def live_objects(self, table: str) -> dict[tuple[int, str], list[tuple[str, int]]]:
-        """``{(gen, dt): [(path, size)]}`` of the table's live files
-        (:meth:`Catalog.live_files`), for the writers that need sizes
-        (compaction, backup): one LIST per live partition reads them. A
-        live file missing from disk raises FileNotFoundError."""
+        """``{(gen, dt): [(path, size)]}`` of the table's live files, for
+        the writers that need sizes (compaction, backup). The sizes come
+        from the add entries (:meth:`Catalog.live_entries`); only a
+        partition holding an entry without one (a bare-path entry) is
+        LISTed, and a live file that LIST misses raises
+        FileNotFoundError."""
         out: dict[tuple[int, str], list[tuple[str, int]]] = {}
-        for gen, files in self.catalog.live_files(table).items():
-            names_by_dt: dict[str, set[str]] = {}
-            for rel, dt in files:
-                names_by_dt.setdefault(dt, set()).add(rel.rsplit("/", 1)[-1])
-            for dt, names in names_by_dt.items():
-                part_dir = fsmod.join(self._gen_dir(table, gen), f"dt={dt}")
+        for gen, files in self.catalog.live_entries(table).items():
+            gdir = self._gen_dir(table, gen)
+            unsized: dict[str, set[str]] = {}
+            for rel, e in files.items():
+                dt_name, fname = rel.split("/", 1)
+                if "size" in e:
+                    out.setdefault((gen, dt_name[len("dt="):]), []).append(
+                        (fsmod.join(gdir, rel), e["size"]))
+                else:
+                    unsized.setdefault(dt_name, set()).add(fname)
+            for dt_name, names in unsized.items():
                 objs = [
-                    (path, size)
-                    for path, size in self.fs.list_files(part_dir, suffix=".parquet")
+                    (path, size) for path, size in self.fs.list_files(
+                        fsmod.join(gdir, dt_name), suffix=".parquet")
                     if path.rstrip("/").rsplit("/", 1)[-1] in names
                 ]
                 if len(objs) != len(names):
                     raise FileNotFoundError(
-                        f"{table}: a live file of gen={gen}/dt={dt} is "
+                        f"{table}: a live file of gen={gen}/{dt_name} is "
                         "missing from the store")
-                out[(gen, dt)] = sorted(objs)
-        return out
+                out.setdefault((gen, dt_name[len("dt="):]), []).extend(objs)
+        return {k: sorted(v) for k, v in sorted(out.items())}
 
     def _gen_scan(self, table: str, gen: int, gcols: dict[str, str],
                   cum: dict[str, str], rels: list[str]) -> DataFrame:
@@ -1038,8 +1044,8 @@ class Engine:
     def _zonemap_cols_for(self, table: str) -> tuple[str, ...]:
         """Engine defaults (id, timestamp) plus the table's configured
         extra columns (TableConfig.zonemap_columns) — the reference's
-        per-table multi-column index config. Order-stable and deduped
-        so the sidecar's column-set signature doesn't churn."""
+        per-table multi-column index config. Order-stable and
+        deduped."""
         cols = list(self.zonemap_columns)
         cfg = self.catalog.get_table(table)
         for c in (getattr(cfg, "zonemap_columns", None) or ()):
@@ -1047,38 +1053,33 @@ class Engine:
                 cols.append(c)
         return tuple(cols)
 
-    def _build_zonemap(
-        self, table: str, gen: int,
-        listing: list[tuple[str, str]] | None = None,
-    ) -> None:
-        """Index the generation's fresh files (incremental — only files
-        the sidecar doesn't know). ``listing`` lets a commit path that
-        just LISTed the generation share that listing instead of paying
-        a second one. Best-effort: a zone-map failure must never fail
-        the write it trails (lookups scan unindexed files) — but it
-        must be COUNTED and logged, not silently dropped: round 11's
-        footer-path crash hid behind a blanket except here for a whole
-        round (VERDICT r11 What's-wrong #1)."""
-        cols = self._zonemap_cols_for(table)
-        if not cols:
-            return
+    def _add_entries(
+        self, table: str, gen: int, files: dict[str, int],
+        gcols: dict[str, str] | None = None, tables: dict | None = None,
+    ) -> dict[str, dict]:
+        """The add entries committing ``files`` ({relpath: size}) into
+        generation ``gen``, whose schema is ``gcols`` (default: the
+        catalog's): sizes plus the row counts and zone-map brackets of
+        :meth:`ZoneMapStore.build` (``tables``: see there). A build
+        failure must never fail the write it serves (its files commit
+        with sizes only, and lookups scan them), but it is COUNTED and
+        logged, never silently dropped."""
         try:
-            struct = self._gen_struct(table, gen)
-            if struct is None:
-                return
-            self.zonemaps.build(
-                self.spark, table, gen, self._gen_dir(table, gen),
-                struct, cols, listing=listing,
-            )
+            return self.zonemaps.build(
+                self.spark, self._gen_dir(table, gen),
+                _file_struct(gcols) if gcols is not None
+                else self._gen_struct(table, gen),
+                self._zonemap_cols_for(table), files, tables)
         except Exception as exc:
             self.zonemap_build_errors += 1
             self.zonemap_last_error = f"{table}/gen={gen}: {exc!r}"
             import logging
 
             logging.getLogger(__name__).warning(
-                "zone-map build failed for %s gen=%d (lookups fall back "
-                "to full-generation scans): %r", table, gen, exc,
+                "zone-map build failed for %s gen=%d (its files are "
+                "committed without brackets): %r", table, gen, exc,
             )
+            return {rel: {"size": size} for rel, size in files.items()}
 
     def point_lookup_df(
         self, table: str, value, id_col: str = "id",
@@ -1136,21 +1137,19 @@ class Engine:
         :meth:`_prune_live`): the files whose zone-map bracket admits
         any of ``keys``, within ``ts_range``'s days and brackets."""
 
-        def select_fn(i, listing, token):
+        def select_fn(listing, brackets):
             if ts_range is not None:
                 listing = _filter_listing_by_day(listing, ts_range)
                 t_lo, t_li, t_hi, t_hi_i = ts_range
                 sel, _ = self.zonemaps.prune_range(
-                    table, i, listing, "timestamp",
-                    lo=t_lo, hi=t_hi, lo_incl=t_li, hi_incl=t_hi_i,
-                    token=token)
+                    brackets, listing, "timestamp",
+                    lo=t_lo, hi=t_hi, lo_incl=t_li, hi_incl=t_hi_i)
                 keep = set(sel)
                 listing = [(rel, dt) for rel, dt in listing
                            if rel in keep]
             hit: set[str] = set()
             for k in keys:
-                s, _ = self.zonemaps.prune(table, i, listing, id_col, k,
-                                           token=token)
+                s, _ = self.zonemaps.prune(brackets, listing, id_col, k)
                 hit.update(s)
             # keep listing order for a stable scan plan
             return [rel for rel, _dt in listing if rel in hit]
@@ -1199,19 +1198,19 @@ class Engine:
         the time bracket alone admits every file of the window; the
         intersection opens just their overlap. The ``timestamp``
         range additionally drops whole out-of-range ``dt=`` day
-        directories by NAME before any sidecar is consulted (see
+        directories by NAME before any bracket is consulted (see
         range_lookup_df)."""
         ts_rng = ranges.get("timestamp")
 
-        def select_fn(i, listing, token):
+        def select_fn(listing, brackets):
             if ts_rng is not None:
                 listing = _filter_listing_by_day(listing, ts_rng)
             for col, (lo, lo_i, hi, hi_i) in ranges.items():
                 if not listing:
                     break
                 sel, _ = self.zonemaps.prune_range(
-                    table, i, listing, col,
-                    lo=lo, hi=hi, lo_incl=lo_i, hi_incl=hi_i, token=token)
+                    brackets, listing, col,
+                    lo=lo, hi=hi, lo_incl=lo_i, hi_incl=hi_i)
                 keep = set(sel)
                 listing = [(rel, dt) for rel, dt in listing
                            if rel in keep]
@@ -1236,7 +1235,9 @@ class Engine:
         in exactly like read_table. ``id_col`` may be a tuple of columns
         (multi-column range lookups): a generation or buffer lacking ANY
         of them holds only NULLs there, which no equality/range
-        predicate matches — skipped wholesale."""
+        predicate matches — skipped wholesale. When no persisted file is
+        selected, the buffered rows still take the unpruned view's
+        columns and types (:meth:`_as_hybrid_view`)."""
         req = (id_col,) if isinstance(id_col, str) else tuple(id_col)
         gens = self.catalog.gen_schemas(table)
         cum = self.catalog.schema_of(table)
@@ -1258,6 +1259,8 @@ class Engine:
             buffered = None
         persisted, buffered = self._harmonize_hybrid(table, persisted, buffered)
         if persisted is None:
+            if buffered is not None and cum:
+                buffered = self._as_hybrid_view(cum, buffered)
             return buffered, report
         if buffered is None:
             return persisted, report
@@ -1266,21 +1269,40 @@ class Engine:
             report,
         )
 
+    def _as_hybrid_view(self, cum: dict[str, str],
+                        buffered: DataFrame) -> DataFrame:
+        """Buffered rows with the columns, order and types the hybrid
+        union of :meth:`read_table` gives them: the cumulative schema's
+        columns (a buffered one cast to its merge type, a missing one a
+        typed NULL), ``dt`` and a NULL ``gen``, then the columns only
+        the buffer has."""
+        btypes = {f.name: _type_name(f.dataType) for f in buffered.schema.fields}
+        targets = self._hybrid_targets(cum, btypes)
+        cols = [
+            (F.col(c) if targets[c] == btypes[c]
+             else F.col(c).cast(_parse_type(targets[c])).alias(c))
+            if c in btypes else F.lit(None).cast(_parse_type(t)).alias(c)
+            for c, t in cum.items()
+        ]
+        cols += [F.col("dt"), F.lit(None).cast("int").alias("gen")]
+        return buffered.select(*cols, *[
+            c for c in buffered.columns if c not in cum and c != "dt"])
+
     def _prune_live(self, table: str, req: tuple[str, ...], select_fn,
                     ) -> tuple[list[tuple[int, list[tuple[str, str]]]], dict]:
         """The live files a pruned lookup opens: per generation holding
-        every column of ``req``, ``select_fn(gen, live_files,
-        log_version)`` picks the files (a superset of matches by the
-        zone-map contract; the version lets the zone-map view be
-        reused). Returns ``[(gen, [(rel, dt)])]`` for the generations
-        with a selected file, and the pruning report (files listed /
-        scanned / skipped). A generation lacking a column of ``req``
-        holds only NULLs there, which no predicate matches: skipped."""
+        every column of ``req``, ``select_fn(live_files, brackets)``
+        picks the files by their zone-map brackets
+        (:meth:`ZoneMapStore.load`; a superset of matches by the
+        zone-map contract). Returns ``[(gen, [(rel, dt)])]`` for the
+        generations with a selected file, and the pruning report (files
+        listed / scanned / skipped). A generation lacking a column of
+        ``req`` holds only NULLs there, which no predicate matches:
+        skipped."""
         gens = self.catalog.gen_schemas(table)
         report = {"files_total": 0, "files_scanned": 0,
                   "files_skipped": 0, "gens": len(gens)}
         selected = []
-        token = self.catalog.log_version(table)
         live = self.catalog.live_files(table)
         for i, gcols in enumerate(gens):
             listing = live.get(i)
@@ -1288,7 +1310,7 @@ class Engine:
                 continue
             report["files_total"] += len(listing)
             if all(c in gcols for c in req):
-                keep = set(select_fn(i, listing, token))
+                keep = set(select_fn(listing, self.zonemaps.load(table, i)))
                 sel = [(rel, dt) for rel, dt in listing if rel in keep]
             else:
                 sel = []  # column absent: no match
@@ -2189,24 +2211,20 @@ class Engine:
             outputs = compact_table(self.spark, plans, fs=self.fs,
                                     zorder_by=zorder_by)
             # ONE commit swaps each plan's inputs for its outputs
-            # (Delta-style add+remove entries): a crash anywhere leaves
-            # either the inputs or the outputs live, never both
-            added: dict[int, list[str]] = {}
+            # (Delta-style add+remove entries, the outputs bracketed
+            # from their footers): a crash anywhere leaves either the
+            # inputs or the outputs live, never both
+            added: dict[int, dict[str, int]] = {}
             removed: dict[int, list[str]] = {}
             for plan, outs in zip(plans, outputs):
-                added.setdefault(plan.gen, []).extend(outs)
+                added.setdefault(plan.gen, {}).update(outs)
                 removed.setdefault(plan.gen, []).extend(plan.rels)
             if plans:
-                self.catalog.touch(table, add_files=added,
-                                   remove_files=removed)
+                self.catalog.touch(table, add_files={
+                    g: self._add_entries(table, g, outs)
+                    for g, outs in added.items()}, remove_files=removed)
                 self.cache.invalidate_table(table)
             self._collect(table)
-            # re-index (incremental — only the fresh files are scanned,
-            # the entries of inputs the collector deleted are dropped)
-            # so point-lookup pruning doesn't degrade to scan-everything;
-            # it runs after the collector because it never raises
-            for g in sorted(added):
-                self._build_zonemap(table, g)
         return [plan.stats(len(outs)) for plan, outs in zip(plans, outputs)]
 
     def start_auto_flush(self, poll_interval_s: float = 1.0) -> None:

@@ -10,13 +10,14 @@ would write, byte for byte (SURVEY §0: the reference answers point reads
 in-process over its pruned Parquet objects).
 
 It takes the same inputs as the Spark path: the files come from
-``Catalog.live_files`` and ``ZoneMapStore.prune`` under the log version
-(:meth:`Engine._prune_live`), each generation is projected onto the
-cumulative schema as ``Engine._gen_scan`` does, and buffered rows are
-typed over the whole buffer as ``Engine.read_buffer`` types them, then
-cast to ``Engine._hybrid_targets``' merge types. Anything it cannot
-reproduce exactly raises :class:`Declined`, and the caller runs the
-unchanged Spark path.
+``Catalog.live_files``, pruned by the zone-map brackets their add
+entries carry (:meth:`Engine._prune_live`), each generation is
+projected onto the cumulative schema as ``Engine._gen_scan`` does, and
+buffered rows are typed over the whole buffer as ``Engine.read_buffer``
+types them, then cast to ``Engine._hybrid_targets``' merge types. The
+view's columns are the unpruned hybrid view's, whether or not a file
+survives pruning. Anything it cannot reproduce exactly raises
+:class:`Declined`, and the caller runs the unchanged Spark path.
 """
 
 from __future__ import annotations
@@ -144,19 +145,16 @@ def lookup(engine, table: str, keys: list[str], columns: list[str] | None = None
         raise Declined("prune_error") from None
     if sum(len(sel) for _g, sel in selected) > MAX_FILES:
         raise Declined("too_many_files")
-    targets = engine._hybrid_targets(cum, btypes) if selected and brows else {}
-    # the view's columns, in the order Spark's union yields them
-    if selected:
-        types = {c: targets.get(c, t) for c, t in cum.items()}
+    # the view's columns, in the order Spark's union yields them (the
+    # buffer alone only while nothing is persisted)
+    targets = engine._hybrid_targets(cum, btypes)
+    types = {c: targets.get(c, t) for c, t in cum.items()}
+    if cum:
         types["dt"] = "string"
         if with_gen:
             types["gen"] = "long"
-        for c, t in btypes.items():
-            types.setdefault(c, t)
-    elif brows:
-        types = dict(btypes)
-    else:  # nothing can match; only the projection must resolve
-        types = dict(cum, dt="string") if cum else {}
+    for c, t in btypes.items():
+        types.setdefault(c, t)
     if not types or "gen" in cum or "gen" in btypes or any(
             c not in types for c in columns or ()) \
             or len({c.lower() for c in types}) != len(types):

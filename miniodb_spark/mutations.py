@@ -185,16 +185,17 @@ def delete_rows(
             raise RuntimeError(
                 f"mutation lease on {table!r} lost during rewrite; "
                 "aborting commit (no data was published)")
-        survivor_files = sorted(engine._gen_file_set(table, new_gen))
+        # the add entries: the survivors, bracketed from their footers
+        survivors = engine._add_entries(
+            table, new_gen, engine._gen_listing(table, new_gen),
+            gcols=cum)
         # the rm entries: every live file of the superseded partitions
         parts = set(affected)
         engine.catalog.commit_rewrite(
             table, dict(cum), expected_gen=new_gen,
-            add_files={new_gen: survivor_files},
+            add_files={new_gen: survivors},
             remove_files={g: [rel for rel, dt in files if (g, dt) in parts]
                           for g, files in engine.catalog.live_files(table).items()})
-        # index the rewrite's fresh files (best-effort, hint-only)
-        engine._build_zonemap(table, new_gen)
     # 3. the caller invalidates the cache, then collects
     return int(deleted)
 
@@ -311,19 +312,18 @@ def collapse_generations(engine, table: str) -> int:
             raise RuntimeError(
                 f"mutation lease on {table!r} lost during collapse; "
                 "aborting commit (no data was published)")
-        survivor_files = sorted(engine._gen_file_set(table, new_gen))
+        survivors = engine._add_entries(
+            table, new_gen, engine._gen_listing(table, new_gen),
+            gcols=cum)
         # every live file of the folded generations is removed
         engine.catalog.commit_rewrite(
             table, dict(cum), expected_gen=new_gen,
-            add_files={new_gen: survivor_files},
+            add_files={new_gen: survivors},
             remove_files={g: [rel for rel, _dt in files] for g, files
                           in engine.catalog.live_files(table).items()})
         # every pre-collapse generation is now empty: tombstone them so
         # future scans don't even stat their directories
         engine.catalog.tombstone_generations(table, list(range(new_gen)))
-        engine._build_zonemap(table, new_gen)
-        for g in range(new_gen):
-            engine.zonemaps.drop(table, g)  # sidecars of dead gens
     engine.cache.invalidate_table(table)
     engine._collect(table)
     return len(affected)

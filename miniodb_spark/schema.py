@@ -85,8 +85,8 @@ def coerce_value(value: Any, dtype: T.DataType) -> Any:
     if isinstance(dtype, T.LongType):
         try:
             v = int(value)
-        except (TypeError, ValueError):
-            return None
+        except (TypeError, ValueError, OverflowError):
+            return None  # NaN, ±inf, a non-numeric string: NULL
         # int64 range guard: batch_table builds Arrow arrays from
         # these tuples with no PySpark row verifier in between, so the
         # range check happens here: an unrepresentable long fails the
@@ -281,9 +281,10 @@ def parquet_codec(compression: str) -> tuple[str, str]:
             f"unsupported parquet compression: {compression!r}") from None
 
 
-def parquet_day_files(tbl, codec: str) -> Iterator[tuple[str, bytes]]:
-    """``(dt, parquet bytes)`` per UTC day of ``tbl``'s timestamps, in
-    day order; rows keep their batch order within a day. The file
+def parquet_day_files(tbl, codec: str) -> Iterator[tuple[str, Any, bytes]]:
+    """``(dt, rows, parquet bytes)`` per UTC day of ``tbl``'s
+    timestamps, in day order, ``rows`` being the day's slice of ``tbl``;
+    rows keep their batch order within a day. The file
     matches what Spark's ``partitionBy("dt")`` write produced: ``dt``
     lives in the directory name only, timestamps are INT64 micros
     adjusted to UTC, and ``codec`` (see :func:`parquet_codec`)
@@ -315,4 +316,4 @@ def parquet_day_files(tbl, codec: str) -> Iterator[tuple[str, bytes]]:
         pq.write_table(
             part, buf, compression=codec,
             write_statistics=stats if len(stats) < part.num_columns else True)
-        yield d.isoformat(), buf.getvalue().to_pybytes()
+        yield d.isoformat(), part, buf.getvalue().to_pybytes()

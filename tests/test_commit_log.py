@@ -128,3 +128,64 @@ def test_concurrent_commits_and_reads_lose_nothing(tmp_path):
         (w, f"dt=d/{w}-{i}.parquet") for w in (0, 1) for i in range(per_writer)}
     assert _files(Catalog(str(tmp_path)).live_files("t")) == _files(
         cat.live_files("t"))
+
+
+def test_add_entries_round_trip_per_version(tmp_path):
+    """What a writer records of each file (size, rows, zone-map
+    brackets) comes back from live_entries at every version and from a
+    fresh catalog; live_files keeps its (relpath, dt) shape."""
+    cat = Catalog(str(tmp_path))
+    cat.create_table("t")
+    a = {"size": 10, "rows": 2, "stats": {"id": ["a", "b"], "v": [None, None]}}
+    b = {"size": 20, "rows": 3, "stats": {"id": ["c", "d"]}}
+    v1 = cat.touch("t", add_files={0: {"dt=d/a.parquet": a}})
+    v2 = cat.touch("t", add_files={0: {"dt=d/b.parquet": b}},
+                   remove_files={0: ["dt=d/a.parquet"]})
+    for c in (cat, Catalog(str(tmp_path))):
+        assert c.live_entries("t", v1) == {
+            0: {"dt=d/a.parquet": {"path": "dt=d/a.parquet", **a}}}
+        assert c.live_entries("t", v2) == c.live_entries("t") == {
+            0: {"dt=d/b.parquet": {"path": "dt=d/b.parquet", **b}}}
+        assert c.live_files("t", v1) == {0: [("dt=d/a.parquet", "d")]}
+        assert c.live_files("t") == {0: [("dt=d/b.parquet", "d")]}
+    with open(cat._hist_path("t"), encoding="utf-8") as fh:
+        recs = [json.loads(line) for line in fh]
+    assert recs[-1]["add"] == {"0": [{"path": "dt=d/b.parquet", **b}]}
+    assert recs[-1]["rm"] == {"0": ["dt=d/a.parquet"]}
+
+
+def test_bare_path_log_reads_as_live_without_stats(tmp_path):
+    """A log written before add entries carried stats (bare relpaths)
+    still names the live files; each reads as an entry with no size and
+    no brackets, next to entries that have them."""
+    cat = Catalog(str(tmp_path))
+    cat.create_table("t")
+    with open(cat._hist_path("t"), "a", encoding="utf-8") as fh:
+        for v, rec in ((2, {"add": {"0": ["dt=d/old.parquet",
+                                          "dt=e/gone.parquet"]}}),
+                       (3, {"rm": {"0": ["dt=e/gone.parquet"]}})):
+            fh.write(json.dumps({"v": v, "ts_us": 0, "doc": {}, **rec}) + "\n")
+    cat.touch("t", add_files={0: {"dt=d/new.parquet": {"size": 5}}})
+    assert cat.live_files("t") == {0: [("dt=d/new.parquet", "d"),
+                                       ("dt=d/old.parquet", "d")]}
+    assert cat.live_entries("t") == {0: {
+        "dt=d/new.parquet": {"path": "dt=d/new.parquet", "size": 5},
+        "dt=d/old.parquet": {"path": "dt=d/old.parquet"}}}
+    assert _files(cat.live_files("t", 2)) == {
+        (0, "dt=d/old.parquet"), (0, "dt=e/gone.parquet")}
+
+
+def test_file_indexes_accept_both_entry_forms(tmp_path):
+    cat = Catalog(str(tmp_path))
+    cat.create_table("t")
+    v1 = cat.touch("t", add_files={0: ["dt=d/a.parquet"]})
+    v2 = cat.touch("t", add_files={1: {"dt=d/b.parquet": {"size": 1}}},
+                   remove_files={0: ["dt=d/a.parquet"]})
+    with open(cat._hist_path("t"), "a", encoding="utf-8") as fh:
+        fh.write(json.dumps({"v": v2 + 1, "ts_us": 0, "doc": {},
+                             "rm": {"1": [{"path": "dt=d/b.parquet"}]}}) + "\n")
+    assert cat.added_files_index("t") == {
+        (0, "dt=d/a.parquet"): v1, (1, "dt=d/b.parquet"): v2}
+    assert cat.removed_files_index("t") == {
+        (0, "dt=d/a.parquet"): v2, (1, "dt=d/b.parquet"): v2 + 1}
+    assert cat.live_files("t") == {}

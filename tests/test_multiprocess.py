@@ -1,17 +1,16 @@
 """Cross-process engine e2e: two REAL processes (own Spark drivers, own
-Engine instances) sharing one store root through the on-disk catalog /
-kv / zone-map sidecars — the multi-driver deployment the reference runs
-via Redis-coordinated nodes (internal/coordinator, pkg/lock), collapsed
+Engine instances) sharing one store root through the on-disk catalog
+and kv — the multi-driver deployment the reference runs via
+Redis-coordinated nodes (internal/coordinator, pkg/lock), collapsed
 here to shared-store metadata. In-process threading tests
-(test_zonemap.py::test_concurrent_builders_entries_both_survive) share
-the catalog object and CPython locks; this test shares NOTHING but the
-filesystem, so it exercises the actual cross-driver protocol:
+(test_commit_log.py::test_concurrent_commits_and_reads_lose_nothing)
+share the catalog object and CPython locks; this test shares NOTHING
+but the filesystem, so it exercises the actual cross-driver protocol:
 
 (a) both drivers' batches land in one table and are all readable;
-(b) a zone-map shard FOLD racing a concurrent builder's ingest keeps
-    every indexed entry (the builder-vs-compactor race: the fold
-    re-lists the generation after snapshotting the shards to fold, so
-    fresh files aren't dropped by the live-filter — zonemap.py §3);
+(b) every live file of both drivers carries its zone-map brackets in
+    its add entry (an ingest and a flush committing concurrently), and
+    pruned lookups find every batch;
 (c) read_snapshot membership is exact via the Delta-style add-file
     index: a snapshot taken between the two ingest phases excludes the
     later batch even though its files share the SAME generation
@@ -19,8 +18,8 @@ filesystem, so it exercises the actual cross-driver protocol:
 
 The first test staggers its parquet appends through file-flag barriers
 so the mid-point catalog version is deterministic for the snapshot
-assertion; its CONCURRENT phase races the metadata machinery (shard
-build + force-fold). The second test fires UN-staggered simultaneous
+assertion; its CONCURRENT phase races an ingest in one driver against
+a flush in the other. The second test fires UN-staggered simultaneous
 ingests from both drivers — the cross-driver #rewrite lease must
 serialize the append jobs (two concurrent jobs into one directory
 share the FileOutputCommitter staging path, where one job's commit
@@ -64,9 +63,6 @@ def touch(name, body=""):
 
 spark = get_spark(f"xproc-{who}", cpus=4)
 eng = Engine(spark, root)
-# keep shards un-folded so the fold happens exactly where the test
-# stages it (the force path is the same code COMPACT_SHARDS triggers)
-eng.zonemaps.COMPACT_SHARDS = 999
 
 
 def batch(prefix, n):
@@ -84,8 +80,8 @@ if who == "a":
     touch("a1", str(eng.catalog.current_version("t")))
     wait_for("b1")
     wait_for("go")
-    # builder side of the race: a fresh ingest (parquet files + a new
-    # shard sidecar) while the OTHER process force-folds concurrently
+    # one side of the race: a fresh ingest while the OTHER process
+    # flushes concurrently
     eng.catalog.refresh_if_changed("t")
     eng.ingest_dataframe("t", batch("c", 100))
     touch("a2", str(eng.catalog.current_version("t")))
@@ -97,17 +93,12 @@ else:
     eng.ingest_dataframe("t", batch("b", 200))
     touch("b1", str(eng.catalog.current_version("t")))
     wait_for("go")
-    # compactor side of the race: force-fold the shared shard sidecars
-    # repeatedly while process a is mid-ingest
-    for _ in range(30):
-        try:
-            eng.zonemaps._compact(
-                "t", 0, list(eng.zonemap_columns),
-                eng._gen_dir("t", 0), force=True,
-            )
-        except Exception:
-            pass
-        time.sleep(0.05)
+    # the other side: buffered writes and a flush while process a is
+    # mid-ingest
+    for i in range(20):
+        eng.write("t", {"k": i % 7}, record_id=f"d{i}",
+                  timestamp_us=1_700_000_000_000_000 + i * 1000)
+    eng.flush("t")
     touch("b2")
 
 spark.stop()
@@ -162,23 +153,22 @@ def test_two_process_shared_store_flush_fold_snapshot(spark, tmp_path):
 
     # (a) every batch from both drivers is readable, no duplicates
     df = eng.read_table("t")
-    assert df.count() == 500
+    assert df.count() == 520
     ids = {r["id"] for r in df.select("id").collect()}
-    assert len(ids) == 500
+    assert len(ids) == 520
     assert sum(1 for i in ids if i.startswith("a")) == 200
     assert sum(1 for i in ids if i.startswith("b")) == 200
     assert sum(1 for i in ids if i.startswith("c")) == 100
+    assert sum(1 for i in ids if i.startswith("d")) == 20
 
-    # (b) the fold race lost no indexed entries: every live data file of
-    # the generation has a min/max bracket in the merged sidecar view
-    live = {rel for rel, _dt in eng._gen_listing("t", 0)}
-    merged = eng.zonemaps.load("t", 0)
-    assert merged is not None
-    assert live <= set(merged["files"]), (
-        f"fold dropped entries for {sorted(live - set(merged['files']))}"
-    )
+    # (b) every live file of both drivers carries its brackets
+    entries = eng.catalog.live_entries("t")
+    assert sum(len(files) for files in entries.values()) >= 4
+    for files in entries.values():
+        for rel, e in files.items():
+            assert {"id", "timestamp"} <= set(e.get("stats", {})), (rel, e)
     # and pruned point lookups still find one row per key across batches
-    for key in ("a0", "b199", "c42"):
+    for key in ("a0", "b199", "c42", "d7"):
         got, report = eng.point_lookup_df("t", key)
         assert got is not None and got.count() == 1, (key, report)
 
@@ -538,11 +528,10 @@ def test_concurrent_ingest_under_cpu_load(spark, tmp_path):
 
 @pytest.mark.storm
 def test_flush_fold_snapshot_under_cpu_load(spark, tmp_path):
-    """Contended-host variant of the staggered flush/fold/snapshot
-    e2e (third storm scenario): the zone-map fold racing a concurrent
-    builder, and exact snapshot membership, must hold while the box
-    is saturated — the regime where the fold's re-list and the
-    builder's shard write interleave slowest. Opt-in via `-m storm`."""
+    """Contended-host variant of the staggered ingest/flush/snapshot
+    e2e (third storm scenario): an ingest racing another driver's
+    flush, every live file's brackets, and exact snapshot membership
+    must hold while the box is saturated. Opt-in via `-m storm`."""
     import multiprocessing
 
     burn_script = str(tmp_path / "burner.py")

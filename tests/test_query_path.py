@@ -329,7 +329,7 @@ def test_prune_error_falls_back_to_full_scan(engine, monkeypatch):
     calls = _count_read_persisted(engine, monkeypatch)
 
     def boom(*args, **kwargs):
-        raise RuntimeError("sidecar unreadable")
+        raise RuntimeError("brackets unreadable")
 
     # the zone-map pruning both lookup paths share: the pyarrow path
     # declines, and the Spark path counts the error and scans unpruned
@@ -612,3 +612,130 @@ def test_arrow_lookup_runs_no_spark_job_and_lists_nothing(spark, tmp_path, monke
     assert list(sc.statusTracker().getJobIdsForGroup("arrow-lookup")) == []
     assert fs.lists == []
     assert eng.query_stats["lookups"]["arrow"] == 3
+
+
+# -- what the add entries carry ---------------------------------------------
+
+
+def test_sizes_and_brackets_come_from_the_log(spark, tmp_path, monkeypatch):
+    """Compaction planning, a data backup and a warm lookup take sizes
+    and zone-map brackets from the add entries, with no LIST; nothing
+    is written beside the log under ``_meta/zonemaps``; and a restored
+    table prunes exactly as before its backup."""
+    import os
+
+    from miniodb_spark import engine as engine_mod
+    from miniodb_spark.compaction import plan_table
+    from miniodb_spark.fs import LocalFS
+
+    fs = _ListCountingFS(LocalFS())
+    monkeypatch.setattr(engine_mod, "get_fs", lambda spark, root: fs)
+    eng = engine_mod.Engine(spark, str(tmp_path / "store"))
+    _seed(eng, n=8, days=4)
+    eng.ingest_dataframe("t", spark.range(3).select(
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("id"),
+        F.timestamp_micros(F.lit(T0) + F.col("id")).alias("timestamp"),
+        F.col("id").alias("v")))
+    for i in range(5):  # small files into day 0: a compaction candidate
+        eng.write("t", {"v": i}, record_id=f"c{i}", timestamp_us=T0)
+        eng.flush("t")
+    assert eng.compact("t")[0]["inputs"] >= 5
+    eng.update("t", "r1", {"v": 10}, timestamp_us=T0 + DAY)
+    eng.flush("t")
+    eng.point_lookup_full("t", "r6")  # warm
+    fs.lists.clear()
+    _, report = eng.point_lookup_full("t", "r6")
+    objects = eng.live_objects("t")
+    assert plan_table(eng._table_dir("t"), objects) == []
+    mgr = BackupManager(eng.catalog, engine=eng)
+    info = mgr.create_data_backup(["t"])
+    assert fs.lists == []
+    sizes = {p: s for objs in objects.values() for p, s in objs}
+    assert sizes and sizes == {p: os.path.getsize(p) for p in sizes}
+    assert report["files_skipped"] > 0
+    eng.delete_table("t")
+    mgr.restore_data_backup(info["object_name"])
+    rows, restored = eng.point_lookup_full("t", "r6")
+    assert [r["v"] for r in json.loads(rows.json)] == [6]
+    assert restored == report
+    assert not os.path.exists(os.path.join(eng.root, "_meta", "zonemaps"))
+
+
+def test_bare_path_entries_are_listed_for_sizes(spark, tmp_path, monkeypatch):
+    """A live file whose add entry has no size (a bare-path entry of a
+    log written before entries carried one) is sized by a LIST of its
+    own partition only."""
+    import os
+
+    from miniodb_spark import engine as engine_mod
+    from miniodb_spark.fs import LocalFS
+
+    root = str(tmp_path / "store")
+    eng = Engine(spark, root)
+    _seed(eng, n=4, days=2)  # two partitions, both from this flush
+    eng.write("t", {"v": 9}, record_id="late", timestamp_us=T0 + 5 * DAY)
+    eng.flush("t")
+    path = eng.catalog._hist_path("t")
+    with open(path, encoding="utf-8") as fh:
+        recs = [json.loads(line) for line in fh]
+    first = next(r for r in recs if "add" in r)
+    first["add"] = {g: [e["path"] for e in es] for g, es in first["add"].items()}
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.writelines(json.dumps(r) + "\n" for r in recs)
+    fs = _ListCountingFS(LocalFS())
+    monkeypatch.setattr(engine_mod, "get_fs", lambda spark, root: fs)
+    fresh = engine_mod.Engine(spark, root)
+    fs.lists.clear()
+    objects = fresh.live_objects("t")
+    gdir = fresh._gen_dir("t", 0)
+    assert sorted(fs.lists) == [
+        ("list_files", os.path.join(gdir, "dt=2023-11-14")),
+        ("list_files", os.path.join(gdir, "dt=2023-11-15"))]
+    sizes = {p: s for objs in objects.values() for p, s in objs}
+    assert len(sizes) == 3
+    assert sizes == {p: os.path.getsize(p) for p in sizes}
+
+
+def test_buffered_only_lookup_has_the_unpruned_columns(engine):
+    """When pruning keeps no persisted file but the buffer holds the
+    key, the view still has the unpruned view's columns, order and
+    types: a column only the files have resolves (NULL), on the pyarrow
+    path, the Spark path and GetRecord alike."""
+    _seed(engine, n=8, days=4)
+    engine.write("t", {"w": 1.5}, record_id="zz", timestamp_us=T0)
+    for sel in ("v", "*", "v, w"):
+        pruned = f"SELECT {sel} FROM t WHERE id = 'zz'"
+        want = engine.query(f"SELECT {sel} FROM t WHERE id = 'zz' OR id = 'zz'")
+        arrow = engine.query_stats["lookups"]["arrow"]
+        assert engine.query(pruned) == want, sel
+        assert engine.query_stats["lookups"]["arrow"] == arrow + 1
+        rows, _ = engine._collect_json(engine.query_df(pruned))
+        assert "[" + ",".join(rows) + "]" == want, sel
+    assert want == '[{"w":1.5}]'
+    df, report = engine.point_lookup_df("t", "zz")
+    assert report["files_scanned"] == 0 and report["files_skipped"] == 4
+    rows, _ = engine._collect_json(df)
+    assert engine.point_lookup("t", "zz") == "[" + ",".join(rows) + "]"
+    assert df.columns == ["id", "timestamp", "table_name", "v", "dt", "gen", "w"]
+
+
+def test_infinite_long_value_reads_as_null(engine):
+    """A long column fed ±inf stores NULL, as it does NaN: the flush
+    succeeds, and read_buffer, the pyarrow lookup and the Spark lookup
+    return the same rows, before and after the flush."""
+    engine.write("t", {"x": 1}, record_id="k1", timestamp_us=T0)
+    engine.write("t", {"x": float("inf")}, record_id="k2", timestamp_us=T0)
+    engine.write("t", {"x": float("-inf")}, record_id="k2", timestamp_us=T0 + 1)
+    buffered = engine.read_buffer("t")
+    assert sorted((r["id"], r["x"]) for r in buffered.collect()) == [
+        ("k1", 1), ("k2", None), ("k2", None)]
+    for _ in range(2):
+        arrow = engine.query_stats["lookups"]["arrow"]
+        got = engine.point_lookup("t", "k2")
+        assert engine.query_stats["lookups"]["arrow"] == arrow + 1
+        rows, _ = engine._collect_json(engine.point_lookup_df("t", "k2")[0])
+        assert sorted(json.loads(got), key=json.dumps) == sorted(
+            map(json.loads, rows), key=json.dumps)
+        assert [r.get("x") for r in json.loads(got)] == [None, None]
+        if engine.flush("t"):
+            assert engine.read_buffer("t") is None

@@ -1,12 +1,14 @@
 """Zone-map file skipping: point lookups must open only the files
 whose min/max bracket admits the key, while returning exactly what a
 full hybrid scan + filter returns — under flushes, appends, buffer
-rows, updates, deletes, compaction and sidecar loss.
+rows, updates, deletes, compaction and files committed without
+brackets.
 
 Reference analog: the experimental id index
 (/root/reference/internal/index, //go:build experimental) maps ids to
 the objects containing them; here the mapping is Delta-style add-file
-min/max stats in one sidecar per generation (miniodb_spark/zonemap.py).
+min/max stats carried by the commit log's add entries
+(miniodb_spark/zonemap.py).
 """
 
 import json
@@ -126,77 +128,99 @@ def test_lookup_after_collapse_generations(engine):
         assert rows == _full_rows(engine, "zmc", rid), rid
 
 
-def test_missing_sidecar_degrades_to_full_scan(engine):
+def _strip_stats(engine, table):
+    """Rewrite ``table``'s commit log with bare-path add entries (the
+    format written before entries carried stats) and return a fresh
+    Engine over the store: every file then has no size and no
+    brackets."""
+    from miniodb_spark.engine import Engine
+
+    path = engine.catalog._hist_path(table)
+    with open(path, encoding="utf-8") as fh:
+        recs = [json.loads(line) for line in fh]
+    for rec in recs:
+        if "add" in rec:
+            rec["add"] = {g: [e["path"] if isinstance(e, dict) else e
+                              for e in entries]
+                          for g, entries in rec["add"].items()}
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.writelines(json.dumps(rec) + "\n" for rec in recs)
+    return Engine(engine.spark, engine.root)
+
+
+def test_add_entry_without_stats_degrades_to_full_scan(engine):
+    """A file whose add entry carries no brackets (here: a bare-path
+    entry of an older log) is scanned by every lookup: the same rows as
+    the full scan, nothing skipped, on the Spark and pyarrow paths."""
     _seed(engine, "zms", n=6, days=3)
-    engine.zonemaps.drop("zms")  # simulate foreign writer / lost sidecar
-    rows, report = _lookup_rows(engine, "zms", "r005")
-    assert rows == _full_rows(engine, "zms", "r005")
+    fresh = _strip_stats(engine, "zms")
+    assert all(b == {} for b in fresh.zonemaps.load("zms", 0).values())
+    rows, report = _lookup_rows(fresh, "zms", "r005")
+    assert rows == _full_rows(fresh, "zms", "r005")
     assert len(rows) == 1
-    # hint gone: every live file must be scanned, none skipped
-    assert report["files_scanned"] == report["files_total"]
+    assert report["files_scanned"] == report["files_total"] >= 3
     assert report["files_skipped"] == 0
-
-
-def test_corrupt_sidecar_is_ignored(engine):
-    _seed(engine, "zmx", n=4, days=2)
-    # corrupt EVERY sidecar file (base + per-build shards): the merged
-    # load must come back empty and lookups degrade to the full scan
-    paths = [engine.zonemaps._path("zmx", 0)]
-    paths += engine.zonemaps._shard_paths("zmx", 0)
-    assert len(paths) >= 2  # at least one shard was written by the flush
-    for path in paths:
-        engine.fs.write_bytes(path, b"{not json")
-    rows, report = _lookup_rows(engine, "zmx", "r001")
-    assert rows == _full_rows(engine, "zmx", "r001")
-    assert report["files_scanned"] == report["files_total"]
+    assert json.loads(fresh.query("SELECT id, v FROM zms WHERE id = 'r005'")) \
+        == [{"id": "r005", "v": 5}]
+    assert fresh.query_stats["lookups"]["arrow"] == 1
+    assert fresh.query_stats["zonemap"]["files_skipped"] == 0
 
 
 def test_incremental_build_appends_only_new_files(engine):
     _seed(engine, "zmi", n=4, days=2)
     doc1 = engine.zonemaps.load("zmi", 0)
-    assert doc1 and len(doc1["files"]) >= 2
+    assert len(doc1) >= 2
     # second flush appends to the same generation (same schema)
     for i in range(4, 8):
         engine.write("zmi", {"v": i}, record_id=f"r{i:03d}",
                      timestamp_us=T0 + (i % 2) * DAY)
     engine.flush("zmi")
     doc2 = engine.zonemaps.load("zmi", 0)
-    assert set(doc1["files"]) <= set(doc2["files"])
-    assert len(doc2["files"]) > len(doc1["files"])
-    # previously indexed stats are untouched (CoW layout: no in-place
-    # rewrite of an indexed file anywhere in the engine)
-    for rel, st in doc1["files"].items():
-        assert doc2["files"][rel] == st
+    assert set(doc1) <= set(doc2)
+    assert len(doc2) > len(doc1)
+    # earlier brackets are untouched (CoW layout: no in-place rewrite
+    # of a committed file anywhere in the engine)
+    for rel, st in doc1.items():
+        assert doc2[rel] == st
     rows, report = _lookup_rows(engine, "zmi", "r006")
     assert rows == _full_rows(engine, "zmi", "r006")
     assert report["files_skipped"] > 0
 
 
-def test_sidecar_shape_is_bounded_json(engine):
+def _assert_strict_json_log(engine, table):
+    """Every line of the table's commit log parses as strict JSON (no
+    NaN or Infinity constants)."""
+    def strict(name):
+        raise ValueError(name)
+
+    with open(engine.catalog._hist_path(table), encoding="utf-8") as fh:
+        for line in fh:
+            json.loads(line, parse_constant=strict)
+
+
+def test_add_entry_shape_is_bounded_json(engine):
+    """A flush's add entries hold the path, the size on disk, the row
+    count and one bracket per zone-map column; the log stays strict
+    JSON."""
+    import os
+
     _seed(engine, "zmj", n=4, days=2)
-    # every sidecar artifact (base and per-build shards) is small JSON
-    # with the same shape; at least one must exist after a flush
-    paths = [
-        p for p in [engine.zonemaps._path("zmj", 0)]
-        + engine.zonemaps._shard_paths("zmj", 0)
-        if engine.fs.exists(p)
-    ]
-    assert paths
-    seen_files = 0
-    for path in paths:
-        doc = json.loads(engine.fs.read_bytes(path))
-        assert doc["columns"] == ["id", "timestamp"]
-        for rel, st in doc["files"].items():
-            seen_files += 1
-            assert rel.startswith("dt=")
-            assert set(st) == {"dt", "n", "id", "timestamp"}
-            lo, hi = st["id"]
-            assert lo <= hi
-            tlo, thi = st["timestamp"]
-            # canonical naive-UTC sortable string (zonemap._jsonable)
-            assert isinstance(tlo, str) and isinstance(thi, str)
-            assert tlo <= thi and "+" not in tlo and "+" not in thi
-    assert seen_files >= 2
+    entries = engine.catalog.live_entries("zmj")[0]
+    assert len(entries) == 2
+    for rel, e in entries.items():
+        assert rel.startswith("dt=") and e["path"] == rel
+        assert set(e) == {"path", "size", "rows", "stats"}
+        assert e["size"] == os.path.getsize(
+            os.path.join(engine._gen_dir("zmj", 0), rel))
+        assert e["rows"] == 2
+        assert set(e["stats"]) == {"id", "timestamp"}
+        lo, hi = e["stats"]["id"]
+        assert lo <= hi
+        tlo, thi = e["stats"]["timestamp"]
+        # canonical naive-UTC sortable string (zonemap._jsonable)
+        assert isinstance(tlo, str) and isinstance(thi, str)
+        assert tlo <= thi and "+" not in tlo and "+" not in thi
+    _assert_strict_json_log(engine, "zmj")
 
 
 def test_api_get_record_roundtrip(engine):
@@ -268,6 +292,8 @@ def test_multi_key_lookup_and_in_list_sql(engine):
 
 
 def test_compaction_reindexes_swapped_files(engine):
+    """Compaction commits its outputs with brackets read from their
+    footers, so pruning still skips files after it."""
     # six flushes into ONE day -> six small files in one dt dir
     # (L0 merges at >=5 files, compaction.TIERS); two more rows on a
     # second day stay uncompacted so pruning still has files to skip
@@ -275,18 +301,16 @@ def test_compaction_reindexes_swapped_files(engine):
         engine.write("zcp", {"v": i}, record_id=f"r{i:03d}",
                      timestamp_us=T0 + (0 if i < 6 else DAY))
         engine.flush("zcp")
-    doc_before = engine.zonemaps.load("zcp", 0)
-    assert len(doc_before["files"]) >= 6
+    before = engine.zonemaps.load("zcp", 0)
+    assert len(before) == 8
     stats = engine.compact("zcp")
     assert stats  # something merged
-    doc_after = engine.zonemaps.load("zcp", 0)
-    # dead entries dropped, fresh compacted files indexed
-    assert set(doc_after["files"]) != set(doc_before["files"])
-    from miniodb_spark.zonemap import list_generation_files
-
-    live = {rel for rel, _ in
-            list_generation_files(engine.fs, engine._gen_dir("zcp", 0))}
-    assert set(doc_after["files"]) == live
+    after = engine.zonemaps.load("zcp", 0)
+    live = {rel for rel, _dt in engine.catalog.live_files("zcp")[0]}
+    assert set(after) == live != set(before)
+    (out,) = live - set(before)
+    assert after[out]["id"] == ["r000", "r005"]
+    assert engine.catalog.live_entries("zcp")[0][out]["rows"] == 6
     rows, report = _lookup_rows(engine, "zcp", "r001")
     assert rows == _full_rows(engine, "zcp", "r001")
     assert report["files_skipped"] > 0  # pruning survives compaction
@@ -319,38 +343,29 @@ def test_null_key_lookup_scans_everything(engine, spark):
     assert report["files_scanned"] == report["files_total"] >= 2
 
 
-def test_prune_property_superset_of_matches(tmp_path):
+def test_prune_property_superset_of_matches():
     """Hypothesis-style property (deterministic exhaustive sweep): for
     ANY bracket layout and ANY key, prune() selects a superset of the
     files that can contain the key, and never selects a skipped file
     twice. Pure driver-side — no Spark."""
-    import itertools
-
-    from miniodb_spark.fs import LocalFS
     from miniodb_spark.zonemap import ZoneMapStore
 
-    fs = LocalFS()
-    store = ZoneMapStore(fs, str(tmp_path / "zm"))
+    store = ZoneMapStore(catalog=None)
     ids = ["a", "c", "e", "g", "i", "k"]
     # every 2-file split of 6 ids into contiguous brackets
     for cut in range(1, len(ids)):
-        doc = {"columns": ["id"], "files": {
-            "dt=d/f1.parquet": {"dt": "d", "n": cut,
-                                "id": [ids[0], ids[cut - 1]]},
-            "dt=d/f2.parquet": {"dt": "d", "n": len(ids) - cut,
-                                "id": [ids[cut], ids[-1]]},
-        }}
-        fs.makedirs(str(tmp_path / "zm" / "t"))
-        fs.write_bytes(str(tmp_path / "zm" / "t" / "gen=0.json"),
-                       __import__("json").dumps(doc).encode())
+        brackets = {
+            "dt=d/f1.parquet": {"id": [ids[0], ids[cut - 1]]},
+            "dt=d/f2.parquet": {"id": [ids[cut], ids[-1]]},
+        }
         listing = [("dt=d/f1.parquet", "d"), ("dt=d/f2.parquet", "d")]
         for key in ids + ["b", "z", "", None]:
-            sel, skipped = store.prune("t", 0, listing, "id", key)
+            sel, skipped = store.prune(brackets, listing, "id", key)
             assert len(sel) + skipped == len(listing)
             # soundness: every file whose bracket admits the key is
             # selected (None admits everywhere: stats ignore NULLs)
             for rel, _dt in listing:
-                lo, hi = doc["files"][rel]["id"]
+                lo, hi = brackets[rel]["id"]
                 must = key is None or (lo <= key <= hi)
                 if must:
                     assert rel in sel, (cut, key, rel)
@@ -358,7 +373,7 @@ def test_prune_property_superset_of_matches(tmp_path):
 
 def test_zonemap_builds_on_streaming_ingest_path(engine, spark):
     """streaming/ingest routes through Engine.ingest_dataframe, so the
-    sidecar appears without any streaming-specific plumbing."""
+    brackets appear without any streaming-specific plumbing."""
     rows = [(f"s{i}", 1_700_000_000_000_000 + i, float(i))
             for i in range(4)]
     df = spark.createDataFrame(rows, "id string, tsl long, v double")
@@ -367,116 +382,39 @@ def test_zonemap_builds_on_streaming_ingest_path(engine, spark):
     engine.catalog.ensure_table("zst")
     engine.ingest_dataframe("zst", df)  # the foreachBatch body's call
     doc = engine.zonemaps.load("zst", 0)
-    assert doc and len(doc["files"]) >= 1
-    for st in doc["files"].values():
+    assert len(doc) >= 1
+    for st in doc.values():
         assert st["id"][0] <= st["id"][1]
 
 
 def test_build_direct_call_returns_count_on_footer_only_path(engine, spark):
-    """Round-11 verdict task 1: ZoneMapStore.build raised
-    UnboundLocalError whenever EVERY new file was indexed from parquet
-    footers (the primary path on local roots) — `rows` was only bound
-    in the Spark fallback. Direct call, no engine wrapper to swallow
-    the exception: must return the number of files indexed."""
-    from pyspark.sql import types as T
-
+    """Round-11 verdict task 1: ZoneMapStore.build once raised whenever
+    EVERY file was bracketed from parquet footers (the primary path on
+    local roots). Direct call, no engine wrapper to swallow the
+    exception: it returns an entry for every file, all from footers,
+    agreeing with the brackets the flush took from its Arrow rows."""
     _seed(engine, "zbd", n=6, days=3)
     gen_dir = engine._gen_dir("zbd", 0)
-    from miniodb_spark.zonemap import list_generation_files
-
-    n_files = len(list_generation_files(engine.fs, gen_dir))
-    assert n_files >= 3
+    files = engine._gen_listing("zbd", 0)
+    assert len(files) >= 3
     struct = engine._gen_struct("zbd", 0)
-    # wipe the sidecars so every live file counts as new, then build
-    # directly: local root => all-footer path, the crashing case
-    engine.zonemaps.drop("zbd", 0)
-    added = engine.zonemaps.build(
-        engine.spark, "zbd", 0, gen_dir, struct, ("id",)
-    )
-    assert added == n_files
-    # idempotent: nothing new on the second call
-    assert engine.zonemaps.build(
-        engine.spark, "zbd", 0, gen_dir, struct, ("id",)
-    ) == 0
-    doc = engine.zonemaps.load("zbd", 0)
-    assert doc and len(doc["files"]) == n_files
-
-
-def test_concurrent_builders_entries_both_survive(engine):
-    """Round-11 verdict task 6: per-build shard files are append-only,
-    so two builders indexing different fresh files never clobber each
-    other (the old single-file read-modify-write lost the loser's
-    entries). Simulated interleave: both builders list/load BEFORE
-    either writes."""
-    _seed(engine, "zcc", n=4, days=2)
-    gen_dir = engine._gen_dir("zcc", 0)
-    struct = engine._gen_struct("zcc", 0)
-    zm = engine.zonemaps
-    from miniodb_spark.zonemap import list_generation_files
-
-    listing = list_generation_files(engine.fs, gen_dir)
-    assert len(listing) >= 2
-    zm.drop("zcc", 0)
-
-    # builder A indexes file 1, builder B indexes file 2 — via the real
-    # build() but with _footer_stats narrowed to "its" file, after both
-    # have loaded the (empty) sidecar state. build() computes `new`
-    # from load() at entry, so calling them back-to-back reproduces the
-    # interleave: neither sees the other's entries when it writes.
-    import json as _json
-
-    orig_footer = zm._footer_stats
-
-    def only(rel_keep):
-        def fn(gdir, rels, cols):
-            return orig_footer(gdir, [r for r in rels if r == rel_keep],
-                               cols)
-        return fn
-
-    rel_a, rel_b = listing[0][0], listing[1][0]
-    zm._footer_stats = only(rel_a)
-    try:
-        zm.build(engine.spark, "zcc", 0, gen_dir, struct, ("id",))
-    finally:
-        zm._footer_stats = orig_footer
-    # builder B would have loaded before A's write: emulate by building
-    # B's shard from the pre-A state (fresh entries only are written,
-    # so B's shard contains rel_b regardless of A's shard)
-    zm._footer_stats = only(rel_b)
-    try:
-        zm.build(engine.spark, "zcc", 0, gen_dir, struct, ("id",))
-    finally:
-        zm._footer_stats = orig_footer
-    doc = zm.load("zcc", 0)
-    assert rel_a in doc["files"] and rel_b in doc["files"]
-    # shards merged at load are plain JSON docs of the same shape
-    for sp in zm._shard_paths("zcc", 0):
-        sd = _json.loads(engine.fs.read_bytes(sp))
-        assert set(sd) == {"columns", "files"}
-
-
-def test_shards_compact_into_base_after_threshold(engine):
-    """Shard files fold into the base sidecar once COMPACT_SHARDS
-    accumulate — load() stays O(1) small reads in the steady state."""
-    zm = engine.zonemaps
-    n_flushes = zm.COMPACT_SHARDS + 1
-    for i in range(n_flushes):
-        engine.write("zsc", {"v": i}, record_id=f"r{i:03d}",
-                     timestamp_us=T0 + i * DAY)
-        engine.flush("zsc")  # one build (=> one shard) per flush
-    assert len(zm._shard_paths("zsc", 0)) < zm.COMPACT_SHARDS
-    assert engine.fs.exists(zm._path("zsc", 0))
-    doc = zm.load("zsc", 0)
-    assert len(doc["files"]) == n_flushes
-    rows, report = _lookup_rows(engine, "zsc", "r002")
-    assert rows == _full_rows(engine, "zsc", "r002")
-    assert report["files_skipped"] > 0
+    before = engine.zonemaps.spark_fallback_files
+    entries = engine.zonemaps.build(
+        engine.spark, gen_dir, struct, ("id",), files)
+    assert set(entries) == set(files)
+    assert engine.zonemaps.spark_fallback_files == before
+    logged = engine.catalog.live_entries("zbd")[0]
+    for rel, e in entries.items():
+        assert e["size"] == files[rel] == logged[rel]["size"]
+        assert e["rows"] == logged[rel]["rows"]
+        assert e["stats"] == {"id": logged[rel]["stats"]["id"]}
 
 
 def test_build_failure_is_counted_not_swallowed(engine, monkeypatch):
     """Round-11 verdict task 1 (second half): the engine's best-effort
     wrapper must COUNT a zone-map build failure (ops signal), not
-    silently drop it — while the write it trails still succeeds."""
+    silently drop it — while the write it serves still commits, its
+    file with a size and no brackets."""
     def boom(*a, **k):
         raise RuntimeError("synthetic build failure")
 
@@ -485,8 +423,10 @@ def test_build_failure_is_counted_not_swallowed(engine, monkeypatch):
     engine.flush("zbf")  # must not raise
     assert engine.zonemap_build_errors >= 1
     assert "synthetic build failure" in engine.zonemap_last_error
+    (entry,) = engine.catalog.live_entries("zbf")[0].values()
+    assert entry["size"] > 0 and "stats" not in entry
     rows, _ = _lookup_rows(engine, "zbf", "r0")
-    assert len(rows) == 1  # unindexed => full scan, still correct
+    assert len(rows) == 1  # no brackets => full scan, still correct
 
 
 def test_point_lookup_collect_is_capped(spark, tmp_path):
@@ -516,128 +456,21 @@ def test_point_lookup_collect_is_capped(spark, tmp_path):
     assert len(json.loads(res2.json)) == 1
 
 
-def test_shard_merge_property(tmp_path):
-    """Property (hypothesis): for ANY set of shard docs written in any
-    order — including corrupt shards and shards with a mismatched
-    column set — load() returns exactly the base's files overlaid with
-    every well-formed, column-matching shard's files (later shard names
-    win on collision, matching the sorted merge order). Lost entries
-    are impossible by construction; corrupt/mismatched shards degrade
-    to hint loss only."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from miniodb_spark.fs import LocalFS
-    from miniodb_spark.zonemap import ZoneMapStore
-
-    stats = st.fixed_dictionaries(
-        {"dt": st.just("2024-01-01"), "n": st.integers(1, 9),
-         "id": st.tuples(st.just("a"), st.just("z")).map(list)}
-    )
-    shard_files = st.dictionaries(
-        st.sampled_from([f"dt=2024-01-01/f{i}.parquet" for i in range(6)]),
-        stats, min_size=0, max_size=4,
-    )
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        base=st.none() | shard_files,
-        shards=st.lists(
-            st.tuples(
-                shard_files,
-                st.sampled_from(["ok", "corrupt", "wrong_cols"]),
-            ),
-            min_size=0, max_size=5,
-        ),
-    )
-    def check(base, shards):
-        import shutil
-        import json as _json
-
-        root = tmp_path / "zm_prop"
-        shutil.rmtree(root, ignore_errors=True)
-        fs = LocalFS()
-        store = ZoneMapStore(fs, str(root))
-        fs.makedirs(str(root / "t"))
-        if base is not None:
-            fs.write_bytes(
-                str(root / "t" / "gen=0.json"),
-                _json.dumps({"columns": ["id"], "files": base}).encode(),
-            )
-        expected = dict(base or {})
-        for i, (files, kind) in enumerate(shards):
-            path = str(root / "t" / f"gen=0.s{i:02d}.json")
-            if kind == "corrupt":
-                fs.write_bytes(path, b"{not json")
-            elif kind == "wrong_cols":
-                fs.write_bytes(path, _json.dumps(
-                    {"columns": ["other"], "files": files}).encode())
-            else:
-                fs.write_bytes(path, _json.dumps(
-                    {"columns": ["id"], "files": files}).encode())
-                expected.update(files)
-        doc = store.load("t", 0)
-        if base is None and not any(k == "ok" for _, k in shards):
-            # nothing well-formed with the right columns may exist;
-            # a wrong-cols shard can seed the merge (hint-only), so
-            # only assert we never fabricate 'id' hints
-            if doc is not None and doc.get("columns") == ["id"]:
-                assert doc["files"] == {}
-            return
-        assert doc is not None
-        if doc.get("columns") == ["id"]:
-            assert doc["files"] == expected, (doc, expected)
-
-    check()
-
-
-def test_shard_counts_metric(engine):
-    """r12 verdict #5: un-folded shard sidecars per table must be
-    visible as an ops metric (folding stalls degrade load() to
-    O(shards) small reads long before anything is *wrong*)."""
-    zm = engine.zonemaps
-    zm.COMPACT_SHARDS = 999  # hold folds so shards accumulate
-    for i in range(3):
-        engine.write("zmx", {"v": i}, record_id=f"r{i:03d}",
-                     timestamp_us=T0 + i * DAY)
-        engine.flush("zmx")  # one build (=> one shard) per flush
-    counts = zm.shard_counts()
-    assert counts.get("zmx") == 3
-    # folding drains the signal
-    zm._compact("zmx", 0, list(engine.zonemap_columns),
-                engine._gen_dir("zmx", 0), force=True)
-    assert "zmx" not in zm.shard_counts()
-    # and the API facade surfaces it next to zonemap_build_errors
-    from miniodb_spark.api import MiniODBService
-
-    svc = MiniODBService.__new__(MiniODBService)
-    svc.engine = engine
-    svc._counters = {}
-    svc.rate_limiter = None
-    from miniodb_spark.monitoring import MetricsRegistry
-
-    svc.metrics = MetricsRegistry()
-    m = svc.get_metrics()
-    assert "zonemap_shards" in m and isinstance(m["zonemap_shards"], dict)
-
-
 def test_commit_paths_list_generation_once(engine, spark, monkeypatch):
-    """r12 verdict #1: an ingest commit pays TWO directory LISTs in
+    """r12 verdict #1: an ingest commit pays TWO generation LISTs in
     the steady state — one before the Spark write and one after; their
-    difference is the commit's add entries, and the post-write listing
-    also feeds the zone-map build. Round 12 paid three (before + after
-    + zonemap), which showed up as a write-throughput drop on
-    multi-batch ingests."""
-    import miniodb_spark.zonemap as zm_mod
+    difference is the commit's add entries, with the sizes the second
+    LIST read. Bracketing the new files reads their footers and lists
+    nothing."""
+    calls = []
 
-    calls = {"n": 0}
-    real = zm_mod.list_generation_files
+    def counting(name):
+        real = getattr(engine.fs, name)
 
-    def counting(fs, gen_dir):
-        calls["n"] += 1
-        return real(fs, gen_dir)
-
-    monkeypatch.setattr(zm_mod, "list_generation_files", counting)
+        def call(path, *args, **kwargs):
+            calls.append((name, path))
+            return real(path, *args, **kwargs)
+        return call
 
     def batch(lo):
         return spark.range(lo, lo + 50).select(
@@ -649,12 +482,14 @@ def test_commit_paths_list_generation_once(engine, spark, monkeypatch):
         )
 
     engine.ingest_dataframe("lone", batch(0))  # first commit seeds
-    calls["n"] = 0
+    for name in ("list_dirs", "list_files"):
+        monkeypatch.setattr(engine.fs, name, counting(name))
     engine.ingest_dataframe("lone", batch(50))
-    # steady state: the before and after LISTs only (the after one is
-    # shared by the add delta and the zone-map build; no fold is due at
-    # 2 shards < COMPACT_SHARDS)
-    assert calls["n"] == 2, calls["n"]
+    gdir = engine._gen_dir("lone", 0)
+    # one day: each listing is one list_dirs of the generation and one
+    # list_files of its dt partition
+    assert [n for n, p in calls if p.startswith(gdir)] == [
+        "list_dirs", "list_files", "list_dirs", "list_files"], calls
     # correctness unchanged: both batches readable, membership exact
     assert engine.read_table("lone").count() == 100
 
@@ -692,41 +527,33 @@ def test_extract_conjunctive_range_unit():
     assert ex("SELECT * FROM t") is None
 
 
-def test_prune_range_property_superset_of_matches(tmp_path):
+def test_prune_range_property_superset_of_matches():
     """Range twin of the prune() superset property: for ANY bracket
     layout and ANY (lo, hi, inclusivity), prune_range selects every
     file whose bracket intersects the range."""
     import itertools
-    import json as _json
 
-    from miniodb_spark.fs import LocalFS
     from miniodb_spark.zonemap import ZoneMapStore
 
-    fs = LocalFS()
-    store = ZoneMapStore(fs, str(tmp_path / "zm"))
+    store = ZoneMapStore(catalog=None)
     ids = ["a", "c", "e", "g", "i", "k"]
     bounds = [None, "", "a", "b", "e", "k", "z"]
     for cut in range(1, len(ids)):
-        doc = {"columns": ["id"], "files": {
-            "dt=d/f1.parquet": {"dt": "d", "n": cut,
-                                "id": [ids[0], ids[cut - 1]]},
-            "dt=d/f2.parquet": {"dt": "d", "n": len(ids) - cut,
-                                "id": [ids[cut], ids[-1]]},
-        }}
-        fs.makedirs(str(tmp_path / "zm" / "t"))
-        fs.write_bytes(str(tmp_path / "zm" / "t" / "gen=0.json"),
-                       _json.dumps(doc).encode())
+        brackets = {
+            "dt=d/f1.parquet": {"id": [ids[0], ids[cut - 1]]},
+            "dt=d/f2.parquet": {"id": [ids[cut], ids[-1]]},
+        }
         listing = [("dt=d/f1.parquet", "d"), ("dt=d/f2.parquet", "d")]
         for lo, hi, lo_i, hi_i in itertools.product(
             bounds, bounds, (True, False), (True, False)
         ):
             sel, skipped = store.prune_range(
-                "t", 0, listing, "id", lo=lo, hi=hi,
+                brackets, listing, "id", lo=lo, hi=hi,
                 lo_incl=lo_i, hi_incl=hi_i)
             assert len(sel) + skipped == len(listing)
             for rel, _dt in listing:
-                fmin, fmax = doc["files"][rel]["id"]
-                # does any indexed id in [fmin, fmax] satisfy the range?
+                fmin, fmax = brackets[rel]["id"]
+                # does any id in [fmin, fmax] satisfy the range?
                 within = [
                     v for v in ids
                     if fmin <= v <= fmax
@@ -1017,7 +844,7 @@ def test_parse_ts_literal_and_typed_prefix_unit():
 
 def test_ts_range_day_grain_prunes_unindexed(engine):
     """Directory-grain time pruning: a timestamp range skips whole
-    out-of-range dt= partitions BY NAME, even with no zone-map sidecar
+    out-of-range dt= partitions BY NAME, even with no zone-map bracket
     at all (dt is derived from timestamp under the UTC session, so an
     out-of-range day provably holds no in-range rows)."""
     import datetime as dt
@@ -1032,8 +859,8 @@ def test_ts_range_day_grain_prunes_unindexed(engine):
         engine.write("ztsd", {"v": h}, record_id=f"b{h}",
                      timestamp_us=day2 + h * 3600 * US)
     engine.flush("ztsd")
-    # remove every sidecar: only the directory names can prune now
-    engine.zonemaps.drop("ztsd")
+    # no file has a bracket: only the directory names can prune now
+    engine = _strip_stats(engine, "ztsd")
     df, report = engine.range_lookup_df(
         "ztsd",
         lo=dt.datetime(2024, 1, 5, 0, 0, 0),
@@ -1051,42 +878,30 @@ def test_ts_range_day_grain_prunes_unindexed(engine):
     assert [r["id"] for r in out] == ["b18", "b6"]
 
 
-def test_sidecar_column_reconfig_self_heals(engine):
-    """Upgrade path for the round-14 column change: a sidecar built by
-    an OLDER engine (columns=["id"] only) must be dropped and rebuilt
-    with the current column set on the next build touch — and until
-    then, timestamp pruning declines (hint-only) rather than
-    mis-pruning."""
-    import datetime as dt
+def test_column_added_to_zonemap_columns_scans_older_files(engine):
+    """A column that joins TableConfig.zonemap_columns after files
+    exist: the older files carry no bracket for it, so they are scanned
+    and return their rows, while files committed afterwards prune."""
+    from miniodb_spark.catalog import TableConfig
 
-    _seed_intraday(engine, "zrc")
-    # simulate the pre-upgrade sidecar: rewrite the merged doc with an
-    # id-only column set (what a round-13 engine would have left)
-    doc = engine.zonemaps.load("zrc", 0)
-    assert doc is not None and "timestamp" in doc["columns"]
-    old = {"columns": ["id"],
-           "files": {rel: {k: v for k, v in st.items()
-                           if k != "timestamp"}
-                     for rel, st in doc["files"].items()}}
-    import json as _json
-
-    engine.zonemaps.drop("zrc", 0)
-    engine.fs.write_bytes(engine.zonemaps._path("zrc", 0),
-                          _json.dumps(old).encode())
-    # old sidecar: ts pruning must decline (scan all), stay correct
-    noon = dt.datetime(2024, 1, 2, 12, 0, 0)
-    df, rep = engine.range_lookup_df("zrc", lo=noon, id_col="timestamp")
-    assert sorted(r["id"] for r in df.select("id").collect()) == \
-        ["e18", "e19", "e20"]
-    assert rep["files_skipped"] == 0, rep  # id-only brackets can't skip
-    # next build touch detects the reconfiguration and rebuilds
-    engine._build_zonemap("zrc", 0)
-    doc2 = engine.zonemaps.load("zrc", 0)
-    assert set(doc2["columns"]) == {"id", "timestamp"}, doc2["columns"]
-    df2, rep2 = engine.range_lookup_df("zrc", lo=noon, id_col="timestamp")
-    assert sorted(r["id"] for r in df2.select("id").collect()) == \
-        ["e18", "e19", "e20"]
-    assert rep2["files_skipped"] >= 1, rep2
+    engine.create_table("zrc", TableConfig(name="zrc"))
+    for w, rid in ((1, "a"), (2, "b"), (10, "c"), (20, "d")):
+        engine.write("zrc", {"w": w}, record_id=rid, timestamp_us=T0)
+        if rid in ("b", "d"):
+            engine.flush("zrc")  # files a=[1, 2] and c=[10, 20]
+    assert not any("w" in b for b in engine.zonemaps.load("zrc", 0).values())
+    engine.get_table("zrc").zonemap_columns.append("w")
+    for w, rid in ((100, "e"), (200, "f")):
+        engine.write("zrc", {"w": w}, record_id=rid, timestamp_us=T0)
+    engine.flush("zrc")
+    assert sorted(b["w"] for b in engine.zonemaps.load("zrc", 0).values()
+                  if "w" in b) == [[100, 200]]
+    out = json.loads(engine.query("SELECT id FROM zrc WHERE w < 50 ORDER BY id"))
+    assert [r["id"] for r in out] == ["a", "b", "c", "d"]
+    assert engine.query_stats["zonemap"]["files_skipped"] == 1
+    df, rep = engine.multi_range_lookup_df("zrc", {"w": (15, False, None, True)})
+    assert sorted(r["id"] for r in df.select("id").collect()) == ["d", "e", "f"]
+    assert rep["files_scanned"] == rep["files_total"] == 3
 
 
 def test_rewrite_between_unit():
@@ -1406,12 +1221,11 @@ def test_numeric_pruning_declines_on_string_column(engine):
 
 def test_numeric_pruning_nan_file_stays_unindexed(engine):
     """Spark orders NaN GREATER than every number (`w > 50` MATCHES a
-    NaN row), while parquet footer stats EXCLUDE NaN — so a
-    NaN-containing file must never carry a bracket for that column:
-    it is always scanned (the NaN row comes back), never mis-skipped,
-    and sidecars stay strict JSON."""
-    import json as _json
-
+    NaN row), while parquet footer stats and Arrow's min_max EXCLUDE
+    NaN — so a file holding a NaN must never carry a bracket for that
+    column, whether a flush, an ingest or a compaction wrote it: it is
+    always scanned (the NaN row comes back), never mis-skipped, and the
+    log stays strict JSON."""
     from miniodb_spark.catalog import TableConfig
 
     engine.create_table("znan", TableConfig(
@@ -1426,26 +1240,43 @@ def test_numeric_pruning_nan_file_stays_unindexed(engine):
         engine.write("znan", {"w": w}, record_id=f"b{i}", timestamp_us=T0)
     engine.flush("znan")
     # Spark semantics ground truth: NaN > 50 is TRUE
-    out = _json.loads(engine.query(
+    out = json.loads(engine.query(
         "SELECT id FROM znan WHERE w > 50 ORDER BY id"))
     assert [r["id"] for r in out] == ["b1"], out
     # finite matches + the NaN row for a lower bound
-    out2 = _json.loads(engine.query(
+    out2 = json.loads(engine.query(
         "SELECT id FROM znan WHERE w > 5 ORDER BY id"))
     assert [r["id"] for r in out2] == ["b0", "b1", "b2"], out2
     # pruned-path superset contract directly
     df, _ = engine.multi_range_lookup_df(
         "znan", {"w": (50, False, None, True)})
     assert [r["id"] for r in df.select("id").collect()] == ["b1"]
-    # sidecar is strict JSON; the NaN file carries no "w" bracket
-    doc = engine.zonemaps.load("znan", 0)
-    assert doc is not None
-    _json.loads(_json.dumps(doc, allow_nan=False))
-    rel_brackets = [st.get("w") for st in doc["files"].values()
-                    if st.get("w")]
-    assert all(lo == lo and hi == hi for lo, hi in rel_brackets)
-    # exactly one file (the clean one) is indexed on w
-    assert len(rel_brackets) == 1 and rel_brackets[0] == [0.5, 2.5]
+
+    def w_brackets():
+        brackets = engine.zonemaps.load("znan", 0)
+        # every file keeps its id bracket; only w is left out
+        assert all("id" in b for b in brackets.values())
+        return sorted(b["w"] for b in brackets.values() if "w" in b)
+
+    # exactly one file (the clean one) is bracketed on w
+    assert w_brackets() == [[0.5, 2.5]]
+    # ingest: the Spark aggregate's max() turns NaN, so no bracket
+    batch = engine.spark.createDataFrame(
+        [("c0", 40.0), ("c1", float("nan"))], "id string, w double")
+    engine.ingest_dataframe("znan", batch.select(
+        "id", F.timestamp_micros(F.lit(T0)).alias("timestamp"), "w"))
+    assert w_brackets() == [[0.5, 2.5]]
+    for i, w in enumerate((3.0, 4.0)):
+        engine.write("znan", {"w": w}, record_id=f"d{i}", timestamp_us=T0)
+        engine.flush("znan")
+    assert w_brackets() == [[0.5, 2.5], [3.0, 3.0], [4.0, 4.0]]
+    # compaction merges every file of the day into one holding NaNs
+    assert engine.compact("znan")[0]["outputs"] == 1
+    assert w_brackets() == []
+    out3 = json.loads(engine.query(
+        "SELECT id FROM znan WHERE w > 50 ORDER BY id"))
+    assert [r["id"] for r in out3] == ["b1", "c1"], out3
+    _assert_strict_json_log(engine, "znan")
 
 
 def test_multi_table_join_pruning_sql_path(engine):
@@ -1664,33 +1495,27 @@ def test_dq_literal_spoof_never_prunes_e2e(engine):
 def test_engine_written_files_index_via_footer_fast_path(engine):
     """Engine parquet output must carry min/max footer statistics for
     every zone-map column — including timestamp, which the legacy
-    INT96 output type silently lacked (no stats -> every build fell
+    INT96 output type silently lacked (no stats -> every bracket fell
     back to a distributed aggregation job; r17 pins
-    spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS)."""
-    from miniodb_spark.zonemap import list_generation_files
+    spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS) — and the
+    footers agree with the brackets a flush takes from its Arrow rows."""
+    from miniodb_spark.zonemap import _footer_stats
 
     _seed(engine, "zft", n=4, days=2)
     gdir = engine._gen_dir("zft", 0)
-    listing = list_generation_files(engine.fs, gdir)
-    assert listing
-    stats = engine.zonemaps._footer_stats(
-        gdir, [rel for rel, _ in listing], ("id", "timestamp")
-    )
-    # every written file indexed metadata-only, no Spark job needed
-    assert set(stats) == {rel for rel, _ in listing}
-    for st in stats.values():
+    files = engine._gen_listing("zft", 0)
+    assert files
+    stats = _footer_stats(gdir, list(files), ["id", "timestamp"])
+    # every written file bracketed metadata-only, no Spark job needed
+    assert set(stats) == set(files)
+    doc = engine.zonemaps.load("zft", 0)
+    for rel, (rows, st) in stats.items():
         lo, hi = st["timestamp"]
         assert lo <= hi
-        # canonical naive-UTC string form (see zonemap._jsonable) —
-        # what the pruner compares against Spark-collected bounds
+        # canonical naive-UTC string form (see zonemap._jsonable)
         assert "T" not in lo and "+" not in lo
-    # and the build itself agrees with the sidecar the flush produced:
-    # the flush-time build (which passed its own listing) must have
-    # indexed the same files with the same timestamp brackets
-    doc = engine.zonemaps.load("zft", 0)
-    assert doc is not None and set(doc["files"]) == set(stats)
-    for rel, st in stats.items():
-        assert doc["files"][rel]["timestamp"] == st["timestamp"]
+        assert rows == 2
+        assert doc[rel] == st
 
 
 def test_sql_path_prune_error_is_counted_not_swallowed(engine, monkeypatch):
@@ -1703,7 +1528,7 @@ def test_sql_path_prune_error_is_counted_not_swallowed(engine, monkeypatch):
     assert engine.query_stats["zonemap"]["prune_errors"] == 0
 
     def boom(*args, **kwargs):
-        raise RuntimeError("sidecar unreadable")
+        raise RuntimeError("brackets unreadable")
 
     # the zone-map pruning both lookup paths share: the pyarrow path
     # declines, and the Spark path counts the error and scans unpruned
@@ -1714,12 +1539,11 @@ def test_sql_path_prune_error_is_counted_not_swallowed(engine, monkeypatch):
 
 
 def test_spark_aggregate_fallback_is_counted(engine):
-    """Files whose footers cannot bracket a zone-map column — every file
-    of a table indexing a DOUBLE column — are indexed by a Spark
-    aggregation instead; the store counts them and get_metrics reports
-    the count next to zonemap_build_errors."""
-    import os
-
+    """Files whose footers cannot bracket a zone-map column — every
+    ingested file of a table indexing a DOUBLE column — are bracketed
+    by a Spark aggregation instead; the store counts them and
+    get_metrics reports the count next to zonemap_build_errors. A flush
+    brackets the rows it holds, with no aggregation."""
     from miniodb_spark.api import MiniODBService
     from miniodb_spark.catalog import TableConfig
     from miniodb_spark.monitoring import MetricsRegistry
@@ -1731,12 +1555,19 @@ def test_spark_aggregate_fallback_is_counted(engine):
         engine.write("zdbl", {"value": i * 1.5}, record_id=f"r{i}",
                      timestamp_us=T0 + (i % 3) * DAY)
     engine.flush("zdbl")
-    written = sum(
-        f.endswith(".parquet")
-        for _d, _s, fs in os.walk(os.path.join(engine.root, "zdbl"))
-        for f in fs)
-    assert written == 3
-    assert engine.zonemaps.spark_fallback_files == before + written
+    brackets = engine.zonemaps.load("zdbl", 0)
+    assert len(brackets) == 3 and all("value" in b for b in brackets.values())
+    assert engine.zonemaps.spark_fallback_files == before
+    batch = engine.spark.range(6).select(
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("id"),
+        F.timestamp_micros(F.lit(T0) + (F.col("id") % 3) * DAY).alias("timestamp"),
+        (F.col("id") * 2.5).alias("value"))
+    engine.ingest_dataframe("zdbl", batch)
+    ingested = set(engine.zonemaps.load("zdbl", 0)) - set(brackets)
+    assert ingested
+    assert engine.zonemaps.spark_fallback_files == before + len(ingested)
+    assert all("value" in engine.zonemaps.load("zdbl", 0)[rel]
+               for rel in ingested)
     assert engine.zonemap_build_errors == 0
 
     svc = MiniODBService.__new__(MiniODBService)
@@ -1745,8 +1576,10 @@ def test_spark_aggregate_fallback_is_counted(engine):
     svc.rate_limiter = None
     svc.metrics = MetricsRegistry()
     m = svc.get_metrics()
-    assert m["zonemap_spark_fallback_files"] == before + written
+    assert m["zonemap_spark_fallback_files"] == before + len(ingested)
     # an integer column keeps the footer path: no fallback
-    engine.write("zint", {"v": 1}, record_id="a", timestamp_us=T0)
-    engine.flush("zint")
-    assert engine.zonemaps.spark_fallback_files == before + written
+    n = engine.zonemaps.spark_fallback_files
+    engine.ingest_dataframe("zint", batch.select(
+        "id", "timestamp", F.col("value").cast("long").alias("v")))
+    assert engine.zonemaps.spark_fallback_files == n
+
