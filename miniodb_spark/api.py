@@ -42,6 +42,18 @@ class MiniODBService:
         self.audit = audit  # audit.AuditLogger or None (reference audit.go)
         self._started = time.time()
         self._counters = {"writes": 0, "queries": 0, "updates": 0, "deletes": 0}
+        self.metrics.counter(
+            "miniodb_arrow_path_total",
+            "key lookups and aggregates answered without a Spark job "
+            "(outcome=served) or run on Spark (outcome=declined, by reason)",
+            source=self._arrow_path_counts)
+
+    def _arrow_path_counts(self):
+        for kind in ("lookups", "aggregates"):
+            stats = self.engine.query_stats[kind]
+            yield {"kind": kind, "outcome": "served"}, stats["arrow"]
+            for reason, n in sorted(stats["declined"].items()):
+                yield {"kind": kind, "outcome": "declined", "reason": reason}, n
 
     def _audited(self, action: str, table: str = "", record_id: str = "",
                  user_id: str = ""):
@@ -361,11 +373,12 @@ class MiniODBService:
                         "zonemap", {"queries": 0, "files_skipped": 0,
                                     "prune_errors": 0})
                 ),
-                # key lookups (GetRecord and `id = '…'` queries) served
-                # without Spark, on Spark, and each decline's reason
-                "lookups": dict(
-                    self.engine.query_stats["lookups"],
-                    declined=dict(self.engine.query_stats["lookups"]["declined"])),
+                # key lookups (GetRecord and `id = '…'` queries) and
+                # one-table aggregates served without Spark, on Spark,
+                # and each decline's reason
+                **{kind: dict(self.engine.query_stats[kind],
+                              declined=dict(self.engine.query_stats[kind]["declined"]))
+                   for kind in ("lookups", "aggregates")},
             },
             # zone-map bracket failures: their files were committed
             # without brackets, so lookups scan them (counted in

@@ -35,6 +35,7 @@ import json
 import math
 import os
 import threading
+import weakref
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +69,20 @@ _TYPE_MAP: dict[str, T.DataType] = {
 _PARALLEL_LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _SPARK_LISTING_THRESHOLD = 32
 _LISTING_CONF_LOCK = threading.Lock()
+# one lock per SparkSession over its temp views: a query registers each
+# table's view under the table's own name and analyzes against it, so
+# two queries on one table must not interleave between the two steps
+_VIEW_LOCKS: "weakref.WeakKeyDictionary[SparkSession, threading.Lock]" = \
+    weakref.WeakKeyDictionary()
+_VIEW_LOCKS_GUARD = threading.Lock()
+
+
+def _view_lock(spark: SparkSession) -> threading.Lock:
+    with _VIEW_LOCKS_GUARD:
+        lock = _VIEW_LOCKS.get(spark)
+        if lock is None:
+            lock = _VIEW_LOCKS[spark] = threading.Lock()
+        return lock
 
 # the nodes ``Dataset.toJSON().limit(n)`` puts over the query's own plan
 _TO_JSON_LIMIT = ("GlobalLimit", "LocalLimit")
@@ -297,12 +312,17 @@ class Engine:
         self.max_result_rows = max_result_rows
         self.query_stats: dict[str, Any] = {
             "count": 0, "total_ms": 0.0, "slow": [], "truncated": 0,
-            # key lookups served without Spark, on Spark, and why not
+            # key lookups and aggregates served without Spark, on
+            # Spark, and why not
             "lookups": {"arrow": 0, "spark": 0, "declined": {}},
+            "aggregates": {"arrow": 0, "spark": 0, "declined": {}},
         }
         self._buffers: dict[str, WriteBuffer] = {}
         # read_persisted's head scan per table: (catalog key, DataFrame)
         self._head_scans: dict[str, tuple] = {}
+        # the aggregate path's schema-only view per table: (types, DataFrame)
+        self._schema_views: dict[str, tuple] = {}
+        self._view_lock = _view_lock(spark)
         self._lock = threading.RLock()
         # per-table flush serialization: a flush's drain/requeue and an
         # ingest's before/after LIST assume one commit per table at a
@@ -1045,10 +1065,14 @@ class Engine:
         """Engine defaults (id, timestamp) plus the table's configured
         extra columns (TableConfig.zonemap_columns) — the reference's
         per-table multi-column index config. Order-stable and
-        deduped."""
+        deduped. A configured name resolves to the table's column of
+        the same name in any case, as Spark resolves it
+        (``caseSensitive=false``)."""
         cols = list(self.zonemap_columns)
         cfg = self.catalog.get_table(table)
+        names = {c.lower(): c for c in self.catalog.schema_of(table)}
         for c in (getattr(cfg, "zonemap_columns", None) or ()):
+            c = names.get(c.lower(), c)
             if c not in cols:
                 cols.append(c)
         return tuple(cols)
@@ -1200,22 +1224,7 @@ class Engine:
         range additionally drops whole out-of-range ``dt=`` day
         directories by NAME before any bracket is consulted (see
         range_lookup_df)."""
-        ts_rng = ranges.get("timestamp")
-
-        def select_fn(listing, brackets):
-            if ts_rng is not None:
-                listing = _filter_listing_by_day(listing, ts_rng)
-            for col, (lo, lo_i, hi, hi_i) in ranges.items():
-                if not listing:
-                    break
-                sel, _ = self.zonemaps.prune_range(
-                    brackets, listing, col,
-                    lo=lo, hi=hi, lo_incl=lo_i, hi_incl=hi_i)
-                keep = set(sel)
-                listing = [(rel, dt) for rel, dt in listing
-                           if rel in keep]
-            return [rel for rel, _dt in listing]
-
+        select_fn = self._range_select([(c, *r) for c, r in ranges.items()])
         pred = F.lit(True)
         for col, (lo, lo_i, hi, hi_i) in ranges.items():
             c = F.col(col)
@@ -1225,6 +1234,34 @@ class Engine:
                 pred = pred & (c <= F.lit(hi) if hi_i else c < F.lit(hi))
         return self._pruned_hybrid_scan(
             table, tuple(ranges.keys()), select_fn, pred)
+
+    def _range_select(self, conds: list[tuple]):
+        """The per-generation file selection (see :meth:`_prune_live`) of
+        ``conds``, each ``(column, lo, lo_incl, hi, hi_incl)`` or
+        ``(column, [values])``: a file survives when every condition's
+        bracket admits it. A timestamp range also drops the days it
+        misses by the ``dt=`` directory name (see range_lookup_df)."""
+
+        def select_fn(listing, brackets):
+            for cond in conds:
+                if not listing:
+                    break
+                col = cond[0]
+                if len(cond) == 2:
+                    hit: set[str] = set()
+                    for v in cond[1]:
+                        hit.update(self.zonemaps.prune(brackets, listing, col, v)[0])
+                else:
+                    if col == "timestamp":
+                        listing = _filter_listing_by_day(listing, cond[1:])
+                    _col, lo, lo_i, hi, hi_i = cond
+                    hit = set(self.zonemaps.prune_range(
+                        brackets, listing, col,
+                        lo=lo, hi=hi, lo_incl=lo_i, hi_incl=hi_i)[0])
+                listing = [(rel, dt) for rel, dt in listing if rel in hit]
+            return [rel for rel, _dt in listing]
+
+        return select_fn
 
     def _pruned_hybrid_scan(
         self, table: str, id_col, select_fn, key_pred,
@@ -1251,9 +1288,9 @@ class Engine:
                 persisted = persisted.unionByName(p)
             persisted = persisted.filter(key_pred)
         buffered = self.read_buffer(table)
-        if buffered is not None and all(
-            c in buffered.columns for c in req
-        ):
+        if buffered is not None and {c.lower() for c in req} <= {
+            c.lower() for c in buffered.columns
+        }:
             buffered = buffered.filter(key_pred)
         elif buffered is not None:
             buffered = None
@@ -1297,8 +1334,8 @@ class Engine:
         zone-map contract). Returns ``[(gen, [(rel, dt)])]`` for the
         generations with a selected file, and the pruning report (files
         listed / scanned / skipped). A generation lacking a column of
-        ``req`` holds only NULLs there, which no predicate matches:
-        skipped."""
+        ``req`` (compared in any case, as Spark resolves names) holds
+        only NULLs there, which no predicate matches: skipped."""
         gens = self.catalog.gen_schemas(table)
         report = {"files_total": 0, "files_scanned": 0,
                   "files_skipped": 0, "gens": len(gens)}
@@ -1309,7 +1346,7 @@ class Engine:
             if not gcols or not listing:
                 continue
             report["files_total"] += len(listing)
-            if all(c in gcols for c in req):
+            if {c.lower() for c in req} <= {c.lower() for c in gcols}:
                 keep = set(select_fn(listing, self.zonemaps.load(table, i)))
                 sel = [(rel, dt) for rel, dt in listing if rel in keep]
             else:
@@ -1340,10 +1377,10 @@ class Engine:
         keys = list(value) if isinstance(value, (list, tuple, set)) else [value]
         served = None
         if id_col == "id" and keys and all(isinstance(k, str) for k in keys):
-            served = self._arrow_lookup(
-                lambda: lookup.lookup(self, table, keys, with_gen=True))
+            served = self._arrow_served(
+                "lookups", lambda: lookup.lookup(self, table, keys, with_gen=True))
         else:
-            self._note_lookup("shape")
+            self._note_decline("lookups", "shape")
         if served is not None:
             rows, report = served
             rows, truncated = self._capped(rows)
@@ -1354,30 +1391,31 @@ class Engine:
             rows, truncated = self._collect_json(df)
         return QueryResult("[" + ",".join(rows) + "]", truncated), report
 
-    def _arrow_lookup(self, run):
-        """``run()``'s result, counted as a lookup served without Spark;
-        or None when it declined (counted by reason)."""
+    def _arrow_served(self, kind: str, run):
+        """``run()``'s result, counted in ``query_stats[kind]`` (kind:
+        "lookups" or "aggregates") as served without Spark; or None when
+        it declined (counted by reason)."""
         from .lookup import Declined
 
         try:
             out = run()
         except Declined as d:
-            self._note_lookup(d.reason)
+            self._note_decline(kind, d.reason)
             return None
         except Exception as exc:
             # the Spark path answers it; the fault is counted and logged
             import logging
 
             logging.getLogger(__name__).warning(
-                "arrow key lookup failed (answering on Spark): %r", exc)
-            self._note_lookup("error")
+                "arrow %s path failed (answering on Spark): %r", kind, exc)
+            self._note_decline(kind, "error")
             return None
-        self.query_stats["lookups"]["arrow"] += 1
+        self.query_stats[kind]["arrow"] += 1
         return out
 
-    def _note_lookup(self, reason: str) -> None:
-        """A key lookup that runs on Spark, and why."""
-        stats = self.query_stats["lookups"]
+    def _note_decline(self, kind: str, reason: str) -> None:
+        """A key lookup or aggregate that runs on Spark, and why."""
+        stats = self.query_stats[kind]
         stats["spark"] += 1
         stats["declined"][reason] = stats["declined"].get(reason, 0) + 1
 
@@ -1466,6 +1504,7 @@ class Engine:
             raise ValueError(
                 "at_version must be a {table: version} dict for a "
                 f"multi-table query (tables: {sorted(tables)})")
+        views = []
         for t in tables:
             gate.validate_table_name(t)
             # pick up metadata committed by other driver processes on the
@@ -1498,8 +1537,13 @@ class Engine:
                 df = self.spark.createDataFrame([], self._empty_struct(t))
             if "gen" in df.columns:  # internal layout detail, not user-visible
                 df = df.drop("gen")
-            df.createOrReplaceTempView(t)
-        return self.spark.sql(sql)
+            views.append((t, df))
+        # spark.sql analyzes eagerly: from then on the DataFrame holds
+        # the views' plans, and another query may replace them
+        with self._view_lock:
+            for t, df in views:
+                df.createOrReplaceTempView(t)
+            return self.spark.sql(sql)
 
     @staticmethod
     def _final_sql(sql: str, limit: int | None,
@@ -1517,40 +1561,61 @@ class Engine:
 
     def _arrow_query(self, sql: str, limit: int | None,
                      default_table: str | None, time_travel: bool):
-        """A key-lookup query answered without Spark: ``(rows, report)``,
-        or None for query_df to run. Only a one-table query whose key
-        gate.extract_conjunctive_keys already found is a candidate (so
-        range and aggregate queries pay nothing); it is served when
-        Spark's parsed plan is exactly a lookup
-        (:func:`miniodb_spark.lookup.parse_lookup`) and
-        :func:`miniodb_spark.lookup.lookup` does not decline."""
+        """A one-table query answered without Spark: ``rows``, or None
+        for query_df to run. Spark's parsed plan (one ``parsePlan``)
+        picks the path: an aggregate query goes to
+        :func:`miniodb_spark.lookup.aggregate`, a query whose key
+        gate.extract_conjunctive_keys found to
+        :func:`miniodb_spark.lookup.lookup` when the plan is exactly a
+        lookup (:func:`~miniodb_spark.lookup.parse_lookup`); each counts
+        in ``query_stats`` as served or declined, by reason. Time travel
+        and other queries run on Spark uncounted (a time-travel lookup
+        counts as declined)."""
         from . import lookup
 
         sql, tables = self._final_sql(sql, limit, default_table)
-        keys = gate.extract_conjunctive_keys(sql) if len(tables) == 1 else None
-        if keys is None:
+        if len(tables) != 1:
             return None
         if time_travel:
-            self._note_lookup("time_travel")
+            if gate.extract_conjunctive_keys(sql) is not None:
+                self._note_decline("lookups", "time_travel")
             return None
         t = tables[0]
         gate.validate_table_name(t)
         self.catalog.refresh_if_changed(t)
         if self.catalog.get_table(t) is None:
             return None  # query_df raises the error
+        try:
+            nodes = lookup.parse(self.spark, sql)
+        except lookup.Declined:
+            nodes = []
+        if lookup.is_aggregate(nodes):
+            kind = "aggregates"
 
-        def run():
-            columns, n, key = lookup.parse_lookup(self.spark, sql, t)
-            if keys != [key]:
-                raise lookup.Declined("shape")
-            rows, report = lookup.lookup(self, t, [key], columns, n)
-            zs = self.query_stats.setdefault(
-                "zonemap", {"queries": 0, "files_skipped": 0, "prune_errors": 0})
-            zs["queries"] += 1
-            zs["files_skipped"] += report["files_skipped"]
+            def run():
+                return lookup.aggregate(self, t, sql, nodes)
+        else:
+            keys = gate.extract_conjunctive_keys(sql)
+            if keys is None:
+                return None
+            kind = "lookups"
+
+            def run():
+                columns, n, key = lookup.parse_lookup(nodes, t)
+                if keys != [key]:
+                    raise lookup.Declined("shape")
+                return lookup.lookup(self, t, [key], columns, n)
+
+        def counted():
+            rows, report = run()
+            if report is not None:
+                zs = self.query_stats.setdefault(
+                    "zonemap", {"queries": 0, "files_skipped": 0, "prune_errors": 0})
+                zs["queries"] += 1
+                zs["files_skipped"] += report["files_skipped"]
             return rows
 
-        return self._arrow_lookup(run)
+        return self._arrow_served(kind, counted)
 
     def _pruned_view(self, t: str, sql: str, tables) -> DataFrame | None:
         """Zone-map file pruning on the SQL path: when the WHERE clause
@@ -1722,13 +1787,15 @@ class Engine:
         ``QueryResult``, so the truncated flag survives cache hits.
 
         A cache miss that is a plain key lookup — ``SELECT <*|columns>
-        FROM t WHERE id = '<key>' [LIMIT n]`` by Spark's parsed plan, not
-        time travel — is answered without a Spark job
-        (:meth:`_arrow_query`, :mod:`miniodb_spark.lookup`) with the same
-        JSON text, cap and pruning counts; everything else, and every
-        lookup that path declines, runs through :meth:`query_df`.
-        ``query_stats["lookups"]`` counts lookups served each way, and
-        slow-query entries carry the ``path`` taken."""
+        FROM t WHERE id = '<key>' [LIMIT n]`` by Spark's parsed plan — or
+        a filtered aggregate over one table, not time travel, is
+        answered without a Spark job (:meth:`_arrow_query`,
+        :mod:`miniodb_spark.lookup`) with the same JSON text, cap and
+        pruning counts; everything else, and every query that path
+        declines, runs through :meth:`query_df`.
+        ``query_stats["lookups"]`` and ``["aggregates"]`` count the
+        queries served each way, and slow-query entries carry the
+        ``path`` taken."""
         import time as _time
 
         checked = gate.validate_query(sql)

@@ -30,22 +30,32 @@ def _fmt_labels(labels: dict[str, str] | None) -> str:
 
 
 class Counter:
-    def __init__(self, name: str, help_: str = ""):
+    """A monotonic counter per label set. With ``source`` the counts are
+    kept elsewhere and read at each exposition: ``source()`` yields
+    ``(labels, value)`` pairs."""
+
+    def __init__(self, name: str, help_: str = "", source=None):
         self.name, self.help = name, help_
         self._vals: dict[tuple, float] = {}
         self._lock = threading.Lock()
+        self._source = source
 
     def inc(self, amount: float = 1.0, **labels: str) -> None:
         key = tuple(sorted(labels.items()))
         with self._lock:
             self._vals[key] = self._vals.get(key, 0.0) + amount
 
+    def values(self) -> dict[tuple, float]:
+        if self._source is None:
+            return dict(self._vals)
+        return {tuple(sorted(labels.items())): float(v) for labels, v in self._source()}
+
     def value(self, **labels: str) -> float:
-        return self._vals.get(tuple(sorted(labels.items())), 0.0)
+        return self.values().get(tuple(sorted(labels.items())), 0.0)
 
     def expose(self) -> list[str]:
         lines = [f"# HELP {self.name} {self.help}", f"# TYPE {self.name} counter"]
-        for key, v in sorted(self._vals.items()):
+        for key, v in sorted(self.values().items()):
             lines.append(f"{self.name}{_fmt_labels(dict(key))} {v}")
         return lines
 
@@ -127,8 +137,8 @@ class MetricsRegistry:
         self._metrics: dict[str, Any] = {}
         self._lock = threading.Lock()
 
-    def counter(self, name: str, help_: str = "") -> Counter:
-        return self._get(name, lambda: Counter(name, help_))
+    def counter(self, name: str, help_: str = "", source=None) -> Counter:
+        return self._get(name, lambda: Counter(name, help_, source))
 
     def gauge(self, name: str, help_: str = "") -> Gauge:
         return self._get(name, lambda: Gauge(name, help_))
@@ -158,7 +168,7 @@ class MetricsRegistry:
                 out[name] = m.summary() | {"p50": m.quantile(0.5),
                                            "p99": m.quantile(0.99)}
             elif isinstance(m, (Counter, Gauge)):
-                vals = m._vals
+                vals = m.values() if isinstance(m, Counter) else m._vals
                 out[name] = (vals.get((), 0.0) if set(vals) <= {()}
                              else {_fmt_labels(dict(k)): v for k, v in vals.items()})
         return out
