@@ -181,34 +181,58 @@ def _filter_listing_by_day(listing, ts_range):
     return out
 
 
-_TS_LIT_RE = __import__("re").compile(
-    r"^\d{4}-\d{2}-\d{2}(?:[ T]\d{2}:\d{2}(?::\d{2}(?:\.\d{1,6})?)?)?$")
+def _utc(v):
+    """``v`` as a Spark literal; a naive datetime is read as UTC (the zone
+    of the zone-map brackets), not as the Python process's local time."""
+    import datetime as _dtm
+
+    if isinstance(v, _dtm.datetime) and v.tzinfo is None:
+        v = v.replace(tzinfo=_dtm.timezone.utc)
+    return F.lit(v)
 
 
-def _parse_ts_literal(lit: str | None):
-    """A quoted SQL literal as a tz-naive datetime, or None when typed
-    timestamp semantics can't be guaranteed — the decline-on-doubt gate
-    for zone-map timestamp pruning. Rejects tz-aware forms (the engine
-    stores naive-UTC brackets under session timeZone=UTC; an offset
-    literal would need tz arithmetic the string bracket can't express).
+def _local_meta_root(fs, root: str) -> str:
+    """The driver-local metadata directory of an object-store ``root``:
+    ``~/.miniodb_spark_meta/<sha256(root)[:16]>``, tied to the store by a
+    random id written once under ``<root>/_meta/store_id`` and recorded
+    beside the catalog. A directory recording another id belonged to an
+    earlier store at the same URI, whose data is gone: it is set aside as
+    ``<dir>.<its id>.<ns>``, neither read nor deleted. A directory without an
+    id (written before stores had one) adopts the store's, unless the id
+    was created just now for a store holding no table: then the
+    directory is as stale and is set aside too."""
+    import hashlib
+    import time
 
-    The shape gate (_TS_LIT_RE) admits only the dashed forms whose
-    Spark string→timestamp cast provably agrees with
-    ``datetime.fromisoformat``: ``YYYY-MM-DD`` optionally followed by
-    ``[ T]HH:MM[:SS[.ffffff]]``. Python ≥3.11 fromisoformat also takes
-    compact forms Spark casts to NULL (``'20240101'``,
-    ``'2024-01-01T10'``) — those must decline HERE so the documented
-    invariant ("a declined parse only skips an optimization") holds
-    without leaning on the outer SQL's re-filter (r14 ADVICE, low)."""
-    if lit is None or not _TS_LIT_RE.match(lit):
-        return None
-    import datetime as _dt
-
-    try:
-        parsed = _dt.datetime.fromisoformat(lit)
-    except (ValueError, TypeError):
-        return None
-    return None if parsed.tzinfo is not None else parsed
+    meta = os.path.join(os.path.expanduser("~/.miniodb_spark_meta"),
+                        hashlib.sha256(root.encode()).hexdigest()[:16])
+    marker = fsmod.join(root, "_meta", "store_id")
+    created = fs.create_bytes_if_absent(marker, os.urandom(16).hex().encode())
+    for _ in range(40):  # a concurrent creator writes its id just after creating
+        store_id = fs.read_bytes(marker).decode().strip()
+        if store_id:
+            break
+        time.sleep(0.05)
+    else:
+        raise RuntimeError(f"store id {marker} is empty")
+    local = os.path.join(meta, "store_id")
+    if os.path.isdir(meta):
+        known = None
+        if os.path.exists(local):
+            with open(local, encoding="utf-8") as fh:
+                known = fh.read().strip()
+        elif created and not any(os.path.basename(d.rstrip("/")) != "_meta"
+                                 for d in fs.list_dirs(root)):
+            known = "no-id"
+        if known is not None and known != store_id:
+            os.rename(meta, f"{meta}.{known}.{time.time_ns()}")
+    os.makedirs(meta, exist_ok=True)
+    if not os.path.exists(local):
+        tmp = f"{local}.{os.getpid()}.tmp"
+        with open(tmp, "w", encoding="utf-8") as fh:
+            fh.write(store_id)
+        os.replace(tmp, local)
+    return meta
 
 
 class Engine:
@@ -241,15 +265,7 @@ class Engine:
         # local metadata dir is derived from a hash of the root URI.
         self.fs = get_fs(spark, root)
         self.fs.makedirs(root)
-        if "://" in root:
-            import hashlib as _hashlib
-
-            meta_root = os.path.join(
-                os.path.expanduser("~/.miniodb_spark_meta"),
-                _hashlib.sha256(root.encode()).hexdigest()[:16],
-            )
-        else:
-            meta_root = root
+        meta_root = _local_meta_root(self.fs, root) if "://" in root else root
         self.meta_root = meta_root
         os.makedirs(meta_root, exist_ok=True)
         self.catalog = Catalog(meta_root)
@@ -320,7 +336,8 @@ class Engine:
         self._buffers: dict[str, WriteBuffer] = {}
         # read_persisted's head scan per table: (catalog key, DataFrame)
         self._head_scans: dict[str, tuple] = {}
-        # the aggregate path's schema-only view per table: (types, DataFrame)
+        # the schema-only view per table that queries are analyzed over:
+        # (types, DataFrame, {exprId: column})
         self._schema_views: dict[str, tuple] = {}
         self._view_lock = _view_lock(spark)
         self._lock = threading.RLock()
@@ -1107,7 +1124,6 @@ class Engine:
 
     def point_lookup_df(
         self, table: str, value, id_col: str = "id",
-        ts_range: tuple | None = None,
     ) -> tuple[DataFrame | None, dict]:
         """``SELECT * WHERE id_col = value`` that opens only the files
         whose zone-map bracket admits the key (plus anything unindexed
@@ -1120,65 +1136,16 @@ class Engine:
         (multi-get / IN-list): a file is scanned when ANY key's bracket
         admits it. Correctness contract (tested): identical rows to
         ``read_table(table).filter(id_col = value)`` under flushes,
-        appends, updates, deletes and compaction.
-
-        ``ts_range`` — ``(lo, lo_incl, hi, hi_incl)`` datetimes —
-        composes a time window into the same scan: day-grain ``dt=``
-        directory pruning + timestamp bracket intersection on top of
-        the key brackets ("fetch THESE ids within last week"). At
-        scale the key brackets alone admit every file whose id range
-        straddles a key; the window removes every other day's files
-        before a single key bracket is consulted."""
-        if ts_range is not None and ts_range[0] is None \
-                and ts_range[2] is None:
-            # a both-bounds-None window is vacuous: treating it as a
-            # real window would add 'timestamp' to required and skip
-            # generations that lack the column entirely, dropping their
-            # id-matching rows (r14 ADVICE, low) — normalize it away
-            ts_range = None
+        appends, updates, deletes and compaction. A key list inside a
+        time window is :meth:`multi_range_lookup_df`'s
+        ``[(id_col, keys), ("timestamp", lo, lo_incl, hi, hi_incl)]``."""
         keys = list(value) if isinstance(value, (list, tuple, set)) else [value]
-        select_fn = self._key_select(table, keys, id_col, ts_range)
         if len(keys) == 1:
             key_pred = F.col(id_col).eqNullSafe(F.lit(keys[0]))
         else:
             key_pred = F.col(id_col).isin(keys)
-        required = (id_col,)
-        if ts_range is not None:
-            t_lo, t_li, t_hi, t_hi_i = ts_range
-            c = F.col("timestamp")
-            if t_lo is not None:
-                key_pred = key_pred & (
-                    c >= F.lit(t_lo) if t_li else c > F.lit(t_lo))
-            if t_hi is not None:
-                key_pred = key_pred & (
-                    c <= F.lit(t_hi) if t_hi_i else c < F.lit(t_hi))
-            required = (id_col, "timestamp")
-        return self._pruned_hybrid_scan(table, required, select_fn, key_pred)
-
-    def _key_select(self, table: str, keys: list, id_col: str = "id",
-                    ts_range: tuple | None = None):
-        """The per-generation file selection of a key lookup (see
-        :meth:`_prune_live`): the files whose zone-map bracket admits
-        any of ``keys``, within ``ts_range``'s days and brackets."""
-
-        def select_fn(listing, brackets):
-            if ts_range is not None:
-                listing = _filter_listing_by_day(listing, ts_range)
-                t_lo, t_li, t_hi, t_hi_i = ts_range
-                sel, _ = self.zonemaps.prune_range(
-                    brackets, listing, "timestamp",
-                    lo=t_lo, hi=t_hi, lo_incl=t_li, hi_incl=t_hi_i)
-                keep = set(sel)
-                listing = [(rel, dt) for rel, dt in listing
-                           if rel in keep]
-            hit: set[str] = set()
-            for k in keys:
-                s, _ = self.zonemaps.prune(brackets, listing, id_col, k)
-                hit.update(s)
-            # keep listing order for a stable scan plan
-            return [rel for rel, _dt in listing if rel in hit]
-
-        return select_fn
+        return self._pruned_hybrid_scan(
+            table, (id_col,), self._range_select([(id_col, keys)]), key_pred)
 
     def range_lookup_df(
         self, table: str, lo=None, hi=None, lo_incl: bool = True,
@@ -1209,31 +1176,38 @@ class Engine:
             table, {id_col: (lo, lo_incl, hi, hi_incl)})
 
     def multi_range_lookup_df(
-        self, table: str,
-        ranges: dict[str, tuple],
+        self, table: str, ranges: dict[str, tuple] | list[tuple],
     ) -> tuple[DataFrame | None, dict]:
-        """Conjunction of range predicates over several columns —
-        ``{col: (lo, lo_incl, hi, hi_incl)}`` — pruning with EVERY
-        column's zone-map brackets intersected (a file survives only
-        if every range's bracket admits it). The shape this serves at
-        scale: keyset pagination inside a time window
-        (``id > cursor AND timestamp BETWEEN ...``) — the id bracket
-        alone admits every file of the cursor's lexicographic tail,
-        the time bracket alone admits every file of the window; the
-        intersection opens just their overlap. The ``timestamp``
-        range additionally drops whole out-of-range ``dt=`` day
-        directories by NAME before any bracket is consulted (see
-        range_lookup_df)."""
-        select_fn = self._range_select([(c, *r) for c, r in ranges.items()])
+        """Conjunction of conditions over several columns, pruning with
+        EVERY condition's zone-map brackets intersected (a file survives
+        only if every condition's bracket admits it). ``ranges`` is
+        ``{col: (lo, lo_incl, hi, hi_incl)}`` or the condition list
+        :meth:`_range_select` takes, ``[(col, lo, lo_incl, hi, hi_incl)
+        | (col, [values])]``; naive datetimes are UTC, as the brackets
+        are. The shape this serves at scale: keyset pagination inside a
+        time window (``id > cursor AND timestamp BETWEEN ...``) — the
+        id bracket alone admits every file of the cursor's
+        lexicographic tail, the time bracket alone admits every file of
+        the window; the intersection opens just their overlap. A
+        ``timestamp`` range additionally drops whole out-of-range
+        ``dt=`` day directories by NAME before any bracket is consulted
+        (see range_lookup_df)."""
+        conds = [(c, *r) for c, r in ranges.items()] if isinstance(ranges, dict) \
+            else list(ranges)
         pred = F.lit(True)
-        for col, (lo, lo_i, hi, hi_i) in ranges.items():
-            c = F.col(col)
+        for cond in conds:
+            c = F.col(cond[0])
+            if len(cond) == 2:
+                pred = pred & c.isin([_utc(v) for v in cond[1]])
+                continue
+            _col, lo, lo_i, hi, hi_i = cond
             if lo is not None:
-                pred = pred & (c >= F.lit(lo) if lo_i else c > F.lit(lo))
+                pred = pred & (c >= _utc(lo) if lo_i else c > _utc(lo))
             if hi is not None:
-                pred = pred & (c <= F.lit(hi) if hi_i else c < F.lit(hi))
+                pred = pred & (c <= _utc(hi) if hi_i else c < _utc(hi))
         return self._pruned_hybrid_scan(
-            table, tuple(ranges.keys()), select_fn, pred)
+            table, tuple(dict.fromkeys(cond[0] for cond in conds)),
+            self._range_select(conds), pred)
 
     def _range_select(self, conds: list[tuple]):
         """The per-generation file selection (see :meth:`_prune_live`) of
@@ -1479,14 +1453,14 @@ class Engine:
         """QueryData minus the JSON serialization: gate → rewrites →
         temp-view registration per referenced table → ``spark.sql``.
 
-        A table's view is the zone-map-pruned scan when the SQL pins a
-        key or range (:meth:`_pruned_view`); the full hybrid scan
-        (:meth:`read_table`) is built only when it is the view: no
-        pruning applies, pruning failed, or no file can match and the
-        empty view needs its schema. Both take the table's files from
-        the commit log, never from a directory listing; the persisted
-        half of the full scan is cached per log version
-        (:meth:`read_persisted`).
+        A table's view is the zone-map-pruned scan when the analyzed
+        plan's filters bound one of its zone-map columns
+        (:meth:`_pruned_view`); the full hybrid scan (:meth:`read_table`)
+        is built only when it is the view: no pruning applies, pruning
+        failed, or no file can match and the empty view needs its
+        schema. Both take the table's files from the commit log, never
+        from a directory listing; the persisted half of the full scan is
+        cached per log version (:meth:`read_persisted`).
 
         Time travel: ``at_version`` pins the snapshot by catalog version
         (an int for single-table queries, a ``{table: version}`` dict
@@ -1497,6 +1471,12 @@ class Engine:
         queries never see the write buffer (versions are commit
         points)."""
         sql, tables = self._final_sql(sql, limit, default_table)
+        return self._query_df(sql, tables, None, at_version, as_of_ts_us)
+
+    def _query_df(self, sql: str, tables: list[str], nodes: list[dict] | None,
+                  at_version, as_of_ts_us) -> DataFrame:
+        """:meth:`query_df` of the final SQL text and its tables;
+        ``nodes`` is its parsed plan when the caller already holds it."""
         if at_version is not None and as_of_ts_us is not None:
             raise ValueError("pass at_version or as_of_ts_us, not both")
         time_travel = at_version is not None or as_of_ts_us is not None
@@ -1504,13 +1484,15 @@ class Engine:
             raise ValueError(
                 "at_version must be a {table: version} dict for a "
                 f"multi-table query (tables: {sorted(tables)})")
-        views = []
         for t in tables:
             gate.validate_table_name(t)
             # pick up metadata committed by other driver processes on the
             # same store (flush/rewrite/create/delete) before planning —
             # one os.stat when nothing changed
             self.catalog.refresh_if_changed(t)
+        conds = {} if time_travel else self._plan_conditions(sql, tables, nodes)
+        views = []
+        for t in tables:
             if time_travel:
                 if isinstance(at_version, dict):
                     if t not in at_version:
@@ -1528,7 +1510,7 @@ class Engine:
                 df = self.read_snapshot(t, v)
             else:
                 # the full hybrid scan only when no pruned one replaces it
-                df = self._pruned_view(t, sql, tables)
+                df = self._pruned_view(t, conds.get(t))
                 if df is None:
                     df = self.read_table(t)
             if df is None:
@@ -1559,13 +1541,13 @@ class Engine:
             raise gate.SQLGateError("no table referenced in query")
         return sql, tables
 
-    def _arrow_query(self, sql: str, limit: int | None,
-                     default_table: str | None, time_travel: bool):
+    def _arrow_query(self, sql: str, tables: list[str], nodes: list[dict],
+                     time_travel: bool):
         """A one-table query answered without Spark: ``rows``, or None
-        for query_df to run. Spark's parsed plan (one ``parsePlan``)
-        picks the path: an aggregate query goes to
-        :func:`miniodb_spark.lookup.aggregate`, a query whose key
-        gate.extract_conjunctive_keys found to
+        for query_df to run. Spark's parsed plan ``nodes`` picks the
+        path: an aggregate query goes to
+        :func:`miniodb_spark.lookup.aggregate`, a query whose filter pins
+        ``id`` (:func:`~miniodb_spark.lookup.keys`) to
         :func:`miniodb_spark.lookup.lookup` when the plan is exactly a
         lookup (:func:`~miniodb_spark.lookup.parse_lookup`); each counts
         in ``query_stats`` as served or declined, by reason. Time travel
@@ -1573,11 +1555,10 @@ class Engine:
         counts as declined)."""
         from . import lookup
 
-        sql, tables = self._final_sql(sql, limit, default_table)
         if len(tables) != 1:
             return None
         if time_travel:
-            if gate.extract_conjunctive_keys(sql) is not None:
+            if lookup.keys(nodes) is not None:
                 self._note_decline("lookups", "time_travel")
             return None
         t = tables[0]
@@ -1585,147 +1566,84 @@ class Engine:
         self.catalog.refresh_if_changed(t)
         if self.catalog.get_table(t) is None:
             return None  # query_df raises the error
-        try:
-            nodes = lookup.parse(self.spark, sql)
-        except lookup.Declined:
-            nodes = []
         if lookup.is_aggregate(nodes):
             kind = "aggregates"
 
             def run():
                 return lookup.aggregate(self, t, sql, nodes)
-        else:
-            keys = gate.extract_conjunctive_keys(sql)
-            if keys is None:
-                return None
+        elif lookup.keys(nodes) is not None:
             kind = "lookups"
 
             def run():
                 columns, n, key = lookup.parse_lookup(nodes, t)
-                if keys != [key]:
-                    raise lookup.Declined("shape")
                 return lookup.lookup(self, t, [key], columns, n)
+        else:
+            return None
 
         def counted():
             rows, report = run()
             if report is not None:
-                zs = self.query_stats.setdefault(
-                    "zonemap", {"queries": 0, "files_skipped": 0, "prune_errors": 0})
+                zs = self._zonemap_stats()
                 zs["queries"] += 1
                 zs["files_skipped"] += report["files_skipped"]
             return rows
 
         return self._arrow_served(kind, counted)
 
-    def _pruned_view(self, t: str, sql: str, tables) -> DataFrame | None:
-        """Zone-map file pruning on the SQL path: when the WHERE clause
-        provably pins ``id = 'v'`` (or an id / timestamp / indexed-column
-        range) conjunctively — see gate.extract_conjunctive_eq for the
-        soundness rules — the view is the pruned hybrid scan instead of
-        the full one. The SQL still re-applies every predicate and the
-        pruned set is a superset of matching rows by construction. This
-        is the reference's Redis-min/max query-path pruning (BASELINE.md:
-        file pruning −90% reads) on Spark.
+    def _zonemap_stats(self) -> dict:
+        """``query_stats["zonemap"]``: queries that pruned, the files
+        they skipped and the pruning failures."""
+        return self.query_stats.setdefault(
+            "zonemap", {"queries": 0, "files_skipped": 0, "prune_errors": 0})
 
-        Returns None when nothing is provable or pruning failed (counted
+    def _plan_conditions(self, sql: str, tables: list[str],
+                         nodes: list[dict] | None) -> dict[str, list[tuple]]:
+        """``{table: zone-map conditions}`` for the Spark path's views,
+        read from Spark's analyzed plan
+        (:func:`miniodb_spark.lookup.plan_conditions`). A query whose
+        parsed plan ``nodes`` (parsed here when None) holds no Filter is
+        not analyzed. A query the analysis declines prunes nothing; any
+        other failure is counted in ``query_stats["zonemap"]
+        ["prune_errors"]`` and prunes nothing."""
+        from . import lookup
+
+        if nodes is None:
+            try:
+                nodes = lookup.parse(self.spark, sql)
+            except lookup.Declined:
+                return {}
+        if not lookup.has_filter(nodes):
+            return {}
+        try:
+            return lookup.plan_conditions(self, tables, sql)
+        except lookup.Declined:
+            return {}
+        except Exception as exc:
+            self._zonemap_stats()["prune_errors"] += 1
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "zone-map conditions failed for %s (scanning unpruned): %r",
+                tables, exc)
+            return {}
+
+    def _pruned_view(self, t: str, conds: list[tuple] | None) -> DataFrame | None:
+        """Zone-map file pruning on the SQL path: the view of ``t`` is
+        the hybrid scan of the files whose brackets admit every one of
+        ``conds`` (:meth:`_plan_conditions`; :meth:`multi_range_lookup_df`)
+        instead of the full one. The SQL still re-applies every predicate
+        and the pruned set is a superset of matching rows by
+        construction. This is the reference's Redis-min/max query-path
+        pruning (BASELINE.md: file pruning −90% reads) on Spark.
+
+        Returns None without conditions or when pruning failed (counted
         in ``query_stats["zonemap"]["prune_errors"]``): query_df then
         builds the full scan, which it never builds for a pruned view."""
-        import re as _re
-
-        # a self-join (FROM t a JOIN t b ...) references the view twice
-        # but the id conjunct constrains only ONE alias — pruning the
-        # shared view would drop the other alias's rows. Conservative:
-        # the table name must occur exactly once in the literal-stripped
-        # SQL (column prefixes over-count, which only declines the
-        # optimization, never breaks correctness).
-        eligible = (
-            len(tables) == 1
-            and len(_re.findall(
-                rf"\b{_re.escape(t)}\b",
-                gate._strip_string_literals(sql))) == 1
-        )
-        # MULTI-table (r14 verdict #8): a plain single-SELECT join where
-        # only one side has the conjunct is provably prunable — but only
-        # with QUALIFIED attribution (alias.col / table.col; an
-        # unqualified `id` is ambiguous across the join) and only when
-        # the single WHERE is provably the outer filter. See
-        # gate.extract_join_pruning_bindings for the full soundness
-        # argument (covers LEFT/FULL null-extension).
-        qual: tuple[str, ...] | None = None
-        if not eligible and len(tables) > 1:
-            binds = gate.extract_join_pruning_bindings(sql)
-            if binds is not None and t in binds:
-                qual, eligible = binds[t], True
-        if not eligible:
+        if not conds:
             return None
-        key = gate.extract_conjunctive_keys(sql, qualifier=qual)
-        # timestamp range with TYPED comparison: the quoted literal must
-        # parse as a (tz-naive) ISO timestamp, else decline — a string
-        # bracket must never be compared against a non-timestamp literal
-        # (r13 verdict #5). The window composes with BOTH key lookups
-        # ("these ids, last week") and id ranges (keyset cursor inside a
-        # window).
-        ts_parsed: tuple | None = None
-        ts_rng = gate.extract_conjunctive_range(
-            sql, column="timestamp", typed_literal_prefixes=("TIMESTAMP",),
-            qualifier=qual)
-        if ts_rng is not None:
-            lo, lo_i, hi, hi_i = ts_rng
-            plo = _parse_ts_literal(lo)
-            phi = _parse_ts_literal(hi)
-            if (lo is None) == (plo is None) and \
-                    (hi is None) == (phi is None):
-                ts_parsed = (plo, lo_i, phi, hi_i)
-        ranges: dict[str, tuple] = {}
-        if key is None:
-            # typed prefixes here too: without them a coexisting
-            # `timestamp BETWEEN TIMESTAMP '..' AND TIMESTAMP '..'` stays
-            # unrewritten and its embedded AND makes the splitter decline
-            # the WHOLE clause, losing the provable id range (r14 ADVICE,
-            # low). _rewrite_between is extraction-only and
-            # column-agnostic, so this cannot affect id soundness.
-            id_rng = gate.extract_conjunctive_range(
-                sql, typed_literal_prefixes=("TIMESTAMP",), qualifier=qual)
-            if id_rng is not None:
-                ranges["id"] = id_rng
-            if ts_parsed is not None:
-                ranges["timestamp"] = ts_parsed
-            # numeric-literal conjuncts on the table's EXTRA indexed
-            # columns (TableConfig.zonemap_columns) — the reference's
-            # numeric min/max pruning (file_pruning.go:107-255). Typed
-            # int/float bounds; the pruner admits any non-comparable
-            # bracket (TypeError ⇒ scan), so a mis-typed column only
-            # loses the optimization.
-            for zc in self._zonemap_cols_for(t):
-                if zc in ("id", "timestamp"):
-                    continue
-                nrng = gate.extract_conjunctive_numeric_range(
-                    sql, column=zc, qualifier=qual)
-                if nrng is None and (
-                    self.catalog.schema_of(t) or {}
-                ).get(zc) == "string":
-                    # quoted-literal ranges on an extra column prune
-                    # exactly like the id path — but ONLY when the
-                    # cumulative type is string, so the SQL compares
-                    # strings binarily (any non-string type would CAST
-                    # the literal, and a lexicographic bracket check
-                    # against e.g. '2024-1-2' on a timestamp column is an
-                    # unsound skip). Generations whose physical type
-                    # differs hold non-string brackets: those TypeError
-                    # into a scan.
-                    nrng = gate.extract_conjunctive_range(
-                        sql, column=zc, qualifier=qual)
-                if nrng is not None:
-                    ranges[zc] = nrng
-        if key is None and not ranges:
-            return None
-        zs = self.query_stats.setdefault(
-            "zonemap", {"queries": 0, "files_skipped": 0, "prune_errors": 0})
+        zs = self._zonemap_stats()
         try:
-            if key is not None:
-                pruned, rep = self.point_lookup_df(t, key, ts_range=ts_parsed)
-            else:
-                pruned, rep = self.multi_range_lookup_df(t, ranges)
+            pruned, rep = self.multi_range_lookup_df(t, conds)
             if pruned is None:
                 # no file or buffered row can match; the empty view still
                 # needs the full scan's schema (a table without any data
@@ -1792,11 +1710,15 @@ class Engine:
         answered without a Spark job (:meth:`_arrow_query`,
         :mod:`miniodb_spark.lookup`) with the same JSON text, cap and
         pruning counts; everything else, and every query that path
-        declines, runs through :meth:`query_df`.
+        declines, runs through :meth:`query_df`. One ``parsePlan`` per
+        cache miss picks the path, and the Spark path reuses it to skip
+        the analysis for pruning when the plan holds no Filter.
         ``query_stats["lookups"]`` and ``["aggregates"]`` count the
         queries served each way, and slow-query entries carry the
         ``path`` taken."""
         import time as _time
+
+        from . import lookup
 
         checked = gate.validate_query(sql)
         tables = extract_tables(checked)
@@ -1815,15 +1737,18 @@ class Engine:
             # store, not be absorbed into its recorded versions
             versions = self.cache.snapshot_versions(tables)
         t0 = _time.perf_counter()
-        rows = self._arrow_query(checked, limit, default_table, time_travel)
+        final, final_tables = self._final_sql(checked, limit, default_table)
+        # one parse picks the path and, on Spark, whether to analyze
+        try:
+            nodes = lookup.parse(self.spark, final)
+        except lookup.Declined:
+            nodes = []
+        rows = self._arrow_query(final, final_tables, nodes, time_travel)
         if rows is not None:
             path, t_built = "arrow", t0
             rows, truncated = self._capped(rows)
         else:
-            df = self.query_df(
-                checked, limit=limit, default_table=default_table,
-                at_version=at_version, as_of_ts_us=as_of_ts_us,
-            )
+            df = self._query_df(final, final_tables, nodes, at_version, as_of_ts_us)
             path, t_built = "spark", _time.perf_counter()
             # cap the collect; queries carrying their own LIMIT are
             # unaffected (inject_limit is a no-op then, and the cap only

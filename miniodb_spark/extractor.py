@@ -72,7 +72,7 @@ def _strip_comments(sql: str) -> str:
 
 def _scan_text(sql: str) -> str:
     """Literal-blanked, comment-stripped text for every regex scan
-    here (r16, same class as gate._where_clause): string literals are
+    here (r16): string literals are
     real SQL tokens in gated queries, so they are removed FIRST — a
     literal (single- OR double-quoted, backslash escapes included:
     gate._literal_content_spans models the pinned Spark dialect, r17

@@ -1,4 +1,5 @@
-"""SQL gate: the SELECT-only sanitizer in front of ``spark.sql``.
+"""SQL gate: the SELECT-only sanitizer in front of ``spark.sql``, and the
+two request-level rewrites.
 
 Semantic parity with the reference's sanitizer
 (/root/reference/internal/security/sql_sanitizer.go:11-29,52,58-85,
@@ -17,6 +18,12 @@ Semantic parity with the reference's sanitizer
 Also carries the two request-level rewrites from the service layer
 (/root/reference/internal/service/miniodb_service.go:624-631,663-681):
 legacy ``FROM table`` → the caller's default table, and LIMIT injection.
+
+Nothing here reads predicates: which files a query may skip comes from
+Spark's analyzed plan (:func:`miniodb_spark.lookup.plan_conditions`).
+The literal lexer below serves the sanitizer, the rewrites and the
+table extractor, which run before the result cache on every query,
+where a ``parsePlan`` (2-4 ms) would cost more than a cache hit.
 """
 
 from __future__ import annotations
@@ -169,64 +176,6 @@ def _blank_string_literals(sql: str) -> str | None:
     return "".join(out)
 
 
-_WHERE_KW_RE = re.compile(r"\bWHERE\b", re.IGNORECASE)
-_SELECT_KW_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
-_CLAUSE_TERM_RE = re.compile(
-    r"\bGROUP\s+BY\b|\bHAVING\b|\bORDER\s+BY\b|\bLIMIT\b", re.IGNORECASE)
-
-
-def _where_clause(sql: str) -> str | None:
-    """The raw text of the statement's single WHERE clause, or None.
-
-    The ONE shared clause locator for every conjunct extractor (r15
-    verdict #1, judge-reproduced spoof): keyword positions are found
-    on the literal-BLANKED text (:func:`_blank_string_literals` is
-    length-preserving, so spans map 1:1 onto the raw input) and the
-    RAW text is sliced by those positions — a SELECT-list string
-    literal containing ``'WHERE v > 999 AND pad'`` followed by one
-    containing ``'x LIMIT y'`` can therefore never fabricate, extend,
-    or truncate a clause, where the previous per-extractor raw-text
-    ``re.search(r"\\bWHERE\\b...")`` could. r17: the blanker now
-    covers BOTH quote flavors and backslash escapes (r16 verdict #1:
-    the identical spoof was live through double-quoted literals —
-    judge-demonstrated 90 rows → 0 via a fabricated bound), so
-    "literal content can never spoof a clause" holds for every
-    literal form the pinned dialect parses.
-
-    Soundness preconditions (decline-on-doubt; each returns None):
-
-    - balanced quotes (an unterminated literal makes every position
-      past it ambiguous);
-    - exactly ONE ``SELECT`` in the blanked text: with a single query
-      block, the single WHERE is provably that block's row filter and
-      its column references resolve to BASE columns of the block's
-      tables — never a SELECT-list alias (SQL scoping: WHERE cannot
-      see select aliases) and never a derived-table column shadowing
-      a base column with a computed value (``FROM (SELECT v+1 AS v
-      FROM t) WHERE v > 9`` must not prune on t.v; with one SELECT
-      that shape cannot occur). This also guarantees the clause's
-      terminator keywords below belong to the same block — an IN-list
-      subquery carrying its own LIMIT/ORDER BY would need a second
-      SELECT;
-    - exactly one ``WHERE`` keyword.
-
-    The clause runs from the WHERE keyword to the first GROUP BY /
-    HAVING / ORDER BY / LIMIT in the blanked text, or end of input.
-    """
-    blank = _blank_string_literals(sql)
-    if blank is None:
-        return None
-    if len(_SELECT_KW_RE.findall(blank)) != 1:
-        return None
-    wheres = list(_WHERE_KW_RE.finditer(blank))
-    if len(wheres) != 1:
-        return None
-    start = wheres[0].end()
-    term = _CLAUSE_TERM_RE.search(blank, start)
-    end = term.start() if term else len(sql)
-    return sql[start:end]
-
-
 def validate_query(sql: str) -> str:
     """Validate a user query; returns the trimmed SQL or raises SQLGateError."""
     if sql is None or not sql.strip():
@@ -336,566 +285,12 @@ def validate_table_name(name: str) -> str:
     return name
 
 
-def _qual_prefix(qualifier: tuple[str, ...] | None) -> str:
-    """Identifier-prefix regex for the conjunct extractors. ``None``
-    (single-table path) keeps the historical behavior: any alias
-    prefix is OPTIONAL, because every column in a single-table query
-    resolves to that table. (Accepting ANY prefix is sound only
-    because engine tables are provably flat — nested payload values
-    JSON-encode to strings at ingest (schema.py), so a dotted
-    ``s.id`` can never be a struct-field access that shadows the
-    table's id column; with no struct columns such a query fails
-    Spark analysis outright instead of mis-answering over a pruned
-    scan.) A qualifier tuple (multi-table path) makes
-    a prefix from the set MANDATORY: an unqualified ``id`` in a join
-    is ambiguous (both sides carry one), and a conjunct on the OTHER
-    table must never prune this one."""
-    if qualifier is None:
-        return r"(?:[A-Za-z_][A-Za-z0-9_]*\.)?"
-    alts = "|".join(re.escape(q) for q in qualifier)
-    return rf"(?:{alts})\."
-
-
-_BINDING_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*|,")
-_BINDING_STOP_WORDS = frozenset(
-    """on where group order limit having join inner left right full cross
-    natural union using lateral as semi anti offset""".split()
-)
-
-
-def extract_join_pruning_bindings(
-    sql: str,
-) -> dict[str, tuple[str, ...]] | None:
-    """``{table: accepted_qualifiers}`` when the statement is a plain
-    single-SELECT join whose WHERE conjuncts can be soundly attributed
-    to individual tables — the eligibility gate for MULTI-table
-    zone-map pruning (r14 verdict #8: a join where only one side has
-    the conjunct is provably prunable). None declines.
-
-    Soundness posture (decline-on-doubt, like every extractor here):
-
-    - exactly ONE ``SELECT`` in the literal-stripped SQL — no
-      subqueries, CTEs or laterals, so the single WHERE (if any) is
-      provably the OUTER filter over the join result. That is what
-      makes pruning sound for EVERY join type: a result row surviving
-      ``t.id >= 'x'`` has a non-NULL t-side satisfying it (in the
-      pruned superset by construction), and a t-row failing the
-      conjunct can only produce result rows that the WHERE itself
-      drops — matched rows fail the comparison directly, and the
-      null-extended rows a LEFT/FULL join would emit instead fail it
-      as NULL. Re-running the full SQL over the pruned views therefore
-      returns exactly the original result.
-    - at most one ``WHERE``;
-    - the FROM segment (FROM → WHERE/GROUP/ORDER/LIMIT/HAVING/end)
-      holds no parentheses: plain ``FROM t [a] [JOIN u [b] ON ...]*``
-      shapes, plus the classic comma form ``FROM t [a], u [b], ...``
-      (a comma binds exactly like JOIN — it is an implicit cross join
-      whose filtering lives in the same single WHERE, so the
-      outer-filter argument below is unchanged; TPC-H's native
-      phrasing);
-    - every table bound exactly once (self-joins decline: a conjunct
-      constrains ONE alias, pruning the shared view would drop the
-      other alias's rows), and no alias collides with another binding.
-
-    A table's accepted qualifiers are its alias (if bound) plus its
-    own name — Spark accepts either form."""
-    stripped = _strip_string_literals(sql)
-    if len(re.findall(r"\bSELECT\b", stripped, re.IGNORECASE)) != 1:
-        return None
-    if len(re.findall(r"\bWHERE\b", stripped, re.IGNORECASE)) > 1:
-        return None
-    m = re.search(
-        r"\bFROM\b(.*?)(?:\bWHERE\b|\bGROUP\s+BY\b|\bHAVING\b"
-        r"|\bORDER\s+BY\b|\bLIMIT\b|$)",
-        stripped, re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        return None
-    seg = m.group(1)
-    if "(" in seg or ")" in seg:
-        return None
-    out: dict[str, tuple[str, ...]] = {}
-    used_quals: set[str] = set()
-    # token walk (a binding regex would CONSUME a following JOIN
-    # keyword as an alias candidate and skip the next binding): seg
-    # starts right after the FROM keyword, so re-anchor it. A stray
-    # "from"/"join" token inside an ON condition (a column literally
-    # named join) can only produce a duplicate/collision — declined —
-    # or a spurious non-table entry the engine never looks up.
-    toks = _BINDING_IDENT_RE.findall("FROM " + seg)
-    i = 0
-    n = len(toks)
-    while i < n:
-        if toks[i].upper() not in ("FROM", "JOIN", ","):
-            i += 1
-            continue
-        if i + 1 >= n:
-            return None  # dangling FROM/JOIN/comma: malformed, decline
-        table = toks[i + 1]
-        if table == "," or table.lower() in _BINDING_STOP_WORDS:
-            return None  # malformed FROM shape: decline everything
-        j = i + 2
-        alias = None
-        if j < n and toks[j].upper() == "AS" and j + 1 < n:
-            j += 1
-        if j < n and toks[j] != "," and \
-                toks[j].lower() not in _BINDING_STOP_WORDS:
-            alias, j = toks[j], j + 1
-        if table in out:
-            return None  # self-join
-        quals = (alias, table) if alias else (table,)
-        for q in quals:
-            if q.lower() in used_quals:
-                return None  # qualifier collision: attribution unsafe
-            used_quals.add(q.lower())
-        out[table] = tuple(quals)
-        i = j
-    return out or None
-
-
-def extract_conjunctive_eq(
-    sql: str, column: str = "id",
-    qualifier: tuple[str, ...] | None = None,
-) -> str | None:
-    """The string literal ``v`` when the query's WHERE clause provably
-    constrains ``column = 'v'`` conjunctively — the sound condition for
-    file-level pruning (any single conjunct of a pure AND chain may
-    prune the scan regardless of the other conjuncts).
-
-    Deliberately conservative; returns None whenever soundness would
-    need real SQL analysis:
-
-    - the clause must split into top-level AND conjuncts
-      (:func:`_split_top_level_and` — literal-aware over both quote
-      flavors, r17; declines on depth-0 OR / NOT / CASE / BETWEEN and
-      unbalanced quotes). A sibling conjunct containing parentheses
-      (an IN-list, a function call) is simply never matched — the
-      AND-conjunct argument makes pruning on the MATCHED conjunct
-      sound regardless of what the siblings compute;
-    - the matching conjunct must be exactly ``[alias.]column = 'lit'``
-      (or reversed) with nothing trailing the closing quote, so an
-      escaped-quote literal (``'a''b'``, ``'a\\'b'``) can never match
-      with a truncated value and prune the wrong files.
-
-    The reference applies its Redis min/max metadata to every query's
-    file list the same way (BASELINE.md's file-pruning −90% claim);
-    this is the gate-side half of that path for the Spark engine.
-
-    The clause itself is located by :func:`_where_clause` (shared by
-    all extractors) — on literal-blanked text, single-SELECT /
-    single-WHERE only — so literal content can never spoof a clause.
-    """
-    clause = _where_clause(sql)
-    if clause is None:
-        return None
-    # r17: split via the shared literal-aware splitter (it declines on
-    # depth-0 OR/NOT/CASE/BETWEEN and unbalanced quotes) instead of a
-    # raw-text re.split(r"\bAND\b") — the raw split sliced conjuncts
-    # out of LITERAL content, so ``WHERE x = "pad AND id = 'u1' AND
-    # pad"`` fabricated ``id = 'u1'`` (r16 in-clause spoof, judge-
-    # verified) and ``'a AND b'`` in a legit conjunct declined it.
-    conjs = _split_top_level_and(clause)
-    if conjs is None:
-        return None
-    pre = _qual_prefix(qualifier)
-    # the literal grammar [^'\\]* excludes backslashes outright: under
-    # the pinned dialect \ escapes inside literals, so any conjunct
-    # whose literal contains one is ignored (decline-on-doubt) rather
-    # than matched with a value Spark would unescape differently
-    pat_l = re.compile(
-        "^" + pre + re.escape(column)
-        + r"\s*=\s*'([^'\\]*)'$", re.IGNORECASE)
-    pat_r = re.compile(
-        r"^'([^'\\]*)'\s*=\s*" + pre
-        + re.escape(column) + r"$", re.IGNORECASE)
-    for conj in conjs:
-        conj = conj.strip()
-        mm = pat_l.match(conj) or pat_r.match(conj)
-        if mm:
-            return mm.group(1)
-    return None
-
-
-def _extract_bounds(
-    sql: str, column: str, *,
-    lit: str,
-    parse,
-    typed_literal_prefixes: tuple[str, ...] = (),
-    qualifier: tuple[str, ...] | None = None,
-):
-    """Shared bounds-intersection core behind
-    :func:`extract_conjunctive_range` and
-    :func:`extract_conjunctive_numeric_range` (r15 verdict #5: the
-    extractors were four hand-copies of one clause walk; this is the
-    single parameterized walk, with per-type literal grammars).
-
-    ``lit`` is a regex with exactly ONE capture group for the literal
-    (the caller embeds any typed-literal prefix allowance); ``parse``
-    maps the captured text to a comparable value, or None when the
-    literal's engine-side meaning is in doubt — which declines the
-    WHOLE extraction (a matched-but-unparsable conjunct ON the column
-    means the constraint exists but can't be soundly expressed;
-    decline-on-doubt). ``typed_literal_prefixes`` feeds
-    :func:`_rewrite_between` so coexisting typed BETWEENs expand
-    instead of poisoning the split.
-
-    Conjunct shapes admitted: ``<ident> {>,>=,<,<=,=} <lit>`` and the
-    reversed form. ``=`` intersects as the degenerate range
-    ``[v, v]`` — the reference prunes on equality too
-    (query/file_pruning.go:107-157); an equality meeting an existing
-    EXCLUSIVE bound at the same point keeps the exclusive flag, so a
-    contradictory ``v > 2 AND v = 2`` yields an empty range (skipping
-    everything is sound: no row satisfies the conjunction). Conjuncts
-    not mentioning ``column`` are ignored, which only loosens the
-    extracted range. Returns None when no conjunct on ``column``
-    matched."""
-    clause = _where_clause(sql)
-    if clause is None:
-        return None
-    # BETWEEN time/key slices are the common range syntax: expand the
-    # provable <ident> BETWEEN <lit> AND <lit> spans first (see
-    # _rewrite_between for the soundness argument); any OTHER BETWEEN
-    # shape survives the rewrite and still declines at the splitter.
-    conjs = _split_top_level_and(
-        _rewrite_between(clause, typed_literal_prefixes))
-    if conjs is None:
-        return None
-    ident = _qual_prefix(qualifier) + re.escape(column)
-    pat_l = re.compile(
-        rf"^{ident}\s*(>=|<=|>|<|=)\s*{lit}$", re.IGNORECASE)
-    pat_r = re.compile(
-        rf"^{lit}\s*(>=|<=|>|<|=)\s*{ident}$", re.IGNORECASE)
-    lo = hi = None
-    lo_incl = hi_incl = True
-    found = False
-    for conj in conjs:
-        conj = conj.strip()
-        mm = pat_l.match(conj)
-        if mm:
-            op, text = mm.group(1), mm.group(2)
-        else:
-            mm = pat_r.match(conj)
-            if not mm:
-                continue
-            text, op = mm.group(1), _FLIP_OP[mm.group(2)]
-        val = parse(text)
-        if val is None:
-            return None
-        found = True
-        if op in (">", ">=", "="):
-            incl = op != ">"
-            if lo is None or val > lo:
-                lo, lo_incl = val, incl
-            elif val == lo:  # equal bounds: exclusive is tighter
-                lo_incl = lo_incl and incl
-        if op in ("<", "<=", "="):
-            incl = op != "<"
-            if hi is None or val < hi:
-                hi, hi_incl = val, incl
-            elif val == hi:
-                hi_incl = hi_incl and incl
-    return (lo, lo_incl, hi, hi_incl) if found else None
-
-
-_FLIP_OP = {">": "<", "<": ">", ">=": "<=", "<=": ">=", "=": "="}
-
-
-def _typed_prefix_re(typed_literal_prefixes: tuple[str, ...]) -> str:
-    if not typed_literal_prefixes:
-        return ""
-    return (
-        r"(?:(?:" + "|".join(
-            re.escape(p) for p in typed_literal_prefixes
-        ) + r")\s+)?"
-    )
-
-
-def extract_conjunctive_range(
-    sql: str, column: str = "id",
-    typed_literal_prefixes: tuple[str, ...] = (),
-    qualifier: tuple[str, ...] | None = None,
-) -> tuple[str | None, bool, str | None, bool] | None:
-    """``(lo, lo_inclusive, hi, hi_inclusive)`` when the WHERE clause
-    provably bounds ``column`` conjunctively by string-literal
-    comparisons (``>``, ``>=``, ``<``, ``<=``, and ``=`` as the
-    degenerate range — see :func:`_extract_bounds`). Bounds may be
-    one-sided (None). Multiple conjuncts intersect (the tightest bound
-    wins). Soundness posture identical to extract_conjunctive_eq —
-    any doubt (OR / NOT / CASE at top level, unbalanced quotes,
-    multiple SELECTs/WHEREs) returns None; the one BETWEEN shape that
-    is provably a range, ``<ident> BETWEEN '<lit>' AND '<lit>'``, is
-    expanded to its >=/<= pair first (_rewrite_between, token-level so
-    string literals are never touched) and every other BETWEEN still
-    declines (its embedded AND would otherwise be sliced into
-    fabricated conjuncts); conjuncts that don't mention ``column`` are
-    ignored, which only loosens the extracted range (pruning with a
-    looser range is still a superset of matching files). Returns None
-    when no comparison conjunct on ``column`` exists.
-
-    ``typed_literal_prefixes`` additionally admits ANSI typed literals
-    — e.g. ``("TIMESTAMP", "DATE")`` matches
-    ``timestamp >= TIMESTAMP '2024-01-01'`` — returning the quoted
-    text; the CALLER owns interpreting it with typed semantics (the
-    engine's timestamp path parses it to a datetime and declines the
-    prune when the parse fails, so no lexicographic comparison against
-    a non-timestamp string can ever skip a file). The reference's
-    time-partition pruning analog: file_pruning.go:349-594."""
-    # [^'\\]*: a literal containing a backslash never matches — under
-    # the pinned dialect Spark UNESCAPES it (``'a\\nb'`` denotes
-    # ``a<LF>b``), so comparing the raw text lexicographically against
-    # zone-map brackets can land on the wrong side (0x5C vs 0x0A) and
-    # skip a file Spark's own predicate still matches (r17, same
-    # dialect-divergence family as the double-quote spoof). The
-    # unmatched conjunct is ignored, which only loosens the range.
-    return _extract_bounds(
-        sql, column,
-        lit=_typed_prefix_re(typed_literal_prefixes) + r"'([^'\\]*)'",
-        parse=lambda s: s,
-        typed_literal_prefixes=typed_literal_prefixes,
-        qualifier=qualifier,
-    )
-
-
-# Two's-complement doubles lose integer exactness past 2**53: Spark
-# widens an int literal to double when the column is float/double, and
-# the widened literal can round AWAY from the exact int a typed Python
-# comparison would use — a file whose double max sits between the
-# rounded and exact literal would be pruned while Spark's own predicate
-# still matches its rows. The gate can't see column types, so any
-# integer at or past the exactness cliff declines outright.
-_NUM_EXACT_MAX = 2 ** 53
-
-
-def extract_conjunctive_numeric_range(
-    sql: str, column: str,
-    typed_literal_prefixes: tuple[str, ...] = ("TIMESTAMP",),
-    qualifier: tuple[str, ...] | None = None,
-) -> tuple[int | float | None, bool, int | float | None, bool] | None:
-    """``(lo, lo_inclusive, hi, hi_inclusive)`` as Python int/float
-    when the WHERE clause provably bounds ``column`` conjunctively by
-    UNQUOTED numeric-literal comparisons (``>``, ``>=``, ``<``,
-    ``<=``, plus ``=`` as the degenerate range ``[v, v]`` — r15
-    verdict #4) — the numeric twin of
-    :func:`extract_conjunctive_range` (reference:
-    query/file_pruning.go:107-157,159-255 prunes files on any
-    ``col {=,<,<=,>,>=} int-literal`` against stored min/max).
-    Soundness posture identical: OR / NOT / CASE at top level, any
-    other BETWEEN shape, unbalanced quotes, or multiple
-    SELECTs/WHEREs decline; conjuncts not mentioning ``column`` are
-    ignored (only loosens the range); ``col BETWEEN 1 AND 5`` is
-    expanded by _rewrite_between first. ``typed_literal_prefixes``
-    serves COEXISTING quoted BETWEENs (``timestamp BETWEEN TIMESTAMP
-    '..' AND TIMESTAMP '..'`` alongside the numeric conjunct):
-    unexpanded, their embedded AND would decline the whole clause —
-    the exact failure mode r14's ADVICE #4 pinned for the id path.
-
-    Literal grammar is deliberately narrow — optional sign, digits,
-    optional ``.digits`` — so the Python value provably denotes the
-    same point Spark's parser gives the literal: a plain int is exact
-    on both sides (|v| < 2**53 enforced, see _NUM_EXACT_MAX), and a
-    plain decimal's ``float()`` equals Spark's decimal→double cast
-    (IEEE-754 nearest). Exponents / hex / NaN / Infinity decline —
-    a conjunct ON the column that we cannot soundly express declines
-    the whole extraction (the 2**53 cliff means the literal's Spark
-    meaning itself is in doubt). The CALLER still owns bracket-type
-    soundness: the zone-map pruner admits any file whose stored
-    bracket isn't numerically comparable (TypeError ⇒ scan), so a
-    mis-typed column degrades to a no-op prune, never a wrong skip."""
-    def parse(text: str) -> int | float | None:
-        if "." in text:
-            return float(text)
-        v = int(text)
-        return v if abs(v) < _NUM_EXACT_MAX else None
-
-    return _extract_bounds(
-        sql, column,
-        lit=r"([+-]?\d+(?:\.\d+)?)",
-        parse=parse,
-        typed_literal_prefixes=typed_literal_prefixes,
-        qualifier=qualifier,
-    )
-
-
-_BETWEEN_TOKEN_RE = re.compile(
-    # string-literal tokens mirror _literal_content_spans' dialect:
-    # both quote flavors, backslash escapes, doubled-quote escapes —
-    # a divergent lexer here would let literal content reach the
-    # token walk (the r16 double-quote spoof class)
-    r"'(?:\\.|''|[^'\\])*'|\"(?:\\.|\"\"|[^\"\\])*\""
-    r"|[A-Za-z_][A-Za-z0-9_.$]*|\d+(?:\.\d+)?|\s+|."
-)
-# unquoted numeric literal accepted as a BETWEEN operand / range bound:
-# plain integers and plain decimals ONLY — exponents, hex, leading-dot
-# and signed forms decline (a '-' tokenizes separately, so a negative
-# BETWEEN operand simply never matches the rewrite shape; the
-# comparison extractors accept an explicit sign themselves)
-_NUM_TOK_RE = re.compile(r"\d+(?:\.\d+)?")
-_BETWEEN_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*$")
-_BETWEEN_KEYWORDS = {"AND", "OR", "NOT", "CASE", "BETWEEN", "WHEN",
-                     "THEN", "ELSE", "END", "IN", "LIKE", "IS", "NULL"}
-
-
-def _rewrite_between(clause: str,
-                     typed_prefixes: tuple[str, ...] = ()) -> str:
-    """Rewrite every ``<ident> BETWEEN <lit> AND <lit>`` span — where
-    each ``<lit>`` is a quoted string literal or an unquoted plain
-    numeric literal (_NUM_TOK_RE) — into
-    ``<ident> >= <lit> AND <ident> <= <lit>``, the faithful ANSI
-    expansion (BETWEEN binds tighter than AND/OR, and the emitted AND
-    binds tighter than any surrounding OR, so the flat rewrite keeps
-    the parse shape at every depth). Token-level, not regex-over-text:
-    string literals are atomic tokens, so a BETWEEN *inside* a quoted
-    literal can never be rewritten and literal contents can never be
-    corrupted (the unsound-prune trap a text regex would have).
-
-    Only the exact token shape fires; everything else is left alone —
-    a leftover BETWEEN (``NOT BETWEEN``, function operands, signed or
-    exponent-form numerics) still hits _split_top_level_and's reject,
-    so the decline posture is unchanged. A ``NOT`` preceding a rewritten span is
-    harmless: at depth 0 the remaining NOT declines the whole clause,
-    and inside parentheses the conjunct stays un-split and is ignored
-    (ignoring only loosens the extracted range)."""
-    toks = _BETWEEN_TOKEN_RE.findall(clause)
-    if "".join(toks) != clause:
-        return clause  # scanner lost bytes (unbalanced quote): leave as-is
-    prefixes = {p.upper() for p in typed_prefixes}
-    n = len(toks)
-
-    def nxt(j: int) -> int:
-        while j < n and toks[j].isspace():
-            j += 1
-        return j
-
-    def _is_str_lit(t: str) -> bool:
-        # a COMPLETE literal token (the tokenizer emits a lone quote
-        # char as a 1-char "." token when unbalanced — never an operand)
-        return len(t) >= 2 and t[0] in "'\"" and t[-1] == t[0]
-
-    out: list[str] = []
-    i = 0
-    while i < n:
-        t = toks[i]
-        if (_BETWEEN_IDENT_RE.fullmatch(t)
-                and t.upper() not in _BETWEEN_KEYWORDS):
-            j = nxt(i + 1)
-            if j < n and toks[j].upper() == "BETWEEN":
-                k = nxt(j + 1)
-                pre1 = ""
-                if k < n and toks[k].upper() in prefixes:
-                    pre1, k = toks[k] + " ", nxt(k + 1)
-                if k < n and (_is_str_lit(toks[k])
-                              or _NUM_TOK_RE.fullmatch(toks[k])):
-                    lo_lit = toks[k]
-                    m = nxt(k + 1)
-                    if m < n and toks[m].upper() == "AND":
-                        p2 = nxt(m + 1)
-                        pre2 = ""
-                        if p2 < n and toks[p2].upper() in prefixes:
-                            pre2, p2 = toks[p2] + " ", nxt(p2 + 1)
-                        if p2 < n and (_is_str_lit(toks[p2])
-                                       or _NUM_TOK_RE.fullmatch(toks[p2])):
-                            out.append(
-                                f"{t} >= {pre1}{lo_lit} AND "
-                                f"{t} <= {pre2}{toks[p2]}")
-                            i = p2 + 1
-                            continue
-        out.append(t)
-        i += 1
-    return "".join(out)
-
-
-def _split_top_level_and(clause: str) -> list[str] | None:
-    """Split a WHERE clause into depth-0 AND conjuncts; None when the
-    top level contains OR / NOT / CASE / BETWEEN (pruning unsound) or
-    quotes are unbalanced. Parentheses below depth 0 are left intact
-    so IN-lists survive; a depth-0 token check still rejects
-    disjunctions.
-
-    r17: keyword/paren scanning runs on the literal-BLANKED clause
-    (:func:`_blank_string_literals` — length-preserving, BOTH quote
-    flavors, backslash escapes) and the RAW text is sliced by blanked
-    positions — previously this loop lexed single-quoted literals
-    itself (no ``"..."``, no ``\\``), so an AND/OR inside a
-    double-quoted literal split or declined the clause and, worse, a
-    fabricated conjunct sliced out of literal content could reach the
-    bound matchers (the r16 in-clause spoof:
-    ``WHERE x = "pad AND v > 999 AND pad"``)."""
-    blank = _blank_string_literals(clause)
-    if blank is None:
-        return None  # unbalanced/unterminated literal
-    up = blank.upper()
-    n = len(clause)
-
-    def _kw_at(kw: str, i: int) -> bool:
-        return up.startswith(kw, i) and (
-            i == 0 or not (blank[i - 1].isalnum() or blank[i - 1] == "_")
-        ) and (
-            i + len(kw) >= n
-            or not (blank[i + len(kw)].isalnum() or blank[i + len(kw)] == "_")
-        )
-
-    parts: list[str] = []
-    depth = 0
-    start = 0
-    i = 0
-    while i < n:
-        ch = blank[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-        if depth == 0:
-            # BETWEEN: its embedded AND would be split into
-            # fabricated conjuncts (see extract_conjunctive_eq)
-            for kw in ("OR", "NOT", "CASE", "BETWEEN"):
-                if _kw_at(kw, i):
-                    return None
-            if _kw_at("AND", i):
-                parts.append(clause[start:i])
-                start = i + 3
-                i += 3
-                continue
-        i += 1
-    if depth != 0:
-        return None
-    parts.append(clause[start:])
-    return parts
-
-
-def extract_conjunctive_keys(
-    sql: str, column: str = "id",
-    qualifier: tuple[str, ...] | None = None,
-) -> list[str] | None:
-    """Literal key set when the WHERE provably constrains ``column``
-    to it conjunctively: an ``= 'v'`` conjunct (see
-    extract_conjunctive_eq) or an ``IN ('a', 'b', ...)`` conjunct of
-    plain literals. Same soundness posture — any doubt returns None."""
-    one = extract_conjunctive_eq(sql, column, qualifier=qualifier)
-    if one is not None:
-        return [one]
-    clause = _where_clause(sql)
-    if clause is None:
-        return None
-    conjs = _split_top_level_and(clause)
-    if conjs is None:
-        return None
-    pat = re.compile(
-        "^" + _qual_prefix(qualifier) + re.escape(column)
-        + r"\s+IN\s*\(([^()]*)\)$", re.IGNORECASE)
-    for conj in conjs:
-        mm = pat.match(conj.strip())
-        if not mm:
-            continue
-        keys: list[str] = []
-        ok = True
-        for item in mm.group(1).split(","):
-            im = re.match(r"^\s*'([^'\\]*)'\s*$", item)
-            if not im:
-                ok = False  # escaped quote / backslash (Spark would
-                break       # unescape it) / non-literal: decline
-            keys.append(im.group(1))
-        if ok and keys:
-            return keys
-    return None
+# The scanners that once re-derived pruning predicates from SQL text are
+# gone: every path reads its zone-map conditions from Spark's analyzed
+# plan (lookup.prune_conditions). These names stay only because
+# perfbench/tracing.py's TARGETS wraps them; nothing calls them.
+def extract_conjunctive_eq(*args, **kwargs): return None
+def extract_conjunctive_keys(*args, **kwargs): return None
+def extract_conjunctive_range(*args, **kwargs): return None
+def extract_conjunctive_numeric_range(*args, **kwargs): return None
+def extract_join_pruning_bindings(*args, **kwargs): return None

@@ -1,4 +1,5 @@
-"""Key lookups and small aggregates answered in the driver, with no Spark job.
+"""Key lookups and small aggregates answered in the driver, with no Spark
+job, and the zone-map conditions every query path prunes by.
 
 Two query shapes keep only a handful of files after zone-map pruning,
 and planning and running a Spark job over them costs far more than
@@ -21,10 +22,15 @@ its pruned Parquet objects):
   ``sum``, ``avg`` (summed as doubles, as Spark's ``Average`` does),
   ``min`` and ``max``.
 
+Every other query runs on Spark over views pruned by the same analysis:
+:func:`plan_conditions` analyzes it over schema-only views of all its
+tables and reads each table's conditions from the Filters of the
+analyzed plan. One compiler, :func:`prune_conditions`, turns an
+analyzed filter's conjuncts into zone-map conditions for both paths.
+
 Both take the same inputs as the Spark path: the files come from
 ``Catalog.live_files``, pruned by the zone-map brackets their add
-entries carry (:meth:`Engine._prune_live`; an aggregate takes its
-ranges from the analyzed filter's column-vs-literal conjuncts), each
+entries carry (:meth:`Engine._prune_live`), each
 generation is projected onto the cumulative schema as
 ``Engine._gen_scan`` does, and buffered rows are typed over the whole
 buffer as ``Engine.read_buffer`` types them, then cast to
@@ -185,6 +191,51 @@ def parse_lookup(nodes: list[dict], table: str) -> tuple[list[str] | None, int |
     return columns, limit, cond[2]["value"]
 
 
+def _is_key_column(tree) -> bool:
+    node, _kids = tree
+    return node["class"] == _ATTR and node["nameParts"].strip("[]").split(", ")[-1].lower() == "id"
+
+
+def _is_string(tree) -> bool:
+    node, _kids = tree
+    return node["class"] == _LITERAL and node["dataType"] == "string" \
+        and isinstance(node["value"], str)
+
+
+def keys(nodes: list[dict]) -> list[str] | None:
+    """The keys a query pins ``id`` to: the string literals of a
+    top-level ``[alias.]id = '<key>'`` or ``[alias.]id IN ('<key>',
+    ...)`` conjunct of a Filter in the parsed plan ``nodes``
+    (:func:`parse`); None without one. Such a query is a key lookup,
+    served or counted as declined."""
+    for node in nodes:
+        if node["class"] != _PLAN + "Filter":
+            continue
+        stack = [_tree(node["condition"])]
+        while stack:
+            tree = stack.pop()
+            cls, kids = tree[0]["class"], tree[1]
+            if cls == _EXPR + "And":
+                stack += kids
+            elif cls == _EXPR + "EqualTo":
+                for col, lit in (kids, kids[::-1]):
+                    if _is_key_column(col) and _is_string(lit):
+                        return [lit[0]["value"]]
+            elif cls == _EXPR + "In" and _is_key_column(kids[0]) \
+                    and all(_is_string(k) for k in kids[1:]):
+                return [k[0]["value"] for k in kids[1:]]
+    return None
+
+
+def has_filter(tree) -> bool:
+    """Whether the parsed plan ``tree`` (:func:`parse`) holds a Filter
+    anywhere, subqueries and CTE definitions included."""
+    if isinstance(tree, dict):
+        return tree.get("class") == _PLAN + "Filter" or any(
+            has_filter(v) for v in tree.values())
+    return isinstance(tree, list) and any(has_filter(v) for v in tree)
+
+
 def _agg_call(node: dict) -> bool:
     return node["class"] == _FUNCTION and node["nameParts"].strip("[]").lower() in _AGG_NAMES
 
@@ -260,7 +311,7 @@ def lookup(engine, table: str, keys: list[str], columns: list[str] | None = None
         raise Declined("type")
     try:
         selected, report = engine._prune_live(
-            table, ("id",), engine._key_select(table, keys))
+            table, ("id",), engine._range_select([("id", keys)]))
     except Exception:
         raise Declined("prune_error") from None
     if sum(len(sel) for _g, sel in selected) > MAX_FILES:
@@ -380,43 +431,61 @@ def aggregate(engine, table: str, sql: str, nodes: list[dict]) -> tuple[list[str
                 for item in top[0].get(k, ()) for n in item):
         raise Declined("shape")
     view = _View(engine, table)
-    plan = _Plan(engine, table, view, limit, *_analyzed(engine, table, view.types, sql))
+    plan = _Plan(engine, table, view, limit, *_analyzed(engine, table, view, sql))
     return plan.run(engine, table, view)
 
 
-def _analyzed(engine, table: str, types: dict[str, str], sql: str) -> tuple:
-    """``(grouping, aggregates, condition)`` of ``sql``'s analyzed
-    ``[Limit] → Aggregate → [Filter] → view`` plan, each expression as
-    its JSON nodes (condition None without a filter), resolved over a
-    schema-only temp view with the hybrid view's columns and types.
+def analyze(engine, views: dict, sql: str) -> tuple:
+    """``(plan, names)``: ``sql``'s analyzed plan (the JVM object),
+    resolved over a schema-only temp view per table of ``views``
+    (``{table: _View}``) with the hybrid view's columns and types, and
+    per table ``{exprId: column}`` of its view's attributes.
 
-    The view is registered under the table's name, so it holds the
+    The views are registered under the tables' names, so they hold the
     engine's per-session view lock from the registration through the
-    analysis, like :meth:`Engine.query_df`; the empty DataFrame is kept
-    per table and schema. Each expression is fetched on its own: the
-    whole plan's JSON, which spells out every view column, passes 8 KB
-    on a wide table, and a py4j reply that size can stall ~40 ms on the
-    socket."""
+    analysis, like :meth:`Engine.query_df`; each empty DataFrame and its
+    attributes are kept per table and schema. Declined("shape") when
+    the query does not analyze: the Spark path raises the error."""
     from .engine import _parse_type
     from pyspark.errors import AnalysisException
     from pyspark.sql import types as T
 
-    key = tuple(types.items())
-    hit = engine._schema_views.get(table)
-    if hit is None or hit[0] != key:
-        struct = T.StructType([T.StructField(c, _parse_type(t), True)
-                               for c, t in types.items()])
-        hit = engine._schema_views[table] = (key, engine.spark.createDataFrame([], struct))
+    hits = {}
+    for table, view in views.items():
+        key = tuple(view.types.items())
+        hit = engine._schema_views.get(table)
+        if hit is None or hit[0] != key:
+            df = engine.spark.createDataFrame([], T.StructType([
+                T.StructField(c, _parse_type(t), True) for c, t in view.types.items()]))
+            out = df._jdf.queryExecution().analyzed().output()
+            attrs = [out.apply(i) for i in range(out.size())]
+            hit = engine._schema_views[table] = (
+                key, df, {a.exprId().id(): a.name() for a in attrs})
+        hits[table] = hit
     jspark = engine.spark._jsparkSession
     with engine._view_lock:
-        hit[1]._jdf.createOrReplaceTempView(table)
+        for table, hit in hits.items():
+            hit[1]._jdf.createOrReplaceTempView(table)
         try:
             plan = jspark.sql(sql).queryExecution().analyzed()
         except AnalysisException:
             # the query's own error: the Spark path raises it to the caller
             raise Declined("shape") from None
         finally:
-            jspark.catalog().dropTempView(table)
+            for table in hits:
+                jspark.catalog().dropTempView(table)
+    return plan, {table: hit[2] for table, hit in hits.items()}
+
+
+def _analyzed(engine, table: str, view: _View, sql: str) -> tuple:
+    """``(grouping, aggregates, condition, names)`` of ``sql``'s
+    analyzed ``[Limit] → Aggregate → [Filter] → view`` plan
+    (:func:`analyze`), each expression as its JSON nodes (condition None
+    without a filter), plus the view's ``{exprId: column}``. Each
+    expression is fetched on its own: the whole plan's JSON, which
+    spells out every view column, passes 8 KB on a wide table, and a
+    py4j reply that size can stall ~40 ms on the socket."""
+    plan, names = analyze(engine, {table: view}, sql)
     name = plan.nodeName()
     while name in ("GlobalLimit", "LocalLimit"):
         plan = plan.child()
@@ -434,7 +503,8 @@ def _analyzed(engine, table: str, types: dict[str, str], sql: str) -> tuple:
     def exprs(seq):
         return [json.loads(seq.apply(i).toJSON()) for i in range(seq.size())]
 
-    return exprs(plan.groupingExpressions()), exprs(plan.aggregateExpressions()), condition
+    return (exprs(plan.groupingExpressions()), exprs(plan.aggregateExpressions()),
+            condition, names[table])
 
 
 def _tree(flat: list[dict]):
@@ -478,6 +548,183 @@ def _literal(node: dict, want: str):
     raise Declined("cast")
 
 
+def _operand(tree, column):
+    """``("col", name, type)`` — a column, which ``column(node)`` names,
+    possibly widened long → double — or ``("lit", value, type)``."""
+    node, kids = tree
+    cls = node["class"]
+    if cls == _EXPR + "Cast" and kids[0][0]["class"] == _LITERAL:
+        return "lit", _literal(kids[0][0], node["dataType"]), node["dataType"]
+    if cls == _LITERAL:
+        t = node["dataType"]
+        return "lit", _literal(node, t), t
+    if cls == _EXPR + "Cast":
+        inner = kids[0][0]
+        if inner["class"] != _EXPR + "AttributeReference":
+            raise Declined("shape")
+        src, dst = inner["dataType"], node["dataType"]
+        if src != dst and (src, dst) != ("long", "double"):
+            raise Declined("cast")
+        return "col", column(inner), dst
+    if cls == _EXPR + "AttributeReference":
+        return "col", column(node), node["dataType"]
+    raise Declined("shape")
+
+
+def _comparison(tree, column):
+    """A column-vs-literal comparison or IN list as ``("cmp", op,
+    column, type, value)`` or ``("in", column, type, values)``
+    (:func:`_operand` resolves the operands); else Declined."""
+    node, kids = tree
+    cls = node["class"]
+    if cls in _COMPARE:
+        a, b = _operand(kids[0], column), _operand(kids[1], column)
+        op = _COMPARE[cls]
+        if a[0] == "lit":
+            a, b, op = b, a, _FLIPPED[op]
+        if (a[0], b[0]) != ("col", "lit") or a[2] != b[2]:
+            raise Declined("shape")
+        return "cmp", op, a[1], a[2], b[1]
+    if cls == _EXPR + "In":
+        a = _operand(kids[0], column)
+        items = [_operand(k, column) for k in kids[1:]]
+        if a[0] != "col" or any(i[0] != "lit" or i[2] != a[2] for i in items):
+            raise Declined("shape")
+        return "in", a[1], a[2], [i[1] for i in items]
+    raise Declined("shape")
+
+
+def _between(tree):
+    """A BETWEEN as the ``>= AND <=`` it analyzes to: its replacement, a
+    ``With`` expression, with its one common expression (the BETWEEN's
+    input) put back in place of every reference; Declined for any other
+    shape."""
+    try:
+        ((with_node, (main, (_def, (common,)))),) = tree[1]
+    except ValueError:
+        raise Declined("shape") from None
+    if with_node["class"] != _EXPR + "With":
+        raise Declined("shape")
+
+    def inline(t):
+        n, ks = t
+        if n["class"] == _EXPR + "CommonExpressionRef":
+            return common
+        return n, [inline(k) for k in ks]
+
+    return inline(main)
+
+
+def prune_conditions(condition: list[dict], names: dict[int, str], types: dict[str, str],
+                     gens: list[dict], zcols, utc: bool) -> list[tuple]:
+    """``[(column, lo, lo_incl, hi, hi_incl) | (column, [values])]``, the
+    zone-map conditions (:meth:`Engine._range_select`; an equality is a
+    one-value list) of an analyzed filter's top-level conjuncts (``condition``: its JSON nodes; a
+    ``BETWEEN`` reads as the two comparisons it analyzes to) that compare
+    a zone-map column of a view, uncast, with a non-NULL literal.
+    ``names`` maps the view's attributes (by exprId) to its columns, so a
+    conjunct on another table's column, or on a column a subquery
+    computes under the same name, is left out; so is every conjunct this
+    cannot compile, which only loosens pruning. A column whose type
+    differs between generations is left out too (its brackets hold the
+    physical values, the filter compares the widened ones), and a
+    timestamp unless the session zone is UTC (``utc``), the zone the
+    brackets and ``dt=`` directories are in."""
+    def column(node: dict) -> str:
+        name = names.get(node["exprId"]["id"])
+        if name is None or types[name] not in _SCALAR or node["dataType"] != types[name]:
+            raise Declined("shape")
+        return name
+
+    stack, out = [_tree(condition)], []
+    while stack:
+        tree = stack.pop()
+        try:
+            cls = tree[0]["class"]
+            if cls == _EXPR + "And":
+                stack += tree[1]
+                continue
+            if cls == _EXPR + "Between":
+                stack.append(_between(tree))
+                continue
+            p = _comparison(tree, column)
+        except Declined:
+            continue
+        col, t = (p[2], p[3]) if p[0] == "cmp" else (p[1], p[2])
+        if col not in zcols or t != types[col] or any(g.get(col, t) != t for g in gens) \
+                or (t == "timestamp" and not utc):
+            continue
+        if p[0] == "in":
+            if None not in p[3]:
+                out.append((col, [_bracket_value(v, t) for v in p[3]]))
+            continue
+        _, op, _c, _t, v = p
+        if v is None or (t == "double" and math.isnan(v)):
+            continue
+        v = _bracket_value(v, t)
+        out.append((col, [v]) if op == "equal" else (col, *{
+            "less": (None, True, v, False), "less_equal": (None, True, v, True),
+            "greater": (v, False, None, True), "greater_equal": (v, True, None, True)}[op]))
+    return out
+
+
+# the nodes a Filter may reach a view through for its conjuncts to prune
+# that view's files: each passes the view's rows, or NULL-extends them,
+# unchanged (a NULL fails every compiled condition)
+_THROUGH = {"Project", "Filter", "Join", "SubqueryAlias"}
+
+
+def plan_conditions(engine, tables: list[str], sql: str) -> dict[str, list[tuple]]:
+    """``{table: zone-map conditions}`` (:func:`prune_conditions`) for the
+    Spark path's views of ``sql``, from its analyzed plan
+    (:func:`analyze`). A table is pruned only when its view occurs in
+    the plan exactly once, subqueries and CTE definitions included: one
+    view serves every occurrence, and a conjunct constrains one. Its
+    conditions come from the top-level conjuncts of every deterministic
+    Filter that reaches the view through nothing but Project, Filter,
+    Join and SubqueryAlias nodes. Each such conjunct drops every row of
+    the Filter whose view row fails it, so a view that keeps only the
+    files that can hold a passing row gives the query the same answer.
+    Raises Declined."""
+    views = {t: _View(engine, t) for t in tables}
+    plan, names = analyze(engine, views, sql)
+    counts: dict[str, int] = {}
+    filters = []
+
+    def visit(node) -> set:
+        """The views ``node`` reaches through :data:`_THROUGH` nodes."""
+        name = node.nodeName()
+        subs = node.subqueries()
+        for i in range(subs.size()):
+            visit(subs.apply(i))
+        if name == "View":
+            view = node.desc().identifier().table().lower()
+            counts[view] = counts.get(view, 0) + 1
+            return {view}
+        kids = node.children()
+        reach = set()
+        for i in range(kids.size()):
+            reach |= visit(kids.apply(i))
+        if name == "Filter" and reach:
+            filters.append((node, reach))
+        return reach if name in _THROUGH else set()
+
+    visit(plan)
+    utc = engine.spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    out: dict[str, list[tuple]] = {}
+    for node, reach in filters:
+        mine = [t for t in tables if t.lower() in reach and counts[t.lower()] == 1]
+        if not mine or not node.deterministic():
+            continue
+        condition = json.loads(node.condition().toJSON())
+        for t in mine:
+            conds = prune_conditions(condition, names[t], views[t].types, views[t].gens,
+                                     engine._zonemap_cols_for(t), utc)
+            if conds:
+                out.setdefault(t, []).extend(conds)
+    return out
+
+
 class _Plan:
     """An analyzed ``[Limit] → Aggregate → [Filter] → view`` (its limit
     and the expressions :func:`_analyzed` fetched) compiled
@@ -486,7 +733,8 @@ class _Plan:
     conditions the filter's top-level conjuncts give."""
 
     def __init__(self, engine, table: str, view: _View, limit: int | None,
-                 grouping: list, aggregates: list, condition: list | None):
+                 grouping: list, aggregates: list, condition: list | None,
+                 names: dict[int, str]):
         self.limit, self.types = limit, view.types
         self.columns: set[str] = set()  # the view columns it reads
         self.pred = self._predicate(_tree(condition)) if condition else None
@@ -513,7 +761,9 @@ class _Plan:
                 self.outputs.append((name, *self._aggregate(node, kids)))
         if len({o[0] for o in self.outputs}) != len(self.outputs):
             raise Declined("shape")
-        self.conds = self._prune_conditions(engine, table, view)
+        self.conds = prune_conditions(
+            condition, names, view.types, view.gens, engine._zonemap_cols_for(table),
+            utc=True) if condition else []
 
     def _column(self, node: dict) -> str:
         name = node["name"]
@@ -525,28 +775,6 @@ class _Plan:
         self.columns.add(name)
         return name
 
-    def _operand(self, tree):
-        """``("col", name, type)`` — a column, possibly widened long →
-        double — or ``("lit", value, type)``."""
-        node, kids = tree
-        cls = node["class"]
-        if cls == _EXPR + "Cast" and kids[0][0]["class"] == _LITERAL:
-            return "lit", _literal(kids[0][0], node["dataType"]), node["dataType"]
-        if cls == _LITERAL:
-            t = node["dataType"]
-            return "lit", _literal(node, t), t
-        if cls == _EXPR + "Cast":
-            inner = kids[0][0]
-            if inner["class"] != _EXPR + "AttributeReference":
-                raise Declined("shape")
-            src, dst = inner["dataType"], node["dataType"]
-            if src != dst and (src, dst) != ("long", "double"):
-                raise Declined("cast")
-            return "col", self._column(inner), dst
-        if cls == _EXPR + "AttributeReference":
-            return "col", self._column(node), node["dataType"]
-        raise Declined("shape")
-
     def _predicate(self, tree):
         node, kids = tree
         cls = node["class"]
@@ -556,24 +784,12 @@ class _Plan:
         if cls == _EXPR + "Not":
             return "not", self._predicate(kids[0])
         if cls in (_EXPR + "IsNull", _EXPR + "IsNotNull"):
-            kind, name, _t = self._operand(kids[0])
+            kind, name, _t = _operand(kids[0], self._column)
             if kind != "col":
                 raise Declined("shape")
             return "is_null" if cls.endswith(".IsNull") else "is_valid", name
-        if cls in _COMPARE:
-            a, b = self._operand(kids[0]), self._operand(kids[1])
-            op = _COMPARE[cls]
-            if a[0] == "lit":
-                a, b, op = b, a, _FLIPPED[op]
-            if (a[0], b[0]) != ("col", "lit") or a[2] != b[2]:
-                raise Declined("shape")
-            return "cmp", op, a[1], a[2], b[1]
-        if cls == _EXPR + "In":
-            a = self._operand(kids[0])
-            items = [self._operand(k) for k in kids[1:]]
-            if a[0] != "col" or any(i[0] != "lit" or i[2] != a[2] for i in items):
-                raise Declined("shape")
-            return "in", a[1], a[2], [i[1] for i in items]
+        if cls in _COMPARE or cls == _EXPR + "In":
+            return _comparison(tree, self._column)
         if cls == _EXPR + "AttributeReference" and node["dataType"] == "boolean":
             return "col", self._column(node)
         if cls == _LITERAL and node["dataType"] == "boolean":
@@ -594,7 +810,7 @@ class _Plan:
             if args[0][0]["value"] is None:
                 raise Declined("shape")
             return "long", ("agg", "count_all", None)
-        kind, name, t = self._operand(args[0])
+        kind, name, t = _operand(args[0], self._column)
         if kind != "col":
             raise Declined("shape")
         if fn == "count":
@@ -603,44 +819,6 @@ class _Plan:
             raise Declined("type")
         out = {"sum": t, "avg": "double"}.get(fn, t)
         return out, ("agg", fn, (name, t))
-
-    def _prune_conditions(self, engine, table: str, view: _View) -> list[tuple]:
-        """``[(column, lo, lo_incl, hi, hi_incl) | (column, [values])]``
-        from the filter's top-level conjuncts that compare a zone-map
-        column, uncast, with a non-NULL literal. A column whose type
-        differs between generations is left out (its brackets hold the
-        physical values, the filter compares the widened ones)."""
-        if self.pred is None:
-            return []
-        zcols = set(engine._zonemap_cols_for(table))
-        stack, conjuncts = [self.pred], []
-        while stack:
-            p = stack.pop()
-            if p[0] == "and":
-                stack += [p[1], p[2]]
-            else:
-                conjuncts.append(p)
-        out = []
-        for p in conjuncts:
-            if p[0] not in ("cmp", "in"):
-                continue
-            col, t = (p[2], p[3]) if p[0] == "cmp" else (p[1], p[2])
-            if col not in zcols or t != self.types[col] or any(
-                    g.get(col, t) != t for g in view.gens):
-                continue
-            if p[0] == "in":
-                if None not in p[3]:
-                    out.append((col, [_bracket_value(v, t) for v in p[3]]))
-                continue
-            _, op, _c, _t, v = p
-            if v is None or (t == "double" and math.isnan(v)):
-                continue
-            v = _bracket_value(v, t)
-            out.append((col, *{
-                "equal": (v, True, v, True), "less": (None, True, v, False),
-                "less_equal": (None, True, v, True), "greater": (v, False, None, True),
-                "greater_equal": (v, True, None, True)}[op]))
-        return out
 
     def run(self, engine, table: str, view: _View) -> tuple[list[str], dict]:
         import pyarrow as pa

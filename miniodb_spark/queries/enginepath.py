@@ -5,13 +5,16 @@ against DuckDB oracles, not just the DataFrame surface.
 Every other registry module queries the fixture parquet directly;
 these first seed a small Engine store from the same fixtures
 (miniodb_spark.seeding — deterministic, bounded, cached per session)
-and then answer through ``Engine.query_df``, so the round-15/16
-machinery — numeric equality/range file pruning on configured
-zonemap_columns (gate._extract_bounds), and comma-join FROM lists with
-qualified multi-table pruning (extractor.py:78,
-gate.extract_join_pruning_bindings) — is externally graded end-to-end,
-not only unit-tested. Reference analog: query/file_pruning.go:107-255
-applies stored min/max to the file list of every SQL query.
+and then answer through ``Engine.query_df``, so zone-map file pruning —
+numeric equality and ranges on configured zonemap_columns, timestamp
+windows, and per-table pruning of comma-join FROM lists (extractor.py
+finds the tables) — is externally graded end-to-end, not only
+unit-tested. Every pruning condition is read from Spark's analyzed
+plan (miniodb_spark.lookup.plan_conditions): the top-level conjuncts
+of a Filter that reaches a table's view comparing one of its zone-map
+columns, uncast, with a literal. Reference analog:
+query/file_pruning.go:107-255 applies stored min/max to the file list
+of every SQL query.
 """
 
 from __future__ import annotations
@@ -30,8 +33,8 @@ from .base import register
     doc="Engine SQL path, numeric EQUALITY file pruning (r15 verdict "
         "#4): 90 events rows seeded into an Engine table with "
         "zonemap_columns=['v'] across three v-sorted flushes; "
-        "`WHERE v = 7` extracts as the degenerate range [7, 7] "
-        "(gate._extract_bounds) and opens only the bracket-admitting "
+        "`WHERE v = 7` is read from the analyzed plan as the "
+        "condition v IN (7) and opens only the bracket-admitting "
         "file. The oracle recomputes the slice from the raw fixture. "
         "100 TB: pruning is O(files) metadata work before any scan — "
         "the reference's Redis min/max path (file_pruning.go:107-157)",
@@ -55,8 +58,8 @@ def engine_numeric_eq_prune_sql(spark, sf_dir):
     doc="Engine SQL path, numeric RANGE file pruning over a configured "
         "zonemap column (r14 verdict #3 machinery, externally graded "
         "end-to-end for the first time): the conjunctive bounds reach "
-        "gate.extract_conjunctive_numeric_range through the shared "
-        "literal-blanked clause locator and skip non-intersecting "
+        "the plan reader (lookup.plan_conditions) from the analyzed "
+        "filter's conjuncts and skip non-intersecting "
         "files; the aggregate then runs over the pruned scan union "
         "buffer. Same store as engine_numeric_eq_prune_sql (seeding "
         "cached per session)",
@@ -86,7 +89,7 @@ def engine_numeric_range_prune_sql(spark, sf_dir):
         "captured only the first table and failed view registration) "
         "composed with MULTI-table qualified pruning: `r.id >= "
         "'EUROPE'` is attributed to reg_cj alone via "
-        "extract_join_pruning_bindings and prunes its files by id "
+        "exprId in the analyzed plan and prunes its files by id "
         "bracket before the join. record_id = r_name (spaces "
         "underscored) keeps the oracle a plain fixture query",
     tags=("engine-path", "sql-surface"),
@@ -212,8 +215,8 @@ def engine_dq_literal_constants(spark, sf_dir):
     """,
     doc="Companion: a literal-soup SIBLING conjunct (its content is "
         "a constant comparison Spark folds to true) must neither "
-        "poison the clause split (_split_top_level_and now slices "
-        "raw text by literal-blanked positions) nor stop the REAL "
+        "poison the conditions (to Spark's parser it is one "
+        "Literal, whatever it spells) nor stop the REAL "
         "v-bounds from pruning; and the backslash-escaped tag "
         "constant ('it\\'s' on the Spark side) pins "
         "escapedStringLiterals=false semantics against the oracle's "
@@ -842,7 +845,7 @@ def engine_encryption_roundtrip(spark, sf_dir):
     """,
     doc="Timestamp-window file pruning externally graded (the ts half "
         "of SURVEY #52 — typed TIMESTAMP literals through "
-        "gate.extract_conjunctive_range's typed-prefix grammar + the "
+        "the analyzed plan's timestamp Literal + the "
         "time zone map — was tests-only evidence through r16, while "
         "the numeric half has been graded since then): 30 fixture "
         "rows across three day-partitioned flushes; the ANSI "

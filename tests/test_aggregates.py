@@ -9,7 +9,10 @@ compares it with the Spark path's answer (``_collect_json`` over
 double drift, buffered rows typed by the whole buffer, NULLs, strings,
 booleans, timestamps and longs. Answers must be equal as multisets;
 the doubles are multiples of 1/4, so every sum is exact in any order and
-double sums and averages are compared exactly too.
+double sums and averages are compared exactly too. The same predicates
+under ``SELECT * … ORDER BY id`` run on the Spark path, over views
+pruned by the conditions of the analyzed plan, and must answer as the
+unpruned views do.
 
 Each decline reason has a test (same answer as the Spark path, that
 reason's counter moved), a served aggregate runs no Spark job and lists
@@ -103,6 +106,7 @@ SERVED = Counter()
 def _build(spark, history, root):
     batches, buffered = history
     eng = Engine(spark, root)
+    eng.create_table("t", TableConfig(name="t", zonemap_columns=["a", "n", "s"]))
     # every column the queries name exists from the first generation
     eng.write("t", {"a": 0, "s": "x", "b": True, "n": 0}, record_id="r0",
               timestamp_us=T0)
@@ -140,6 +144,29 @@ def _differential(spark, history, qs):
             got = Counter(json.dumps(r, separators=(",", ":"), ensure_ascii=False)
                           for r in json.loads(res.json))
             assert got == _canon(_spark(eng, sql)), (sql, stats["declined"])
+        for _select, preds, joiner in qs:
+            where = f" WHERE {joiner.join(f'({p})' for p in preds)}" if preds else ""
+            _spark_path_matches_unpruned(eng, f"SELECT * FROM t{where} ORDER BY id")
+
+
+def _spark_path_matches_unpruned(eng, sql):
+    """``sql`` answers on the Spark path, over views pruned by the
+    conditions of its analyzed plan, as it does with pruning off."""
+    def rows():
+        eng.cache.invalidate_table("t")
+        return Counter(json.dumps(r, sort_keys=True) for r in json.loads(eng.query(sql)))
+
+    before = eng.query_stats["count"]
+    pruning = eng.query_stats.get("zonemap", {}).get("queries", 0)
+    pruned = rows()
+    if eng.query_stats.get("zonemap", {}).get("queries", 0) > pruning:
+        SERVED["spark_path_pruned"] += 1
+    eng._range_select = lambda conds: lambda listing, brackets: [r for r, _dt in listing]
+    try:
+        assert rows() == pruned, sql
+    finally:
+        del eng._range_select
+    assert eng.query_stats["count"] == before + 2
 
 
 def test_arrow_aggregates_match_the_spark_path(spark):
@@ -147,6 +174,7 @@ def test_arrow_aggregates_match_the_spark_path(spark):
     _differential(spark)
     assert SERVED["arrow"] > 3 * SERVED["declined"], SERVED
     assert SERVED["drift"] > 0, SERVED
+    assert SERVED["spark_path_pruned"] > 0, SERVED
 
 
 # -- the supported shapes, one by one -----------------------------------------

@@ -250,3 +250,48 @@ def test_object_backup_on_hadoopfs_root(spark, tmp_path):
     svc.restore_data(bk["object_name"])
     rows = json.loads(svc.query_data("SELECT id, v FROM t")["result_json"])
     assert rows == [{"id": "a", "v": 3}]
+
+
+def test_local_metadata_follows_its_store(spark, tmp_path, monkeypatch):
+    """An object-store root's catalog lives in a driver-local directory
+    keyed by the root URI. A store removed and recreated at the same URI
+    gets a new id, so the old catalog is set aside, neither replayed
+    (its files are gone) nor deleted; a directory written before stores
+    had an id adopts the id of a store that holds tables."""
+    import os
+    import shutil
+
+    monkeypatch.setenv("HOME", str(tmp_path / "home"))
+    root = f"file://{tmp_path}/store"
+    eng = Engine(spark, root)
+    eng.write("t", {"v": 1}, record_id="a", timestamp_us=1_700_000_000_000_000)
+    eng.flush("t")
+    assert json.loads(eng.query("SELECT id, v FROM t")) == [{"id": "a", "v": 1}]
+    meta = eng.meta_root
+    shutil.rmtree(tmp_path / "store")
+
+    fresh = Engine(spark, root)
+    assert fresh.meta_root == meta and fresh.list_tables() == []
+    fresh.create_table("t")
+    assert json.loads(fresh.query("SELECT * FROM t")) == []
+    (aside,) = [d for d in os.listdir(os.path.dirname(meta))
+                if d.startswith(os.path.basename(meta) + ".")]
+    assert os.path.isdir(os.path.join(os.path.dirname(meta), aside, "_system"))
+
+    # a store with a table and a catalog with no id: adopted
+    fresh.write("t", {"v": 2}, record_id="b", timestamp_us=1_700_000_000_000_000)
+    fresh.flush("t")
+    os.remove(os.path.join(meta, "store_id"))
+    again = Engine(spark, root)
+    assert json.loads(again.query("SELECT id, v FROM t")) == [{"id": "b", "v": 2}]
+    with open(os.path.join(meta, "store_id"), encoding="utf-8") as fh:
+        assert fh.read() == fresh.fs.read_bytes(join(root, "_meta", "store_id")).decode()
+
+    # ...but one without an id, met by a store created just now with no
+    # table, is as stale as one with another id: set aside
+    shutil.rmtree(tmp_path / "store")
+    os.remove(os.path.join(meta, "store_id"))
+    last = Engine(spark, root)
+    assert last.list_tables() == []
+    assert len([d for d in os.listdir(os.path.dirname(meta))
+                if d.startswith(os.path.basename(meta) + ".")]) == 2

@@ -1,5 +1,7 @@
 """SQL-gate tests, modeled on the reference's injection suite
-(/root/reference/internal/query/query_test.go:14-240)."""
+(/root/reference/internal/query/query_test.go:14-240), and the inputs the
+gate's former predicate scanners were tested on, read through Spark's
+analyzed plan."""
 
 import pytest
 
@@ -12,6 +14,7 @@ from miniodb_spark.gate import (
     validate_query,
     validate_table_name,
 )
+from plan_reader import bounds, conditions, planner  # noqa: F401 (fixture)
 
 
 @pytest.mark.parametrize(
@@ -110,225 +113,143 @@ def test_table_name_validation():
             validate_table_name(bad)
 
 
-def test_conjunct_extractor_declines_between():
-    """ADVICE r11: splitting a WHERE clause on bare AND slices
-    BETWEEN ... AND ... — `x BETWEEN 'a' AND 'z' = id` (which parses
-    as (x BETWEEN 'a' AND 'z') = id, a boolean comparison) must NOT
-    yield the fabricated conjunct `'z' = id` and prune on 'z'."""
-    from miniodb_spark.gate import (
-        extract_conjunctive_eq, extract_conjunctive_keys,
-    )
+# -- predicates: the inputs of the former gate scanners, read from Spark's
+# analyzed plan instead (miniodb_spark.lookup.plan_conditions over the
+# ``planner`` store of plan_reader.py)
 
+
+def test_conjunct_extractor_declines_between(planner):
+    """A BETWEEN's embedded AND never slices out a fabricated conjunct:
+    ``x BETWEEN 'a' AND 'z' = id`` is ``x BETWEEN 'a' AND ('z' = id)``,
+    so only its ``x >= 'a'`` half bounds anything and nothing pins id;
+    a BETWEEN no longer hides a real sibling conjunct."""
     sql = "SELECT * FROM t WHERE x BETWEEN 'a' AND 'z' = id"
-    assert extract_conjunctive_eq(sql, "id") is None
-    assert extract_conjunctive_keys(sql, "id") is None
-    # plain BETWEEN alongside a real id conjunct: still declined
-    # (conservative posture — BETWEEN anywhere in the clause)
+    assert bounds(planner, sql, "id") is None
+    assert bounds(planner, sql, "x") == ("a", True, None, True)
+    # a BETWEEN whose bounds cast against the column prunes nothing,
+    # and its real sibling still does
     sql2 = "SELECT * FROM t WHERE v BETWEEN 'a' AND 'z' AND id = 'k1'"
-    assert extract_conjunctive_eq(sql2, "id") is None
-    assert extract_conjunctive_keys(sql2, "id") is None
-    # and the non-BETWEEN path still extracts
+    assert conditions(planner, sql2) == {"t": [("id", ["k1"])]}
     sql3 = "SELECT * FROM t WHERE v >= 3 AND id = 'k1'"
-    assert extract_conjunctive_eq(sql3, "id") == "k1"
+    assert bounds(planner, sql3, "id") == ("k1", True, "k1", True)
+    assert bounds(planner, sql3, "v") == (3, True, None, True)
 
 
-def test_where_locator_not_spoofable_by_literals():
-    """r15 verdict #1 (judge-reproduced): the per-extractor WHERE
-    locators ran on RAW SQL, so a SELECT-list literal containing a
-    fake conjunct plus a later literal containing LIMIT (re-balancing
-    quote parity past the truncation) fabricated a bound for a query
-    with NO WHERE clause — an unsound file skip. All extractors now
-    locate the clause on literal-blanked text (_where_clause)."""
-    from miniodb_spark.gate import (
-        extract_conjunctive_eq, extract_conjunctive_keys,
-        extract_conjunctive_numeric_range, extract_conjunctive_range,
-    )
-
-    # the judge's exact repro (previously returned (999, False, None,
-    # True) — files with max(v) <= 999 silently skipped)
-    spoof = "SELECT 'WHERE v > 999 AND pad', 'x LIMIT y' FROM t"
-    assert extract_conjunctive_numeric_range(spoof, "v") is None
-    # eq / string-range / IN siblings of the same construction
-    assert extract_conjunctive_eq(
-        "SELECT 'WHERE id = ''zz'' AND p', 'x LIMIT y' FROM t") is None
-    assert extract_conjunctive_range(
-        "SELECT 'WHERE id >= ''a'' AND p', 'x LIMIT y' FROM t") is None
-    assert extract_conjunctive_keys(
-        "SELECT 'WHERE id IN (''a'') AND p', 'x LIMIT y' FROM t") is None
-    # a literal containing LIMIT used to TRUNCATE a real clause
-    # (unbalanced-quote decline); blanked-text location reads past it
-    assert extract_conjunctive_numeric_range(
-        "SELECT * FROM t WHERE name = 'x LIMIT 5' AND v > 3", "v") == \
+def test_where_locator_not_spoofable_by_literals(planner):
+    """Literal content is a Literal node to Spark's parser: a fake
+    conjunct in a SELECT-list string fabricates nothing, a literal
+    holding LIMIT or WHERE neither truncates nor shifts a real clause,
+    and a column a derived table computes under a base column's name
+    is never read as the base column."""
+    assert conditions(planner, "SELECT 'WHERE v > 999 AND pad', 'x LIMIT y' FROM t") == {}
+    assert conditions(planner, "SELECT 'WHERE id = ''zz'' AND p', 'x LIMIT y' FROM t") == {}
+    assert conditions(planner, "SELECT 'WHERE id >= ''a'' AND p', 'x LIMIT y' FROM t") == {}
+    assert conditions(planner, "SELECT 'WHERE id IN (''a'') AND p', 'x LIMIT y' FROM t") == {}
+    assert bounds(planner, "SELECT * FROM t WHERE name = 'x LIMIT 5' AND v > 3", "v") == \
         (3, False, None, True)
-    # a literal containing WHERE before the real clause must neither
-    # shift the clause start nor decline it via the single-WHERE check
-    # (the blanked text holds exactly one WHERE keyword)
-    assert extract_conjunctive_numeric_range(
-        "SELECT 'WHERE pad' FROM t WHERE v > 3", "v") == \
+    assert bounds(planner, "SELECT 'WHERE pad' FROM t WHERE v > 3", "v") == \
         (3, False, None, True)
-    # decline-on-doubt preconditions of the shared locator
-    # unterminated literal: every later position is ambiguous
-    assert extract_conjunctive_numeric_range(
-        "SELECT * FROM t WHERE v > 3 AND name = 'x", "v") is None
-    # two SELECTs: the WHERE's owning block (and therefore whether a
-    # column is a base column or a computed alias) is unprovable
-    assert extract_conjunctive_numeric_range(
-        "SELECT * FROM (SELECT v + 1 AS v FROM t ORDER BY v) s "
-        "WHERE v > 9", "v") is None
-    assert extract_conjunctive_eq(
-        "WITH c AS (SELECT * FROM t) SELECT * FROM c WHERE id = 'k'"
-    ) is None
-    # two WHEREs decline even if the first span looks clean
-    assert extract_conjunctive_numeric_range(
-        "SELECT * FROM t WHERE v > 3 WHERE v > 4", "v") is None
+    # what Spark cannot parse or analyze prunes nothing
+    assert conditions(planner, "SELECT * FROM t WHERE v > 3 AND name = 'x") == {}
+    assert conditions(planner, "SELECT * FROM t WHERE v > 3 WHERE v > 4") == {}
+    assert conditions(planner, "SELECT * FROM (SELECT v + 1 AS v FROM t ORDER BY v) s "
+                               "WHERE v > 9") == {}
+    # a filter over a CTE reference reaches no view
+    assert conditions(planner, "WITH c AS (SELECT * FROM t) SELECT * FROM c "
+                               "WHERE id = 'k'") == {}
+    # ... but one inside the definition does
+    assert bounds(planner, "WITH c AS (SELECT * FROM t WHERE id = 'k') "
+                           "SELECT * FROM c", "id") == ("k", True, "k", True)
 
 
-def test_extract_conjunctive_numeric_range():
-    """Numeric-literal range extraction (r14 verdict #3): ints/floats,
-    flipped operand sides, tightest-bound intersection, numeric
-    BETWEEN expansion, coexistence with typed timestamp BETWEEN, and
-    the decline-on-doubt edges (OR, exponents, >=2**53 ints)."""
-    from miniodb_spark.gate import extract_conjunctive_numeric_range as ex
+def test_extract_conjunctive_numeric_range(planner):
+    """Numeric comparisons on a long column: both operand sides,
+    intersection, BETWEEN, equality, negative literals and literals past
+    2**53 are read exactly as Catalyst analyzed them (``v < 10.5`` on a
+    long is ``v < 11``); a comparison Catalyst answers by casting the
+    column (an exponent or a string literal) prunes nothing."""
+    def ex(where):
+        return bounds(planner, f"SELECT * FROM t WHERE {where}", "v")
 
-    assert ex("SELECT * FROM t WHERE v > 5", "v") == (5, False, None, True)
-    assert ex("SELECT * FROM t WHERE v >= 5 AND v < 10.5", "v") == \
-        (5, True, 10.5, False)
-    got = ex("SELECT * FROM t WHERE 3 <= v AND 9 > v", "v")
-    assert got == (3, True, 9, False)
-    # tightest bound wins; equal bounds keep the exclusive one
-    assert ex("SELECT * FROM t WHERE v > 2 AND v >= 2", "v") == \
-        (2, False, None, True)
-    assert ex("SELECT * FROM t WHERE v > 1 AND v > 4", "v") == \
-        (4, False, None, True)
-    # numeric BETWEEN expands (token-level rewrite)
-    assert ex("SELECT * FROM t WHERE v BETWEEN 3 AND 7", "v") == \
-        (3, True, 7, True)
-    assert ex("SELECT * FROM t WHERE v BETWEEN 0.5 AND 1.5 AND k > 2",
-              "v") == (0.5, True, 1.5, True)
-    # coexisting quoted/typed BETWEEN must not poison the split
-    assert ex(
-        "SELECT * FROM t WHERE v BETWEEN 3 AND 7 "
-        "AND timestamp BETWEEN TIMESTAMP '2024-01-01' "
-        "AND TIMESTAMP '2024-01-02'", "v") == (3, True, 7, True)
-    # value types are typed, not strings
-    lo, _, hi, _ = ex("SELECT * FROM t WHERE v >= 5 AND v < 10.5", "v")
-    assert isinstance(lo, int) and isinstance(hi, float)
-    # declines: disjunction, NOT, exponent form, 2**53 cliff, quoted
-    assert ex("SELECT * FROM t WHERE v > 5 OR v < 2", "v") is None
-    assert ex("SELECT * FROM t WHERE NOT v > 5", "v") is None
-    assert ex("SELECT * FROM t WHERE v > 1e3", "v") is None
-    assert ex(f"SELECT * FROM t WHERE v > {2**53}", "v") is None
-    assert ex(f"SELECT * FROM t WHERE v > {2**53 - 1}", "v") == \
-        (2**53 - 1, False, None, True)
-    assert ex("SELECT * FROM t WHERE v > '5'", "v") is None
-    assert ex("SELECT * FROM t WHERE w > 5", "v") is None
-    # equality as the degenerate range [v, v] (r15 verdict #4,
-    # reference file_pruning.go:107-157), both operand orders
-    assert ex("SELECT * FROM t WHERE v = 7", "v") == (7, True, 7, True)
-    assert ex("SELECT * FROM t WHERE 7 = v", "v") == (7, True, 7, True)
-    assert ex("SELECT * FROM t WHERE v = 7 AND v >= 5", "v") == \
-        (7, True, 7, True)
-    # contradiction keeps the exclusive flag: empty range, sound skip
-    assert ex("SELECT * FROM t WHERE v > 7 AND v = 7", "v") == \
-        (7, False, 7, True)
-    assert ex("SELECT * FROM t WHERE v = 9007199254740993", "v") is None
-    # negative literal: sign is accepted by the comparison pattern
-    assert ex("SELECT * FROM t WHERE v >= -4", "v") == (-4, True, None, True)
-    # ...but a negative BETWEEN operand declines (sign tokenizes apart)
-    assert ex("SELECT * FROM t WHERE v BETWEEN -4 AND 4", "v") is None
+    assert ex("v > 5") == (5, False, None, True)
+    assert ex("v >= 5 AND v < 10.5") == (5, True, 11, False)
+    assert ex("3 <= v AND 9 > v") == (3, True, 9, False)
+    assert ex("v > 2 AND v >= 2") == (2, False, None, True)
+    assert ex("v > 1 AND v > 4") == (4, False, None, True)
+    assert ex("v BETWEEN 3 AND 7") == (3, True, 7, True)
+    assert ex("v BETWEEN 0.5 AND 1.5 AND k > 2") == (1, True, 1, True)
+    assert ex("v BETWEEN 3 AND 7 AND timestamp BETWEEN TIMESTAMP '2024-01-01' "
+              "AND TIMESTAMP '2024-01-02'") == (3, True, 7, True)
+    assert ex("v BETWEEN -4 AND 4") == (-4, True, 4, True)
+    assert ex("v >= -4") == (-4, True, None, True)
+    assert ex("v = 7") == ex("7 = v") == ex("v = 7 AND v >= 5") == (7, True, 7, True)
+    assert ex("v > 7 AND v = 7") == (7, False, 7, True)  # empty: skips all
+    assert ex(f"v > {2**53}") == (2**53, False, None, True)
+    assert ex("v = 9007199254740993") == (2**53 + 1, True, 2**53 + 1, True)
+    for where in ("v > 5 OR v < 2", "NOT v > 5", "v > 1e3", "v > '5'", "w > 5"):
+        assert ex(where) is None, where
+    # a double column takes the literal as Spark casts it
+    assert bounds(planner, "SELECT * FROM t WHERE d > 9007199254740993", "d") == \
+        (float(2**53), False, None, True)
+    # the drifted column (long, then double) prunes nothing
+    assert conditions(planner, "SELECT * FROM t WHERE w > 5") == {}
 
 
-def test_extract_join_pruning_bindings():
-    """Eligibility gate for multi-table pruning: plain single-SELECT
-    joins bind table->qualifiers; subqueries / CTEs / self-joins /
-    comma-joins / alias collisions decline."""
-    from miniodb_spark.gate import extract_join_pruning_bindings as ex
-
-    assert ex("SELECT * FROM t a JOIN u b ON a.k = b.k "
-              "WHERE a.id >= 'x'") == {"t": ("a", "t"), "u": ("b", "u")}
-    assert ex("SELECT * FROM t JOIN u ON t.k = u.k") == \
-        {"t": ("t",), "u": ("u",)}
-    assert ex("SELECT * FROM t AS a LEFT JOIN u AS b ON a.k = b.k "
-              "GROUP BY a.k") == {"t": ("a", "t"), "u": ("b", "u")}
-    assert ex("SELECT * FROM t a CROSS JOIN u b") == \
-        {"t": ("a", "t"), "u": ("b", "u")}
-    # comma (implicit cross join — TPC-H's native phrasing) binds
-    assert ex("SELECT * FROM t, u WHERE t.k = u.k") == \
-        {"t": ("t",), "u": ("u",)}
-    assert ex("SELECT * FROM t a, u b, r c WHERE a.k = b.k") == \
-        {"t": ("a", "t"), "u": ("b", "u"), "r": ("c", "r")}
-    # declines
-    assert ex("SELECT * FROM t a JOIN t b ON a.k = b.k") is None
-    assert ex("SELECT * FROM t a, t b WHERE a.k = b.k") is None
-    assert ex("SELECT * FROM t a JOIN (SELECT * FROM u) b ON a.k = b.k") \
-        is None
-    assert ex("WITH c AS (SELECT 1 AS k) SELECT * FROM t JOIN c "
-              "ON t.k = c.k") is None
-    assert ex("SELECT * FROM t u JOIN u ON u.k = u.k") is None  # collision
-    assert ex("SELECT * FROM t WHERE id = 'a' AND v IN "
-              "(SELECT v FROM u)") is None
+def test_extract_join_pruning_bindings(planner):
+    """Each table of a join, a comma join, a derived table or a CTE
+    query takes the conjuncts on its own columns; a self-join, and any
+    table read twice, takes none."""
+    assert conditions(planner, "SELECT * FROM t a JOIN u b ON a.k = b.k "
+                               "WHERE a.id >= 'x'") == {"t": [("id", "x", True, None, True)]}
+    assert conditions(planner, "SELECT * FROM t, u WHERE t.k = u.k AND t.id >= 'k'") == \
+        {"t": [("id", "k", True, None, True)]}
+    assert conditions(planner, "SELECT * FROM t a, u b, r c WHERE a.k = b.k "
+                               "AND c.id = 'r1'") == {"r": [("id", ["r1"])]}
+    assert conditions(planner, "SELECT * FROM t a JOIN (SELECT * FROM u WHERE u.id = 'u1') b "
+                               "ON a.k = b.k") == {"u": [("id", ["u1"])]}
+    assert conditions(planner, "WITH c AS (SELECT 1 AS k) SELECT * FROM t JOIN c "
+                               "ON t.k = c.k WHERE t.id = 'a0'") == \
+        {"t": [("id", ["a0"])]}
+    assert conditions(planner, "SELECT * FROM t WHERE id = 'a' AND v IN "
+                               "(SELECT v FROM u)") == {"t": [("id", ["a"])]}
+    for sql in ("SELECT * FROM t a JOIN t b ON a.k = b.k WHERE a.id = 'a0'",
+                "SELECT * FROM t a, t b WHERE a.k = b.k AND a.id = 'a0'",
+                "SELECT * FROM t WHERE id = 'a0' AND v IN (SELECT v FROM t)"):
+        assert conditions(planner, sql) == {}, sql
 
 
-def test_qualified_conjunct_extraction():
-    """With a qualifier tuple the prefix is MANDATORY and restricted:
-    unqualified or other-alias conjuncts must not match."""
-    from miniodb_spark.gate import (
-        extract_conjunctive_keys, extract_conjunctive_numeric_range,
-        extract_conjunctive_range,
-    )
-
+def test_qualified_conjunct_extraction(planner):
+    """A conjunct belongs to the table whose attribute it compares: the
+    other side's conjunct never leaks across, and an unqualified column
+    both sides have is Spark's analysis error, which prunes nothing."""
     sql = ("SELECT * FROM t a JOIN u b ON a.k = b.k "
            "WHERE a.id >= 'r1' AND b.id = 'z9' AND a.v > 5")
-    assert extract_conjunctive_range(sql, qualifier=("a", "t")) == \
-        ("r1", True, None, True)
-    assert extract_conjunctive_keys(sql, qualifier=("b", "u")) == ["z9"]
-    # the other side's conjunct never leaks across
-    assert extract_conjunctive_keys(sql, qualifier=("a", "t")) is None
-    # b's own equality extracts as the degenerate range (r16: `=` is
-    # admitted by the shared bounds core as [v, v]); a's range never
-    # leaks into it — the bound is exactly b.id's literal
-    assert extract_conjunctive_range(sql, qualifier=("b", "u")) == \
-        ("z9", True, "z9", True)
-    assert extract_conjunctive_numeric_range(
-        sql, "v", qualifier=("a", "t")) == (5, False, None, True)
-    assert extract_conjunctive_numeric_range(
-        sql, "v", qualifier=("b", "u")) is None
-    # unqualified conjuncts are ignored under a mandatory qualifier
-    sql2 = "SELECT * FROM t a JOIN u b ON a.k = b.k WHERE id >= 'r1'"
-    assert extract_conjunctive_range(sql2, qualifier=("a", "t")) is None
-    # table-name qualification works when no alias is bound
-    sql3 = "SELECT * FROM t JOIN u ON t.k = u.k WHERE t.id BETWEEN 'a' AND 'c'"
-    assert extract_conjunctive_range(sql3, qualifier=("t",)) == \
-        ("a", True, "c", True)
+    assert bounds(planner, sql, "id") == ("r1", True, None, True)
+    assert bounds(planner, sql, "v") == (5, False, None, True)
+    assert bounds(planner, sql, "id", table="u") == ("z9", True, "z9", True)
+    assert bounds(planner, sql, "v", table="u") is None
+    assert conditions(planner, "SELECT * FROM t a JOIN u b ON a.k = b.k "
+                               "WHERE id >= 'r1'") == {}
+    assert bounds(planner, "SELECT * FROM t JOIN u ON t.k = u.k "
+                           "WHERE t.id BETWEEN 'a' AND 'c'", "id") == ("a", True, "c", True)
 
 
-def test_dq_literal_dialect_unit():
-    """r16 verdict #1 unit matrix: double-quoted segments are string
-    literals under the pinned dialect (session.py sets
-    doubleQuotedIdentifiers=false explicitly) and every scanner
-    treats them exactly like single-quoted ones."""
-    from miniodb_spark.gate import (
-        _blank_string_literals, _strip_string_literals,
-        extract_conjunctive_eq, extract_conjunctive_numeric_range,
-        rewrite_legacy_from_table, validate_query,
-    )
+def test_dq_literal_dialect_unit(planner):
+    """Double-quoted segments are string literals under the pinned
+    dialect (session.py sets doubleQuotedIdentifiers=false): the gate's
+    lexer, the rewrites and the plan reader all treat them as data."""
+    from miniodb_spark.gate import _blank_string_literals, _strip_string_literals
 
-    # the judge's select-list construction (r15 repro, one quote over)
-    assert extract_conjunctive_numeric_range(
-        'SELECT "x WHERE v > 999 AND pad", "y LIMIT z" FROM t', "v") is None
-    # the ADVICE in-WHERE construction
-    assert extract_conjunctive_numeric_range(
-        'SELECT v FROM t WHERE x = "pad AND v > 999 AND pad"', "v") is None
-    assert extract_conjunctive_eq(
-        "SELECT v FROM t WHERE x = \"pad AND id = 'u1' AND pad\"",
-        "id") is None
+    assert conditions(planner, 'SELECT "x WHERE v > 999 AND pad", "y LIMIT z" FROM t') == {}
+    assert bounds(planner, 'SELECT v FROM t WHERE x = "pad AND v > 999 AND pad"',
+                  "v") is None
+    assert bounds(planner, "SELECT v FROM t WHERE x = \"pad AND id = 'u1' AND pad\"",
+                  "id") is None
     # deny-list side-benefit: a harmless dq constant spelling DROP is
-    # data, not a statement — admitted now, rejected before r17
+    # data, not a statement
     assert validate_query('SELECT "DROP" AS a, v FROM t')
     # ...but real keywords outside literals still reject
-    import pytest as _pytest
-    from miniodb_spark.gate import SQLGateError
-    with _pytest.raises(SQLGateError):
+    with pytest.raises(SQLGateError):
         validate_query('SELECT "x", v FROM t UNION SELECT 1, 2')
     # blanker: both flavors, length-preserving, escape-aware
     assert _blank_string_literals('a "b c" d') == 'a "   " d'
@@ -343,57 +264,37 @@ def test_dq_literal_dialect_unit():
         'SELECT "copy FROM table x" FROM events'
 
 
-def test_backslash_escape_dialect_unit():
-    """escapedStringLiterals=false (pinned): backslash escapes are
-    live inside literals, so the lexer consumes them and the bound
-    extractors decline any literal containing a backslash (Spark
-    would unescape it to a DIFFERENT comparison value)."""
-    from miniodb_spark.gate import (
-        extract_conjunctive_keys, extract_conjunctive_numeric_range,
-        extract_conjunctive_range,
-    )
-
-    # the escape-flavor spoof: 'a\' WHERE ... \'b' is ONE literal
-    assert extract_conjunctive_numeric_range(
-        r"SELECT 'a\' WHERE v > 999 AND pad \'b' FROM t", "v") is None
-    # a backslash literal as a bound declines (never compared raw)
-    assert extract_conjunctive_range(
-        r"SELECT v FROM t WHERE id >= 'a\nb'", "id") is None
-    assert extract_conjunctive_keys(
-        r"SELECT v FROM t WHERE id IN ('a\z')", "id") is None
-    # plain bounds still extract alongside an escape-bearing sibling
-    assert extract_conjunctive_numeric_range(
-        r"SELECT v FROM t WHERE v > 5 AND x = 'p\qr'", "v") == \
+def test_backslash_escape_dialect_unit(planner, spark):
+    """escapedStringLiterals=false (pinned): backslash escapes are live
+    inside literals, and a bound is the value Spark unescapes, never
+    the raw text."""
+    assert conditions(planner, r"SELECT 'a\' WHERE v > 999 AND pad \'b' FROM t") == {}
+    unescaped = spark.sql(r"SELECT 'a\nb' AS s, 'a\z' AS z").first()
+    assert bounds(planner, r"SELECT v FROM t WHERE id >= 'a\nb'", "id") == \
+        (unescaped.s, True, None, True) == ("a\nb", True, None, True)
+    assert conditions(planner, r"SELECT v FROM t WHERE id IN ('a\z')") == \
+        {"t": [("id", [unescaped.z])]}
+    assert bounds(planner, r"SELECT v FROM t WHERE v > 5 AND x = 'p\qr'", "v") == \
         (5, False, None, True)
 
 
-def test_raw_string_literal_dialect_unit():
-    """r17 follow-up: Spark's r/R raw-string literals disable
-    backslash escapes INSIDE the literal (probed: r'a\\' is the
-    two-char literal a\\ terminated at the quote; r'a''b' is two
-    adjacent literals = 'ab'). A lexer that escaped through the
-    backslash would close one quote late and mis-map every later
-    span — the same spoof family, one prefix over."""
-    from miniodb_spark.gate import (
-        _blank_string_literals, extract_conjunctive_eq,
-        extract_conjunctive_numeric_range,
-    )
+def test_raw_string_literal_dialect_unit(planner):
+    """Spark's r/R raw-string literals disable backslash escapes INSIDE
+    the literal (r'a\\' is the two-char literal a\\; r'a''b' is two
+    adjacent literals = 'ab'): the gate's lexer closes them where Spark
+    does, and their content fabricates no bound."""
+    from miniodb_spark.gate import _blank_string_literals
 
     assert _blank_string_literals(r"SELECT r'a\' AS x") == \
         "SELECT r'  ' AS x"
-    # raw soup in the SELECT list never fabricates
-    assert extract_conjunctive_numeric_range(
-        r"SELECT r'a\', 'x WHERE v > 999 AND pad' FROM t", "v") is None
-    assert extract_conjunctive_numeric_range(
-        r"SELECT r'a\', 'x WHERE v > 999 AND pad', r'b\' FROM t",
-        "v") is None
+    assert conditions(planner, r"SELECT r'a\', 'x WHERE v > 999 AND pad' FROM t") == {}
+    assert conditions(
+        planner, r"SELECT r'a\', 'x WHERE v > 999 AND pad', r'b\' FROM t") == {}
     # raw soup inside a real clause: sibling bound survives, soup inert
-    assert extract_conjunctive_numeric_range(
-        r"SELECT v FROM t WHERE x = r'p AND v > 999 AND q' AND v < 5",
-        "v") == (None, True, 5, False)
-    assert extract_conjunctive_eq(
-        r"SELECT v FROM t WHERE x = r'p AND id = u1 AND q'",
-        "id") is None
+    assert bounds(planner, r"SELECT v FROM t WHERE x = r'p AND v > 999 AND q' "
+                           r"AND v < 5", "v") == (None, True, 5, False)
+    assert bounds(planner, r"SELECT v FROM t WHERE x = r'p AND id = u1 AND q'",
+                  "id") is None
     # identifier-adjacent r is NOT a raw prefix (typed-literal syntax,
     # which Spark itself rejects for unknown types): escapes stay live
     assert _blank_string_literals("SELECT xr'ab' AS x") == \

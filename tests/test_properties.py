@@ -1,5 +1,6 @@
 """Property-based tests (hypothesis) for the pure-Python layers —
-invariants rather than examples."""
+invariants rather than examples — and for the zone-map conditions the
+engine reads from Spark's analyzed plan."""
 
 import re
 
@@ -11,6 +12,7 @@ from miniodb_spark.cache import cache_key, normalize_sql
 from miniodb_spark.gate import SQLGateError, quote_identifier, quote_literal, validate_query
 from miniodb_spark.schema import infer_batch_schema, resolve_field_names, sanitize_column_name
 from miniodb_spark.sketches import CountMinSketch, HyperLogLog
+from plan_reader import bounds, conditions, planner  # noqa: F401 (fixture)
 
 VALID_COL = re.compile(r"^[a-z0-9_]+$")
 
@@ -127,7 +129,10 @@ def test_cms_lower_bound_property(n, seed):
     assert cms.query_hash(int(h[idx])) >= int(counts[idx])
 
 
-# --- round-15: numeric range extraction soundness ---------------------------
+# --- numeric conditions read from the analyzed plan are exact --------------
+# (the former gate scanners' properties, run through Spark's parser and
+# analyzer: miniodb_spark.lookup.plan_conditions over plan_reader.py's
+# ``planner`` store)
 
 _num_lit = st.one_of(
     st.integers(min_value=-(2**53) + 1, max_value=2**53 - 1),
@@ -138,8 +143,7 @@ _num_lit = st.one_of(
 
 
 def _fmt(v):
-    """Render a literal the way the gate's grammar admits: plain
-    digits / plain decimal, optional sign — never exponents."""
+    """Render a literal as plain digits / plain decimal, optional sign."""
     if isinstance(v, int):
         return str(v)
     s = f"{v:.3f}".rstrip("0")
@@ -151,26 +155,23 @@ def _fmt(v):
               st.booleans()),
     min_size=1, max_size=6))
 @settings(max_examples=300, deadline=None)
-def test_numeric_range_extraction_is_exact_intersection(conjs):
-    """Soundness property for extract_conjunctive_numeric_range: for a
-    random pure-AND chain of numeric comparisons on one column (random
-    operand side per conjunct), the extracted (lo, hi) interval admits
-    a value x IFF every original conjunct admits x — checked on a
-    probe set around each literal. Any discrepancy would be either an
-    unsound prune (interval rejects a satisfying x) or a phantom
-    bound."""
-    from miniodb_spark.gate import extract_conjunctive_numeric_range
-
+def test_numeric_range_extraction_is_exact_intersection(planner, conjs):
+    """For a random pure-AND chain of numeric comparisons on a double
+    zone-map column (random operand side per conjunct), the conditions
+    the plan reader gives, intersected, admit a value x IFF every
+    original conjunct admits x — checked on a probe set around each
+    literal. Any discrepancy would be either an unsound prune (the
+    interval rejects a satisfying x) or a phantom bound."""
     parts = []
     for op, lit, flipped in conjs:
         txt = _fmt(lit)
         if flipped:
             flip = {">": "<", "<": ">", ">=": "<=", "<=": ">="}
-            parts.append(f"{txt} {flip[op]} v")
+            parts.append(f"{txt} {flip[op]} d")
         else:
-            parts.append(f"v {op} {txt}")
-    sql = "SELECT v FROM t WHERE " + " AND ".join(parts)
-    got = extract_conjunctive_numeric_range(sql, "v")
+            parts.append(f"d {op} {txt}")
+    sql = "SELECT d FROM t WHERE " + " AND ".join(parts)
+    got = bounds(planner, sql, "d")
     assert got is not None, sql
     lo, lo_i, hi, hi_i = got
 
@@ -211,35 +212,24 @@ _SOUP = st.text(
 
 @given(_SOUP, _SOUP)
 @settings(max_examples=300, deadline=None)
-def test_literal_soup_never_fabricates_a_bound(a, b):
-    """r15 verdict #1 property: for a query with NO WHERE clause,
-    SELECT-list string literals containing arbitrary keyword soup
-    (WHERE / LIMIT / comparison fragments / stray quotes, '' escaped)
-    must never make any extractor fabricate a constraint."""
-    from miniodb_spark.gate import (
-        extract_conjunctive_eq, extract_conjunctive_keys,
-        extract_conjunctive_numeric_range, extract_conjunctive_range,
-    )
-
+def test_literal_soup_never_fabricates_a_bound(planner, a, b):
+    """For a query with NO WHERE clause, SELECT-list string literals
+    containing arbitrary keyword soup (WHERE / LIMIT / comparison
+    fragments / stray quotes, '' escaped) never give a condition."""
     la, lb = a.replace("'", "''"), b.replace("'", "''")
     sql = f"SELECT '{la}', '{lb}' FROM t"
-    assert extract_conjunctive_eq(sql, "id") is None, sql
-    assert extract_conjunctive_keys(sql, "id") is None, sql
-    assert extract_conjunctive_range(sql, "id") is None, sql
-    assert extract_conjunctive_numeric_range(sql, "v") is None, sql
+    assert conditions(planner, sql) == {}, sql
 
 
 @given(_SOUP)
 @settings(max_examples=300, deadline=None)
-def test_literal_soup_never_shifts_a_real_bound(a):
+def test_literal_soup_never_shifts_a_real_bound(planner, a):
     """Companion property: with a REAL clause present, a keyword-soup
-    literal in the SELECT list must never change the extraction."""
-    from miniodb_spark.gate import extract_conjunctive_numeric_range
-
+    literal in the SELECT list never changes its conditions."""
     lit = a.replace("'", "''")
     sql = f"SELECT '{lit}' FROM t WHERE v >= 7 AND v < 9"
-    assert extract_conjunctive_numeric_range(sql, "v") == \
-        (7, True, 9, False), sql
+    assert conditions(planner, sql) == {
+        "t": [("v", None, True, 9, False), ("v", 7, True, None, True)]}, sql
 
 
 @given(_SOUP)
@@ -276,57 +266,36 @@ def _sq_bs(s: str) -> str:
 
 @given(_SOUPQ, _SOUPQ)
 @settings(max_examples=300, deadline=None)
-def test_dq_literal_soup_never_fabricates_a_bound(a, b):
-    """r16 verdict #1 property: the r15 no-WHERE soup property, one
-    quote flavor over — DOUBLE-quoted SELECT-list literals (string
-    literals under the pinned dialect) must never make any extractor
-    fabricate a constraint, whatever keyword soup (now including
-    stray quotes of both flavors and backslashes) they contain."""
-    from miniodb_spark.gate import (
-        extract_conjunctive_eq, extract_conjunctive_keys,
-        extract_conjunctive_numeric_range, extract_conjunctive_range,
-    )
-
+def test_dq_literal_soup_never_fabricates_a_bound(planner, a, b):
+    """The no-WHERE soup property, one quote flavor over: DOUBLE-quoted
+    SELECT-list literals (string literals under the pinned dialect)
+    never give a condition, whatever keyword soup (stray quotes of both
+    flavors and backslashes included) they contain."""
     sql = f'SELECT "{_dq(a)}", "{_dq(b)}" FROM t'
-    assert extract_conjunctive_eq(sql, "id") is None, sql
-    assert extract_conjunctive_keys(sql, "id") is None, sql
-    assert extract_conjunctive_range(sql, "id") is None, sql
-    assert extract_conjunctive_numeric_range(sql, "v") is None, sql
+    assert conditions(planner, sql) == {}, sql
 
 
 @given(_SOUPQ)
 @settings(max_examples=300, deadline=None)
-def test_dq_literal_soup_never_shifts_a_real_bound(a):
+def test_dq_literal_soup_never_shifts_a_real_bound(planner, a):
     """Companion: with a REAL clause present, dq-literal soup in the
-    SELECT list must never change the extraction — and the same soup
-    inside a dq literal IN the clause (a sibling conjunct on another
-    column) must not either (the r16 in-clause spoof)."""
-    from miniodb_spark.gate import extract_conjunctive_numeric_range
-
+    SELECT list never changes its bound on v — nor does the same soup
+    as a sibling conjunct's literal inside the clause."""
     lit = _dq(a)
     sql = f'SELECT "{lit}" FROM t WHERE v >= 7 AND v < 9'
-    assert extract_conjunctive_numeric_range(sql, "v") == \
-        (7, True, 9, False), sql
+    assert bounds(planner, sql, "v") == (7, True, 9, False), sql
     sql2 = f'SELECT v FROM t WHERE v >= 7 AND x = "{lit}" AND v < 9'
-    assert extract_conjunctive_numeric_range(sql2, "v") == \
-        (7, True, 9, False), sql2
+    assert bounds(planner, sql2, "v") == (7, True, 9, False), sql2
 
 
 @given(_SOUPQ, _SOUPQ)
 @settings(max_examples=300, deadline=None)
-def test_backslash_escaped_soup_never_fabricates_a_bound(a, b):
+def test_backslash_escaped_soup_never_fabricates_a_bound(planner, a, b):
     """Escape-flavor property: single-quoted literals using BACKSLASH
     quote escaping (``'a\\'b'`` — live under the pinned dialect,
-    escapedStringLiterals=false) must never fabricate a constraint.
-    A lexer modeling only '' doubling would terminate the literal at
-    the escaped quote and hand its content to the scanners."""
-    from miniodb_spark.gate import (
-        extract_conjunctive_eq, extract_conjunctive_numeric_range,
-    )
-
+    escapedStringLiterals=false) never give a condition."""
     sql = f"SELECT '{_sq_bs(a)}', '{_sq_bs(b)}' FROM t"
-    assert extract_conjunctive_eq(sql, "id") is None, sql
-    assert extract_conjunctive_numeric_range(sql, "v") is None, sql
+    assert conditions(planner, sql) == {}, sql
 
 
 @given(_SOUPQ)
@@ -358,40 +327,15 @@ def test_extract_tables_dq_literal_never_fabricates(a):
 
 @given(_SOUPQ, _SOUPQ)
 @settings(max_examples=200, deadline=None)
-def test_raw_literal_soup_never_fabricates_a_bound(a, b):
-    """Raw-string flavor (r17): r'...' literals (no backslash escapes
-    — content is raw) carrying keyword soup must never fabricate a
-    constraint. Content keeps quotes out (a quote would terminate a
-    raw literal; there is no in-literal escape for it)."""
-    from miniodb_spark.gate import (
-        extract_conjunctive_eq, extract_conjunctive_numeric_range,
-    )
-
+def test_raw_literal_soup_never_fabricates_a_bound(planner, a, b):
+    """Raw-string flavor: r'...' literals (no backslash escapes —
+    content is raw) carrying keyword soup never give a condition.
+    Content keeps quotes out (a quote would terminate a raw literal;
+    there is no in-literal escape for it)."""
     ra = a.replace("'", " ")
     rb = b.replace("'", " ")
     sql = f"SELECT r'{ra}', r'{rb}' FROM t"
-    assert extract_conjunctive_eq(sql, "id") is None, sql
-    assert extract_conjunctive_numeric_range(sql, "v") is None, sql
-
-
-@given(_SOUPQ)
-@settings(max_examples=300, deadline=None)
-def test_split_top_level_and_round_trips(clause):
-    """Structural invariant of the literal-aware splitter: when it
-    accepts a clause, joining the conjuncts back with ' AND ' must
-    reproduce the clause byte-identically modulo the split points —
-    i.e. the parts are a PARTITION of the raw text (the splitter
-    slices raw text by blanked positions; a lexer bug that slid a
-    span would drop or duplicate bytes here)."""
-    from miniodb_spark.gate import _split_top_level_and
-
-    parts = _split_top_level_and(clause)
-    if parts is None:
-        return
-    # re-join on the exact keyword: total length must match
-    # len(clause) because each split consumed exactly len('AND')
-    rebuilt_len = sum(len(p) for p in parts) + 3 * (len(parts) - 1)
-    assert rebuilt_len == len(clause), (clause, parts)
+    assert conditions(planner, sql) == {}, sql
 
 
 @given(_SOUPQ)

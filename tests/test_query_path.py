@@ -741,3 +741,43 @@ def test_infinite_long_value_reads_as_null(engine):
         assert [r.get("x") for r in json.loads(got)] == [None, None]
         if engine.flush("t"):
             assert engine.read_buffer("t") is None
+
+
+def test_each_path_parses_once_and_analyzes_only_with_a_filter(engine, monkeypatch):
+    """One ``parsePlan`` per query picks its path. A key lookup runs no
+    analysis; an aggregate runs one, which also gives its zone-map
+    conditions; a Spark-path query analyzes once for its conditions
+    when its plan holds a Filter, and not at all without one."""
+    from collections import Counter
+
+    from miniodb_spark import lookup
+
+    _seed(engine, n=8, days=4)
+    calls = Counter()
+    for name in ("parse", "analyze"):
+        real = getattr(lookup, name)
+
+        def counting(*args, _real=real, _name=name, **kwargs):
+            calls[_name] += 1
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(lookup, name, counting)
+
+    def run(sql):
+        calls.clear()
+        engine.cache.invalidate_table("t")
+        return json.loads(engine.query(sql))
+
+    assert run("SELECT id, v FROM t WHERE id = 'r5'") == [{"id": "r5", "v": 5}]
+    assert calls == {"parse": 1} and engine.query_stats["lookups"]["arrow"] == 1
+    assert run("SELECT count(*) AS n FROM t WHERE id >= 'r5'") == [{"n": 3}]
+    assert calls == {"parse": 1, "analyze": 1}
+    assert engine.query_stats["aggregates"]["arrow"] == 1
+    assert run("SELECT count(DISTINCT id) AS n FROM t") == [{"n": 8}]
+    assert calls == {"parse": 1}
+    assert run("SELECT id FROM t ORDER BY id LIMIT 2") == [{"id": "r0"}, {"id": "r1"}]
+    assert calls == {"parse": 1}
+    skipped = engine.query_stats["zonemap"]["files_skipped"]
+    assert run("SELECT id FROM t WHERE id >= 'r6' ORDER BY id") == [{"id": "r6"}, {"id": "r7"}]
+    assert calls == {"parse": 1, "analyze": 1}
+    assert engine.query_stats["zonemap"]["files_skipped"] > skipped

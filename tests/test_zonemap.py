@@ -16,6 +16,9 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from plan_reader import (  # noqa: F401 (planner: a fixture)
+    PORTED, answers_as_unpruned, bounds, conditions, planner)
+
 US = 1_000_000
 DAY = 86_400 * US
 T0 = 1_700_000_000 * US
@@ -257,19 +260,19 @@ def test_sql_path_does_not_prune_disjunctions(engine):
     assert "zonemap" not in engine.query_stats  # no pruning attempted
 
 
-def test_sql_path_escaped_quote_literal_not_pruned(engine):
-    # the id grammar forbids quotes, so an escaped-quote literal can
-    # never match stored data — what matters is that the extractor
-    # DECLINES to prune on it (a truncated 'a' prefix would skip the
-    # wrong files) and the query still answers through the full scan
+def test_sql_path_escaped_quote_literal_prunes_on_spark_value(engine):
+    # a doubled quote inside a literal is an escaped quote: Spark reads
+    # 'a''b' as a'b, and the lookup prunes by that value, never by a
+    # truncated 'a' prefix — same answer as the unpruned scan
     _seed(engine, "zqe", n=4, days=2)
-    from miniodb_spark.gate import extract_conjunctive_eq
-
-    assert extract_conjunctive_eq(
-        "SELECT id FROM zqe WHERE id = 'a''b'") is None
     out = json.loads(engine.query("SELECT id, v FROM zqe WHERE id = 'a''b'"))
     assert out == []
-    assert "zonemap" not in engine.query_stats
+    assert engine.query_stats["lookups"]["arrow"] == 1
+    unpruned = json.loads(engine.query(
+        "SELECT id, v FROM zqe WHERE id = 'a''b' OR id = 'a''b'"))
+    assert unpruned == out
+    # no id bracket holds a'b ('a' sorts before every rNNN)
+    assert engine.query_stats["zonemap"]["files_skipped"] == 2
 
 
 def test_sql_path_prune_misses_return_empty(engine):
@@ -494,37 +497,28 @@ def test_commit_paths_list_generation_once(engine, spark, monkeypatch):
     assert engine.read_table("lone").count() == 100
 
 
-def test_extract_conjunctive_range_unit():
-    """gate.extract_conjunctive_range soundness: literal comparisons
-    extract with the right inclusivity, bounds tighten across
-    conjuncts, flipped literal-first forms normalize, and every
-    unsound shape (OR / BETWEEN / parens / non-literal) declines."""
-    from miniodb_spark.gate import extract_conjunctive_range as ex
+def test_extract_conjunctive_range_unit(planner):
+    """String-literal conditions read from the analyzed plan: the right
+    inclusivity, bounds intersected across conjuncts, literal-first forms
+    flipped, unrelated conjuncts ignored, and nothing from a disjunction,
+    a column-to-column comparison or a comparison Spark casts."""
+    def ex(where):
+        return bounds(planner, f"SELECT * FROM t WHERE {where}", "id")
 
-    assert ex("SELECT * FROM t WHERE id >= 'a'") == ("a", True, None, True)
-    assert ex("SELECT * FROM t WHERE id > 'a' AND id <= 'm'") == \
-        ("a", False, "m", True)
-    assert ex("SELECT * FROM t WHERE 'a' <= id AND 'm' > id") == \
-        ("a", True, "m", False)
+    assert ex("id >= 'a'") == ("a", True, None, True)
+    assert ex("id > 'a' AND id <= 'm'") == ("a", False, "m", True)
+    assert ex("'a' <= id AND 'm' > id") == ("a", True, "m", False)
     # tightening: max lo wins; equal literals -> exclusive wins
-    assert ex("SELECT * FROM t WHERE id > 'a' AND id >= 'c'") == \
-        ("c", True, None, True)
-    assert ex("SELECT * FROM t WHERE id >= 'c' AND id > 'c'") == \
-        ("c", False, None, True)
-    # unrelated conjuncts are ignored, not disqualifying
-    assert ex("SELECT * FROM t WHERE id > 'a' AND v = 3") == \
-        ("a", False, None, True)
-    # unsound shapes decline
-    assert ex("SELECT * FROM t WHERE id > 'a' OR v = 3") is None
-    # BETWEEN now rewrites to the inclusive range (round 14); the
-    # unsound variants (NOT / numeric) still decline — pinned in
-    # test_rewrite_between_unit
-    assert ex("SELECT * FROM t WHERE id BETWEEN 'a' AND 'm'") == \
-        ("a", True, "m", True)
-    assert ex("SELECT * FROM t WHERE (id > 'a')") is None
-    assert ex("SELECT * FROM t WHERE id > v") is None
-    assert ex("SELECT * FROM t WHERE v > 'a'") is None
-    assert ex("SELECT * FROM t") is None
+    assert ex("id > 'a' AND id >= 'c'") == ("c", True, None, True)
+    assert ex("id >= 'c' AND id > 'c'") == ("c", False, None, True)
+    assert ex("id > 'a' AND v = 3") == ("a", False, None, True)
+    assert ex("id BETWEEN 'a' AND 'm'") == ("a", True, "m", True)
+    # parentheses are the parser's business
+    assert ex("(id > 'a')") == ("a", False, None, True)
+    assert ex("id > 'a' OR v = 3") is None
+    assert ex("id > v") is None
+    assert bounds(planner, "SELECT * FROM t WHERE v > 'a'", "v") is None
+    assert conditions(planner, "SELECT * FROM t") == {}
 
 
 def test_prune_range_property_superset_of_matches():
@@ -739,33 +733,6 @@ def test_sql_path_id_between_with_typed_ts_between(engine):
     assert zs["files_skipped"] > before.get("files_skipped", 0), zs
 
 
-def test_point_lookup_vacuous_ts_range_normalized(engine):
-    """r14 ADVICE (low): a caller-supplied both-bounds-None ts_range
-    must behave exactly like ts_range=None — it must NOT add
-    'timestamp' to the required columns (which would skip generations
-    lacking the column wholesale and drop their id-matching rows)."""
-    engine.write("zvac", {"v": 1}, record_id="k1", timestamp_us=T0)
-    engine.flush("zvac")
-    captured = {}
-    orig = engine._pruned_hybrid_scan
-
-    def spy(table, id_col, select_fn, key_pred):
-        captured["req"] = (id_col,) if isinstance(id_col, str) \
-            else tuple(id_col)
-        return orig(table, id_col, select_fn, key_pred)
-
-    engine._pruned_hybrid_scan = spy
-    try:
-        df, rep = engine.point_lookup_df(
-            "zvac", "k1", ts_range=(None, True, None, True))
-    finally:
-        engine._pruned_hybrid_scan = orig
-    assert captured["req"] == ("id",), captured
-    assert [r["id"] for r in df.select("id").collect()] == ["k1"]
-    df2, rep2 = engine.point_lookup_df("zvac", "k1", ts_range=None)
-    assert rep == rep2, (rep, rep2)
-
-
 def test_ts_range_matches_full_scan_property(engine):
     """Superset contract for timestamp pruning under mutations: after
     an update and a delete, the pruned time-slice still equals the
@@ -794,45 +761,40 @@ def test_ts_range_matches_full_scan_property(engine):
     assert got2 == [("e18", 18), ("e19", 99), ("e20", 20)], got2
 
 
-def test_parse_ts_literal_and_typed_prefix_unit():
-    """Unit edges: fromisoformat subset, tz-aware decline, typed
-    TIMESTAMP prefix extraction, and the zone map's canonical
-    naive-UTC string form (aware and naive same-instant datetimes
-    encode identically, so footer-path and Spark-path brackets
-    agree)."""
+def test_parse_ts_literal_and_typed_prefix_unit(planner, spark):
+    """Timestamp conditions: a string literal Spark casts to a timestamp
+    prunes only in the exact ``YYYY-MM-DD[ HH:MM:SS[.f]]`` form whose
+    cast this engine reproduces, a TIMESTAMP literal prunes as its
+    value, and both only under a UTC session; the zone map's canonical
+    naive-UTC string form encodes aware and naive same-instant
+    datetimes identically, so footer-path and Spark-path brackets
+    agree."""
     import datetime as dt
 
-    from miniodb_spark.engine import _parse_ts_literal
-    from miniodb_spark.gate import extract_conjunctive_range
     from miniodb_spark.zonemap import _jsonable
 
-    assert _parse_ts_literal("2024-01-02") == dt.datetime(2024, 1, 2)
-    assert _parse_ts_literal("2024-01-02 06:30:00.5") == \
-        dt.datetime(2024, 1, 2, 6, 30, 0, 500000)
-    assert _parse_ts_literal("2024-01-02T06:30:00") == \
-        dt.datetime(2024, 1, 2, 6, 30)
-    assert _parse_ts_literal(None) is None
-    assert _parse_ts_literal("") is None
-    assert _parse_ts_literal("not-a-ts") is None
-    assert _parse_ts_literal("2024-01-02 00:00:00+02:00") is None
-    # Python >=3.11 fromisoformat accepts compact ISO forms that
-    # Spark's string->timestamp cast returns NULL for — the shape gate
-    # must decline them so the "declined parse == skipped optimization
-    # only" invariant holds on its own (r14 ADVICE, low)
-    assert _parse_ts_literal("20240101") is None
-    assert _parse_ts_literal("2024-01-01T10") is None
-    assert _parse_ts_literal("2024-W01-1") is None
-    assert _parse_ts_literal("2024-01-01 10") is None
+    def ex(lit):
+        return bounds(planner, f"SELECT * FROM t WHERE timestamp >= {lit}", "timestamp")
 
-    rng = extract_conjunctive_range(
-        "SELECT * FROM t WHERE timestamp >= TIMESTAMP '2024-01-02' "
-        "AND timestamp < '2024-01-03'",
-        column="timestamp", typed_literal_prefixes=("TIMESTAMP",))
-    assert rng == ("2024-01-02", True, "2024-01-03", False)
-    # without the prefix allowance the typed literal must NOT match
-    assert extract_conjunctive_range(
-        "SELECT * FROM t WHERE timestamp >= TIMESTAMP '2024-01-02'",
-        column="timestamp") is None
+    assert ex("'2024-01-02'") == (dt.datetime(2024, 1, 2), True, None, True)
+    assert ex("'2024-01-02 06:30:00.5'") == \
+        (dt.datetime(2024, 1, 2, 6, 30, 0, 500000), True, None, True)
+    assert ex("TIMESTAMP '2024-01-02'") == (dt.datetime(2024, 1, 2), True, None, True)
+    # forms whose cast is not reproduced exactly prune nothing
+    for lit in ("'2024-01-02T06:30:00'", "'not-a-ts'", "'2024-01-02 00:00:00+02:00'",
+                "'20240101'", "'2024-01-01T10'", "'2024-W01-1'", "'2024-01-01 10'"):
+        assert ex(lit) is None, lit
+    assert bounds(planner, "SELECT * FROM t WHERE timestamp >= TIMESTAMP '2024-01-02' "
+                           "AND timestamp < '2024-01-03'", "timestamp") == \
+        (dt.datetime(2024, 1, 2), True, dt.datetime(2024, 1, 3), False)
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        assert ex("TIMESTAMP '2024-01-02'") is None
+        assert bounds(planner, "SELECT * FROM t WHERE timestamp >= '2024-01-02' "
+                               "AND id >= 'k'", "id") == ("k", True, None, True)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
 
     naive = dt.datetime(2024, 1, 2, 6, 0, 0)
     aware = dt.datetime(2024, 1, 2, 6, 0, 0, tzinfo=dt.timezone.utc)
@@ -904,57 +866,30 @@ def test_column_added_to_zonemap_columns_scans_older_files(engine):
     assert rep["files_scanned"] == rep["files_total"] == 3
 
 
-def test_rewrite_between_unit():
-    """Token-level BETWEEN expansion: fires only on the provable
-    <ident> BETWEEN '<lit>' AND '<lit>' shape; string literals are
-    atomic so embedded BETWEEN text is untouchable; every other shape
-    survives verbatim (and therefore still declines downstream)."""
-    from miniodb_spark.gate import _rewrite_between, \
-        extract_conjunctive_range
+def test_rewrite_between_unit(planner):
+    """BETWEEN reads as the two comparisons Catalyst analyzes it to: a
+    string, numeric or timestamp range, intersected with its siblings;
+    BETWEEN text inside a literal is data; NOT BETWEEN, bounds that cast
+    the column and unknown columns prune nothing."""
+    import datetime as dt
 
-    assert _rewrite_between("x BETWEEN 'a' AND 'b'") == \
-        "x >= 'a' AND x <= 'b'"
-    assert _rewrite_between("t.ts BETWEEN 'a' AND 'b' AND y = 'c'") == \
-        "t.ts >= 'a' AND t.ts <= 'b' AND y = 'c'"
-    # typed prefixes carried through per-bound
-    assert _rewrite_between(
-        "ts BETWEEN TIMESTAMP 'a' AND TIMESTAMP 'b'",
-        typed_prefixes=("TIMESTAMP",)) == \
-        "ts >= TIMESTAMP 'a' AND ts <= TIMESTAMP 'b'"
-    # BETWEEN inside a string literal: untouched
-    s = "name = 'x BETWEEN ''a'' AND ''b''' AND id >= 'k'"
-    assert _rewrite_between(s) == s
-    # plain numeric operands rewrite too (r14 verdict #3)
-    assert _rewrite_between("x BETWEEN 1 AND 2") == "x >= 1 AND x <= 2"
-    assert _rewrite_between("x BETWEEN 0.5 AND 2.75") == \
-        "x >= 0.5 AND x <= 2.75"
-    # non-literal operands / NOT BETWEEN / signed or exponent-form
-    # numerics: untouched
-    for frag in ("x BETWEEN lo AND 'b'", "x NOT BETWEEN 'a' AND 'b'",
-                 "x BETWEEN -1 AND 2", "x BETWEEN 1e3 AND 2e3",
-                 "f(x) BETWEEN 'a' AND 'b'"):
-        assert _rewrite_between(frag) == frag, frag
+    def ex(where, column="id"):
+        return bounds(planner, f"SELECT * FROM t WHERE {where}", column)
 
-    # end-to-end extraction: BETWEEN now yields the inclusive range
-    assert extract_conjunctive_range(
-        "SELECT * FROM t WHERE id BETWEEN 'c' AND 'f'") == \
-        ("c", True, "f", True)
-    # intersected with an explicit conjunct
-    assert extract_conjunctive_range(
-        "SELECT * FROM t WHERE id BETWEEN 'c' AND 'f' AND id < 'e'") == \
-        ("c", True, "e", False)
-    # NOT BETWEEN still declines the whole clause
-    assert extract_conjunctive_range(
-        "SELECT * FROM t WHERE id NOT BETWEEN 'c' AND 'f'") is None
-    # numeric BETWEEN still declines (leftover keyword at the splitter)
-    assert extract_conjunctive_range(
-        "SELECT * FROM t WHERE id BETWEEN 1 AND 2") is None
-    # timestamp form with typed literals
-    assert extract_conjunctive_range(
-        "SELECT * FROM t WHERE timestamp BETWEEN "
-        "TIMESTAMP '2024-01-02' AND TIMESTAMP '2024-01-05'",
-        column="timestamp", typed_literal_prefixes=("TIMESTAMP",)) == \
-        ("2024-01-02", True, "2024-01-05", True)
+    assert ex("id BETWEEN 'c' AND 'f'") == ("c", True, "f", True)
+    assert ex("id BETWEEN 'c' AND 'f' AND id < 'e'") == ("c", True, "e", False)
+    assert ex("x BETWEEN 'a' AND 'b'", "x") == ("a", True, "b", True)
+    assert ex("timestamp BETWEEN TIMESTAMP '2024-01-02' AND TIMESTAMP '2024-01-05'",
+              "timestamp") == (dt.datetime(2024, 1, 2), True, dt.datetime(2024, 1, 5), True)
+    assert ex("name = 'x BETWEEN ''a'' AND ''b''' AND id >= 'k'") == ("k", True, None, True)
+    assert ex("v BETWEEN 1 AND 2", "v") == (1, True, 2, True)
+    assert ex("v BETWEEN 0.5 AND 2.75", "v") == (1, True, 2, True)
+    assert ex("v BETWEEN -1 AND 2", "v") == (-1, True, 2, True)
+    assert ex("id NOT BETWEEN 'c' AND 'f'") is None
+    assert ex("id BETWEEN 1 AND 2") is None
+    assert ex("v BETWEEN 1e3 AND 2e3", "v") is None
+    assert ex("upper(x) BETWEEN 'a' AND 'b'", "x") is None
+    assert conditions(planner, "SELECT * FROM t WHERE x BETWEEN lo AND 'b'") == {}
 
 
 def test_sql_path_prunes_on_between(engine):
@@ -1051,8 +986,8 @@ def test_point_lookup_composes_time_window(engine):
         engine.flush("zkw")
 
     jan5 = dt.datetime(2024, 1, 5, 0, 0, 0)
-    df, rep = engine.point_lookup_df(
-        "zkw", ["k1", "k3"], ts_range=(jan5, True, None, True))
+    df, rep = engine.multi_range_lookup_df(
+        "zkw", [("id", ["k1", "k3"]), ("timestamp", jan5, True, None, True)])
     got = sorted((r["id"], r["v"]) for r in df.select("id", "v").collect())
     assert got == [("k1", 11), ("k3", 13)], got
     # the day-2 file is skipped even though its id brackets admit both
@@ -1478,12 +1413,17 @@ def test_dq_literal_spoof_never_prunes_e2e(engine):
 
     # in-WHERE flavor: a REAL clause whose dq literal carries conjunct
     # soup — the clause constrains id (matches nothing: ids are rNNNN),
-    # and the soup must not prune on v
+    # and the soup must not prune on v: the query prunes exactly as its
+    # single-quoted twin, by the id literal alone
     out2 = _json.loads(engine.query(
         'SELECT v FROM evz WHERE id = "pad AND v > 999 AND pad"'))
     assert out2 == []
     zs2 = engine.query_stats.get("zonemap", before)
-    assert zs2.get("files_skipped", 0) == before.get("files_skipped", 0), zs2
+    skipped = zs2.get("files_skipped", 0) - before.get("files_skipped", 0)
+    assert _json.loads(engine.query(
+        "SELECT v FROM evz WHERE id = 'pad AND v > 999 AND pad'")) == []
+    assert engine.query_stats["zonemap"]["files_skipped"] == \
+        before.get("files_skipped", 0) + 2 * skipped, engine.query_stats
 
     # equality flavor on a real column via dq literal: dq string never
     # equals any id, but v-pruning must not be fabricated either
@@ -1583,3 +1523,30 @@ def test_spark_aggregate_fallback_is_counted(engine):
         "id", "timestamp", F.col("value").cast("long").alias("v")))
     assert engine.zonemaps.spark_fallback_files == n
 
+
+
+@pytest.mark.parametrize("sql,skips", PORTED)
+def test_ported_predicates_answer_as_unpruned(planner, monkeypatch, sql, skips):
+    """Every input the former gate scanners were tested on, end to end
+    over several files, a long → double drift and buffered rows: the
+    answer through Engine.query equals the answer with zone-map pruning
+    switched off, and a shape the scanners bounded still skips files."""
+    skipped = answers_as_unpruned(planner, sql, monkeypatch)
+    if skips:
+        assert skipped > 0, sql
+
+
+@pytest.mark.parametrize("sql", [
+    # a self-join: one view, two occurrences
+    "SELECT a.id, b.id AS bid FROM t a JOIN t b ON a.k = b.k WHERE a.id = 'k1'",
+    # a derived table's computed column under a zone-map column's name
+    "SELECT * FROM (SELECT v + 100 AS v, id FROM t) s WHERE v > 150",
+    # IS NULL on the NULL-supplying side of a LEFT JOIN
+    "SELECT a.id, b.id AS bid FROM t a LEFT JOIN u b ON a.k = b.v "
+    "WHERE b.id IS NULL",
+    "SELECT a.id, b.id AS bid FROM t a LEFT JOIN u b ON a.k = b.v "
+    "WHERE b.id IS NULL OR b.id = 'u1'",
+])
+def test_shapes_that_prune_nothing(planner, monkeypatch, sql):
+    assert conditions(planner, sql) == {}
+    assert answers_as_unpruned(planner, sql, monkeypatch) == 0
