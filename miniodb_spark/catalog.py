@@ -86,6 +86,16 @@ def merge_type(a: str, b: str) -> str:
     return "string"
 
 
+def cumulative_schema(gens: list[dict[str, str]]) -> dict[str, str]:
+    """The column union of generation schemas, merged with
+    :func:`merge_type`."""
+    cum: dict[str, str] = {}
+    for gen in gens:
+        for col, typ in gen.items():
+            cum[col] = merge_type(cum[col], typ) if col in cum else typ
+    return cum
+
+
 def _entry(e: str | dict) -> dict:
     """A log entry as a dict: a bare relpath is ``{"path": relpath}``."""
     return {"path": e} if isinstance(e, str) else e
@@ -439,23 +449,18 @@ class Catalog:
 
     # -- schema generations ---------------------------------------------
 
-    def register_flush_schema(self, name: str, columns: dict[str, str],
-                              force_new: bool = False) -> int:
-        """Pick (or open) the generation a flush with ``columns`` physical
-        types writes into, and fold new columns into it.
+    def register_flush_schema(self, name: str, columns: dict[str, str]) -> int:
+        """Pick (or open) the generation a write with ``columns`` physical
+        types goes into, and fold new columns into it. Every writer of
+        table data registers here first: a flush, a bulk ingest, and a
+        rewrite's survivors (typed to the cumulative schema).
 
-        The latest generation absorbs the flush when no existing column
+        The latest generation absorbs the write when no existing column
         changes type (additive evolution is free). A type conflict on any
-        column opens a new generation. Returns the generation index.
-
-        ``force_new`` always opens a fresh generation even for an
-        identical schema — merge_upsert needs its batch in a generation
-        no pre-existing row shares, because the old-version sweep
-        discriminates fresh-vs-old by generation (lazy DataFrames make
-        "rows that existed before the ingest" unexpressible otherwise)."""
+        column opens a new generation. Returns the generation index."""
         with self._lock:
             gens = self._generations.setdefault(name, [])
-            if gens and not force_new:
+            if gens:
                 latest = gens[-1]
                 if all(latest.get(c, t) == t for c, t in columns.items()):
                     latest.update(columns)
@@ -512,68 +517,59 @@ class Catalog:
                 return True
             return False
 
-    def generation_for(self, name: str, columns: dict[str, str]) -> int:
-        """Generation whose schema can hold exactly ``columns`` (used by
-        rewrites that re-materialize data in cumulative types)."""
-        return self.register_flush_schema(name, columns)
-
-    # -- rename-free rewrite commit ---------------------------------------
-    # A copy-on-write rewrite lands its survivors in a brand-new generation
-    # directory whose files no commit has added yet (readers read only
-    # files the log holds live), then commits with ONE commit-log record:
-    # the survivors' adds and the superseded partitions' removes. On an
-    # object store there is no rename anywhere on the data path —
-    # matching the reference's upload-then-delete
-    # (internal/query/query.go:1252-1413), but with an atomic log append
-    # instead of a visible delete window; the removed files are deleted
-    # later by the table's collector (mutations.gc_superseded).
-
-    def next_generation_index(self, name: str) -> int:
-        with self._lock:
-            return len(self._generations.get(name, []))
+    # -- rewrite commit ----------------------------------------------------
+    # A rewrite (delete, update's sweep, merge, collapse) writes its
+    # survivors into the generation register_flush_schema picks, under
+    # fresh file names no commit has added yet (readers read only files
+    # the log holds live), then commits with ONE commit-log record: the
+    # survivors' adds and the removes of the files it read. On an object
+    # store there is no rename anywhere on the data path — matching the
+    # reference's upload-then-delete (internal/query/query.go:1252-1413),
+    # but with an atomic log append instead of a visible delete window;
+    # the removed files are deleted later by the table's collector
+    # (mutations.gc_superseded).
 
     def commit_rewrite(
-        self, name: str, columns: dict[str, str],
-        expected_gen: int | None = None,
+        self, name: str,
         add_files: dict[int, Iterable[str]] | None = None,
         remove_files: dict[int, list[str]] | None = None,
     ) -> int:
-        """Atomic commit of a rewrite: append the survivors' generation
-        (always a NEW generation — its files were invisible until this
-        commit adds them) and remove the superseded partitions' files
-        (``remove_files``). Returns the new generation index.
+        """Atomic commit of a rewrite: the files it wrote (``add_files``,
+        as :meth:`touch` takes them) and the files it read and replaces
+        (``remove_files``, {gen: [relpaths]}) as one commit-log record.
+        Returns its version.
 
-        The commit mutates the *on-disk* state, not a possibly-stale
-        in-memory snapshot: it re-reads the catalog file first
-        (refresh_if_changed), then appends on top.
-        ``expected_gen`` is the generation index the rewrite wrote its
-        survivor directory under (next_generation_index at reserve
-        time); if the refreshed generation list no longer lines up —
-        another driver committed while our lease was stolen — the commit
-        raises instead of registering our schema under an index whose
-        directory holds someone else's data (lost-write prevention; the
-        orphan survivor dir stays unreferenced and harmless)."""
+        The commit checks the *on-disk* log, not a possibly-stale
+        in-memory one: it refreshes first, and raises, committing
+        nothing, if any file it removes is no longer live — another
+        commit (a compaction, another driver's rewrite while our lease
+        was stolen) replaced it since the rewrite read it, and
+        publishing would lose that commit's rows or resurrect rows it
+        deleted (Delta Lake's conflict check on the files a writer
+        read). The rewrite's own files stay unreferenced and the
+        collector deletes them after the grace age."""
         with self._lock:
             self.refresh_if_changed(name)
-            gens = self._generations.setdefault(name, [])
-            if expected_gen is not None and len(gens) != expected_gen:
+            live = self._log(name).live
+            gone = sorted((g, rel) for g, rels in (remove_files or {}).items()
+                          for rel in rels if rel not in live.get(g, {}))
+            if gone:
                 raise RuntimeError(
-                    f"stale rewrite commit for {name!r}: reserved gen="
-                    f"{expected_gen} but catalog now has {len(gens)} "
-                    "generations (concurrent commit — lease lost?)")
-            gens.append(dict(columns))
-            # the survivors' files are this commit's adds and every live
-            # file of the superseded partitions its removes: from this
-            # version on, the log alone says the old partitions are gone
+                    f"stale rewrite commit for {name!r}: {len(gone)} file(s) "
+                    f"it replaces are no longer live, e.g. gen={gone[0][0]}/"
+                    f"{gone[0][1]} (concurrent commit — lease lost?)")
             self._persist(name, add_files=add_files,
                           remove_files=remove_files)
-            return len(gens) - 1
+            return self._versions[name]
 
     def excluded_parts(self, name: str) -> set[tuple[int, str]]:
         """Always empty: no partition is excluded outside the commit
         log. Kept only because the benchmark tracer's target list names
         it."""
         return set()
+
+    def next_generation_index(self, name: str) -> int:  # tracer target only
+        return len(self._generations.get(name, []))
 
     def gen_schemas(self, name: str) -> list[dict[str, str]]:
         with self._lock:
@@ -596,11 +592,7 @@ class Catalog:
         """Cumulative schema: column union across generations with
         widening merge (long+double → double, else → string)."""
         with self._lock:
-            cum: dict[str, str] = {}
-            for gen in self._generations.get(name, []):
-                for col, typ in gen.items():
-                    cum[col] = merge_type(cum[col], typ) if col in cum else typ
-            return cum
+            return cumulative_schema(self._generations.get(name, []))
 
     # -- metadata backup/restore (BackupMetadata / RestoreMetadata) ------
 

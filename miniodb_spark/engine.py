@@ -31,6 +31,7 @@ instead).
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -46,7 +47,7 @@ from pyspark.errors import AnalysisException
 from . import gate, schema as dyn_schema
 from .buffer import BufferRow, WriteBuffer
 from .cache import QueryResultCache
-from .catalog import Catalog, TableConfig, merge_type
+from .catalog import Catalog, TableConfig, cumulative_schema, merge_type
 from .extractor import analyze_complexity, extract_tables
 from .fs import get_fs
 from . import fs as fsmod
@@ -347,8 +348,9 @@ class Engine:
         # would share the FileOutputCommitter _temporary/0 staging path,
         # where one job's commit destroys the other's task files. The
         # reference serializes flushes per table the same way. Different
-        # tables still flush/ingest in parallel.
-        self._flush_locks: dict[str, threading.Lock] = {}
+        # tables still flush/ingest in parallel. Re-entrant: a rewrite
+        # holds it from its snapshot through the writer's commit.
+        self._flush_locks: dict[str, threading.RLock] = {}
         # boot-time WAL replay (reference replays on startup,
         # concurrent_buffer.go:258-359): without this, rows acked before a
         # crash stay invisible to hybrid reads until the first write
@@ -430,11 +432,11 @@ class Engine:
     def _table_dir(self, table: str) -> str:
         return fsmod.join(self.root, table)
 
-    def _flush_lock(self, table: str) -> threading.Lock:
+    def _flush_lock(self, table: str) -> threading.RLock:
         with self._lock:
             lk = self._flush_locks.get(table)
             if lk is None:
-                lk = self._flush_locks[table] = threading.Lock()
+                lk = self._flush_locks[table] = threading.RLock()
             return lk
 
     def _buffer_for(self, table: str) -> WriteBuffer:
@@ -670,35 +672,49 @@ class Engine:
                 out[f"{dt_name}/{path.rstrip('/').split('/')[-1]}"] = size
         return out
 
-    def ingest_dataframe(self, table: str, df: DataFrame, ts_col: str = "timestamp",
-                         force_new_generation: bool = False) -> int:
+    def ingest_dataframe(self, table: str, df: DataFrame,
+                         ts_col: str = "timestamp") -> int:
         """Bulk-ingest path: no driver materialization — the DataFrame is
-        written straight through with the same layout. This is the 100 TB
-        path; the row-level ``write`` API is for the low-latency edge.
-        Returns the generation index the batch landed in (merge_upsert
-        needs it to exclude the fresh rows from its old-version sweep)."""
+        written straight through with the same layout (:meth:`_write_files`).
+        This is the 100 TB path; the row-level ``write`` API is for the
+        low-latency edge. Returns the generation index the batch landed
+        in."""
         gate.validate_table_name(table)
         self.catalog.ensure_table(table)
         out = df
         if "table_name" not in out.columns:
             out = out.withColumn("table_name", F.lit(table))
         out = out.withColumn("dt", F.date_format(F.col(ts_col), "yyyy-MM-dd"))
+        gen = self._write_files(table, out)
+        self.cache.invalidate_table(table)
+        return gen
+
+    def _write_files(self, table: str, df: DataFrame,
+                     remove_files: dict[int, list[str]] | None = None) -> int:
+        """The one Spark writer of table data: a bulk ingest, and the
+        survivors of every rewrite (delete, update, merge, collapse).
+        ``df`` holds the table's columns plus ``dt``. It appends into
+        the generation :meth:`Catalog.register_flush_schema` picks for
+        its types, so only a real type conflict opens a generation, and
+        commits the files it wrote plus ``remove_files`` (the files a
+        rewrite read and replaces; :meth:`Catalog.commit_rewrite`) as
+        ONE commit-log record. Returns the generation index.
+
+        Everything runs under the table's cross-driver ``#rewrite``
+        lease and the flush lock — in-process via the lock, across
+        drivers via the lease (two drivers' append jobs into one gen dir
+        would share the committer staging path). The lease is checked
+        again right before the commit: a writer whose lease was stolen
+        mid-job aborts rather than publish over the thief's work (its
+        files are unreferenced, so aborting is free)."""
         cfg = self.catalog.get_table(table)
-        with self.lease.holding(f"{table}/#rewrite", timeout_s=120.0), \
-                self.lease.keepalive(f"{table}/#rewrite"), \
-                self._flush_lock(table):
-            # register under the cross-driver lease + flush lock: every
-            # generation-creating path (flush, ingest, rewrite commit)
-            # serializes here — in-process via the lock, across drivers
-            # via the lease (two drivers' append jobs into one gen dir
-            # would share the committer staging path) — so a rewrite's
-            # reserved generation index can't be claimed by a racing
-            # ingest
+        key = f"{table}/#rewrite"
+        with self.lease.holding(key, timeout_s=120.0), \
+                self.lease.keepalive(key), self._flush_lock(table):
             self.catalog.refresh_if_changed(table)
             gen = self.catalog.register_flush_schema(
                 table,
-                {f.name: _type_name(f.dataType) for f in out.schema.fields if f.name != "dt"},
-                force_new=force_new_generation,
+                {f.name: _type_name(f.dataType) for f in df.schema.fields if f.name != "dt"},
             )
             # the commit's adds are what the Spark job wrote: one LIST
             # before it and one after (a leftover already in the
@@ -709,19 +725,25 @@ class Engine:
                 # put a whole day in one task (guide §2.5); the AQE
                 # rebalance keeps rows clustered by day but splits
                 # oversized days into advisory-sized files (§6)
-                out.hint("rebalance", "dt")
+                df.hint("rebalance", "dt")
                 .write.mode("append")
                 .option("compression", cfg.compression if cfg else "snappy")
                 .partitionBy("dt")
                 .parquet(self._gen_dir(table, gen))
             )
-            # data commit: the job's files as add entries, their sizes
-            # from the LIST
+            # the job's files as add entries, their sizes from the LIST
             new = {rel: size for rel, size in
                    self._gen_listing(table, gen).items() if rel not in before}
-            self.catalog.touch(table, add_files={
-                gen: self._add_entries(table, gen, new)})
-        self.cache.invalidate_table(table)
+            add = {gen: self._add_entries(table, gen, new)}
+            if not self.lease.verify(key):
+                raise RuntimeError(
+                    f"mutation lease on {table!r} lost during the write; "
+                    "aborting commit (no data was published)")
+            if remove_files is None:
+                self.catalog.touch(table, add_files=add)
+            else:
+                self.catalog.commit_rewrite(
+                    table, add_files=add, remove_files=remove_files)
         return gen
 
     def ingest_path(
@@ -810,23 +832,33 @@ class Engine:
         hit = self._head_scans.get(table)
         if hit is not None and hit[0] == key:
             return hit[1]
-        live = self.catalog.live_files(table)
-        # tombstoned generations (collapse_generations) have no schema
-        parts = [
-            self._gen_scan(table, i, gcols, cum,
-                           [rel for rel, _dt in live[i]])
-            for i, gcols in enumerate(gens)
-            if gcols and live.get(i)
-        ]
-        if not parts:
+        out = self._scan_files(table, self.catalog.live_files(table), gens)
+        if out is None:
             # no live file anywhere: still a typed scan
             i = next(i for i, g in enumerate(gens) if g)
-            parts = [self._gen_scan(table, i, gens[i], cum, [])]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+            out = self._gen_scan(table, i, gens[i], cum, [])
         self._head_scans[table] = (key, out)
         return out
+
+    def _scan_files(self, table: str, files: dict[int, list[tuple[str, str]]],
+                    gens: list[dict[str, str]] | None = None) -> DataFrame | None:
+        """Exactly ``files`` ({gen: [(relpath, dt)]}, as
+        :meth:`Catalog.live_files` returns them) as one DataFrame: one
+        explicit-schema scan per generation (``gens``, default the
+        catalog's), each aligned to their cumulative schema, unioned.
+        Spark fixes the file list when the scan is built, so a file
+        committed later is never part of it. None when ``files`` names
+        no file of a generation with a schema (tombstoned generations
+        have none)."""
+        gens = self.catalog.gen_schemas(table) if gens is None else gens
+        cum = cumulative_schema(gens)
+        parts = [
+            self._gen_scan(table, i, gcols, cum,
+                           [rel for rel, _dt in files[i]])
+            for i, gcols in enumerate(gens)
+            if gcols and files.get(i)
+        ]
+        return functools.reduce(DataFrame.unionByName, parts) if parts else None
 
     def live_objects(self, table: str) -> dict[tuple[int, str], list[tuple[str, int]]]:
         """``{(gen, dt): [(path, size)]}`` of the table's live files, for
@@ -938,49 +970,32 @@ class Engine:
                 f"unknown snapshot version {version!r} for table "
                 f"{table!r}; table_history() lists committed versions")
         gens = [dict(g) for g in rec["doc"].get("generations", [])]
-        cum: dict[str, str] = {}
-        for gen in gens:
-            for col, typ in gen.items():
-                cum[col] = merge_type(cum[col], typ) if col in cum else typ
-        if not cum:
-            return None
-        live = self.catalog.live_files(table, version)
-        parts: list[DataFrame] = []
-        for i, gcols in enumerate(gens):
-            if not gcols or not live.get(i):
-                continue
+        try:
+            return self._scan_files(
+                table, self.catalog.live_files(table, version), gens)
+        except AnalysisException as e:
+            # only a MISSING path means the version is gone (GC'd,
+            # compacted away, retention-dropped — possibly by
+            # another driver a moment ago); a corrupt footer or a
+            # permission error is a real fault and surfaces as-is.
+            # Spark 4 raises PATH_NOT_FOUND (FileNotFoundException
+            # underneath).
+            klass = ""
             try:
-                parts.append(self._gen_scan(
-                    table, i, gcols, cum, [rel for rel, _dt in live[i]]))
-            except AnalysisException as e:
-                # only a MISSING path means the version is gone (GC'd,
-                # compacted away, retention-dropped — possibly by
-                # another driver a moment ago); a corrupt footer or a
-                # permission error is a real fault and surfaces as-is.
-                # Spark 4 raises PATH_NOT_FOUND (FileNotFoundException
-                # underneath).
-                klass = ""
-                try:
-                    klass = e.getCondition() or ""
-                except Exception:
-                    pass
-                msg = str(e)
-                if not ("PATH_NOT_FOUND" in klass
-                        or "PATH_NOT_FOUND" in msg
-                        or "FileNotFoundException" in msg):
-                    raise
-                raise SnapshotUnavailableError(
-                    f"snapshot v{version} of {table!r} needs files no "
-                    "longer on disk (garbage-collected after a rewrite, "
-                    "compaction or retention pass, or vacuumed); run "
-                    "with retain_history=True and vacuum explicitly to "
-                    f"keep snapshots readable: {e}") from e
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+                klass = e.getCondition() or ""
+            except Exception:
+                pass
+            msg = str(e)
+            if not ("PATH_NOT_FOUND" in klass
+                    or "PATH_NOT_FOUND" in msg
+                    or "FileNotFoundException" in msg):
+                raise
+            raise SnapshotUnavailableError(
+                f"snapshot v{version} of {table!r} needs files no "
+                "longer on disk (garbage-collected after a rewrite, "
+                "compaction or retention pass, or vacuumed); run "
+                "with retain_history=True and vacuum explicitly to "
+                f"keep snapshots readable: {e}") from e
 
     def vacuum(self, table: str) -> int:
         """Run the table's garbage collector (mutations.gc_superseded,
@@ -1817,9 +1832,11 @@ class Engine:
 
     def delete(self, table: str, record_id: str) -> int:
         """DeleteData: buffer removal + tombstone, then copy-on-write
-        rewrite of affected ``dt`` partitions (reference
-        miniodb_service.go:867-1007, query/query.go:1252-1413 rewrites
-        per *file*; partition-level rewrite is the Spark-shaped unit)."""
+        rewrite of affected ``dt`` partitions inside their generation
+        (reference miniodb_service.go:867-1007, query/query.go:1252-1413
+        rewrites per *file*; partition-level rewrite is the Spark-shaped
+        unit). One commit replaces the partitions' files, so the delete
+        is all-or-nothing (see mutations.delete_rows)."""
         gate.validate_table_name(table)
         with self.lease.holding(f"{table}/{record_id}",
                                 retries=self.lease_busy_retries), \
@@ -1829,9 +1846,7 @@ class Engine:
             buf = self._buffers.get(table)
             if buf is not None:
                 removed += buf.remove(table, record_id)
-            persisted = self.read_persisted(table)
-            if persisted is not None:
-                removed += delete_rows(self, table, persisted, F.col("id") == record_id)
+            removed += delete_rows(self, table, F.col("id") == record_id)
         self.cache.invalidate_table(table)
         if self.events:
             self.events.publish("delete", table, [record_id])
@@ -1922,10 +1937,11 @@ class Engine:
         leases makes the new version visible to every driver the moment
         the leases release, and makes update durable at return
         (strictly stronger than the reference's buffer-then-flush).
-        The fresh row takes its own generation so "older versions" is
-        expressible as a generation filter — the merge_upsert protocol
-        at single-row grain; the extra generation folds in
-        collapse_generations/compaction like any other.
+        The sweep reads only the files live before the insert (the
+        merge_upsert protocol at single-row grain), so the fresh row is
+        never swept; both land in the generation the catalog picks for
+        their types, so no generation opens unless a column changes
+        type.
 
         Lock ordering: cross-driver leases are ALWAYS acquired before
         the process-level ``self._lock`` (re-entered by
@@ -1965,31 +1981,19 @@ class Engine:
             if self.encryptor:
                 payload = self.encryptor.encrypt_payload(payload)
             df = self._typed_row_df(table, rid, timestamp_us, payload)
-            # 1. INSERT FIRST (own generation, unreferenced by the
-            #    sweep's filter)
-            fresh_gen = self.ingest_dataframe(
-                table, df, force_new_generation=True
-            )
+            # the sweep's snapshot: the files live before the insert.
+            # We hold #rewrite re-entrantly around snapshot + insert +
+            # sweep, so no other commit lands in between.
+            old = self.catalog.live_files(table)
+            # 1. INSERT FIRST
+            self.ingest_dataframe(table, df)
             # 2. sweep older versions: this driver's buffer copy plus
-            #    every persisted copy outside the fresh generation.
-            #    We hold #rewrite re-entrantly around snapshot + call,
-            #    so delete_rows cannot see a mid-call catalog move and
-            #    the gen pre-filter stays valid.
+            #    every persisted copy in the snapshot
             removed = 0
             buf = self._buffers.get(table)
             if buf is not None:
                 removed += buf.remove(table, rid)
-            persisted = self.read_persisted(table)
-            if persisted is not None:
-                # fresh-generation exclusion lives IN the predicate, not
-                # a df pre-filter: if delete_rows ever re-derives its
-                # snapshot (stolen-lease + foreign-commit path), a
-                # re-derived df would lack a pre-filter and the sweep
-                # would eat the just-inserted version too (ADVICE r13).
-                removed += delete_rows(
-                    self, table, persisted,
-                    (F.col("id") == rid) & (F.col("gen") != fresh_gen),
-                )
+            removed += delete_rows(self, table, F.col("id") == rid, files=old)
         self.cache.invalidate_table(table)
         if self.events:
             self.events.publish("update", table, [record_id])
@@ -2051,15 +2055,9 @@ class Engine:
     def cleanup_empty_id_records(self, table: str) -> int:
         """DELETE FROM t WHERE id = '' OR id IS NULL (reference
         miniodb_service.go:1051-1084). '_' placeholder ids count too."""
-        persisted = self.read_persisted(table)
-        n = 0
-        if persisted is not None:
-            n += delete_rows(
-                self,
-                table,
-                persisted,
-                F.col("id").isNull() | (F.col("id") == "") | (F.col("id") == "_"),
-            )
+        n = delete_rows(
+            self, table,
+            F.col("id").isNull() | (F.col("id") == "") | (F.col("id") == "_"))
         self.cache.invalidate_table(table)
         self._collect(table)
         return n

@@ -2,7 +2,7 @@
 
 ``spark.read.parquet(path)`` pays a file listing + parquet footer
 schema inference on the DRIVER on every call — measured ~90 ms per
-call at sf0.1 (a round-17 tools/profile.py experiment), and at 100 TB
+call at sf0.1 (a round-17 tools/spark_profile.py experiment), and at 100 TB
 it is a per-query object-store footer fetch. Every registry query
 re-opens its fixture tables on every invocation, so this constant was
 multiplied by 1-6 tables × every query execution.

@@ -278,7 +278,7 @@ class MutationLease:
         lease on ``key``. Commit points call this immediately before
         their atomic metadata write: a rewrite whose lease was stolen
         mid-job must abort rather than publish over the thief's work
-        (its survivor directory is unreferenced, so aborting is free)."""
+        (its survivor files are unreferenced, so aborting is free)."""
         try:
             raw = self.kv.fs.read_bytes(self._marker(key))
             tok, expiry = raw.decode("ascii").rsplit("|", 1)

@@ -57,9 +57,21 @@ import datetime as _dt
 import json
 import math
 import re
+import threading
+
+from pyspark.logger import PySparkLogger
 
 from . import schema as dyn_schema
 from . import fs as fsmod
+
+# PySpark logs a query's analysis error (with Spark's stack trace) when
+# it converts the JVM exception. The schema-only analysis in analyze()
+# declines such a query and the Spark path then raises the same error,
+# which logs it again: the first record is dropped while this thread is
+# in that one call, so concurrent real queries still log theirs.
+_PROBING = threading.local()
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(
+    lambda record: not getattr(_PROBING, "on", False))
 
 # Past this many pruned files the Spark path answers. Measured on 4
 # vCPUs over 320-row files (CHANGES.md has the table), pyarrow's CPU
@@ -466,12 +478,14 @@ def analyze(engine, views: dict, sql: str) -> tuple:
     with engine._view_lock:
         for table, hit in hits.items():
             hit[1]._jdf.createOrReplaceTempView(table)
+        _PROBING.on = True
         try:
             plan = jspark.sql(sql).queryExecution().analyzed()
         except AnalysisException:
-            # the query's own error: the Spark path raises it to the caller
+            # the query's own error: the Spark path raises (and logs) it
             raise Declined("shape") from None
         finally:
+            _PROBING.on = False
             for table in hits:
                 jspark.catalog().dropTempView(table)
     return plan, {table: hit[2] for table, hit in hits.items()}

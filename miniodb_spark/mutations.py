@@ -5,28 +5,32 @@ find the files containing the id via the Redis index; files made
 entirely of the id are dropped, others are rewritten without the
 matching rows — upload the rewritten object, then delete the old one.
 Our Spark-shaped unit of rewrite is the ``gen=N/dt=day`` partition:
-affected partitions are discovered by a pruned scan (the ``id``
-predicate rides parquet footer min/max), survivors are re-materialized
-in cumulative types, and the old partitions are superseded. The
-rewrite itself is a distributed Spark job, not a driver loop over
-files.
+affected partitions are discovered by a scan of a known file set (the
+``id`` predicate rides parquet footer min/max), survivors are
+re-materialized in cumulative types, and the partition's files are
+replaced. The rewrite itself is a distributed Spark job, not a driver
+loop over files.
 
 **Rename-free commit protocol** (object-store-safe: on S3A a rename is
 a non-atomic copy+delete, so the data path must never rename):
 
-1. survivors are written *directly* into a brand-new generation
-   directory ``gen=M`` whose files no commit has added — readers read
-   only the files the commit log holds live, so a crash mid-write
-   leaves an invisible orphan directory, never partial data;
+1. the rewrite reads a snapshot whose files it knows, and writes the
+   survivors through the engine's one writer (``Engine._write_files``)
+   under fresh file names into the generation the catalog picks for
+   their types — the latest one unless a column changed type. Readers
+   read only the files the commit log holds live, so a crash mid-write
+   leaves invisible orphan files, never partial data;
 2. the commit point is ONE commit-log record
    (:meth:`~miniodb_spark.catalog.Catalog.commit_rewrite`): it adds
-   the survivors' files and removes every live file of the superseded
-   ``(gen, dt)`` partitions;
+   the survivors' files and removes exactly the snapshot files of the
+   rewritten ``(gen, dt)`` partitions, and it refuses to commit if any
+   of them is no longer live;
 3. the files the commit removed stay on disk, invisible, until the
    table's garbage collector (:func:`gc_superseded`) deletes them.
 
-The whole reserve→write→commit window runs under the engine's
-per-table flush lock so no concurrent flush can claim generation M.
+The whole snapshot→write→commit window runs under the table's
+``#rewrite`` lease and the engine's per-table flush lock, so no other
+writer commits in between.
 """
 
 from __future__ import annotations
@@ -94,30 +98,33 @@ def gc_superseded(engine, table: str) -> int:
 def delete_rows(
     engine,
     table: str,
-    df: DataFrame,
     delete_predicate: Column | None = None,
     match_keys: tuple[DataFrame, str] | None = None,
+    files: dict[int, list[tuple[str, str]]] | None = None,
 ) -> int:
     """Delete rows matching ``delete_predicate`` — or, with
     ``match_keys=(keys_df, key_col)``, rows whose key appears in a keys
     DataFrame (semi-join matching, the bulk-merge shape: a million-key
     batch can never be an ``isin`` literal) — from a table's persisted
-    data; returns the number of rows deleted. ``df`` must be the
-    engine's aligned persisted read (columns = cumulative schema +
-    dt + gen), optionally pre-filtered (merge_upsert passes
-    ``gen != fresh_gen``). Only (gen, dt) partitions containing matches
-    are rewritten, via the rename-free commit protocol above.
+    data; returns the number of rows deleted. Only (gen, dt) partitions
+    containing matches are rewritten, via the rename-free commit
+    protocol above.
+
+    The rows read are a snapshot whose files are known: ``files``
+    ({gen: [(relpath, dt)]}, a :meth:`Catalog.live_files` taken by the
+    caller), less any file a commit removed since, or the head when
+    ``files`` is None. A caller that inserts before sweeping (update,
+    merge) takes ``files`` before its insert, so the fresh rows are
+    never read or removed. The remove set is exactly the snapshot's
+    files in the matched partitions.
 
     **Cross-driver serialization**: the whole snapshot→rewrite→commit
     runs under the table-level ``#rewrite`` lease (reference: every
     mutation holds the Redis (table,id) lock, miniodb_service.go:
-    720-722; rewrites serialize per *table* here because the unit of
-    commit is the whole catalog entry). The per-process flush lock
-    alone cannot stop a second driver on the same store root from
-    reserving the same generation index — and, worse, a snapshot taken
-    before the other driver's commit would re-materialize rows it just
-    deleted. So if the catalog moved while we waited for the lease, the
-    snapshot is re-derived from the refreshed catalog before counting."""
+    720-722; rewrites serialize per *table* here because a commit
+    replaces whole partitions). The snapshot is taken after the lease
+    is held and the catalog refreshed, so it never predates another
+    driver's commit."""
     assert (delete_predicate is None) != (match_keys is None), \
         "exactly one of delete_predicate / match_keys"
     # keepalive starts the moment the lease is held, BEFORE the first
@@ -125,19 +132,17 @@ def delete_rows(
     # that can outlast the 30 s TTL at 100 TB) — an uncovered gap here
     # would let a second driver steal the lease mid-snapshot and both
     # would rewrite
-    with engine.lease.holding(f"{table}/#rewrite",
-                              retries=engine.lease_busy_retries), \
-            engine.lease.keepalive(f"{table}/#rewrite"), \
-            engine._flush_lock(table):
-        if engine.catalog.refresh_if_changed(table):
-            # another driver committed while we waited: the caller's
-            # snapshot (and any pre-filter baked into it) is stale.
-            # Predicate deletes re-derive here; key-mode callers hold
-            # the lease reentrantly around snapshot+call (merge_upsert),
-            # so a mid-call catalog move cannot happen for them.
-            df = engine.read_persisted(table)
-            if df is None:
-                return 0
+    key = f"{table}/#rewrite"
+    with engine.lease.holding(key, retries=engine.lease_busy_retries), \
+            engine.lease.keepalive(key), engine._flush_lock(table):
+        engine.catalog.refresh_if_changed(table)
+        head = engine.catalog.live_files(table)
+        # the caller's snapshot, less any file a commit removed since
+        files = head if files is None else {
+            g: sorted(set(fs) & set(head.get(g, ()))) for g, fs in files.items()}
+        df = engine._scan_files(table, files)
+        if df is None:
+            return 0
         if match_keys is not None:
             keys_df, key_col = match_keys
             # distinct keys, joined (no broadcast hint — a merge batch
@@ -148,56 +153,21 @@ def delete_rows(
                 keys, part[key_col] == F.col("__mk"), "left_anti")
         else:
             matched = df.filter(delete_predicate)
-            survivors_of = lambda part: part.filter(~delete_predicate)
+            # a row the predicate reads as NULL is not deleted: it survives
+            survivors_of = lambda part: part.filter(
+                ~F.coalesce(delete_predicate, F.lit(False)))
         per_part = matched.groupBy("gen", "dt").count().collect()
         if not per_part:
             return 0
-        affected = [(int(r["gen"]), r["dt"]) for r in per_part]
-        deleted = sum(r["count"] for r in per_part)
-
-        affected_pred = F.lit(False)
-        for g, d in affected:
-            affected_pred = affected_pred | ((F.col("gen") == g) & (F.col("dt") == d))
-        survivors = survivors_of(df.filter(affected_pred)).drop("gen")
-
-        cum = engine.catalog.schema_of(table)
-        cfg = engine.catalog.get_table(table)
-        new_gen = engine.catalog.next_generation_index(table)
-        # 1. land survivors directly in the unreferenced generation dir
-        #    (the keepalive daemon above re-extends every ttl/3 for the
-        #    duration; the reference lock exposes the same Extend,
-        #    pkg/lock/lock.go)
-        (
-            # REBALANCE vs repartition("dt"): see engine.ingest_dataframe
-            # — keeps days clustered but parallelizes big ones (§2.5/§6)
-            survivors.hint("rebalance", "dt")
-            .write.mode("overwrite")
-            .option("compression", cfg.compression if cfg else "snappy")
-            .partitionBy("dt")
-            .parquet(engine._gen_dir(table, new_gen))
-        )
-        # 2. COMMIT: generation M becomes visible and the old partitions
-        #    invisible in one atomic metadata write — but only if we
-        #    still own the lease. A stolen lease means another driver may
-        #    have started its own rewrite; publishing over it would lose
-        #    its writes. Aborting is free: gen=M is unreferenced.
-        if not engine.lease.verify(f"{table}/#rewrite"):
-            raise RuntimeError(
-                f"mutation lease on {table!r} lost during rewrite; "
-                "aborting commit (no data was published)")
-        # the add entries: the survivors, bracketed from their footers
-        survivors = engine._add_entries(
-            table, new_gen, engine._gen_listing(table, new_gen),
-            gcols=cum)
-        # the rm entries: every live file of the superseded partitions
-        parts = set(affected)
-        engine.catalog.commit_rewrite(
-            table, dict(cum), expected_gen=new_gen,
-            add_files={new_gen: survivors},
-            remove_files={g: [rel for rel, dt in files if (g, dt) in parts]
-                          for g, files in engine.catalog.live_files(table).items()})
-    # 3. the caller invalidates the cache, then collects
-    return int(deleted)
+        parts = {(int(r["gen"]), r["dt"]) for r in per_part}
+        read = {g: [(rel, dt) for rel, dt in fs if (g, dt) in parts]
+                for g, fs in files.items()}
+        engine._write_files(
+            table, survivors_of(engine._scan_files(table, read)).drop("gen"),
+            remove_files={g: [rel for rel, _dt in fs]
+                          for g, fs in read.items() if fs})
+    # the caller invalidates the cache, then collects
+    return sum(r["count"] for r in per_part)
 
 
 def upsert_dataframe(
@@ -221,10 +191,11 @@ def upsert_dataframe(
     distributed write, no driver materialization); the old-version
     sweep is a key semi-join rewrite of only the (gen, dt) partitions
     that contain batch keys (``delete_rows`` match_keys mode — a
-    million-key batch is a join, never an ``isin`` literal). The whole
-    ingest+sweep runs under the table's cross-driver #rewrite lease,
-    re-entered by the sweep, so two drivers merging into one table
-    serialize.
+    million-key batch is a join, never an ``isin`` literal). The sweep
+    reads the files live after the flush and before the insert, so the
+    batch's own rows are never swept. The whole ingest+sweep runs under
+    the table's cross-driver #rewrite lease, re-entered by the sweep,
+    so two drivers merging into one table serialize.
 
     Returns ``(n_inserted, n_replaced)``.
     """
@@ -242,20 +213,10 @@ def upsert_dataframe(
         # buffered rows of batch keys would resurrect on flush: drain the
         # buffer first so every old version is persisted and sweepable
         engine.flush(table)
-        # the batch gets its OWN generation (even under an identical
-        # schema): DataFrames are lazy, so "rows that existed before
-        # this ingest" is only expressible as a generation filter — an
-        # absorbed batch would be swept by its own old-version pass
-        fresh_gen = engine.ingest_dataframe(table, batch, ts_col=ts_col,
-                                            force_new_generation=True)
-        persisted = engine.read_persisted(table)
-        replaced = 0
-        if persisted is not None:
-            replaced = delete_rows(
-                engine, table,
-                persisted.filter(F.col("gen") != fresh_gen),
-                match_keys=(batch, key_col),
-            )
+        old = engine.catalog.live_files(table)
+        engine.ingest_dataframe(table, batch, ts_col=ts_col)
+        replaced = delete_rows(engine, table, match_keys=(batch, key_col),
+                               files=old)
     engine.cache.invalidate_table(table)
     if engine.events:
         engine.events.publish("update", table, [f"bulk:{n_batch}"])
@@ -266,14 +227,14 @@ def upsert_dataframe(
 def collapse_generations(engine, table: str) -> int:
     """Fold every generation into ONE cumulative-schema generation — the
     maintenance pass that keeps scan cost O(1) in generations after
-    schema evolution or repeated merge_upsert batches (each merge opens
-    a fresh generation by design; file-level compaction deliberately
-    stays inside a generation). Same rename-free protocol as
-    delete_rows: survivors land in an unreferenced generation dir, ONE
-    atomic catalog write commits, the collector deletes the folded
-    generations' files and directories afterwards. Returns the number of
-    (gen, dt) partitions folded; no-op (0) when the table already has a
-    single generation.
+    schema evolution (only a column type change opens a generation;
+    file-level compaction deliberately stays inside a generation). The
+    table's rows go through the engine's one writer into the generation
+    the catalog picks for the cumulative schema, ONE atomic commit
+    replaces every live file, every other generation is tombstoned, and
+    the collector deletes the folded files and directories afterwards.
+    Returns the number of (gen, dt) partitions folded; no-op (0) when
+    the table already has a single generation.
 
     The whole pass runs under the cross-driver #rewrite lease with the
     keepalive daemon — at 100 TB this re-materializes the table, a
@@ -286,44 +247,19 @@ def collapse_generations(engine, table: str) -> int:
             engine.lease.keepalive(f"{table}/#rewrite"), \
             engine._flush_lock(table):
         engine.catalog.refresh_if_changed(table)
-        live = [g for g in engine.catalog.gen_schemas(table) if g]
-        if len(live) <= 1:
+        if len([g for g in engine.catalog.gen_schemas(table) if g]) <= 1:
             return 0
-        df = engine.read_persisted(table)
+        files = engine.catalog.live_files(table)
+        df = engine._scan_files(table, files)
         if df is None:
             return 0
-        parts = df.groupBy("gen", "dt").count().collect()
-        if not parts:
-            return 0
-        affected = [(int(r["gen"]), r["dt"]) for r in parts]
-        cum = engine.catalog.schema_of(table)
-        cfg = engine.catalog.get_table(table)
-        new_gen = engine.catalog.next_generation_index(table)
-        (
-            # REBALANCE vs repartition("dt"): see engine.ingest_dataframe
-            df.drop("gen").hint("rebalance", "dt")
-            .write.mode("overwrite")
-            .option("compression", cfg.compression if cfg else "snappy")
-            .partitionBy("dt")
-            .parquet(engine._gen_dir(table, new_gen))
-        )
-        # ownership re-check before the atomic commit (see delete_rows)
-        if not engine.lease.verify(f"{table}/#rewrite"):
-            raise RuntimeError(
-                f"mutation lease on {table!r} lost during collapse; "
-                "aborting commit (no data was published)")
-        survivors = engine._add_entries(
-            table, new_gen, engine._gen_listing(table, new_gen),
-            gcols=cum)
-        # every live file of the folded generations is removed
-        engine.catalog.commit_rewrite(
-            table, dict(cum), expected_gen=new_gen,
-            add_files={new_gen: survivors},
-            remove_files={g: [rel for rel, _dt in files] for g, files
-                          in engine.catalog.live_files(table).items()})
-        # every pre-collapse generation is now empty: tombstone them so
-        # future scans don't even stat their directories
-        engine.catalog.tombstone_generations(table, list(range(new_gen)))
+        gen = engine._write_files(
+            table, df.drop("gen"),
+            remove_files={g: [rel for rel, _dt in fs] for g, fs in files.items()})
+        # every other generation is now empty: tombstone them so future
+        # scans don't even stat their directories
+        engine.catalog.tombstone_generations(table, [
+            i for i in range(len(engine.catalog.gen_schemas(table))) if i != gen])
     engine.cache.invalidate_table(table)
     engine._collect(table)
-    return len(affected)
+    return len({(g, dt) for g, fs in files.items() for _rel, dt in fs})

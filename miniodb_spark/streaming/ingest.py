@@ -152,12 +152,9 @@ def stream_upsert(
         if dels is not None and not dels.isEmpty():
             from ..mutations import delete_rows
 
-            persisted = engine.read_persisted(table)
-            if persisted is not None:
-                delete_rows(engine, table, persisted,
-                            match_keys=(dels, key_col))
-                engine.cache.invalidate_table(table)
-                engine._collect(table)
+            delete_rows(engine, table, match_keys=(dels, key_col))
+            engine.cache.invalidate_table(table)
+            engine._collect(table)
         engine.catalog.commit_stream_batch(sid, batch_id)
 
     writer = stream_df.writeStream.foreachBatch(_sink).outputMode("append")

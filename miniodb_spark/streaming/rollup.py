@@ -130,7 +130,7 @@ def merge_partials(persisted: DataFrame | None, part: DataFrame,
         cond = cond & F.col(f"o.{k}").eqNullSafe(F.col(f"pr.{k}"))
     old = old.join(F.broadcast(probe), cond, "left_semi")
     # crash-mid-upsert can leave two versions of one (window, key) row
-    # visible (fresh generation committed, old version not yet swept):
+    # visible (new version committed, old version not yet swept):
     # keep the newest stamp only — it strictly contains the older one
     w = W.partitionBy("window_start", *key_cols).orderBy(
         F.col("last_batch_id").desc())

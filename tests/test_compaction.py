@@ -3,12 +3,11 @@ classify-by-tier, candidate selection, merge correctness). Plans come
 from the live-set planner and merges run through Engine.compact, which
 commits them: a merge nobody commits is invisible to every reader."""
 
-import glob
 import json
 import os
-import time
 
-from diskstate import data_files, live_files
+from diskstate import (age_past_grace, data_files, expire_leases, live_files,
+                       never_added)
 from miniodb_spark.compaction import (
     MAX_FILES_PER_RUN,
     MB,
@@ -161,31 +160,6 @@ def test_engine_compact_invalidates_cache_and_rest_route(engine):
         srv.shutdown()
 
 
-def _never_added(eng, table):
-    added = {f"gen={g}/{rel}"
-             for g, rel in eng.catalog.added_files_index(table)}
-    return [f for f in data_files(eng, table) if f not in added]
-
-
-def _age_past_grace(root):
-    """Back-date every file under ``root`` past the collector's grace
-    age, as if the writer that left it had been gone for a day."""
-    from miniodb_spark.mutations import GC_GRACE_S
-
-    old = time.time() - GC_GRACE_S - 3600
-    for d, _dirs, files in os.walk(root):
-        for f in files:
-            os.utime(os.path.join(d, f), (old, old))
-
-
-def _expire_leases(root):
-    """Drop the lease markers a faulted call left behind: a crashed
-    holder's lease frees once its TTL runs out, which a sweep does not
-    wait for."""
-    for p in glob.glob(os.path.join(root, "_meta", "locks", "lease.*")):
-        os.remove(p)
-
-
 def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
     """A fault at every mutating filesystem call of one 6-file
     compaction: afterwards a freshly booted Engine reads the 6 seeded
@@ -231,7 +205,7 @@ def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
         except InjectedFault:
             pass
         eng.fs.disarm()
-        _expire_leases(root)
+        expire_leases(root)
         fresh = engine_mod.Engine(spark, root)
         assert ids(fresh.read_table("t")) == want, (k, calls[k - 1])
         for rid in ("r0", "r5"):
@@ -242,9 +216,9 @@ def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
             # a failed temp-dir removal removes the moved-in outputs
             # too: nothing is left for the grace age
             assert data_files(fresh, "t") == live_files(fresh, "t"), k
-        assert sorted(live_files(fresh, "t") + _never_added(fresh, "t")) == (
+        assert sorted(live_files(fresh, "t") + never_added(fresh, "t")) == (
             data_files(fresh, "t")), (k, calls[k - 1])
-        _age_past_grace(os.path.join(root, "t"))
+        age_past_grace(os.path.join(root, "t"))
         fresh.vacuum("t")
         assert data_files(fresh, "t") == live_files(fresh, "t"), (k, calls[k - 1])
         assert ids(fresh.read_table("t")) == want, (k, calls[k - 1])
@@ -253,7 +227,8 @@ def test_compact_fault_sweep(spark, tmp_path, monkeypatch):
 def test_vacuum_fault_sweep(spark, tmp_path, monkeypatch):
     """A fault at every mutating filesystem call of one vacuum() on a
     retain_history store holding compaction inputs, a partition a
-    delete() superseded and an orphan past the grace age: afterwards a
+    delete() rewrote, one a delete() emptied (its directory goes) and
+    an orphan past the grace age: afterwards a
     freshly booted Engine reads the head exactly, and a rerun of
     vacuum() leaves exactly the live files on disk."""
     import shutil
@@ -271,18 +246,21 @@ def test_vacuum_fault_sweep(spark, tmp_path, monkeypatch):
         eng.flush("t")
     for i in range(3):  # day B: one file, superseded by the delete
         eng.write("t", {"v": i}, record_id=f"b{i}", timestamp_us=T0 + DAY)
+    # day C: one row, so its delete leaves the directory no live file
+    eng.write("t", {"v": 0}, record_id="c0", timestamp_us=T0 + 2 * DAY)
     eng.flush("t")
     assert eng.compact("t")[0]["inputs"] == 6
     assert eng.delete("t", "b1") == 1
+    assert eng.delete("t", "c0") == 1
     want = sorted(r["id"] for r in eng.read_table("t").collect())
     assert len(want) == 8
     gdir = eng._gen_dir("t", 0)
     rel, dt = eng.catalog.live_files("t")[0][0]
     orphan = os.path.join(gdir, f"dt={dt}", "part-00000-orphan.parquet")
     shutil.copy(os.path.join(gdir, rel), orphan)
-    _age_past_grace(os.path.join(seed, "t"))
-    # the inputs, the superseded file and the orphan are on disk
-    assert len(data_files(eng, "t")) == len(live_files(eng, "t")) + 8
+    age_past_grace(os.path.join(seed, "t"))
+    # the inputs, the two superseded files and the orphan are on disk
+    assert len(data_files(eng, "t")) == len(live_files(eng, "t")) + 9
 
     def prepare(root):
         shutil.copytree(seed, root)
@@ -290,7 +268,7 @@ def test_vacuum_fault_sweep(spark, tmp_path, monkeypatch):
 
     eng = prepare(str(tmp_path / "count"))
     eng.fs.arm()
-    assert eng.vacuum("t") == 8
+    assert eng.vacuum("t") == 9
     eng.fs.disarm()
     calls = list(eng.fs.calls)
     assert data_files(eng, "t") == live_files(eng, "t")
@@ -304,7 +282,7 @@ def test_vacuum_fault_sweep(spark, tmp_path, monkeypatch):
         except InjectedFault:
             pass
         eng.fs.disarm()
-        _expire_leases(root)
+        expire_leases(root)
         fresh = engine_mod.Engine(spark, root, retain_history=True)
         got = sorted(r["id"] for r in fresh.read_table("t").collect())
         assert got == want, (k, calls[k - 1])

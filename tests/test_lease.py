@@ -401,10 +401,11 @@ def test_lease_release_retries_a_failed_marker_removal(tmp_path):
     assert a.release_errors == 1
 
 
-def test_commit_rewrite_expected_gen_mismatch_raises(tmp_path):
-    """commit_rewrite refreshes on-disk state and refuses to publish a
-    survivor generation under an index another driver already claimed
-    (the lost-write hazard when a lease is stolen mid-rewrite)."""
+def test_commit_rewrite_of_files_no_longer_live_raises(tmp_path):
+    """commit_rewrite refreshes on-disk state and refuses, committing
+    nothing, to remove a file that is no longer live: another driver's
+    commit replaced it after this rewrite read it (the lost-write hazard
+    when a lease is stolen mid-rewrite)."""
     import pytest
     from miniodb_spark.catalog import Catalog
 
@@ -413,13 +414,20 @@ def test_commit_rewrite_expected_gen_mismatch_raises(tmp_path):
     c2 = Catalog(root)
     c1.create_table("t")
     c1.register_flush_schema("t", {"id": "string"})
+    c1.touch("t", add_files={0: ["dt=2023-11-14/a.parquet"]})
     c2.refresh_if_changed("t")
-    reserved = c2.next_generation_index("t")  # driver 2 reserves gen=1
-    # driver 1 commits its own rewrite first (as if it stole the lease)
-    c1.commit_rewrite("t", {"id": "string"},
-                      expected_gen=c1.next_generation_index("t"))
+    # both drivers read a.parquet; driver 1 commits its rewrite first
+    # (as if it stole the lease)
+    c1.commit_rewrite("t", add_files={0: ["dt=2023-11-14/b.parquet"]},
+                      remove_files={0: ["dt=2023-11-14/a.parquet"]})
+    v = c2.current_version("t")
     with pytest.raises(RuntimeError, match="stale rewrite commit"):
-        c2.commit_rewrite("t", {"id": "string"}, expected_gen=reserved)
+        c2.commit_rewrite("t", add_files={0: ["dt=2023-11-14/c.parquet"]},
+                          remove_files={0: ["dt=2023-11-14/a.parquet"]})
+    assert c2.current_version("t") == v
+    for c in (c1, c2):
+        assert c.live_files("t") == {0: [("dt=2023-11-14/b.parquet", "2023-11-14")]}
+    assert c2.gen_schemas("t") == [{"id": "string"}]
 
 
 def test_rewrite_aborts_when_lease_stolen_midjob(spark, tmp_path):

@@ -126,10 +126,10 @@ def test_merge_upsert_replaces_buffered_rows(engine, spark):
 
 
 def test_collapse_generations_after_merges(engine, spark):
-    """Repeated merges open fresh generations by design; the collapse
-    maintenance pass folds them into one cumulative generation,
-    tombstones the dead ones (no directory stat per scan), and leaves
-    the data byte-identical."""
+    """Merges open no generation; type drift does. The collapse
+    maintenance pass folds the drifted generations into one cumulative
+    generation, tombstones the dead ones (no directory stat per scan),
+    and leaves the data byte-identical."""
     import datetime
     import os
 
@@ -139,10 +139,17 @@ def test_collapse_generations_after_merges(engine, spark):
     engine.flush("cg")
 
     ts = datetime.datetime.fromtimestamp(T0 / US, datetime.timezone.utc)
-    for n in range(3):  # three merges -> at least 3 extra generations
+    for n in range(3):  # three merges stay in generation 0
         batch = spark.createDataFrame(
             [(f"r{n}", 100 + n, ts)], "id string, v long, timestamp timestamp")
         engine.merge_upsert("cg", batch)
+    assert len(engine.catalog.gen_schemas("cg")) == 1
+    # type drift: string after long, then long after string
+    engine.write("cg", {"v": "text"}, record_id="s0", timestamp_us=T0)
+    engine.flush("cg")
+    engine.write("cg", {"v": 7}, record_id="s1", timestamp_us=T0 + DAY)
+    engine.flush("cg")
+    assert len(engine.catalog.gen_schemas("cg")) == 3
     before = json.loads(engine.query("SELECT id, v FROM cg ORDER BY id"))
     n_gens_before = len([g for g in engine.catalog.gen_schemas("cg") if g])
     assert n_gens_before > 1
@@ -283,3 +290,97 @@ def test_two_driver_randomized_mutations_match_model(engine, spark):
         assert r["id"] not in got, f"duplicate id {r['id']}"
         got[r["id"]] = r["v"]
     assert got == {k: v["v"] for k, v in model.items()}
+
+
+def test_mutations_open_no_generation(engine, spark):
+    """Updates, deletes, a merge and the empty-id cleanup rewrite files
+    inside the table's one generation: the generation list and every
+    commit line's schema doc stay exactly the seed's, and the answers
+    equal a dict model on the Spark path and on the Arrow lookup path.
+    Only a type change opens a generation: a type-drift update opens
+    exactly one."""
+    import datetime
+    import os
+
+    engine.create_table("g1", TableConfig(name="g1", buffer_size=10_000))
+    model: dict[str, tuple] = {}
+    for i in range(12):
+        rid, v, grp = f"r{i:02d}", i, "abc"[i % 3]
+        engine.write("g1", {"v": v, "grp": grp}, record_id=rid,
+                     timestamp_us=T0 + (i % 3) * DAY)
+        model[rid] = (v, grp)
+    engine.flush("g1")
+    ts = datetime.datetime.fromtimestamp(T0 / US, datetime.timezone.utc)
+    # a row with an empty id, for cleanup_empty_id_records
+    engine.ingest_dataframe("g1", spark.createDataFrame(
+        [("", ts, 99, "a")], "id string, timestamp timestamp, v long, grp string"))
+    log = os.path.join(engine.root, "_system", "tables", "_history", "g1.jsonl")
+
+    def docs():
+        with open(log, encoding="utf-8") as fh:
+            return [json.dumps(json.loads(ln)["doc"]) for ln in fh]
+
+    seed = docs()[-1]
+    n_seed = len(docs())
+
+    for n in range(5):
+        rid = f"r{n:02d}"
+        engine.update("g1", rid, {"v": 100 + n, "grp": "u"},
+                      timestamp_us=T0 + (n % 3) * DAY)
+        model[rid] = (100 + n, "u")
+    for rid in ("r05", "r06", "r09"):
+        assert engine.delete("g1", rid) == 1
+        del model[rid]
+    batch = spark.createDataFrame(
+        [("r07", ts, 207, "m"), ("n01", ts, 300, "m")],
+        "id string, timestamp timestamp, v long, grp string")
+    assert engine.merge_upsert("g1", batch) == (2, 1)
+    model.update({"r07": (207, "m"), "n01": (300, "m")})
+    assert engine.cleanup_empty_id_records("g1") == 1
+
+    assert len(engine.catalog.gen_schemas("g1")) == 1
+    assert len(docs()) > n_seed + 10
+    assert set(docs()[n_seed - 1:]) == {seed}
+
+    def check(want, arrow_only=True):
+        rows = json.loads(engine.query("SELECT * FROM g1 ORDER BY id"))
+        assert [(r["id"], r["v"], r["grp"]) for r in rows] == sorted(
+            (k, *want[k]) for k in want)
+        n = json.loads(engine.query(
+            "SELECT count(DISTINCT id) AS n FROM g1"))[0]["n"]
+        assert n == len(want)
+        arrow = engine.query_stats["lookups"]["arrow"]
+        for rid in sorted(want) + ["r05", ""]:
+            rows = json.loads(engine.query(
+                f"SELECT id, v, grp FROM g1 WHERE id = '{rid}'"))
+            assert [(r["id"], r["v"], r["grp"]) for r in rows] == (
+                [(rid, *want[rid])] if rid in want else []), rid
+        if arrow_only:  # else a long read as string declines ("cast")
+            assert engine.query_stats["lookups"]["arrow"] == (
+                arrow + len(want) + 2)
+
+    check(model)
+    # a type change opens exactly one generation
+    engine.update("g1", "r10", {"v": "text", "grp": "d"}, timestamp_us=T0)
+    assert len(engine.catalog.gen_schemas("g1")) == 2
+    check({k: (str(v), g) for k, (v, g) in model.items()}
+          | {"r10": ("text", "d")}, arrow_only=False)
+
+
+def test_delete_keeps_rows_its_predicate_reads_as_null(engine, spark):
+    """A row whose id is NULL shares a partition with the deleted row:
+    ``id = 'r1'`` is NULL for it, neither true nor false, so it is not
+    deleted and must survive the rewrite. Only the empty-id cleanup
+    removes it."""
+    import datetime
+
+    ts = datetime.datetime.fromtimestamp(T0 / US, datetime.timezone.utc)
+    engine.ingest_dataframe("nl", spark.createDataFrame(
+        [("r1", ts, 1), ("r2", ts, 2), (None, ts, 3)],
+        "id string, timestamp timestamp, v long"))
+    assert engine.delete("nl", "r1") == 1
+    rows = json.loads(engine.query("SELECT id, v FROM nl ORDER BY v"))
+    assert [(r.get("id"), r["v"]) for r in rows] == [("r2", 2), (None, 3)]
+    assert engine.cleanup_empty_id_records("nl") == 1
+    rows = json.loads(engine.query("SELECT id, v FROM nl ORDER BY v"))
+    assert [(r.get("id"), r["v"]) for r in rows] == [("r2", 2)]

@@ -781,3 +781,33 @@ def test_each_path_parses_once_and_analyzes_only_with_a_filter(engine, monkeypat
     assert run("SELECT id FROM t WHERE id >= 'r6' ORDER BY id") == [{"id": "r6"}, {"id": "r7"}]
     assert calls == {"parse": 1, "analyze": 1}
     assert engine.query_stats["zonemap"]["files_skipped"] > skipped
+
+
+def test_failed_analysis_logs_its_error_once(engine):
+    """A query that fails analysis logs PySpark's error record (Spark's
+    stack trace) once: the schema-only analysis that declines it before
+    the Spark path runs logs nothing."""
+    import logging
+
+    from pyspark.errors import AnalysisException
+    from pyspark.logger import PySparkLogger
+
+    for t in ("t", "u"):
+        engine.write(t, {"k": 1}, record_id="r1", timestamp_us=T0)
+        engine.flush(t)
+    records = []
+
+    class Count(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    handler = Count()
+    logger.addHandler(handler)
+    try:
+        with pytest.raises(AnalysisException, match="AMBIGUOUS_REFERENCE"):
+            engine.query("SELECT * FROM t a JOIN u b ON a.k = b.k "
+                         "WHERE id >= 'r1'")
+    finally:
+        logger.removeHandler(handler)
+    assert len(records) == 1, [r.getMessage()[:80] for r in records]

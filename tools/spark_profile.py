@@ -15,7 +15,7 @@ suite), this captures:
   nodes, WholeStageCodegen spans, PushedFilters presence.
 
 Usage:
-    python tools/profile.py --out plans/<round> [--tag before|after]
+    python tools/spark_profile.py --out plans/<round> [--tag before|after]
         [--reps 3] [--tpch] [name ...]
 
 ``--out`` is relative to the repository root unless absolute.
