@@ -1,20 +1,34 @@
-"""Table catalog: configs + cumulative schema registry.
+"""Table catalog: configs + cumulative schema registry, kept in each
+table's commit log.
 
 The reference persists per-table operational config (buffer size,
 flush interval, retention, id strategy) in Redis with a MinIO JSON
-fallback (/root/reference/internal/metadata/table_config.go:17-108).
-Here the catalog is a directory of JSON files under
-``<root>/_system/tables/`` plus an in-process dict — the same
-three-level resolution (memory → file → default) without the external
-services.
+fallback (reference internal/metadata/table_config.go:17-108). Here a
+table is its commit log, ``<root>/_system/tables/_history/<table>.jsonl``:
+its config, its schema generations and its live files are all the fold
+of the log's lines, Delta Lake style, and the catalog keeps that fold
+in memory. Each line is one commit and carries only what the commit
+changed:
 
-The catalog additionally tracks the table's **schema generations** and
-the derived **cumulative schema**. This is the scale-critical design
-point from SURVEY §7: at 100 TB / millions of files, ``mergeSchema``
-over full file listings is unaffordable, and Spark's parquet reader
-cannot read an INT64 column through a DOUBLE/STRING schema — so
-per-file type divergence (which the reference tolerates and delegates
-to DuckDB's ``union_by_name`` coercion) must be modeled explicitly:
+- ``doc``, ``{"config", "generations"}``: written by ``create_table``
+  and ``import_metadata``; replaces the keys it holds. Every line of
+  the older format (the full doc on every line, next to a
+  ``<table>.json`` that is no longer read) has this form, so old logs
+  replay as they are.
+- ``gens``, ``{index: schema}``: the generations the commit opened,
+  widened or tombstoned, in the same line as the files that need them
+  (Delta's ``metaData`` action, written only on change). A write that
+  fails before its commit leaves no generation behind.
+- ``add`` / ``rm``, ``{gen: [entries]}``: the files the commit added
+  and took out of the table.
+
+The catalog tracks the table's **schema generations** and the derived
+**cumulative schema**. This is the scale-critical design point from
+SURVEY §7: at 100 TB / millions of files, ``mergeSchema`` over full
+file listings is unaffordable, and Spark's parquet reader cannot read
+an INT64 column through a DOUBLE/STRING schema — so per-file type
+divergence (which the reference tolerates and delegates to DuckDB's
+``union_by_name`` coercion) must be modeled explicitly:
 
 - every flushed file lives under ``<table>/gen=<N>/dt=<day>/``;
 - within a generation each column has exactly one physical type
@@ -26,11 +40,9 @@ to DuckDB's ``union_by_name`` coercion) must be modeled explicitly:
   union. Partition pruning on ``dt`` still applies inside every
   generation prefix.
 
-Which files belong to the table is kept only in the per-table commit
-log (``_history/<table>.jsonl``): each commit's add and remove entries,
-Delta Lake style. A file is live from the commit that adds it until the
-commit that removes it; :meth:`Catalog.live_files` answers for the head
-and for any past version, and no reader lists data directories.
+A file is live from the commit that adds it until the commit that
+removes it; :meth:`Catalog.live_files` answers for the head and for any
+past version, and no reader lists data directories.
 
 An add entry also records what the writer knew of the file: its size in
 bytes, its row count and a ``[min, max]`` bracket per zone-map column
@@ -101,6 +113,22 @@ def _entry(e: str | dict) -> dict:
     return {"path": e} if isinstance(e, str) else e
 
 
+def _apply_doc(doc: dict[str, Any], rec: dict) -> None:
+    """Fold one commit record's ``doc`` (the keys it holds replace
+    ``doc``'s) and ``gens`` ({index: schema}; the index one past the
+    end appends) into ``doc``, ``{"config", "generations"}``. Schemas
+    are never changed in place, only replaced."""
+    for key, value in (rec.get("doc") or {}).items():
+        doc[key] = list(value) if key == "generations" else value
+    if rec.get("gens"):
+        gens = doc.setdefault("generations", [])
+        for i, schema in sorted((int(i), s) for i, s in rec["gens"].items()):
+            if i == len(gens):
+                gens.append(schema)
+            else:
+                gens[i] = schema
+
+
 def _apply_files(live: dict[int, dict[str, dict]], rec: dict) -> None:
     """Fold one commit record's remove and add entries into ``live``,
     ``{gen: {relpath: add entry}}``."""
@@ -123,114 +151,95 @@ def _log_entries(files: Iterable[str]) -> list[str | dict]:
             for rel in sorted(files)]
 
 
+def _record(
+    add_files: dict[int, Iterable[str]] | None = None,
+    remove_files: dict[int, list[str]] | None = None,
+    gens: dict[int, dict[str, str]] | None = None,
+) -> dict[str, Any]:
+    """The body of a data commit: the generations it changed and its
+    Delta-style add and remove entries, ``{gen: [entries]}`` — the
+    files it added, and the ones it took out of the table (compaction
+    inputs, rewritten partitions, retention, restore; they stay live
+    for earlier versions). A remove is a bare relpath; an add carries
+    what the writer knew of its file, if anything. Empty parts are
+    left out."""
+    rec: dict[str, Any] = {}
+    if gens:
+        rec["gens"] = {str(i): s for i, s in sorted(gens.items())}
+    for kind, files in (("add", add_files), ("rm", remove_files)):
+        entries = {str(g): _log_entries(rels)
+                   for g, rels in (files or {}).items() if rels}
+        if entries:
+            rec[kind] = entries
+    return rec
+
+
 class _TableLog:
     """One table's commit log as read so far: every record in file
-    order and the live file set after the last of them."""
+    order, and the table after the last of them — its doc (config and
+    generation schemas) and its live file set."""
 
     def __init__(self) -> None:
         self.offset = 0  # bytes consumed (complete lines only)
         self.first = b""  # the first line: identifies this file
         self.records: list[dict[str, Any]] = []
+        self.doc: dict[str, Any] = {"generations": []}
+        self.config: TableConfig | None = None
         self.live: dict[int, dict[str, dict]] = {}
+
+    @property
+    def gens(self) -> list[dict[str, str]]:
+        return self.doc["generations"]
 
     def apply(self, rec: dict[str, Any]) -> None:
         self.records.append(rec)
+        _apply_doc(self.doc, rec)
+        if "config" in (rec.get("doc") or {}):
+            self.config = TableConfig(**self.doc["config"])
         _apply_files(self.live, rec)
 
 
 class Catalog:
     def __init__(self, root: str):
         self.root = root
-        self._dir = os.path.join(root, "_system", "tables")
-        os.makedirs(self._dir, exist_ok=True)
-        self._configs: dict[str, TableConfig] = {}
-        # table -> list of generation schemas [{col: type}, ...]
-        self._generations: dict[str, list[dict[str, str]]] = {}
         self._lock = threading.RLock()
         self._stream_commits: dict[str, int] | None = None  # lazy-loaded
-        # table -> (mtime_ns, size) of its json at last load/persist;
-        # lets refresh_if_changed detect cross-process commits with a stat
-        self._sigs: dict[str, tuple | None] = {}
-        # table -> last committed catalog version (the commit-log line
-        # count); versions start at 1 with the table's first persist
-        self._versions: dict[str, int] = {}
         # table -> its commit log, parsed and read incrementally (_log)
         self._logs: dict[str, _TableLog] = {}
-        self._hist_dir = os.path.join(self._dir, "_history")
+        self._hist_dir = os.path.join(root, "_system", "tables", "_history")
         os.makedirs(self._hist_dir, exist_ok=True)
         self._load_all()
 
-    # -- config persistence (memory -> json file -> default) ------------
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self._dir, f"{name}.json")
-
-    def _sig_of(self, path: str) -> tuple | None:
-        try:
-            st = os.stat(path)
-            return (st.st_mtime_ns, st.st_size)
-        except OSError:
-            return None
-
-    def _load_one(self, path: str) -> None:
-        with open(path, encoding="utf-8") as fh:
-            doc = json.load(fh)
-        cfg = TableConfig(**doc.get("config", {}))
-        self._configs[cfg.name] = cfg
-        self._generations[cfg.name] = doc.get("generations", [])
-        self._sigs[cfg.name] = self._sig_of(path)
-
     def _load_all(self) -> None:
-        for fn in os.listdir(self._dir):
-            if not fn.endswith(".json"):
-                continue
-            self._load_one(os.path.join(self._dir, fn))
+        for fn in os.listdir(self._hist_dir):
+            if fn.endswith(".jsonl"):
+                self._log(fn[: -len(".jsonl")])
 
-    def _persist(
-        self, name: str,
-        add_files: dict[int, Iterable[str]] | None = None,
-        remove_files: dict[int, list[str]] | None = None,
-    ) -> None:
-        doc = {
-            "config": asdict(self._configs[name]),
-            "generations": self._generations.get(name, []),
-        }
-        tmp = self._path(name) + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(doc, fh, indent=1)
-        os.replace(tmp, self._path(name))
-        self._sigs[name] = self._sig_of(self._path(name))
-        # commit log: every catalog flip appends the full (small) doc as
-        # one JSONL line, giving an ordered history of table states and
-        # the table's file membership (add/rm entries). Appends are
-        # O_APPEND-atomic for these line sizes. The version number is
-        # max(in-memory counter, last version in the log) + 1, with the
-        # log re-read first, so versions stay monotone when ANOTHER
-        # driver advanced the shared history since our last persist: a
-        # duplicated version number would pin a later batch's files
-        # onto an earlier snapshot (tests/test_multiprocess.py). Truly
-        # simultaneous persists to one table still require the
-        # flush-lock/lease serialization the writers already use.
-        log = self._log(name)
-        v = max(self._versions.get(name, 0),
-                log.records[-1]["v"] if log.records else 0) + 1
-        self._versions[name] = v
-        rec: dict = {"v": v, "ts_us": int(time.time() * 1e6), "doc": doc}
-        # Delta-style add and remove entries, {gen: [entries]}: the
-        # files this commit added, and the ones it took out of the
-        # table (compaction inputs, rewritten partitions, retention,
-        # restore; they stay live for earlier versions). Recorded only
-        # on the log line, never in the current-state json: a
-        # per-commit delta. A remove is a bare relpath; an add carries
-        # what the writer knew of its file, if anything.
-        for kind, files in (("add", add_files), ("rm", remove_files)):
-            entries = {str(g): _log_entries(rels)
-                       for g, rels in (files or {}).items() if rels}
-            if entries:
-                rec[kind] = entries
-        line = json.dumps(rec, separators=(",", ":"))
+    def _table(self, name: str) -> _TableLog:
+        """The table's log as last read — no file I/O: the per-write
+        reads below use it, after the writer's refresh_if_changed."""
+        return self._logs.get(name) or _TableLog()
+
+    def _commit(self, name: str, log: _TableLog, rec: dict[str, Any]) -> int:
+        """Append ``rec`` as the table's next commit-log line and read
+        it back (the catalog's state is the fold of the file). Returns
+        its version. Appends are O_APPEND-atomic for these line sizes.
+
+        ``log`` must have just been brought up to date (:meth:`_log`):
+        the version is the last one in the on-disk log plus one, so
+        versions stay monotone when ANOTHER driver advanced the shared
+        history since our last commit — a duplicated version number
+        would pin a later batch's files onto an earlier snapshot
+        (tests/test_multiprocess.py). Truly simultaneous commits to one
+        table still require the flush-lock/lease serialization the
+        writers already use."""
+        v = (log.records[-1]["v"] if log.records else 0) + 1
+        line = json.dumps({"v": v, "ts_us": int(time.time() * 1e6), **rec},
+                          separators=(",", ":"))
         with open(self._hist_path(name), "a", encoding="utf-8") as fh:
             fh.write(line + "\n")
+        self._log(name)
+        return v
 
     # -- commit log (time travel / audit / file membership) --------------
 
@@ -314,32 +323,29 @@ class Catalog:
         self, name: str,
         add_files: dict[int, Iterable[str]] | None = None,
         remove_files: dict[int, list[str]] | None = None,
+        schema: dict[int, dict[str, str]] | None = None,
     ) -> int:
-        """Append a data commit: re-persist the current doc with the
-        files a writer added (``add_files``: {gen: relpaths}, or {gen:
-        {relpath: {"size", "rows", "stats"}}} to record what the writer
-        knows of each file) and removed (``remove_files``, {gen:
-        [relpaths]}) as one commit-log record. Schema
-        registration persists BEFORE the writer runs (the rollback
-        protocol needs that order), so the registration version never
-        includes the in-flight files — this commit is the version whose
-        snapshot does. Returns its version."""
+        """Append a data commit: the files a writer added (``add_files``:
+        {gen: relpaths}, or {gen: {relpath: {"size", "rows", "stats"}}}
+        to record what the writer knows of each file) and removed
+        (``remove_files``, {gen: [relpaths]}), plus the schema it wrote
+        them with (``schema``, {gen: columns}, the generation
+        :meth:`register_flush_schema` picked) as one commit-log record.
+        A generation the schema opens or widens is registered by this
+        same record, so it exists exactly when its files do. Returns
+        its version."""
         with self._lock:
-            if name in self._configs:
-                self._persist(name, add_files=add_files,
-                              remove_files=remove_files)
-            return self._versions.get(name, 0)
+            log = self._log(name)
+            if log.config is None:
+                return self.current_version(name)
+            return self._commit(name, log, _record(
+                add_files, remove_files, self._widened(log, schema)))
 
     def current_version(self, name: str) -> int:
         """Last committed catalog version for ``name`` (0 = never
-        persisted), including versions committed by another driver
-        since our last persist."""
-        with self._lock:
-            log = self._log(name)
-            v = log.records[-1]["v"] if log.records else 0
-            if v:
-                self._versions[name] = v
-            return v
+        committed), including versions committed by another driver."""
+        log = self._log(name)
+        return log.records[-1]["v"] if log.records else 0
 
     def history(self, name: str) -> list[dict[str, Any]]:
         """The table's commit log, oldest first: one
@@ -349,10 +355,9 @@ class Catalog:
                 for r in self._log(name).records]
 
     def record_at(self, name: str, version: int) -> dict[str, Any] | None:
-        """The full commit-log record ``{"v", "ts_us", "doc"}`` for
-        ``version`` (last-line-wins on a duplicated version number,
-        mirroring the json's last-writer semantics). None when the
-        version was never committed."""
+        """The commit-log record of ``version`` as written — only what
+        that commit changed (last-line-wins on a duplicated version
+        number). None when the version was never committed."""
         found = None
         for rec in self._log(name).records:
             if rec["v"] == version:
@@ -360,8 +365,17 @@ class Catalog:
         return found
 
     def doc_at(self, name: str, version: int) -> dict[str, Any] | None:
-        rec = self.record_at(name, version)
-        return rec["doc"] if rec else None
+        """The table doc, ``{"config", "generations"}``, as of
+        ``version``: the fold of every record up to it. None when the
+        version was never committed."""
+        records = self._log(name).records
+        if not any(rec["v"] == version for rec in records):
+            return None
+        doc: dict[str, Any] = {}
+        for rec in records:
+            if rec["v"] <= version:
+                _apply_doc(doc, rec)
+        return doc
 
     def version_as_of(self, name: str, ts_us: int) -> int | None:
         """Largest version committed at or before ``ts_us`` (Delta's
@@ -391,84 +405,81 @@ class Catalog:
         return idx
 
     def refresh_if_changed(self, name: str) -> bool:
-        """Reload one table's metadata when another process changed it —
-        multi-driver serving support. One os.stat when nothing changed
+        """Bring one table's log up to date — multi-driver serving
+        support: another process may have created, committed to or
+        dropped it. Reads only what was appended since the last look
         (the reference pays a Redis metadata read per query instead).
-        Handles remote create (file appears), remote commit (mtime/size
-        moves) and remote delete (file gone). Returns True on reload."""
-        path = self._path(name)
+        Returns True when the table moved."""
         with self._lock:
-            sig = self._sig_of(path)
-            if sig == self._sigs.get(name):
-                return False
-            if sig is None:  # deleted by another process
-                self._configs.pop(name, None)
-                self._generations.pop(name, None)
-                self._sigs.pop(name, None)
-                return True
-            self._load_one(path)
-            return True
+            before = self._logs.get(name)
+            n = len(before.records) if before else 0
+            log = self._log(name)
+            return len(log.records) != n or (log is not before and n > 0)
 
     def create_table(self, name: str, config: TableConfig | None = None) -> TableConfig:
         with self._lock:
-            if name in self._configs:
-                return self._configs[name]
-            cfg = config or TableConfig(name=name)
-            cfg.name = name
-            self._configs[name] = cfg
-            self._generations.setdefault(name, [])
-            self._persist(name)
-            return cfg
+            log = self._log(name)
+            if log.config is None:
+                cfg = config or TableConfig(name=name)
+                cfg.name = name
+                self._commit(name, log, {"doc": {
+                    "config": asdict(cfg), "generations": []}})
+            return self._logs[name].config
 
     def get_table(self, name: str) -> TableConfig | None:
         with self._lock:
-            return self._configs.get(name)
+            return self._table(name).config
 
     def ensure_table(self, name: str) -> TableConfig:
         """Auto-create on first write (reference miniodb_service.go:278)."""
-        return self.create_table(name)
+        return self.get_table(name) or self.create_table(name)
 
     def list_tables(self) -> list[str]:
         with self._lock:
-            return sorted(self._configs)
+            return sorted(n for n, log in self._logs.items() if log.config)
 
     def drop_table(self, name: str) -> bool:
         with self._lock:
-            if name not in self._configs:
+            if self.get_table(name) is None:
                 return False
-            del self._configs[name]
-            self._generations.pop(name, None)
-            self._versions.pop(name, None)
-            self._logs.pop(name, None)
-            for path in (self._path(name), self._hist_path(name)):
-                try:
-                    os.remove(path)
-                except FileNotFoundError:
-                    pass
+            del self._logs[name]
+            try:
+                os.remove(self._hist_path(name))
+            except FileNotFoundError:
+                pass
             return True
 
     # -- schema generations ---------------------------------------------
 
     def register_flush_schema(self, name: str, columns: dict[str, str]) -> int:
         """Pick (or open) the generation a write with ``columns`` physical
-        types goes into, and fold new columns into it. Every writer of
-        table data registers here first: a flush, a bulk ingest, and a
-        rewrite's survivors (typed to the cumulative schema).
+        types goes into. Every writer of table data picks here first: a
+        flush, a bulk ingest, and a rewrite's survivors (typed to the
+        cumulative schema). Nothing is recorded: the writer passes
+        ``schema={gen: columns}`` to the commit of its files
+        (:meth:`touch`, :meth:`commit_rewrite`), which registers new
+        columns and a new generation in the same line.
 
         The latest generation absorbs the write when no existing column
         changes type (additive evolution is free). A type conflict on any
         column opens a new generation. Returns the generation index."""
         with self._lock:
-            gens = self._generations.setdefault(name, [])
-            if gens:
-                latest = gens[-1]
-                if all(latest.get(c, t) == t for c, t in columns.items()):
-                    latest.update(columns)
-                    self._persist(name)
-                    return len(gens) - 1
-            gens.append(dict(columns))
-            self._persist(name)
-            return len(gens) - 1
+            gens = self._table(name).gens
+            if gens and all(gens[-1].get(c, t) == t for c, t in columns.items()):
+                return len(gens) - 1
+            return len(gens)
+
+    def _widened(self, log: _TableLog,
+                 schema: dict[int, dict[str, str]] | None) -> dict[int, dict]:
+        """The generations a commit writing ``schema`` ({gen: columns})
+        opens or widens, each as its whole new schema."""
+        out = {}
+        for g, cols in (schema or {}).items():
+            cur = log.gens[g] if g < len(log.gens) else None
+            new = {**(cur or {}), **cols}
+            if new != cur:
+                out[g] = new
+        return out
 
     # -- streaming batch commit registry ---------------------------------
     # foreachBatch guarantees a stable batch_id per epoch across retries;
@@ -501,22 +512,6 @@ class Catalog:
                 json.dump(commits, fh)
             os.replace(tmp, path)
 
-    def rollback_generation(self, name: str, gen_idx: int) -> bool:
-        """Remove a generation that a failed flush created and never wrote
-        into. Only the *last* generation can be rolled back (a later flush
-        may already have opened — and written — a newer one, in which case
-        the empty generation is left behind; readers tolerate empty gen
-        dirs). Returns True if removed."""
-        with self._lock:
-            gens = self._generations.get(name)
-            if gens and len(gens) - 1 == gen_idx:
-                gens.pop()
-                if not gens:
-                    del self._generations[name]
-                self._persist(name)
-                return True
-            return False
-
     # -- rewrite commit ----------------------------------------------------
     # A rewrite (delete, update's sweep, merge, collapse) writes its
     # survivors into the generation register_flush_schema picks, under
@@ -533,11 +528,12 @@ class Catalog:
         self, name: str,
         add_files: dict[int, Iterable[str]] | None = None,
         remove_files: dict[int, list[str]] | None = None,
+        schema: dict[int, dict[str, str]] | None = None,
     ) -> int:
-        """Atomic commit of a rewrite: the files it wrote (``add_files``,
-        as :meth:`touch` takes them) and the files it read and replaces
-        (``remove_files``, {gen: [relpaths]}) as one commit-log record.
-        Returns its version.
+        """Atomic commit of a rewrite: the files it wrote (``add_files``
+        and ``schema``, as :meth:`touch` takes them) and the files it
+        read and replaces (``remove_files``, {gen: [relpaths]}) as one
+        commit-log record. Returns its version.
 
         The commit checks the *on-disk* log, not a possibly-stale
         in-memory one: it refreshes first, and raises, committing
@@ -549,58 +545,63 @@ class Catalog:
         read). The rewrite's own files stay unreferenced and the
         collector deletes them after the grace age."""
         with self._lock:
-            self.refresh_if_changed(name)
-            live = self._log(name).live
+            log = self._log(name)
             gone = sorted((g, rel) for g, rels in (remove_files or {}).items()
-                          for rel in rels if rel not in live.get(g, {}))
+                          for rel in rels if rel not in log.live.get(g, {}))
             if gone:
                 raise RuntimeError(
                     f"stale rewrite commit for {name!r}: {len(gone)} file(s) "
                     f"it replaces are no longer live, e.g. gen={gone[0][0]}/"
                     f"{gone[0][1]} (concurrent commit — lease lost?)")
-            self._persist(name, add_files=add_files,
-                          remove_files=remove_files)
-            return self._versions[name]
+            return self._commit(name, log, _record(
+                add_files, remove_files, self._widened(log, schema)))
 
     def excluded_parts(self, name: str) -> set[tuple[int, str]]:
         """Always empty: no partition is excluded outside the commit
-        log. Kept only because the benchmark tracer's target list names
-        it."""
+        log. Kept, like :meth:`rollback_generation` and
+        :meth:`next_generation_index`, only because the benchmark
+        tracer's target list names it."""
         return set()
 
+    def rollback_generation(self, name: str, gen_idx: int) -> bool:  # tracer target only
+        return False
+
     def next_generation_index(self, name: str) -> int:  # tracer target only
-        return len(self._generations.get(name, []))
+        return len(self._table(name).gens)
 
     def gen_schemas(self, name: str) -> list[dict[str, str]]:
         with self._lock:
-            return [dict(g) for g in self._generations.get(name, [])]
+            return [dict(g) for g in self._table(name).gens]
 
     def tombstone_generations(self, name: str, indices: list[int]) -> None:
         """Mark generations as dead ({} schema) after collapse_generations
-        folded their data away. Indices must stay stable (they name the
-        gen=N directories), so entries are emptied, never removed; an
-        empty schema is skipped by readers without a directory stat, so
-        scan metadata cost stays O(live generations)."""
+        folded their data away, in one ``gens`` commit. Indices must
+        stay stable (they name the gen=N directories), so entries are
+        emptied, never removed; an empty schema is skipped by readers
+        without a directory stat, so scan metadata cost stays O(live
+        generations)."""
         with self._lock:
-            gens = self._generations.get(name, [])
-            for i in indices:
-                if 0 <= i < len(gens):
-                    gens[i] = {}
-            self._persist(name)
+            log = self._log(name)
+            dead = {i: {} for i in indices
+                    if 0 <= i < len(log.gens) and log.gens[i]}
+            if dead:
+                self._commit(name, log, _record(gens=dead))
 
     def schema_of(self, name: str) -> dict[str, str]:
         """Cumulative schema: column union across generations with
         widening merge (long+double → double, else → string)."""
         with self._lock:
-            return cumulative_schema(self._generations.get(name, []))
+            return cumulative_schema(self._table(name).gens)
 
     # -- metadata backup/restore (BackupMetadata / RestoreMetadata) ------
 
     def export_metadata(self) -> dict[str, Any]:
         with self._lock:
+            tables = {n: log for n, log in self._logs.items() if log.config}
             return {
-                "tables": {n: asdict(c) for n, c in self._configs.items()},
-                "generations": {n: g for n, g in self._generations.items()},
+                "tables": {n: asdict(log.config) for n, log in tables.items()},
+                "generations": {n: [dict(g) for g in log.gens]
+                                for n, log in tables.items()},
             }
 
     def import_metadata(
@@ -608,16 +609,17 @@ class Catalog:
         add_files: dict[str, dict[int, Iterable[str]]] | None = None,
         remove_files: dict[str, dict[int, list[str]]] | None = None,
     ) -> int:
-        """Restore table configs and generations; ``add_files`` /
-        ``remove_files`` ({table: {gen: ...}}, as :meth:`touch` takes
-        them) make the same commit set each table's files (a data
-        restore)."""
+        """Restore table configs and generations, one full-doc commit
+        per table; ``add_files`` / ``remove_files`` ({table: {gen:
+        ...}}, as :meth:`touch` takes them) make the same commit set
+        each table's files (a data restore)."""
         with self._lock:
             n = 0
             for name, cfg in doc.get("tables", {}).items():
-                self._configs[name] = TableConfig(**cfg)
-                self._generations[name] = doc.get("generations", {}).get(name, [])
-                self._persist(name, (add_files or {}).get(name),
-                              (remove_files or {}).get(name))
+                self._commit(name, self._log(name), {
+                    "doc": {"config": asdict(TableConfig(**cfg)),
+                            "generations": doc.get("generations", {}).get(name, [])},
+                    **_record((add_files or {}).get(name),
+                              (remove_files or {}).get(name))})
                 n += 1
             return n

@@ -37,6 +37,7 @@ import math
 import os
 import threading
 import weakref
+from collections.abc import Iterable
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -261,7 +262,7 @@ class Engine:
         self.root = root
         # data-path file ops go through the fs abstraction so mutations /
         # compaction / retention work against s3a:// roots; metadata
-        # (catalog JSON, WAL) stays driver-local, mirroring the reference's
+        # (catalog commit log, WAL) stays driver-local, mirroring the reference's
         # Redis-metadata / MinIO-data split. For an object-store root the
         # local metadata dir is derived from a hash of the root URI.
         self.fs = get_fs(spark, root)
@@ -599,24 +600,20 @@ class Engine:
 
         row_dicts = [r.to_dict() for r in rows]
         batch_schema, name_map = dyn_schema.infer_batch_schema(row_dicts)
-        # the verifier runs before any registration: a bad value
+        # the verifier runs before any file is written: a bad value
         # (int64 overflow, NULL system column) fails with nothing to undo
         tbl = dyn_schema.batch_table(row_dicts, batch_schema, name_map)
         cfg = self.catalog.get_table(table)
         codec, ext = dyn_schema.parquet_codec(
             cfg.compression if cfg else "snappy")
         name = f"part-00000-{uuid.uuid4()}.c000{ext}.parquet"
-        n_gens_before = len(self.catalog.gen_schemas(table))
-        gen = self.catalog.register_flush_schema(
-            table, {f.name: _type_name(f.dataType) for f in batch_schema.fields}
-        )
+        cols = {f.name: _type_name(f.dataType) for f in batch_schema.fields}
+        gen = self.catalog.register_flush_schema(table, cols)
+        gen_dir = self._gen_dir(table, gen)
         written: list[str] = []
         sizes: dict[str, int] = {}
         days: dict[str, Any] = {}
         try:
-            # resolved INSIDE the try: any failure after
-            # register_flush_schema must roll back the new generation
-            gen_dir = self._gen_dir(table, gen)
             for dt, part, data in dyn_schema.parquet_day_files(tbl, codec):
                 rel = f"dt={dt}/{name}"
                 written.append(rel)  # before the write: a torn file goes too
@@ -624,18 +621,17 @@ class Engine:
                 sizes[rel], days[rel] = len(data), part
             # the commit: the version whose snapshot INCLUDES this
             # batch, with its files as Delta-style add entries (until
-            # then no reader sees them), bracketed from the rows in hand
+            # then no reader sees them), bracketed from the rows in hand,
+            # and the batch's schema, so a generation it opens or widens
+            # is registered by the same line
             self.catalog.touch(table, add_files={
-                gen: self._add_entries(table, gen, sizes, tables=days)})
+                gen: self._add_entries(table, gen, sizes, gcols=cols,
+                                       tables=days)}, schema={gen: cols})
         except Exception:
-            # uncommitted files are invisible (no add entry), so this
-            # cleanup only keeps them from piling up: every file this
-            # flush wrote is removed. Then a generation this flush opened
-            # is rolled back (the requeued rows would otherwise flush
-            # again under a NEW generation while the old one lingers).
-            # Absorbing into an existing generation merged column names
-            # additively, which is harmless (all-null column until a
-            # later flush).
+            # nothing was committed, so neither the files nor the
+            # generation exist for any reader; removing every file this
+            # flush wrote only keeps them from piling up (the requeued
+            # rows flush again into the generation picked then)
             for rel in written:
                 try:
                     self.fs.remove_file(fsmod.join(gen_dir, rel))
@@ -647,11 +643,6 @@ class Engine:
                     logging.getLogger(__name__).warning(
                         "flush of %s: could not remove %s: %r",
                         table, rel, exc)
-            if gen == n_gens_before:
-                self.catalog.rollback_generation(table, gen)
-                gen_dir = self._gen_dir(table, gen)
-                if self.fs.is_dir(gen_dir):
-                    self.fs.remove_dir(gen_dir)
             raise
         return len(rows)
 
@@ -712,10 +703,9 @@ class Engine:
         with self.lease.holding(key, timeout_s=120.0), \
                 self.lease.keepalive(key), self._flush_lock(table):
             self.catalog.refresh_if_changed(table)
-            gen = self.catalog.register_flush_schema(
-                table,
-                {f.name: _type_name(f.dataType) for f in df.schema.fields if f.name != "dt"},
-            )
+            cols = {f.name: _type_name(f.dataType)
+                    for f in df.schema.fields if f.name != "dt"}
+            gen = self.catalog.register_flush_schema(table, cols)
             # the commit's adds are what the Spark job wrote: one LIST
             # before it and one after (a leftover already in the
             # directory is never attributed to this commit)
@@ -734,16 +724,17 @@ class Engine:
             # the job's files as add entries, their sizes from the LIST
             new = {rel: size for rel, size in
                    self._gen_listing(table, gen).items() if rel not in before}
-            add = {gen: self._add_entries(table, gen, new)}
+            add = {gen: self._add_entries(table, gen, new, gcols=cols)}
             if not self.lease.verify(key):
                 raise RuntimeError(
                     f"mutation lease on {table!r} lost during the write; "
                     "aborting commit (no data was published)")
             if remove_files is None:
-                self.catalog.touch(table, add_files=add)
+                self.catalog.touch(table, add_files=add, schema={gen: cols})
             else:
                 self.catalog.commit_rewrite(
-                    table, add_files=add, remove_files=remove_files)
+                    table, add_files=add, remove_files=remove_files,
+                    schema={gen: cols})
         return gen
 
     def ingest_path(
@@ -939,8 +930,8 @@ class Engine:
 
     def table_history(self, table: str) -> list[dict]:
         """The table's metadata commit log, oldest first (one entry per
-        catalog flip: flush schema registrations, data commits,
-        rewrite commits, tombstones). ``v`` values are what read_snapshot
+        commit: table creation, data commits with any generation they
+        opened or widened, rewrite commits, tombstones). ``v`` values are what read_snapshot
         accepts."""
         return self.catalog.history(table)
 
@@ -964,12 +955,12 @@ class Engine:
         internal/backup/; a committed rewrite there deletes the old
         object immediately, query.go upload-then-delete). Scan shape is
         identical to read_persisted."""
-        rec = self.catalog.record_at(table, version)
-        if rec is None:
+        doc = self.catalog.doc_at(table, version)
+        if doc is None:
             raise ValueError(
                 f"unknown snapshot version {version!r} for table "
                 f"{table!r}; table_history() lists committed versions")
-        gens = [dict(g) for g in rec["doc"].get("generations", [])]
+        gens = [dict(g) for g in doc.get("generations", [])]
         try:
             return self._scan_files(
                 table, self.catalog.live_files(table, version), gens)
@@ -1093,16 +1084,18 @@ class Engine:
             return None
         return _file_struct(gens[gen])
 
-    def _zonemap_cols_for(self, table: str) -> tuple[str, ...]:
+    def _zonemap_cols_for(self, table: str,
+                          columns: Iterable[str] = ()) -> tuple[str, ...]:
         """Engine defaults (id, timestamp) plus the table's configured
         extra columns (TableConfig.zonemap_columns) — the reference's
         per-table multi-column index config. Order-stable and
         deduped. A configured name resolves to the table's column of
         the same name in any case, as Spark resolves it
-        (``caseSensitive=false``)."""
+        (``caseSensitive=false``); ``columns`` are those of a write not
+        yet committed, which the table's schema does not hold yet."""
         cols = list(self.zonemap_columns)
         cfg = self.catalog.get_table(table)
-        names = {c.lower(): c for c in self.catalog.schema_of(table)}
+        names = {c.lower(): c for c in (*self.catalog.schema_of(table), *columns)}
         for c in (getattr(cfg, "zonemap_columns", None) or ()):
             c = names.get(c.lower(), c)
             if c not in cols:
@@ -1125,7 +1118,7 @@ class Engine:
                 self.spark, self._gen_dir(table, gen),
                 _file_struct(gcols) if gcols is not None
                 else self._gen_struct(table, gen),
-                self._zonemap_cols_for(table), files, tables)
+                self._zonemap_cols_for(table, gcols or ()), files, tables)
         except Exception as exc:
             self.zonemap_build_errors += 1
             self.zonemap_last_error = f"{table}/gen={gen}: {exc!r}"

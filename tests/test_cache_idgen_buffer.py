@@ -120,8 +120,8 @@ def test_failed_flush_rolls_back_new_generation(spark, tmp_path):
     # incompatible type for v forces a NEW generation; make the write fail
     eng.write("t", {"v": "now-a-string"}, record_id="b",
               timestamp_us=1_700_000_000_000_000)
-    # fail AFTER register_flush_schema, inside the parquet write: the
-    # target dir is resolved within the try block
+    # fail after register_flush_schema picked the new generation,
+    # before any file is written: the pick alone records nothing
     orig_gen_dir = eng._gen_dir
     calls = []
     def boom(table, gen):

@@ -1,17 +1,22 @@
-"""The catalog's commit log is the table's file membership.
+"""The catalog's commit log is the table: its config, its generations
+and its file membership.
 
 ``Catalog.live_files`` reads each ``<table>.jsonl`` incrementally: only
 complete lines appended since the last call, starting over when the
 file was replaced. These tests drive the catalog alone (no Spark): a
 writer in another process that is mid-append, a drop → recreate by
-another catalog on the same root, removes and re-adds, and threads
-reading while others commit."""
+another catalog on the same root, removes and re-adds, threads reading
+while others commit, the line format (one line per commit, holding only
+what it changed) and the replay of a log in the older full-doc format."""
 
+import glob
 import json
+import os
 import sys
 import threading
+from dataclasses import asdict
 
-from miniodb_spark.catalog import Catalog
+from miniodb_spark.catalog import Catalog, TableConfig
 
 
 def _files(live):
@@ -189,3 +194,156 @@ def test_file_indexes_accept_both_entry_forms(tmp_path):
     assert cat.removed_files_index("t") == {
         (0, "dt=d/a.parquet"): v2, (1, "dt=d/b.parquet"): v2 + 1}
     assert cat.live_files("t") == {}
+
+
+COLS = {f"c{i}": "long" for i in range(7)}
+
+
+def _flush(cat, i, cols):
+    """One flush as the engine commits it: pick the generation, then
+    commit the file together with the schema it was written with."""
+    gen = cat.register_flush_schema("t", cols)
+    return cat.touch("t", add_files={gen: [f"dt=d/f{i}.parquet"]},
+                     schema={gen: cols})
+
+
+def _lines(cat):
+    with open(cat._hist_path("t"), encoding="utf-8") as fh:
+        return fh.read().splitlines()
+
+
+def test_flushes_without_type_change_append_one_line_each(tmp_path):
+    cat = Catalog(str(tmp_path))
+    cat.create_table("t")
+    n = 50
+    for i in range(n):
+        assert cat.register_flush_schema("t", COLS) == 0
+        assert len(_lines(cat)) == 1 + i  # picking writes nothing
+        _flush(cat, i, COLS)
+    assert len(_lines(cat)) == 1 + n
+    assert Catalog(str(tmp_path)).gen_schemas("t") == [COLS]
+
+
+def test_data_lines_carry_only_what_changed(tmp_path):
+    """Only the table's creation holds a doc; a data line holds ``gens``
+    exactly when its commit opened, widened or tombstoned a
+    generation, and the fold of the lines is the catalog's state."""
+    cat = Catalog(str(tmp_path))
+    cat.create_table("t")
+    wide, drifted = {**COLS, "w": "double"}, {**COLS, "c0": "string"}
+    _flush(cat, 0, COLS)  # opens generation 0
+    _flush(cat, 1, COLS)
+    _flush(cat, 2, wide)  # widens it
+    _flush(cat, 3, drifted)  # opens generation 1
+    _flush(cat, 4, drifted)
+    cat.tombstone_generations("t", [0])
+    recs = [json.loads(line) for line in _lines(cat)]
+    assert set(recs[0]["doc"]) == {"config", "generations"}
+    assert not any("doc" in r for r in recs[1:])
+    assert [r.get("gens") for r in recs[1:]] == [
+        {"0": COLS}, None, {"0": wide}, {"1": drifted}, None, {"0": {}}]
+    assert all("add" in r for r in recs[1:-1]) and "add" not in recs[-1]
+    for c in (cat, Catalog(str(tmp_path))):
+        assert c.gen_schemas("t") == [{}, drifted]
+        assert c.doc_at("t", 4)["generations"] == [wide]
+        assert c.doc_at("t", 6)["generations"] == [wide, drifted]
+        assert c.doc_at("t", 7)["generations"] == [{}, drifted]
+
+
+def test_drift_lines_do_not_grow_with_generations(tmp_path):
+    """Each commit that changes one column's type opens a generation
+    and carries only that generation's schema: after 200 of them the
+    last line is no longer than twice the first."""
+    cat = Catalog(str(tmp_path))
+    cat.create_table("t")
+    for i in range(200):
+        cols = {c: "string" if j == i % 7 else t
+                for j, (c, t) in enumerate(COLS.items())}
+        assert cat.register_flush_schema("t", cols) == i
+        _flush(cat, i, cols)
+    lines = _lines(cat)[1:]
+    assert len(lines) == 200
+    assert len(lines[-1]) <= 2 * len(lines[0])
+    assert len(Catalog(str(tmp_path)).gen_schemas("t")) == 200
+
+
+def test_no_table_json_is_written(tmp_path):
+    cat = Catalog(str(tmp_path))
+    tables = os.path.join(str(tmp_path), "_system", "tables")
+    cat.create_table("t")
+    assert glob.glob(os.path.join(tables, "*.json")) == []
+    _flush(cat, 0, COLS)
+    assert glob.glob(os.path.join(tables, "*.json")) == []
+    assert cat.drop_table("t")
+    assert glob.glob(os.path.join(tables, "*.json")) == []
+    assert not os.path.exists(cat._hist_path("t"))
+    assert Catalog(str(tmp_path)).list_tables() == []
+
+
+def test_full_doc_log_replays(tmp_path):
+    """A log in the older format — the full doc on every line (schema
+    registrations, data commits, a rewrite, a tombstone, a restore) and
+    the current doc in ``<table>.json`` beside it — reads as the same
+    table at every version, and the next commit appends in the new
+    form."""
+    cfg = asdict(TableConfig(name="t", buffer_size=7, zonemap_columns=["v"]))
+    g0, g1 = {"id": "string", "v": "long"}, {"id": "string", "v": "string"}
+    a, b, c, d = (f"dt=2024-01-01/{x}.parquet" for x in "abcd")
+    lines = [  # (generations, add, rm)
+        ([], None, None),  # create
+        ([g0], None, None),  # registration
+        ([g0], {"0": [a, {"path": b, "size": 5}]}, None),
+        ([g0, g1], None, None),  # a type change opens generation 1
+        ([g0, g1], {"1": [c]}, None),
+        ([g0, g1], {"1": [d]}, {"0": [a, b], "1": [c]}),  # collapse
+        ([{}, g1], None, None),  # its tombstone
+        ([g0, g1], {"0": [a, b], "1": [c]}, {"1": [d]}),  # restore
+    ]
+    tables = os.path.join(str(tmp_path), "_system", "tables")
+    os.makedirs(os.path.join(tables, "_history"))
+    with open(os.path.join(tables, "_history", "t.jsonl"), "w",
+              encoding="utf-8") as fh:
+        for v, (gens, add, rm) in enumerate(lines, 1):
+            rec = {"v": v, "ts_us": v, "doc": {"config": cfg, "generations": gens}}
+            rec.update({k: e for k, e in (("add", add), ("rm", rm)) if e})
+            fh.write(json.dumps(rec) + "\n")
+    with open(os.path.join(tables, "t.json"), "w", encoding="utf-8") as fh:
+        json.dump({"config": cfg, "generations": [g0, g1]}, fh, indent=1)
+    live = {1: {}, 2: {}, 3: {0: [a, b]}, 4: {0: [a, b]},
+            5: {0: [a, b], 1: [c]}, 6: {1: [d]}, 7: {1: [d]},
+            8: {0: [a, b], 1: [c]}}
+
+    cat = Catalog(str(tmp_path))
+    assert cat.list_tables() == ["t"]
+    assert cat.get_table("t") == TableConfig(**cfg)
+    assert cat.gen_schemas("t") == [g0, g1]
+    assert cat.current_version("t") == len(lines)
+    for v, (gens, _add, _rm) in enumerate(lines, 1):
+        assert cat.doc_at("t", v) == {"config": cfg, "generations": gens}
+        assert cat.live_files("t", v) == {
+            g: [(rel, "2024-01-01") for rel in rels]
+            for g, rels in live[v].items()}
+    assert cat.live_entries("t", 3)[0][b] == {"path": b, "size": 5}
+
+    # new commits append in the new form; t.json is not read (stale)
+    assert cat.register_flush_schema("t", g1) == 1
+    v9 = cat.touch("t", add_files={1: ["dt=2024-01-02/e.parquet"]},
+                   schema={1: g1})
+    g2 = {"id": "string", "v": "double"}
+    assert cat.register_flush_schema("t", g2) == 2
+    v10 = cat.touch("t", add_files={2: ["dt=2024-01-02/f.parquet"]},
+                    schema={2: g2})
+    with open(cat._hist_path("t"), encoding="utf-8") as fh:
+        new = [json.loads(line) for line in fh.read().splitlines()[len(lines):]]
+    assert [(r["v"], "doc" in r, r.get("gens")) for r in new] == [
+        (9, False, None), (10, False, {"2": g2})]
+    fresh = Catalog(str(tmp_path))
+    assert fresh.gen_schemas("t") == [g0, g1, g2]
+    assert fresh.get_table("t") == TableConfig(**cfg)
+    assert fresh.doc_at("t", v9) == {"config": cfg, "generations": [g0, g1]}
+    assert fresh.doc_at("t", v10) == {"config": cfg,
+                                      "generations": [g0, g1, g2]}
+    assert fresh.live_files("t") == {
+        0: [(a, "2024-01-01"), (b, "2024-01-01")],
+        1: [(c, "2024-01-01"), ("dt=2024-01-02/e.parquet", "2024-01-02")],
+        2: [("dt=2024-01-02/f.parquet", "2024-01-02")]}

@@ -234,9 +234,13 @@ def test_localfs_write_bytes_temp_is_hidden_and_cleaned(tmp_path, monkeypatch):
 
 
 def test_flush_fault_sweep(spark, tmp_path, monkeypatch):
-    """A fault at every mutating filesystem call of one 3-day flush:
-    afterwards every acknowledged row is visible exactly once, no
-    uncommitted file sits in the table, and a retry flush lands every
+    """A fault at every mutating filesystem call of one 3-day flush —
+    of a batch that adds a column to the table's generation, and of one
+    whose ``v`` drifts to a string and so opens a generation: afterwards
+    every acknowledged row is visible exactly once, no uncommitted file
+    sits in the table, the generations are the pre-flush ones or,
+    exactly when the flush committed, the committed ones (never a
+    generation that holds no live file), and a retry flush lands every
     row exactly once (checked again after a fresh boot's WAL replay)."""
     from faultfs import FaultFS, InjectedFault
     from miniodb_spark import engine as engine_mod
@@ -247,42 +251,57 @@ def test_flush_fault_sweep(spark, tmp_path, monkeypatch):
     seeded = [f"s{i}" for i in range(3)]
     batch = [f"b{i}" for i in range(9)]
 
-    def prepare(root):
+    def prepare(root, drift):
         eng = engine_mod.Engine(spark, root)
         for rid in seeded:  # the flush appends into an existing generation
             eng.write("t", {"v": 0}, record_id=rid, timestamp_us=T0)
         eng.flush()
         for i, rid in enumerate(batch):
-            eng.write("t", {"v": i, "w": i / 2}, record_id=rid,
-                      timestamp_us=T0 + (i % 3) * DAY)
+            eng.write("t", {"v": f"x{i}" if drift else i, "w": i / 2},
+                      record_id=rid, timestamp_us=T0 + (i % 3) * DAY)
         return eng
 
     def committed_match_listing(eng):
-        listed = {os.path.relpath(f, eng._gen_dir("t", 0))
-                  for f in _files(eng.root, "t")}
-        added = {rel for g, rel in eng.catalog.added_files_index("t") if g == 0}
-        return listed == added
+        listed = set()
+        for f in _files(eng.root, "t"):
+            gen, rel = os.path.relpath(f, os.path.join(eng.root, "t")).split("/", 1)
+            listed.add((int(gen[len("gen="):]), rel))
+        return listed == set(eng.catalog.added_files_index("t"))
 
-    eng = prepare(str(tmp_path / "count"))
-    eng.fs.arm()
-    eng.flush()
-    eng.fs.disarm()
-    calls = list(eng.fs.calls)
-    assert sum(1 for m, p in calls if m == "write_bytes" and "/dt=" in p) == 3
     want = sorted(seeded + batch)
-    for k in range(1, len(calls) + 1):
-        root = str(tmp_path / f"k{k}")
-        eng = prepare(root)
-        eng.fs.arm(fail_at=k)
-        try:
-            eng.flush()
-        except InjectedFault:
-            pass
-        eng.fs.disarm()
-        assert committed_match_listing(eng), (k, calls[k - 1])
-        assert _ids(eng.read_table("t")) == want, (k, calls[k - 1])
+    for drift in (False, True):
+        eng = prepare(str(tmp_path / f"count-{drift}"), drift)
+        pre = eng.catalog.gen_schemas("t")
+        eng.fs.arm()
         eng.flush()
-        assert eng._buffers["t"].count == 0
-        fresh = engine_mod.Engine(spark, root)
-        assert _ids(fresh.read_table("t")) == want, (k, calls[k - 1])
-        assert committed_match_listing(fresh)
+        eng.fs.disarm()
+        calls = list(eng.fs.calls)
+        post = eng.catalog.gen_schemas("t")
+        assert len(post) == len(pre) + drift and post != pre
+        assert sum(1 for m, p in calls if m == "write_bytes" and "/dt=" in p) == 3
+        for k in range(1, len(calls) + 1):
+            where = (drift, k, calls[k - 1])
+            root = str(tmp_path / f"k{k}-{drift}")
+            eng = prepare(root, drift)
+            n_added = len(eng.catalog.added_files_index("t"))
+            eng.fs.arm(fail_at=k)
+            try:
+                eng.flush()
+            except InjectedFault:
+                pass
+            eng.fs.disarm()
+            assert committed_match_listing(eng), where
+            assert _ids(eng.read_table("t")) == want, where
+            committed = len(eng.catalog.added_files_index("t")) > n_added
+            for cat in (eng.catalog, engine_mod.Engine(spark, root).catalog):
+                assert cat.gen_schemas("t") == (
+                    post if committed else pre), where
+                live = cat.live_files("t")
+                assert all(live.get(g) for g, s in
+                           enumerate(cat.gen_schemas("t")) if s), where
+            eng.flush()
+            assert eng._buffers["t"].count == 0
+            assert eng.catalog.gen_schemas("t") == post, where
+            fresh = engine_mod.Engine(spark, root)
+            assert _ids(fresh.read_table("t")) == want, where
+            assert committed_match_listing(fresh)

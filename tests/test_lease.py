@@ -413,8 +413,9 @@ def test_commit_rewrite_of_files_no_longer_live_raises(tmp_path):
     c1 = Catalog(root)
     c2 = Catalog(root)
     c1.create_table("t")
-    c1.register_flush_schema("t", {"id": "string"})
-    c1.touch("t", add_files={0: ["dt=2023-11-14/a.parquet"]})
+    assert c1.register_flush_schema("t", {"id": "string"}) == 0
+    c1.touch("t", add_files={0: ["dt=2023-11-14/a.parquet"]},
+             schema={0: {"id": "string"}})
     c2.refresh_if_changed("t")
     # both drivers read a.parquet; driver 1 commits its rewrite first
     # (as if it stole the lease)

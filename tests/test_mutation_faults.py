@@ -14,6 +14,10 @@ would. Its answers must match a dict model:
 
 Then ``vacuum()`` leaves exactly the live files on disk, once the
 grace age of the files no commit added has passed.
+
+A bulk ingest whose column type drifts goes through the same Spark-write
+faults: the generation it would open exists only in its commit, so a
+failed write leaves the table's schemas as they were.
 """
 
 import json
@@ -118,11 +122,12 @@ def test_mutation_fault_sweep(spark, tmp_path, monkeypatch, op):
         _check_after_fault(spark, root, op, since, (k, calls[k - 1]))
 
 
-@pytest.mark.parametrize("op", sorted(OPS))
-def test_mutation_spark_write_fault_sweep(spark, tmp_path, monkeypatch, op):
-    """A failure of the k-th Spark write of one update (its insert, its
-    rewrite) or delete (its rewrite), raised before the job runs and
-    after its files landed uncommitted."""
+@pytest.fixture
+def spark_write_faults(monkeypatch):
+    """``(seen, fault)``: every path ``DataFrameWriter.parquet`` is
+    called with, in order, and the call that fails — ``fault["at"]``
+    (1-based; None: no failure), before the job runs or, with
+    ``fault["after"]``, after its files landed."""
     real = DataFrameWriter.parquet
     seen, fault = [], {"at": None, "after": False}
 
@@ -137,6 +142,16 @@ def test_mutation_spark_write_fault_sweep(spark, tmp_path, monkeypatch, op):
         return out
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return seen, fault
+
+
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_mutation_spark_write_fault_sweep(spark, tmp_path, spark_write_faults,
+                                          op):
+    """A failure of the k-th Spark write of one update (its insert, its
+    rewrite) or delete (its rewrite), raised before the job runs and
+    after its files landed uncommitted."""
+    seen, fault = spark_write_faults
     eng = _prepare(spark, str(tmp_path / "count"))
     OPS[op](eng)
     n_writes = len(seen)
@@ -152,3 +167,47 @@ def test_mutation_spark_write_fault_sweep(spark, tmp_path, monkeypatch, op):
                 OPS[op](eng)
             fault["at"] = None
             _check_after_fault(spark, root, op, since, (k, after))
+
+
+def test_drifting_ingest_spark_write_fault_sweep(spark, tmp_path,
+                                                 spark_write_faults):
+    """A failure of the k-th Spark write of an ingest whose ``v`` is a
+    string where the table's is a long, raised before the job runs and
+    after its files landed uncommitted: a fresh Engine shows the
+    pre-ingest generations and cumulative schema, and reads ``v`` as
+    the number it was."""
+    import datetime
+
+    seen, fault = spark_write_faults
+    ts = datetime.datetime.fromtimestamp(T0 / US, datetime.timezone.utc)
+
+    def ingest(eng):
+        eng.ingest_dataframe("t", spark.createDataFrame(
+            [("x1", ts, "one")], "id string, timestamp timestamp, v string"))
+
+    eng = _prepare(spark, str(tmp_path / "count"))
+    n_gens = len(eng.catalog.gen_schemas("t"))
+    ingest(eng)
+    assert len(eng.catalog.gen_schemas("t")) == n_gens + 1  # it drifts
+    n_writes = len(seen)
+    assert n_writes >= 1
+    for k in range(1, n_writes + 1):
+        for after in (False, True):
+            root = str(tmp_path / f"k{k}{'a' if after else 'b'}")
+            eng = _prepare(spark, root)
+            gens, cum = eng.catalog.gen_schemas("t"), eng.catalog.schema_of("t")
+            seen.clear()
+            fault.update(at=k, after=after)
+            with pytest.raises(InjectedFault):
+                ingest(eng)
+            fault["at"] = None
+            expire_leases(root)
+            fresh = engine_mod.Engine(spark, root)
+            where = (k, after)
+            assert fresh.catalog.gen_schemas("t") == gens, where
+            assert fresh.catalog.schema_of("t") == cum, where
+            assert cum["v"] == "long"
+            assert json.loads(fresh.query(
+                "SELECT id, v FROM t WHERE id = 'r1'")) == [
+                    {"id": "r1", "v": 1}], where
+            assert _rows(fresh) == sorted(BASE.items()), where

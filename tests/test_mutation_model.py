@@ -295,12 +295,11 @@ def test_two_driver_randomized_mutations_match_model(engine, spark):
 def test_mutations_open_no_generation(engine, spark):
     """Updates, deletes, a merge and the empty-id cleanup rewrite files
     inside the table's one generation: the generation list and every
-    commit line's schema doc stay exactly the seed's, and the answers
-    equal a dict model on the Spark path and on the Arrow lookup path.
-    Only a type change opens a generation: a type-drift update opens
-    exactly one."""
+    commit's doc (read through doc_at) stay exactly the seed's, and the
+    answers equal a dict model on the Spark path and on the Arrow lookup
+    path. Only a type change opens a generation: a type-drift update
+    opens exactly one."""
     import datetime
-    import os
 
     engine.create_table("g1", TableConfig(name="g1", buffer_size=10_000))
     model: dict[str, tuple] = {}
@@ -314,11 +313,10 @@ def test_mutations_open_no_generation(engine, spark):
     # a row with an empty id, for cleanup_empty_id_records
     engine.ingest_dataframe("g1", spark.createDataFrame(
         [("", ts, 99, "a")], "id string, timestamp timestamp, v long, grp string"))
-    log = os.path.join(engine.root, "_system", "tables", "_history", "g1.jsonl")
 
     def docs():
-        with open(log, encoding="utf-8") as fh:
-            return [json.dumps(json.loads(ln)["doc"]) for ln in fh]
+        return [json.dumps(engine.catalog.doc_at("g1", h["v"]))
+                for h in engine.catalog.history("g1")]
 
     seed = docs()[-1]
     n_seed = len(docs())

@@ -1,7 +1,8 @@
 """Time travel (snapshot reads over the catalog commit log).
 
-Every catalog flip appends its full doc to a per-table JSONL commit
-log (catalog.py::_persist). Writers only commit; with
+Every commit appends one line holding what it changed to a per-table
+JSONL commit log (catalog.py::Catalog._commit); the doc at a version
+is the fold of the lines up to it. Writers only commit; with
 retain_history=True only vacuum() runs the garbage collector, so
 Engine.read_snapshot(table, v) can rebuild the exact persisted state
 any version saw — deleted rows reappear, pre-update values return —
@@ -145,18 +146,30 @@ def test_snapshot_excludes_buffer_and_later_generations(retaining_engine):
 
 
 def test_commit_log_lines_are_full_docs(retaining_engine, tmp_path):
+    """Only the table's creation writes a full doc. A data line holds
+    no doc; the flush that opens a generation registers it in its own
+    line, and doc_at folds the lines into the doc at each version."""
     eng = retaining_engine
     eng.write("log", {"v": 1}, record_id="a", timestamp_us=T0)
+    eng.flush("log")
+    eng.write("log", {"v": 2}, record_id="b", timestamp_us=T0)
     eng.flush("log")
     path = eng.catalog._hist_path("log")
     with open(path, encoding="utf-8") as fh:
         recs = [json.loads(line) for line in fh if line.strip()]
-    assert recs and all({"v", "ts_us", "doc"} <= set(r) for r in recs)
-    assert recs[-1]["doc"]["generations"], "last commit carries schema"
+    assert [r["v"] for r in recs] == [1, 2, 3]
+    assert all({"v", "ts_us"} <= set(r) for r in recs)
+    assert set(recs[0]["doc"]) == {"config", "generations"}
+    assert recs[0]["doc"]["generations"] == [] and "add" not in recs[0]
+    assert not any("doc" in r for r in recs[1:])
+    gen0 = eng.catalog.gen_schemas("log")[0]
+    assert recs[1]["gens"] == {"0": gen0} and "0" in recs[1]["add"]
+    assert "gens" not in recs[2] and "0" in recs[2]["add"]
+    assert eng.catalog.doc_at("log", 1) == recs[0]["doc"]
+    assert eng.catalog.doc_at("log", 2) == eng.catalog.doc_at("log", 3) == {
+        "config": recs[0]["doc"]["config"], "generations": [gen0]}
     # drop_table removes the log
     eng.delete_table("log")
-    import os
-
     assert not os.path.exists(path)
 
 
